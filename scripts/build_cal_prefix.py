@@ -61,8 +61,8 @@ def main(frag_path, sf_dir, db_path):
     body = comps_prefix[len("WITH RECURSIVE "):]
     ctes = parse_ctes(body)
     con = duckdb.connect(db_path)
-    con.execute("SET threads=24")
-    con.execute("SET memory_limit='80GB'")
+    # threads and memory_limit stay at DuckDB's defaults (all cores, 80% of
+    # RAM), which fit whatever machine runs the sweep.
     con.execute("SET temp_directory='.ducktmp'")
     import glob, os, hashlib
     # Provenance pin (round-12 advice): a reused .db whose tables were built

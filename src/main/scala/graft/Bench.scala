@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Bench-drift adjudication, codified from the house rule the round-9/10
     * verdicts applied by hand: per-query steady ratios against a prior
@@ -118,7 +117,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_BENCH_SKIP: comma-separated query names to EXCLUDE from
     // the run, itemized in the record as "skipped". Exists for the sf10
     // tier, where q22/q24's priced pre-flight refusals (DedupOps mass
@@ -130,35 +128,7 @@ object Bench {
     val unknownSkip = skip -- SparkEntry.queries.keySet
     require(unknownSkip.isEmpty,
       s"SPARK_GRAFT_BENCH_SKIP names unknown queries: ${unknownSkip.toSeq.sorted.mkString(", ")}")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Task-memory page size pinned to 1m (r15, guide §5): Spark derives
-      // the default page from heap/cores — ~16m under a 16g local heap —
-      // so EVERY sort/agg task preallocates ~16m, and wide tiny-partition
-      // stages churn gigabytes of short-lived pages (measured as the
-      // multi-second steady spikes the r15 baseline caught on q162/q141).
-      // 1m pages cost only more page-table entries for genuinely large
-      // per-task state; env-overridable for deployments that want the
-      // auto-derived value. Static conf, so it rides the builder (the
-      // engine's runtime confs live in Engine.ensureInitialized).
-      .config("spark.buffer.pageSize",
-        sys.env.getOrElse("SPARK_GRAFT_PAGE_SIZE", "1m"))
-      // Whole-stage-codegen compile cache 100 -> 5000 entries (r15): a
-      // 176-query session generates far more than 100 codegen units, and
-      // many queries share fragment shapes (table scans, shingle windows,
-      // minhash aggregates) - at the default size the cache thrashes
-      // between queries and every cold run recompiles shapes the session
-      // already compiled. Measured: median per-query COLD ratio 0.949 and
-      // shared builds 2.4->1.5 / 4.2->2.9 s on a busier box (full-bench
-      // A/B, OPTIMIZATION_r15.md). Cost: compiled classes live in
-      // metaspace (~tens of MB at this surface). Env-overridable.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Engine.session()
     val loadBefore = loadavgStamp()
     // Untimed session warmup (JVM/codegen/catalog init) so whichever query
     // runs first isn't charged ~6 s of cold start; then time in sorted name

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
 import graft.operators.{DedupOps, SimilarityOps, TextOps}
@@ -49,13 +48,7 @@ object ScaleAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Engine.session()
 
     val docs = Tables.documents(spark, sfDir)
     val nDocs = docs.count()
@@ -467,14 +460,7 @@ object ScaleAudit {
 object ScaleAuditCalibrated {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "target/heaps_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Engine.session()
     val docs = Tables.documents(spark, sfDir)
     val nDocs = docs.count()
     val allPairs = docs.groupBy("source").count()
@@ -510,15 +496,8 @@ object ScaleAuditCalibrated {
 object ScaleAuditSimhash {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "target/heaps_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val maxCountMass = sys.env.getOrElse("SPARK_GRAFT_MAX_COUNT_MASS", "500000000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Engine.session()
     val docs = Tables.documents(spark, sfDir)
     val nDocs = docs.count()
     val toks = docs.withColumn("tokset", array_distinct(TextOps.tokenize(col("text"))))

@@ -4,7 +4,6 @@ import graft.engine.Tables
 import graft.operators.BreadcrumbPipeline
 import graft.sources.IngestOps
 import graft.streaming.StreamingOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -17,14 +16,8 @@ import java.nio.file.Files
   */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Engine.session()
     import spark.implicits._
-    spark.sparkContext.setLogLevel("ERROR")
 
     val root = Files.createTempDirectory("streamdemo").toFile.getAbsolutePath
     println(s"[demo] working under $root")

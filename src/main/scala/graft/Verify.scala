@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.engine.Engine
 import java.nio.file.{Files, Paths}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -22,10 +23,12 @@ import java.nio.file.{Files, Paths}
   * pattern (doubleToLongBits), which is what a determinism check wants.
   *
   * {{{
-  * graft.Verify <sfDir> <outDir> [q1,q2,...]              — oracle dump
+  * graft.Verify <sfDir> <outDir> [q1,q2,...]              — oracle dump;
+  *   a query that throws is listed in <outDir>/failures.json and the run
+  *   exits nonzero (after oracle_sql.json is written)
   * graft.Verify --invariance <sfDir> <outBase> [q1,q2,...] — A/B re-dump +
   *   bitwise compare; parallelisms from SPARK_GRAFT_CPUS_AB (default
-  *   "16,7"), record at <outBase>/invariance.json
+  *   "<cpus>,<cpus-1>"), record at <outBase>/invariance.json
   * }}}
   */
 object Verify {
@@ -66,45 +69,40 @@ object Verify {
       case _ => false
     }
 
-  private def session(cpus: Int): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Same page-size pin as the Bench/TimeQ/Profile builders (r16,
-      // verdict #1/#5): Verify previously inherited the engine's 64k AQE
-      // floor WITHOUT the small-page pin — exactly the floor-alone
-      // combination the r15 A/B measured 3-4× slower on the minhash
-      // family. Engine.ensureInitialized now only applies the floor when
-      // the pages are pinned, so this line both speeds Verify up and is
-      // what arms the floor for it. Static conf, env-overridable.
-      .config("spark.buffer.pageSize",
-        sys.env.getOrElse("SPARK_GRAFT_PAGE_SIZE", "1m"))
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Dump each selected query's result to `outDir/<name>` as parquet.
     * Shared across the oracle mode and both invariance passes so the
-    * invariance dumps are byte-for-byte the oracle-mode pipeline. */
-  private def dump(spark: SparkSession, sfDir: String, outDir: String,
-      only: Set[String]): Unit = {
+    * invariance dumps are byte-for-byte the oracle-mode pipeline.
+    *
+    * A query that throws leaves NO `outDir/<name>`: a dump from an earlier
+    * run would otherwise pass the oracle check as a stale PASS. Its
+    * exception is returned (name → "class: message") and written to
+    * `outDir/failures.json`; a run without failures leaves no such file. */
+  private[graft] def dump(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Map[String, (SparkSession, String) => DataFrame]): Map[String, String] = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => only(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val failuresFile = Paths.get(s"$outDir/failures.json")
+    Files.deleteIfExists(failuresFile)
+    val failures = queries.toSeq.flatMap { case (name, fn) =>
+      val failure =
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+          org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$outDir/$name"))
+          Some(name -> s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("")}")
+        }
       // Between-query hygiene (see Bench): 117 queries in one session
       // otherwise accumulate checkpoint blocks until the run degrades.
       // Shared pipeline materializations are pinned and survive.
       graft.engine.Hygiene.sweep(spark)
-    }
+      failure
+    }.toMap
+    if (failures.nonEmpty)
+      Files.writeString(failuresFile, failures.toSeq.sortBy(_._1)
+        .map { case (k, v) => s""""${jsonEscape(k)}": "${jsonEscape(v)}"""" }
+        .mkString("{", ",\n", "}\n"))
+    failures
   }
 
   /** Every float-typed leaf projected through its IEEE-754 bit pattern
@@ -148,11 +146,12 @@ object Verify {
     val (dirA, dirB) = (s"$outBase/cpus$cpusA", s"$outBase/cpus$cpusB")
     // Two dumps in two fresh sessions: partitioning differences must come
     // from the engine configuration, never from leftover session state.
-    val sa = session(cpusA)
-    dump(sa, sfDir, dirA, only); sa.stop()
-    val sb = session(cpusB)
-    dump(sb, sfDir, dirB, only); sb.stop()
-    val spark = session(math.max(cpusA, cpusB))
+    val selected = SparkEntry.queries.filter(kv => only(kv._1))
+    val sa = Engine.session(cpusA)
+    dump(sa, sfDir, dirA, selected); sa.stop()
+    val sb = Engine.session(cpusB)
+    dump(sb, sfDir, dirB, selected); sb.stop()
+    val spark = Engine.session(math.max(cpusA, cpusB))
     val rows = only.toSeq.sorted.map { name =>
       val t0 = System.nanoTime()
       val row = try {
@@ -204,7 +203,11 @@ object Verify {
       val unknown = only -- SparkEntry.queries.keySet
       require(unknown.isEmpty,
         s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
-      val ab = sys.env.getOrElse("SPARK_GRAFT_CPUS_AB", "16,7").split(",").map(_.trim.toInt)
+      // Default: this box's cores and one fewer — always two different,
+      // coprime partition counts.
+      val cpus = math.max(2, Engine.defaultCpus)
+      val ab = sys.env.getOrElse("SPARK_GRAFT_CPUS_AB", s"$cpus,${cpus - 1}")
+        .split(",").map(_.trim.toInt)
       require(ab.length == 2, "SPARK_GRAFT_CPUS_AB must be 'A,B'")
       invariance(sfDir, outBase, only, ab(0), ab(1))
       return
@@ -216,9 +219,8 @@ object Verify {
     val unknown = only -- SparkEntry.queries.keySet
     require(unknown.isEmpty,
       s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = session(cpus.toInt)
-    dump(spark, sfDir, outDir, only)
+    val spark = Engine.session()
+    val failures = dump(spark, sfDir, outDir, SparkEntry.queries.filter(kv => only(kv._1)))
     def q(s: String): String = "\"" + jsonEscape(s) + "\""
     // Only the queries dumped THIS run go into oracle_sql.json — otherwise a
     // subset run into a reused outDir would let check_oracle validate STALE
@@ -227,5 +229,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failures.nonEmpty) {
+      System.err.println(s"[verify] ${failures.size} query(ies) failed: " +
+        s"${failures.keys.toSeq.sorted.mkString(", ")} (see $outDir/failures.json)")
+      sys.exit(1)
+    }
   }
 }

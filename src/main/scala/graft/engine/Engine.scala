@@ -13,15 +13,63 @@ import org.apache.spark.sql.SparkSession
   * library users with their own sessions can call it directly. Guarded
   * per-session (weak refs — sessions are never pinned), so repeated reads
   * never re-mutate shared state.
+  *
+  * Entry points that do construct their own session (Bench, Verify, the
+  * generators and the diagnostics) all go through [[session]], so every
+  * in-repo session runs the same confs.
   */
 object Engine {
 
   private val initialized = java.util.Collections.newSetFromMap(
     new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
 
+  /** Local parallelism for in-repo sessions: `SPARK_GRAFT_CPUS` when set,
+    * else the cores this JVM may use. */
+  def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** The confs of every in-repo session, pure so a spec can pin them. */
+  private[graft] def sessionConf(cpus: Int): Map[String, String] = Map(
+    "spark.master" -> s"local[$cpus]",
+    "spark.sql.shuffle.partitions" -> cpus.toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false",
+    // Task-memory page size pinned to 1m (r15, guide §5): Spark derives
+    // the default page from heap/cores — ~16m under a 16g local heap —
+    // so EVERY sort/agg task preallocates ~16m, and wide tiny-partition
+    // stages churn gigabytes of short-lived pages (measured as the
+    // multi-second steady spikes the r15 baseline caught on q162/q141).
+    // 1m pages cost only more page-table entries for genuinely large
+    // per-task state. Static conf, so it rides the builder (the engine's
+    // runtime confs live in ensureInitialized); it is also what arms the
+    // paired 64k AQE floor there (aqeFloorFor).
+    "spark.buffer.pageSize" -> "1m",
+    // Whole-stage-codegen compile cache 100 -> 5000 entries (r15): a
+    // 176-query session generates far more than 100 codegen units, and
+    // many queries share fragment shapes (table scans, shingle windows,
+    // minhash aggregates) - at the default size the cache thrashes
+    // between queries and every cold run recompiles shapes the session
+    // already compiled. Measured: median per-query COLD ratio 0.949 and
+    // shared builds 2.4->1.5 / 4.2->2.9 s on a busier box (full-bench
+    // A/B, OPTIMIZATION_r15.md). Cost: compiled classes live in
+    // metaspace (~tens of MB at this surface).
+    "spark.sql.codegen.cache.maxEntries" -> "5000")
+
+  /** The one session builder of the repo's entry points: [[sessionConf]]
+    * plus `overrides` (last wins), log level WARN, engine initialized. */
+  def session(cpus: Int = defaultCpus,
+      overrides: Seq[(String, String)] = Nil): SparkSession = {
+    val spark = (sessionConf(cpus).toSeq ++ overrides)
+      .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    ensureInitialized(spark)
+    spark
+  }
+
   /** The AQE-floor decision, pure so the pairing contract is testable:
     * Some(floor) only when the session pinned `spark.buffer.pageSize` at or
-    * below 4m (the in-repo builders pin 1m) or the operator set the env
+    * below 4m ([[session]] pins 1m) or the operator set the env
     * override — never for a session with auto-derived task pages. */
   private[graft] def aqeFloorFor(pageSize: Option[String],
       envOverride: Option[String]): Option[String] = {
@@ -53,8 +101,8 @@ object Engine {
       // heap (32 concurrent tiny-partition sort tasks each preallocating
       // ~16m auto-derived task pages). r16 (verdict "what's wrong" #1):
       // the floor therefore engages ONLY when the session pinned
-      // spark.buffer.pageSize to a small value (≤ 4m — the in-repo
-      // builders pin 1m), i.e. the two knobs now live or die TOGETHER; a
+      // spark.buffer.pageSize to a small value (≤ 4m — Engine.session
+      // pins 1m), i.e. the two knobs now live or die TOGETHER; a
       // session without the page pin (an external consumer, a bare spark-
       // shell) keeps Spark's default floor and can never inherit the
       // measured floor-without-pages pathology. The env override remains

@@ -60,7 +60,7 @@ object CurationOps {
     * row_number ≤ k filter as partial+final WindowGroupLimit: every map
     * partition ships at most k rows per group into the exchange, so a
     * pathologically hot group costs k·numMapPartitions shuffled rows, not
-    * its full size (plan-visible in `graft.PlanDump q46_source_quota`). */
+    * its full size (plan-visible in `graft.Diag plan <sfDir> q46_source_quota`). */
   def quotaSample(df: DataFrame, group: Column, id: Column, k: Int): DataFrame = {
     requireFresh(df, "quotaSample", "__rk")
     val w = Window.partitionBy(group).orderBy(md5(id.cast("string")), id)

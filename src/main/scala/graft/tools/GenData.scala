@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Builder-synthesized testdata tiers beyond the driver's sf0.1 — the sf1
   * tier every 10×-growth claim needs a second measurement step for.
   *
@@ -121,14 +119,10 @@ object GenData {
     val heaps = args.lift(2).contains("heaps")
     val nDocs = (50000 * sf).toLong
     val nVecs = (20000 * sf).toLong
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Engine.session()
     import spark.implicits._
+    // 16 slices = 16 output files on any machine: the slice count sets the
+    // tier's file layout, not the parallelism it runs at.
     spark.range(0L, nDocs, 1L, 16).map(r => docRow(r, heaps))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$outDir/documents.parquet")

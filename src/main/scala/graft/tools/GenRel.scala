@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Builder-synthesized RELATIONAL testdata tiers beyond the driver's sf0.1
@@ -58,13 +58,7 @@ object GenRel {
     val outDir = args.lift(1).getOrElse("target/sf1")
     val k = args.lift(2).map(_.toInt).getOrElse(10)
     require(k >= 1, s"replication factor must be >= 1, got $k")
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Engine.session()
 
     def read(t: String): DataFrame = spark.read.parquet(s"$inDir/$t.parquet")
     def write(t: String, df: DataFrame): Unit =

@@ -1,7 +1,7 @@
 package graft.tools
 
-/** Prints the shared oracle CTE fragments with sentinel delimiters, so the
-  * sf10 oracle harness ([[scripts/check_oracle_heavy.py]]) can split each
+/** Prints the shared oracle CTE fragments with sentinel delimiters, so
+  * `scripts/build_cal_prefix.py` (the sf10 oracle harness) can split each
   * calibrated-family oracle into (shared prefix, consumer suffix) EXACTLY —
   * the prefix is materialized once per DuckDB session instead of being
   * re-derived per query (semantically identical: the generator SQL is

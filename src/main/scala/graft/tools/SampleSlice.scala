@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Deterministic GROUP-PRESERVING corpus slice — the round-12 verdict #1
@@ -30,13 +29,7 @@ object SampleSlice {
     val num = args.lift(2).map(_.toInt).getOrElse(3)
     val den = args.lift(3).map(_.toInt).getOrElse(16)
     require(num >= 1 && num < den, s"slice $num/$den must be a proper fraction")
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Engine.session()
 
     def slicePred(key: org.apache.spark.sql.Column) =
       conv(substring(md5(key), 1, 8), 16, 10).cast("long") % den < num

@@ -3,7 +3,6 @@ package graft.tools
 import graft.engine.Tables
 import graft.operators.{DedupOps, SimilarityOps}
 import graft.queries.SharedPipelines
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale audit of the r15 OCCUPANCY-pinned semantic geometry, across any
@@ -20,13 +19,7 @@ import org.apache.spark.sql.functions._
 object SemOccAudit {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "pass one or more sf dirs")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.engine.Engine.session()
     args.foreach { dir =>
       val embs = Tables.embeddings(spark, dir)
       val n = embs.count()

@@ -3,7 +3,6 @@ package graft.tools
 import graft.engine.Tables
 import graft.operators.DedupOps
 import graft.streaming.{StandingStore, StreamingOps}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -25,13 +24,7 @@ object StreamScaleAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/repo/target/sf1")
     val nBatches = args.lift(1).map(_.toInt).getOrElse(20)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.engine.Engine.session()
     import spark.implicits._
 
     val docs = Tables.documents(spark, dir)

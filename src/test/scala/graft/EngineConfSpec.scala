@@ -32,4 +32,18 @@ class EngineConfSpec extends SparkSpec {
     assert(floor != "64k",
       "engine floor leaked into a session without the page-size pin")
   }
+
+  test("every in-repo session runs one conf set, sized by cpus") {
+    for (cpus <- Seq(4, 7)) {
+      val c = Engine.sessionConf(cpus)
+      assert(c("spark.master") === s"local[$cpus]")
+      assert(c("spark.sql.shuffle.partitions") === cpus.toString)
+      assert(c("spark.buffer.pageSize") === "1m")
+      assert(c("spark.sql.codegen.cache.maxEntries") === "5000")
+      assert(c("spark.sql.session.timeZone") === "UTC")
+      assert(c("spark.ui.enabled") === "false")
+      // The page pin is what arms the paired AQE floor.
+      assert(Engine.aqeFloorFor(c.get("spark.buffer.pageSize"), None).contains("64k"))
+    }
+  }
 }

@@ -13,6 +13,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   // One session per JVM (Test/fork := true gives each run its own JVM).
+  // Deliberately not Engine.session: without the page pin it is the
+  // in-JVM witness for EngineConfSpec's "unpinned session" test.
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
