@@ -54,8 +54,7 @@ object ScaleAudit {
     val nDocs = docs.count()
     // All-pairs volume the round-1 plans would have generated: sum over
     // source buckets of n·(n−1)/2.
-    val allPairsDocs = docs.groupBy("source").count()
-      .agg(coalesce(sum(expr("count * (count - 1) DIV 2")), lit(0L))).head.getLong(0)
+    val allPairsDocs = DedupOps.pairMass(docs, Seq("source")).head.getLong(0)
 
     val shingles = TextOps.shingleRows(docs, col("doc_id"), col("source"), col("text"))
     // pairMassBudget = 0 (guard off): this audit IS the instrument that
@@ -185,8 +184,7 @@ object ScaleAudit {
 
     val embs = Tables.embeddings(spark, sfDir)
     val nVecs = embs.count()
-    val allPairsVecs = embs.groupBy("label").count()
-      .agg(coalesce(sum(expr("count * (count - 1) DIV 2")), lit(0L))).head.getLong(0)
+    val allPairsVecs = DedupOps.pairMass(embs, Seq("label")).head.getLong(0)
     // (cell × sign-LSH bucket) pair volume — the shared candidate generator
     // behind q32 embedding near-dup, q61 semantic dedup, AND q31's k-NN
     // join (ordered candidates = 2× these unordered pairs); all_pairs_vecs
@@ -223,10 +221,8 @@ object ScaleAudit {
       graft.queries.SharedPipelines.semTables, semDepth, 64)
     val semOccCand = DedupOps.embeddingCandidatesTables(embs, "vec_id",
       col("embedding"), col("label"), semOccTables).count()
-    val semOccMass = SimilarityOps.lshCandidateRows(embs, "vec_id",
-        col("embedding"), col("label"), semOccTables, "n_")
-      .groupBy(col("cell"), col("tb")).agg(count(lit(1)).as("__n"))
-      .agg(coalesce(sum(expr("__n * (__n - 1) DIV 2")), lit(0L)))
+    val semOccMass = DedupOps.pairMass(SimilarityOps.lshCandidateRows(embs, "vec_id",
+        col("embedding"), col("label"), semOccTables, "n_"), Seq("cell", "tb"))
       .head.getLong(0)
 
     // q53/q61 cluster graphs: nodes/components from the minhash pair list.
@@ -463,8 +459,7 @@ object ScaleAuditCalibrated {
     val spark = graft.engine.Engine.session()
     val docs = Tables.documents(spark, sfDir)
     val nDocs = docs.count()
-    val allPairs = docs.groupBy("source").count()
-      .agg(coalesce(sum(expr("count * (count - 1) DIV 2")), lit(0L))).head.getLong(0)
+    val allPairs = DedupOps.pairMass(docs, Seq("source")).head.getLong(0)
     val t0 = System.nanoTime()
     val rows = ScaleAudit.calibratedFiveGramRows(docs)
     val sec = (System.nanoTime() - t0) / 1e9
@@ -501,12 +496,8 @@ object ScaleAuditSimhash {
     val docs = Tables.documents(spark, sfDir)
     val nDocs = docs.count()
     val toks = docs.withColumn("tokset", array_distinct(TextOps.tokenize(col("text"))))
-    val sigs = DedupOps.simhash63(toks.withColumn("bucket", col("source")),
-      "doc_id", col("tokset"), Seq("bucket"))
-    val bands = sigs.select(col("doc_id"), col("bucket"),
-      posexplode(array((0 until 7).map(j => expr(s"(simhash >> ${9 * j}) & 511")): _*))
-        .as(Seq("band", "bits")))
-    val grp = bands.groupBy(col("bucket"), col("band"), col("bits"))
+    val grp = DedupOps.simhashBandRows(toks, "doc_id", col("tokset"), col("source"))
+      .groupBy(col("bucket"), col("band"), col("bits"))
       .agg(count(lit(1)).as("n")).localCheckpoint(true)
     val stats = grp.agg(
       count(lit(1)).as("buckets"),

@@ -68,19 +68,20 @@ object ClassifierOps {
       (0 until d).map(i => ((col(s"f$i") - mean(i)) / sd(i)).as(s"z$i"))
         :+ col("y"): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = z.count().toDouble
     val w = Array.fill(d + 1)(0.0) // bias last
-    for (_ <- 0 until iters) {
-      val margin = (0 until d).map(i => col(s"z$i") * lit(w(i)))
-        .foldLeft(lit(w(d)))(_ + _)
-      val resid = lit(1d) / (lit(1d) + exp(-margin)) - col("y")
-      val g = z.agg(
-        sum(resid).as("gb"),
-        (0 until d).map(i => sum(resid * col(s"z$i")).as(s"g$i")): _*).head()
-      w(d) -= lr / n * g.getDouble(0)
-      for (i <- 0 until d) w(i) -= lr / n * g.getDouble(i + 1)
-    }
-    z.unpersist(blocking = false)
+    try {
+      val n = z.count().toDouble
+      for (_ <- 0 until iters) {
+        val margin = (0 until d).map(i => col(s"z$i") * lit(w(i)))
+          .foldLeft(lit(w(d)))(_ + _)
+        val resid = lit(1d) / (lit(1d) + exp(-margin)) - col("y")
+        val g = z.agg(
+          sum(resid).as("gb"),
+          (0 until d).map(i => sum(resid * col(s"z$i")).as(s"g$i")): _*).head()
+        w(d) -= lr / n * g.getDouble(0)
+        for (i <- 0 until d) w(i) -= lr / n * g.getDouble(i + 1)
+      }
+    } finally z.unpersist(blocking = false)
     // Fold standardization into the weights: w·(x−m)/s + b = (w/s)·x + (b − w·m/s).
     val raw = Array.tabulate(d)(i => w(i) / sd(i))
     val bias = w(d) - (0 until d).map(i => w(i) * mean(i) / sd(i)).sum
@@ -145,24 +146,25 @@ object ClassifierOps {
       (0 until d).map(i => ((col(s"f$i") - mean(i)) / sd(i)).as(s"z$i"))
         :+ col("y"): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = z.count().toDouble
     val w = Array.fill(d + 1)(0.0) // bias last
-    for (_ <- 0 until iters) {
-      // Margin accumulates bias-first then features in order — the oracle
-      // writes the same parenthesisation, so each per-row margin (and the
-      // rational-sigmoid residual it feeds) is bit-identical cross-engine.
-      val margin = (0 until d).map(i => col(s"z$i") * lit(w(i)))
-        .foldLeft(lit(w(d)))(_ + _)
-      val resid = rationalSigmoid(margin) - col("y")
-      val g = z.agg(
-        graft.engine.Semantics.roundz(sum(resid) / lit(n), 6).as("gb"),
-        (0 until d).map(i =>
-          graft.engine.Semantics.roundz(sum(resid * col(s"z$i")) / lit(n), 6).as(s"g$i")): _*)
-        .head()
-      w(d) -= lr * g.getDouble(0)
-      for (i <- 0 until d) w(i) -= lr * g.getDouble(i + 1)
-    }
-    z.unpersist(blocking = false)
+    try {
+      val n = z.count().toDouble
+      for (_ <- 0 until iters) {
+        // Margin accumulates bias-first then features in order — the oracle
+        // writes the same parenthesisation, so each per-row margin (and the
+        // rational-sigmoid residual it feeds) is bit-identical cross-engine.
+        val margin = (0 until d).map(i => col(s"z$i") * lit(w(i)))
+          .foldLeft(lit(w(d)))(_ + _)
+        val resid = rationalSigmoid(margin) - col("y")
+        val g = z.agg(
+          graft.engine.Semantics.roundz(sum(resid) / lit(n), 6).as("gb"),
+          (0 until d).map(i =>
+            graft.engine.Semantics.roundz(sum(resid * col(s"z$i")) / lit(n), 6).as(s"g$i")): _*)
+          .head()
+        w(d) -= lr * g.getDouble(0)
+        for (i <- 0 until d) w(i) -= lr * g.getDouble(i + 1)
+      }
+    } finally z.unpersist(blocking = false)
     (w.toSeq, mean.toSeq, sd.toSeq)
   }
 

@@ -14,6 +14,13 @@ import org.apache.spark.sql.functions._
   * shingles, never on the cross product. All hashing is md5-based so the
   * DuckDB oracle can reproduce it bit-for-bit (xxhash64 would be faster but
   * is not cross-engine).
+  *
+  * Pair core — one private helper per decision; new generators reuse them:
+  * [[bandCollisions]] (band self-join + per-pair band count),
+  * [[minhashMinima]] (md5 → (h1, h2) → per-doc minima), [[sizedCapped]] +
+  * [[sharedShingleOverlap]] (set sizes → priced fixed cap → (bucket, sh)
+  * self-join), [[simhashBandRows]] (7 × 9-bit band explode), [[pairMass]]
+  * (Σ C(n,2) over groups) and [[refuseAbove]] (the priced `raise_error`).
   */
 object DedupOps {
 
@@ -44,13 +51,20 @@ object DedupOps {
     val sigs = docs
       .select(col(id), bucketCol.as("bucket"), minhashSignature(shingleSet, numHashes).as("sig"))
       .filter(size(col("sig")) > 0)
-    val bands = sigs.select(col(id), col("bucket"), posexplode(col("sig")).as(Seq("band", "h")))
-    val a = bands.toDF("a_id", "bucket", "band", "h")
-    val b = bands.toDF("b_id", "bucket", "band", "h")
-    a.join(b, Seq("bucket", "band", "h"))
+    bandCollisions(
+      sigs.select(col(id), col("bucket"), posexplode(col("sig")).as(Seq("band", "h"))),
+      "h", "n_shared_bands")
+  }
+
+  /** The LSH band self-join: (id, bucket, band, `key`) rows → (a_id, b_id,
+    * `as`), a < b, `as` = the number of bands the pair collides on. */
+  private def bandCollisions(bands: DataFrame, key: String, as: String): DataFrame = {
+    val a = bands.toDF("a_id", "bucket", "band", key)
+    val b = bands.toDF("b_id", "bucket", "band", key)
+    a.join(b, Seq("bucket", "band", key))
       .filter(col("a_id") < col("b_id"))
       .groupBy(col("a_id"), col("b_id"))
-      .agg(count(lit(1)).as("n_shared_bands"))
+      .agg(count(lit(1)).as(as))
   }
 
   /** Hot-shingle document-frequency cap: drop (bucket, sh) groups present in
@@ -81,12 +95,10 @@ object DedupOps {
     * mass from the rows the window already labeled instead of re-deriving
     * the shingle pipeline from scan (measured 3–7× on the guarded
     * baselines when the mass branch recomputed from scratch). */
-  def capShingleDfKeep(shingles: DataFrame, maxDf: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  def capShingleDfKeep(shingles: DataFrame, maxDf: Int): DataFrame =
     shingles
       .withColumn("__df", count(lit(1)).over(Window.partitionBy(col("bucket"), col("sh"))))
       .filter(col("__df") <= maxDf)
-  }
 
   /** Quantile-CALIBRATED df cap — the scale-robust form of [[capShingleDf]]:
     * drop (bucket, sh) groups whose document frequency exceeds the df
@@ -119,7 +131,6 @@ object DedupOps {
     * `floor`; the default 1 is a no-op (df ≥ 1 always), production wide-
     * shingle configs pass ≥ 2 so shared evidence always survives. */
   def capShingleDfQuantile(shingles: DataFrame, q: Double, floor: Int = 1): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // Two physically different forms, identical results — chosen by what
     // the INPUT costs to evaluate (r16; every number below is a same-box
     // sf10 A/B, see OPTIMIZATION_r16.md):
@@ -186,7 +197,6 @@ object DedupOps {
     * total arithmetic matches cume_dist exactly, so oracle hashes keyed on
     * the threshold are engine- and path-independent. */
   def dfQuantileThreshold(dfCol: DataFrame, q: Double, floor: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(q > 0 && q <= 1, s"quantile must be in (0, 1], got $q")
     require(floor >= 1, s"df floor must be >= 1, got $floor")
     val hist = dfCol.groupBy(col("__df")).agg(count(lit(1)).as("__n"))
@@ -207,31 +217,28 @@ object DedupOps {
     * h1 + 7·h2 < 2^43, overflow-safe in engines that error on BIGINT
     * overflow (DuckDB). */
   def minhashLshCandidatesFromRows(shingles: DataFrame, numHashes: Int,
-      maxDf: Int = 0): DataFrame = {
-    val bands = minhashBandRows(shingles, numHashes, maxDf)
-    val a = bands.toDF("a_id", "bucket", "band", "h")
-    val b = bands.toDF("b_id", "bucket", "band", "h")
-    a.join(b, Seq("bucket", "band", "h"))
-      .filter(col("a_id") < col("b_id"))
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(count(lit(1)).as("n_shared_bands"))
-  }
+      maxDf: Int = 0): DataFrame =
+    bandCollisions(minhashBandRows(shingles, numHashes, maxDf), "h", "n_shared_bands")
 
   /** The band-signature stage of [[minhashLshCandidatesFromRows]]:
     * (doc_id, bucket, band, h) rows, one per (doc, band) — the LSH "index
     * entries". Exposed so incremental dedup can probe a STANDING band index
     * with fresh documents instead of self-joining a recomputed corpus. */
   def minhashBandRows(shingles: DataFrame, numHashes: Int,
-      maxDf: Int = 0): DataFrame = {
+      maxDf: Int = 0): DataFrame =
+    minhashMinima(shingles, numHashes, maxDf).select(col("doc_id"), col("bucket"),
+      posexplode(array((0 until numHashes).map(j => col(s"m$j")): _*)).as(Seq("band", "h")))
+
+  /** The signature aggregate both band forms share: (doc_id, bucket,
+    * m0..m{numHashes−1}) with m_j = min over the doc's (optionally df-capped)
+    * shingles of h1 + j·h2, (h1, h2) the two 40-bit halves of md5(sh). */
+  private def minhashMinima(shingles: DataFrame, numHashes: Int, maxDf: Int): DataFrame = {
     val hashed = (if (maxDf > 0) capShingleDf(shingles, maxDf) else shingles)
       .withColumn("h", md5(col("sh")))
       .withColumn("h1", conv(substring(col("h"), 1, 10), 16, 10).cast("long"))
       .withColumn("h2", conv(substring(col("h"), 11, 10), 16, 10).cast("long"))
     val mins = (0 until numHashes).map(j => min(col("h1") + lit(j.toLong) * col("h2")).as(s"m$j"))
-    val sigs = hashed.groupBy(col("doc_id"), col("bucket"))
-      .agg(mins.head, mins.tail: _*)
-    sigs.select(col("doc_id"), col("bucket"),
-      posexplode(array((0 until numHashes).map(j => col(s"m$j")): _*)).as(Seq("band", "h")))
+    hashed.groupBy(col("doc_id"), col("bucket")).agg(mins.head, mins.tail: _*)
   }
 
   /** The r-rows-per-band generalization of [[minhashBandRows]] — the
@@ -257,17 +264,10 @@ object DedupOps {
       maxDf: Int = 0): DataFrame = {
     require(rowsPerBand >= 1 && numHashes % rowsPerBand == 0,
       s"rowsPerBand=$rowsPerBand must divide numHashes=$numHashes")
-    val hashed = (if (maxDf > 0) capShingleDf(shingles, maxDf) else shingles)
-      .withColumn("h", md5(col("sh")))
-      .withColumn("h1", conv(substring(col("h"), 1, 10), 16, 10).cast("long"))
-      .withColumn("h2", conv(substring(col("h"), 11, 10), 16, 10).cast("long"))
-    val mins = (0 until numHashes).map(j => min(col("h1") + lit(j.toLong) * col("h2")).as(s"m$j"))
-    val sigs = hashed.groupBy(col("doc_id"), col("bucket"))
-      .agg(mins.head, mins.tail: _*)
     val keys = (0 until numHashes / rowsPerBand).map { b =>
       concat_ws(":", (0 until rowsPerBand).map(i => col(s"m${b * rowsPerBand + i}")): _*)
     }
-    sigs.select(col("doc_id"), col("bucket"),
+    minhashMinima(shingles, numHashes, maxDf).select(col("doc_id"), col("bucket"),
       posexplode(array(keys: _*)).as(Seq("band", "bk")))
   }
 
@@ -276,15 +276,9 @@ object DedupOps {
     * only where all r minhashes of some band agree. (a_id, b_id,
     * n_shared_bands), a < b, deterministic. */
   def minhashLshCandidatesBanded(shingles: DataFrame, numHashes: Int,
-      rowsPerBand: Int, maxDf: Int = 0): DataFrame = {
-    val bands = minhashBandedRows(shingles, numHashes, rowsPerBand, maxDf)
-    val a = bands.toDF("a_id", "bucket", "band", "bk")
-    val b = bands.toDF("b_id", "bucket", "band", "bk")
-    a.join(b, Seq("bucket", "band", "bk"))
-      .filter(col("a_id") < col("b_id"))
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(count(lit(1)).as("n_shared_bands"))
-  }
+      rowsPerBand: Int, maxDf: Int = 0): DataFrame =
+    bandCollisions(minhashBandedRows(shingles, numHashes, rowsPerBand, maxDf),
+      "bk", "n_shared_bands")
 
   /** Default ceiling for [[subCapPairMassGuard]]: 200 M pre-aggregation
     * join rows. Calibration (round-13): q22's fixed df ≤ 50 pool measures
@@ -313,35 +307,47 @@ object DedupOps {
     * `dfCol` (the df window [[capShingleDfKeep]] already computes — a
     * group of df rows contributes df·(df−1)/2 pairs = Σ_rows (df−1)/2,
     * so the mass is ONE plain aggregate over already-labeled rows:
-    * Σ(df−1) DIV 2). The 1-row result broadcasts onto the stream and the
-    * guard column raises on the FIRST row evaluated — inside the map
-    * stage feeding the join, before the shuffle fans out. Aggregating
-    * from the window's own output (not a fresh groupBy from scan) keeps
-    * the mass branch shareable with the join sides' exchange — the first
-    * cut recomputed the whole shingle pipeline for the mass and measured
-    * 3–7× on the guarded baselines. `budget <= 0` disables (for call
-    * sites whose mass is individually measured payable — each cites its
-    * measurement). */
+    * Σ(df−1) DIV 2), refused through [[refuseAbove]]. Aggregating from the
+    * window's own output (not a fresh groupBy from scan) keeps the mass
+    * branch shareable with the join sides' exchange — the first cut
+    * recomputed the whole shingle pipeline for the mass and measured 3–7×
+    * on the guarded baselines. `budget <= 0` disables (for call sites
+    * whose mass is individually measured payable — each cites it). */
   def subCapPairMassGuard(cappedWithDf: DataFrame, maxDf: Int, budget: Long,
       site: String, dfCol: String = "__df"): DataFrame = {
-    if (budget <= 0L) return cappedWithDf
     val mass = cappedWithDf
       .agg(coalesce(sum(col(dfCol) - lit(1L)), lit(0L)).as("__s"))
       .select(expr("__s DIV 2").as("__pm"))
     // The raise rides the JOIN KEY column (`sh`), never dfCol: callers drop
-    // dfCol right after, and a pruned guard column is a guard the optimizer
-    // silently deletes. `sh` survives into the self-join by construction.
-    cappedWithDf.crossJoin(broadcast(mass))
-      .withColumn("sh", when(col("__pm") <= lit(budget), col("sh"))
-        .otherwise(raise_error(concat(
-          lit(s"$site: sub-cap (df <= $maxDf) shared-shingle pair mass = "),
-          col("__pm").cast("string"),
-          lit(s" rows exceeds pairMassBudget = $budget — a FIXED df cap is" +
-            " measured-superlinear at scale (SURVEY §6.1); use" +
-            " CandidateGen.QuantileCapped, or raise the budget only with a" +
-            " measured payable plan")))))
-      .drop("__pm")
+    // dfCol right after. `sh` survives into the self-join by construction.
+    refuseAbove(cappedWithDf, mass, budget, "sh",
+      s"$site: sub-cap (df <= $maxDf) shared-shingle pair mass = ",
+      s" rows exceeds pairMassBudget = $budget — a FIXED df cap is" +
+        " measured-superlinear at scale (SURVEY §6.1); use" +
+        " CandidateGen.QuantileCapped, or raise the budget only with a" +
+        " measured payable plan")
   }
+
+  /** Σ C(n, 2) over the `groupCols` groups of `rows` — a bucket self-join's
+    * exact pre-aggregation output — as a 1-row (__pm) frame; 0 when empty. */
+  private[graft] def pairMass(rows: DataFrame, groupCols: Seq[String]): DataFrame =
+    rows.groupBy(groupCols.map(col): _*)
+      .agg(count(lit(1)).as("__n"))
+      .agg(coalesce(sum(expr("__n * (__n - 1) DIV 2")), lit(0L)).as("__pm"))
+
+  /** The priced refusal every pair-mass guard shares: broadcast the 1-row
+    * (__pm) `mass` onto `rows`; past `budget`, `probeCol` raises `prefix` +
+    * mass + `suffix` on the first row evaluated — in the map stage feeding
+    * the join, before the shuffle fans out. `probeCol` must be a JOIN-KEY
+    * column (a guard on a column the optimizer prunes silently vanishes).
+    * `budget <= 0` disables. */
+  private def refuseAbove(rows: DataFrame, mass: DataFrame, budget: Long,
+      probeCol: String, prefix: String, suffix: String): DataFrame =
+    if (budget <= 0L) rows
+    else rows.crossJoin(broadcast(mass))
+      .withColumn(probeCol, when(col("__pm") <= lit(budget), col(probeCol))
+        .otherwise(raise_error(concat(lit(prefix), col("__pm").cast("string"), lit(suffix)))))
+      .drop("__pm")
 
   /** Pre-flight COST refusal for FIXED-geometry LSH bucket self-joins
     * (round 14 — the [[subCapPairMassGuard]] discipline extended to the
@@ -353,37 +359,24 @@ object DedupOps {
     * the engine's own bucket arithmetic): q32's (label × 2-plane) geometry
     * 50.5 k → 5.04 M → 504.3 M over a FIXED 40 groups; q88's two-table OR
     * 100.7 k → 10.04 M → 1.004 B over 80 — 100× per 10× step, the §6.2
-    * floor shape in embedding space. One cheap aggregate over the bucketed
-    * rows (a second narrow-map pass over the vectors — the same p dots per
-    * row the join sides already pay) prices the join; above `budget` the
-    * plan raises a PRICED `raise_error` naming the mass instead of fanning
-    * out. The production path at scale is the recall-targeted auto-tuner
-    * ([[SimilarityOps.trainTunedAnnIndex]]/`serveAnn`), whose geometry
-    * grows with the corpus. `budget <= 0` disables (measurement
+    * floor shape in embedding space. [[pairMass]] over the bucketed rows
+    * prices the join and [[refuseAbove]] refuses past `budget` instead of
+    * fanning out. The production path at scale is the recall-targeted
+    * auto-tuner ([[SimilarityOps.trainTunedAnnIndex]]/`serveAnn`), whose
+    * geometry grows with the corpus. `budget <= 0` disables (measurement
     * instruments); call sites whose mass is individually measured payable
     * raise the budget citing the measurement (q32/q88/semanticComps: the
     * sf10 masses above ran to completion in 47.6 s / 103.8 s / 61.3 s in
     * `BENCH_sf10_r14.json`). */
   def bucketPairMassGuard(bucketed: DataFrame, groupCols: Seq[String],
-      budget: Long, site: String, probeCol: String): DataFrame = {
-    if (budget <= 0L) return bucketed
-    val mass = bucketed.groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("__n"))
-      .agg(coalesce(sum(expr("__n * (__n - 1) DIV 2")), lit(0L)).as("__pm"))
-    // The raise rides a JOIN-KEY column (probeCol): a guard on a column the
-    // optimizer prunes is a guard that silently vanishes.
-    bucketed.crossJoin(broadcast(mass))
-      .withColumn(probeCol, when(col("__pm") <= lit(budget), col(probeCol))
-        .otherwise(raise_error(concat(
-          lit(s"$site: fixed-geometry LSH bucket pair mass = "),
-          col("__pm").cast("string"),
-          lit(s" rows exceeds bucketMassBudget = $budget — literal (tables," +
-            " planes) pin the bucket space, making the self-join" +
-            " corpus-quadratic (measured 100x per 10x step); use the" +
-            " recall-targeted auto-tuner (trainTunedAnnIndex/serveAnn)," +
-            " or raise the budget only with a measured payable plan")))))
-      .drop("__pm")
-  }
+      budget: Long, site: String, probeCol: String): DataFrame =
+    refuseAbove(bucketed, pairMass(bucketed, groupCols), budget, probeCol,
+      s"$site: fixed-geometry LSH bucket pair mass = ",
+      s" rows exceeds bucketMassBudget = $budget — literal (tables," +
+        " planes) pin the bucket space, making the self-join" +
+        " corpus-quadratic (measured 100x per 10x step); use the" +
+        " recall-targeted auto-tuner (trainTunedAnnIndex/serveAnn)," +
+        " or raise the budget only with a measured payable plan")
 
   /** Candidate-generation POLICY for near-dup dedup — the API-level guard
     * that makes the measured-linear calibrated pipeline the path of least
@@ -515,40 +508,40 @@ object DedupOps {
     * boilerplate less. Deliberately not done; the oracle mirrors the
     * full-set-size semantics bit-for-bit. */
   def jaccardPairsFromRows(shingles: DataFrame, maxDf: Int = 0,
-      pairMassBudget: Long = DefaultPairMassBudget): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // Set size rides along as a window count: HashPartitioning(doc_id) from
-    // shingleRows' window/distinct already satisfies it — no extra shuffle,
-    // and no separate `sizes` aggregate to join (which would re-evaluate the
-    // whole shingle pipeline twice more). Both self-join sides are then
-    // IDENTICAL subplans shuffled on (bucket, sh), so Spark's exchange reuse
-    // computes the pipeline once and reads it twice.
-    // The df cap sits AFTER the setsize window (sizes stay full-set; only
-    // the intersection is capped) and shuffles to (bucket, sh) — which the
-    // join then reuses, so hardening costs zero additional exchanges.
-    // Per (doc_id, bucket), matching the per-bucket join below — the same
-    // denominator discipline as minhashCalibration: nothing forbids a doc
-    // appearing under several buckets, and a doc_id-only window would sum
-    // its set sizes across buckets.
+      pairMassBudget: Long = DefaultPairMassBudget): DataFrame =
+    sharedShingleOverlap(sizedCapped(shingles, maxDf, pairMassBudget, "jaccardPairsFromRows"))
+      .withColumn("jaccard", round(overlapJaccard, 6))
+
+  /** (doc_id, bucket, sh) → (doc_id, bucket, sh, setsize), then, when
+    * `maxDf > 0`, the fixed df cap with its priced pre-flight. Set size is
+    * a window count per (doc_id, bucket) — the partitioning shingleRows
+    * already has, so no shuffle and no `sizes` aggregate to join; per
+    * bucket because a doc may appear under several buckets. The cap sits
+    * AFTER the size window (sizes stay full-set; only the intersection is
+    * capped) and shuffles to (bucket, sh), which the join then reuses;
+    * Σ C(df,2) over the survivors IS the join's pre-aggregation row count,
+    * so the refusal states the exact fan-out avoided. */
+  private def sizedCapped(shingles: DataFrame, maxDf: Int, budget: Long,
+      site: String): DataFrame = {
     val sized = shingles.withColumn("setsize",
       count(lit(1)).over(Window.partitionBy(col("doc_id"), col("bucket"))))
-    // Fixed-cap plans carry the priced pre-flight (round-12 verdict #2):
-    // Σ C(df,2) over the surviving groups IS this join's pre-aggregation
-    // row count, so the refusal message states the exact fan-out avoided.
-    val ex = if (maxDf > 0)
-      subCapPairMassGuard(capShingleDfKeep(sized, maxDf), maxDf,
-        pairMassBudget, "jaccardPairsFromRows").drop("__df")
+    if (maxDf > 0)
+      subCapPairMassGuard(capShingleDfKeep(sized, maxDf), maxDf, budget, site).drop("__df")
     else sized
-    val a = ex.toDF("a_id", "bucket", "sh", "a_size")
-    val b = ex.toDF("b_id", "bucket", "sh", "b_size")
+  }
+
+  /** The shared-shingle self-join over [[sizedCapped]] rows: (a_id, b_id,
+    * n_common, a_size, b_size), a < b, pairs sharing ≥ 1 (bucket, sh). Both
+    * join sides are IDENTICAL subplans shuffled on (bucket, sh), so Spark's
+    * exchange reuse computes the pipeline once and reads it twice. */
+  private def sharedShingleOverlap(sized: DataFrame): DataFrame = {
+    val a = sized.toDF("a_id", "bucket", "sh", "a_size")
+    val b = sized.toDF("b_id", "bucket", "sh", "b_size")
     a.join(b, Seq("bucket", "sh"))
       .filter(col("a_id") < col("b_id"))
-      .groupBy("a_id", "b_id")
+      .groupBy(col("a_id"), col("b_id"))
       .agg(count(lit(1)).as("n_common"),
         max(col("a_size")).as("a_size"), max(col("b_size")).as("b_size"))
-      .withColumn("jaccard",
-        round(col("n_common").cast("double") /
-          (col("a_size") + col("b_size") - col("n_common")).cast("double"), 6))
   }
 
   /** X2 (containment near-dup): directional shingle containment
@@ -558,39 +551,17 @@ object DedupOps {
     * never surface partial copies; containment is the standard complement
     * (Broder's "containment" alongside "resemblance").
     *
-    * Identical join shape (and cost) to [[jaccardPairsFromRows]]: pairs
-    * form only on shared shingles inside a bucket, set sizes ride the
-    * doc_id window below the join, exchange reuse computes the shingle
-    * pipeline once for both sides. The same `maxDf` caveat applies: sizes
-    * stay full-set while the intersection counts surviving shingles, so
-    * hot-shingle overlap is down-weighted (the direction a dedup ranking
-    * wants). */
+    * Identical join core (and cost) to [[jaccardPairsFromRows]]:
+    * [[sizedCapped]] + [[sharedShingleOverlap]]. The same `maxDf` caveat
+    * applies: sizes stay full-set while the intersection counts surviving
+    * shingles, so hot-shingle overlap is down-weighted (the direction a
+    * dedup ranking wants). */
   def containmentPairs(shingles: DataFrame, maxDf: Int = 0,
       minContainment: Double = 0.0,
-      pairMassBudget: Long = DefaultPairMassBudget): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // Per (doc_id, bucket), matching the per-bucket join below — the same
-    // denominator discipline as minhashCalibration: nothing forbids a doc
-    // appearing under several buckets, and a doc_id-only window would sum
-    // its set sizes across buckets.
-    val sized = shingles.withColumn("setsize",
-      count(lit(1)).over(Window.partitionBy(col("doc_id"), col("bucket"))))
-    val ex = if (maxDf > 0)
-      subCapPairMassGuard(capShingleDfKeep(sized, maxDf), maxDf,
-        pairMassBudget, "containmentPairs").drop("__df")
-    else sized
-    val a = ex.toDF("a_id", "bucket", "sh", "a_size")
-    val b = ex.toDF("b_id", "bucket", "sh", "b_size")
-    a.join(b, Seq("bucket", "sh"))
-      .filter(col("a_id") < col("b_id"))
-      .groupBy("a_id", "b_id")
-      .agg(count(lit(1)).as("n_common"),
-        max(col("a_size")).as("a_size"), max(col("b_size")).as("b_size"))
-      .withColumn("containment",
-        round(col("n_common").cast("double") /
-          least(col("a_size"), col("b_size")).cast("double"), 6))
+      pairMassBudget: Long = DefaultPairMassBudget): DataFrame =
+    sharedShingleOverlap(sizedCapped(shingles, maxDf, pairMassBudget, "containmentPairs"))
+      .withColumn("containment", round(overlapContainment, 6))
       .filter(col("containment") >= minContainment)
-  }
 
   /** Exact-Jaccard VERIFY over an EXPLICIT candidate-pair list — the stage
     * between a calibrated candidate generator (quantile-capped banded LSH)
@@ -611,9 +582,7 @@ object DedupOps {
   def jaccardVerifyPairs(cand: DataFrame, shingles: DataFrame,
       threshold: Double): DataFrame =
     pairOverlapStats(cand, shingles)
-      .withColumn("jaccard",
-        round(col("n_common").cast("double") /
-          (col("a_size") + col("b_size") - col("n_common")).cast("double"), 6))
+      .withColumn("jaccard", round(overlapJaccard, 6))
       .filter(col("jaccard") >= threshold)
 
   /** Directional-containment VERIFY over an explicit candidate-pair list —
@@ -635,9 +604,7 @@ object DedupOps {
   def containmentVerifyPairs(cand: DataFrame, shingles: DataFrame,
       minContainment: Double): DataFrame =
     pairOverlapStats(cand, shingles)
-      .withColumn("containment",
-        round(col("n_common").cast("double") /
-          least(col("a_size"), col("b_size")).cast("double"), 6))
+      .withColumn("containment", round(overlapContainment, 6))
       .filter(col("containment") >= minContainment)
       .select(col("a_id"), col("b_id"), col("n_common"), col("containment"))
 
@@ -664,11 +631,8 @@ object DedupOps {
     * operator total over any id-pair list at the cost of one exchange
     * over the (tiny) candidate ids. */
   private def pairOverlapStats(cand: DataFrame, shingles: DataFrame): DataFrame = {
-    val pairs = normalizedPairs(cand)
-    val members = pairs.select(col("a_id"), col("b_id"), col("a_id").as("doc_id"), lit(0).as("side"))
-      .union(pairs.select(col("a_id"), col("b_id"), col("b_id").as("doc_id"), lit(1).as("side")))
     val rows = shingles.select(col("doc_id"), col("sh")).distinct()
-    members.join(rows, "doc_id")
+    pairMembers(cand).join(rows, "doc_id")
       .groupBy(col("a_id"), col("b_id"), col("sh"))
       .agg(count(lit(1)).as("__hits"),
         sum(when(col("side") === 0, 1L)).as("__a1"),
@@ -678,14 +642,27 @@ object DedupOps {
         sum(col("__a1")).as("a_size"), sum(col("__b1")).as("b_size"))
   }
 
-  /** (a_id, b_id) with a < b, deduped — the candidate-list normalization
-    * every pair verifier applies before fanning members out. */
-  private def normalizedPairs(cand: DataFrame): DataFrame =
-    cand.select(
+  /** Jaccard |A∩B| / |A∪B| and containment |A∩B| / min(|A|, |B|) over
+    * (n_common, a_size, b_size) overlap rows — one definition for the
+    * corpus-wide forms and the verifiers, unrounded. */
+  private val overlapJaccard: Column = col("n_common").cast("double") /
+    (col("a_size") + col("b_size") - col("n_common")).cast("double")
+  private val overlapContainment: Column =
+    col("n_common").cast("double") / least(col("a_size"), col("b_size")).cast("double")
+
+  /** (a_id, b_id, doc_id, side) — one row per pair MEMBER (side 0 = a,
+    * 1 = b) of the candidate list normalized to a < b and deduped (a
+    * duplicate or reversed pair would double every per-feature count): the
+    * fan-out every pair verifier joins against its feature stream. */
+  private def pairMembers(cand: DataFrame): DataFrame = {
+    val pairs = cand.select(
         least(col("a_id"), col("b_id")).as("a_id"),
         greatest(col("a_id"), col("b_id")).as("b_id"))
       .filter(col("a_id") =!= col("b_id"))
       .distinct()
+    pairs.select(col("a_id"), col("b_id"), col("a_id").as("doc_id"), lit(0).as("side"))
+      .union(pairs.select(col("a_id"), col("b_id"), col("b_id").as("doc_id"), lit(1).as("side")))
+  }
 
   /** X2 (n-gram Jaccard verifier): true Jaccard over shingle sets for pairs
     * sharing ≥1 shingle inside a bucket. The shingle join generates only
@@ -702,9 +679,7 @@ object DedupOps {
     common
       .join(sizes.select(col(id).as("a_id"), col("setsize").as("a_size")), "a_id")
       .join(sizes.select(col(id).as("b_id"), col("setsize").as("b_size")), "b_id")
-      .withColumn("jaccard",
-        round(col("n_common").cast("double") /
-          (col("a_size") + col("b_size") - col("n_common")).cast("double"), 6))
+      .withColumn("jaccard", round(overlapJaccard, 6))
   }
 
   /** X2 (embedding-cosine near-dup): pairs whose embedding cosine meets the
@@ -891,13 +866,7 @@ object DedupOps {
   def simhashBandCandidates(docs: DataFrame, id: String, tokenSet: Column,
       bucketCol: Column, maxBucket: Int = 0,
       bandMassBudget: Long = DefaultPairMassBudget): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // bucket rides through the signature aggregate (functionally dependent
-    // on the doc id) — no join to re-attach it.
-    val sigs = simhash63(docs.withColumn("bucket", bucketCol), id, tokenSet, Seq("bucket"))
-    val allBands = sigs.select(col(id), col("bucket"), col("simhash"),
-      posexplode(array((0 until 7).map(j => expr(s"(simhash >> ${9 * j}) & 511")): _*))
-        .as(Seq("band", "bits")))
+    val allBands = simhashBandRows(docs, id, tokenSet, bucketCol)
     // The cap's window shuffles to (bucket, band, bits) — the join's own
     // distribution, so hardening adds no exchange (same trick as the
     // shingle df cap).
@@ -907,34 +876,19 @@ object DedupOps {
         .filter(col("__n") <= maxBucket).drop("__n")
     } else allBands
     // Priced pre-flight for the DEGENERATE-signature regime (round-12
-    // verdict #1): on a vocabulary so small that near-identical token sets
-    // produce near-identical signatures, band buckets collapse into a few
-    // giant groups and the self-join fans quadratically — the r12 sf10
-    // sweep measured >45 GB of shuffle on the 31-word fixture before the
-    // disk guard killed it. The join's pre-aggregation output is EXACTLY
-    // Σ C(n,2) over (bucket, band, bits) groups — one cheap aggregate —
-    // so the blow-up is refused by PRICE, stated in the error, before the
-    // shuffle fans out (the q22 subCapPairMassGuard discipline). On a
-    // realistic Heaps'-law vocabulary the 9-bit bands stay discriminative
-    // and this mass tracks near-dup density (ScaleAudit rows); `<= 0`
-    // disables for measurement instruments.
-    val bands = if (bandMassBudget <= 0L) capped else {
-      val mass = capped.groupBy(col("bucket"), col("band"), col("bits"))
-        .agg(count(lit(1)).as("__n"))
-        .agg(coalesce(sum(expr("__n * (__n - 1) DIV 2")),
-          lit(0L)).as("__pm"))
-      capped.crossJoin(broadcast(mass))
-        .withColumn("bits", when(col("__pm") <= lit(bandMassBudget), col("bits"))
-          .otherwise(raise_error(concat(
-            lit("simhashBandCandidates: band-join pair mass = "),
-            col("__pm").cast("string"),
-            lit(s" rows exceeds bandMassBudget = $bandMassBudget — the" +
-              " signature space has collapsed into degenerate band buckets" +
-              " (near-identical token sets on a tiny vocabulary); cap" +
-              " buckets via maxBucket (documented recall trade) or widen" +
-              " the token representation")))))
-        .drop("__pm")
-    }
+    // verdict #1, see simhashNearDupsBanded): near-identical signatures
+    // collapse band buckets into a few giant groups (the r12 sf10 sweep:
+    // >45 GB of shuffle on the 31-word fixture). The join's
+    // pre-aggregation output is EXACTLY Σ C(n,2) over (bucket, band, bits)
+    // groups, so the blow-up is refused by PRICE before the shuffle fans
+    // out; on a Heaps'-law vocabulary it tracks near-dup density.
+    val bands = refuseAbove(capped, pairMass(capped, Seq("bucket", "band", "bits")),
+      bandMassBudget, "bits", "simhashBandCandidates: band-join pair mass = ",
+      s" rows exceeds bandMassBudget = $bandMassBudget — the" +
+        " signature space has collapsed into degenerate band buckets" +
+        " (near-identical token sets on a tiny vocabulary); cap" +
+        " buckets via maxBucket (documented recall trade) or widen" +
+        " the token representation")
     // Both sides are the identical subplan shuffled on (bucket, band, bits):
     // exchange reuse computes the signature pipeline once.
     val a = bands.toDF("a_id", "bucket", "a_sim", "band", "bits")
@@ -944,6 +898,17 @@ object DedupOps {
       .groupBy(col("a_id"), col("b_id")) // a pair may share several bands
       .agg(max(col("a_sim")).as("a_sim"), max(col("b_sim")).as("b_sim"))
   }
+
+  /** The SimHash band rows of [[simhashBandCandidates]]: (id, bucket,
+    * simhash, band, bits), one row per doc and each of the 7 disjoint
+    * 9-bit bands. `bucket` rides through the signature aggregate
+    * (functionally dependent on the doc id) — no join to re-attach it. */
+  private[graft] def simhashBandRows(docs: DataFrame, id: String, tokenSet: Column,
+      bucketCol: Column): DataFrame =
+    simhash63(docs.withColumn("bucket", bucketCol), id, tokenSet, Seq("bucket"))
+      .select(col(id), col("bucket"), col("simhash"),
+        posexplode(array((0 until 7).map(j => expr(s"(simhash >> ${9 * j}) & 511")): _*))
+          .as(Seq("band", "bits")))
 
   /** X2 (edit distance): pairs within `maxDist` Levenshtein operations,
     * entity-resolution style. Candidates are blocked on (`blockCol` ×
@@ -1038,7 +1003,6 @@ object DedupOps {
   def tfidfCosinePairs(shingles: DataFrame, maxDf: Int,
       minCosine: Double,
       pairMassBudget: Long = DefaultPairMassBudget): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(maxDf > 0, "maxDf must be positive")
     val nb = shingles.groupBy(col("bucket"))
       .agg(countDistinct(col("doc_id")).as("n_docs"))
@@ -1098,17 +1062,8 @@ object DedupOps {
     val dfCount = chunks.groupBy(col("ch"))
       .agg(countDistinct(col("doc_id")).as("df"))
     val kept = chunks.join(dfCount, "ch").filter(col("df") <= maxDf)
-    val reasm = kept.groupBy(col("doc_id"))
-      .agg(array_join(transform(
-          array_sort(collect_list(struct(col("pos"), col("chunk")))),
-          x => x.getField("chunk")), " ").as("clean_text"),
-        count(lit(1)).as("n_kept"))
-    d.select(col("doc_id"), col("__nch").cast("long").as("__n_chunks"))
-      .join(reasm, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("clean_text"), lit("")).as("clean_text"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        (col("__n_chunks") - coalesce(col("n_kept"), lit(0L))).as("n_removed"))
+    reassembled(d.select(col("doc_id"), col("__nch").cast("long").as("__n_chunks")),
+      "__n_chunks", kept, "pos", "chunk")
   }
 
   /** X1 sub-document, CONTENT-DEFINED boundaries: like
@@ -1136,16 +1091,26 @@ object DedupOps {
     val total = chunks.groupBy(col("doc_id"))
       .agg((max(col("chunk_id")) + 1L).as("__n_chunks"))
     val kept = chunks.join(dfCount, "ch").filter(col("df") <= maxDf)
+    reassembled(total, "__n_chunks", kept, "cpos", "chunk")
+  }
+
+  /** The reassembly tail of the sub-document scrubs: surviving (doc_id,
+    * `pos`, `piece`) rows rejoined in order into (doc_id, clean_text,
+    * n_kept, n_removed) for EVERY doc of `totals` (doc_id, `n` = its piece
+    * count), empty clean_text when nothing survived. One per-doc aggregate
+    * (sort-by-position inside the group). */
+  private def reassembled(totals: DataFrame, n: String, kept: DataFrame,
+      pos: String, piece: String): DataFrame = {
     val reasm = kept.groupBy(col("doc_id"))
       .agg(array_join(transform(
-          array_sort(collect_list(struct(col("cpos"), col("chunk")))),
-          x => x.getField("chunk")), " ").as("clean_text"),
+          array_sort(collect_list(struct(col(pos), col(piece)))),
+          x => x.getField(piece)), " ").as("clean_text"),
         count(lit(1)).as("n_kept"))
-    total.join(reasm, Seq("doc_id"), "left")
+    totals.join(reasm, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("clean_text"), lit("")).as("clean_text"),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        (col("__n_chunks") - coalesce(col("n_kept"), lit(0L))).as("n_removed"))
+        (col(n) - coalesce(col("n_kept"), lit(0L))).as("n_removed"))
   }
 
   /** The chunking stage of [[cdcChunkRemoval]]: one row per content-defined
@@ -1154,7 +1119,6 @@ object DedupOps {
     * saturating df-table quantity) directly. */
   def cdcChunks(docs: DataFrame, id: String, text: Column,
       window: Int = 3, divisor: Int = 16): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(window >= 2 && divisor >= 2, "need window >= 2, divisor >= 2")
     val w = Window.partitionBy("doc_id").orderBy("pos")
     val toks = docs.select(col(id).as("doc_id"),
@@ -1227,37 +1191,25 @@ object DedupOps {
     * Output: (a_id, b_id, n_equal_hashes, est_jaccard, jaccard, abs_err),
     * unrounded — callers round for cross-engine comparison. */
   def minhashCalibration(shingles: DataFrame, numHashes: Int, maxDf: Int = 0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val capped = if (maxDf > 0) capShingleDf(shingles, maxDf) else shingles
-    // Set size per (doc_id, bucket), matching the per-bucket shared-shingle
-    // join below: nothing forbids a doc appearing under several buckets in
-    // the shingle input, and a doc_id-only window would then sum its set
-    // sizes across buckets and inflate the exact-Jaccard denominator.
-    val sized = capped.withColumn("setsize",
-      count(lit(1)).over(Window.partitionBy(col("doc_id"), col("bucket"))))
-    val bands = minhashBandRows(capped, numHashes)
-    val ba = bands.toDF("a_id", "bucket", "band", "h")
-    val bb = bands.toDF("b_id", "bucket", "band", "h")
-    val cand = ba.join(bb, Seq("bucket", "band", "h"))
-      .filter(col("a_id") < col("b_id"))
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(count(lit(1)).as("n_equal_hashes"))
-    val ea = sized.toDF("a_id", "bucket", "sh", "a_size")
-    val eb = sized.toDF("b_id", "bucket", "sh", "b_size")
-    val exact = ea.join(eb, Seq("bucket", "sh"))
-      .filter(col("a_id") < col("b_id"))
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(count(lit(1)).as("n_common"),
-        max(col("a_size")).as("a_size"), max(col("b_size")).as("b_size"))
-      .withColumn("jaccard", col("n_common").cast("double") /
-        (col("a_size") + col("b_size") - col("n_common")).cast("double"))
-    cand.join(exact, Seq("a_id", "b_id"))
+    val cand = bandCollisions(minhashBandRows(capped, numHashes), "h", "n_equal_hashes")
+    // Sizes over the CAPPED stream (no second cap): the estimator and the
+    // exact side must see the same sets.
+    calibrationReport(cand, sharedShingleOverlap(sizedCapped(capped, maxDf = 0,
+      budget = 0L, site = "minhashCalibration")), numHashes)
+  }
+
+  /** The report both calibration forms emit: (a_id, b_id, n_equal_hashes,
+    * est_jaccard, jaccard, abs_err) from the per-pair agreeing-hash counts
+    * and the exact (n_common, a_size, b_size) overlap, unrounded. */
+  private def calibrationReport(est: DataFrame, overlap: DataFrame,
+      numHashes: Int): DataFrame =
+    est.join(overlap.withColumn("jaccard", overlapJaccard), Seq("a_id", "b_id"))
       .withColumn("est_jaccard",
         col("n_equal_hashes").cast("double") / lit(numHashes.toDouble))
       .select(col("a_id"), col("b_id"), col("n_equal_hashes"),
         col("est_jaccard"), col("jaccard"),
         abs(col("est_jaccard") - col("jaccard")).as("abs_err"))
-  }
 
   /** MinHash estimator calibration over an EXPLICIT candidate-pair list —
     * [[minhashCalibration]]'s report (per pair: the numHashes-wide Jaccard
@@ -1277,38 +1229,24 @@ object DedupOps {
     * round for cross-engine hashing. */
   def minhashCalibrationVerify(cand: DataFrame, cappedShingles: DataFrame,
       numHashes: Int): DataFrame = {
-    val pairs = normalizedPairs(cand)
-    val members = pairs
-      .select(col("a_id"), col("b_id"), col("a_id").as("doc_id"), lit(0).as("side"))
-      .union(pairs
-        .select(col("a_id"), col("b_id"), col("b_id").as("doc_id"), lit(1).as("side")))
     // The capped stream feeds BOTH the estimator (minhash signatures) and
     // the exact side (pairOverlapStats). The expensive shared prefix — the
     // (bucket, sh) shuffle + sort + df window — is materialized ONCE
     // inside [[capShingleDfQuantile]] (its r16 checkpoint), so the two
     // consumers here re-apply only the cheap threshold filter over those
     // blocks; no second materialization is needed at this level.
-    val capped = cappedShingles
     // Per-hash minwise rows over the SAME capped universe the exact side
     // sees; one row per (doc, hash index) under the global bucket.
-    val sig = minhashBandRows(capped, numHashes)
+    val sig = minhashBandRows(cappedShingles, numHashes)
       .select(col("doc_id"), col("band").as("__j"), col("h"))
-    val est = members.join(sig, "doc_id")
+    val est = pairMembers(cand).join(sig, "doc_id")
       .groupBy(col("a_id"), col("b_id"), col("__j"), col("h"))
       .agg(count(lit(1)).as("__hits"))
       .groupBy(col("a_id"), col("b_id"))
       .agg(coalesce(sum(when(col("__hits") === 2, 1L)), lit(0L))
         .as("n_equal_hashes"))
-    val exact = pairOverlapStats(cand, capped)
-      .filter(col("n_common").isNotNull)
-      .withColumn("jaccard", col("n_common").cast("double") /
-        (col("a_size") + col("b_size") - col("n_common")).cast("double"))
-    est.join(exact, Seq("a_id", "b_id"))
-      .withColumn("est_jaccard",
-        col("n_equal_hashes").cast("double") / lit(numHashes.toDouble))
-      .select(col("a_id"), col("b_id"), col("n_equal_hashes"),
-        col("est_jaccard"), col("jaccard"),
-        abs(col("est_jaccard") - col("jaccard")).as("abs_err"))
+    calibrationReport(est,
+      pairOverlapStats(cand, cappedShingles).filter(col("n_common").isNotNull), numHashes)
   }
 
   /** Cross-document repeated-SPAN scrub — the ExactSubstr result of
@@ -1343,7 +1281,6 @@ object DedupOps {
     * than `w` tokens form no window and are never scrubbed. */
   def repeatedSpanScrub(docs: DataFrame, id: String, text: Column,
       w: Int = 5, minDocs: Long = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(w >= 1 && minDocs >= 2, "need w >= 1, minDocs >= 2")
     val win = Window.partitionBy("doc_id").orderBy("pos")
     val toks = docs.select(col(id).as("doc_id"),
@@ -1364,18 +1301,9 @@ object DedupOps {
         explode(sequence(col("pos"), col("pos") + lit(w - 1))).as("pos"))
       .distinct()
     val kept = toks.join(covered, Seq("doc_id", "pos"), "left_anti")
-    val reasm = kept.groupBy(col("doc_id"))
-      .agg(array_join(transform(
-          array_sort(collect_list(struct(col("pos"), col("tok")))),
-          x => x.getField("tok")), " ").as("clean_text"),
-        count(lit(1)).as("n_kept"))
-    docs.select(col(id).as("doc_id"),
-        size(split(text, " ")).cast("long").as("__n_toks"))
-      .join(reasm, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("clean_text"), lit("")).as("clean_text"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        (col("__n_toks") - coalesce(col("n_kept"), lit(0L))).as("n_removed"))
+    reassembled(docs.select(col(id).as("doc_id"),
+        size(split(text, " ")).cast("long").as("__n_toks")),
+      "__n_toks", kept, "pos", "tok")
   }
 
   /** A persisted Bloom index over a standing corpus's fingerprint set — the
@@ -1548,7 +1476,6 @@ object DedupOps {
     * feed [[editDistanceVerify]] for the verify stage. */
   def sortedNeighborhoodCandidates(docs: DataFrame, id: String,
       bucket: Column, key: Column, window: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(window >= 2, s"window must be >= 2 (got $window)")
     def guarded(c: Column, what: String): Column =
       when(c.isNull, raise_error(lit(
@@ -1603,7 +1530,6 @@ object DedupOps {
     * longs (the centroid class). Deterministic — same data, same cuts, any
     * partitioning. */
   def rangeBucketBoundaries(df: DataFrame, key: Column, nBuckets: Int): Seq[Long] = {
-    import org.apache.spark.sql.expressions.Window
     require(nBuckets >= 2, s"nBuckets must be >= 2, got $nBuckets")
     val hist = df.select(key.cast("long").as("__k"))
       .filter(col("__k").isNotNull)
@@ -1698,23 +1624,11 @@ object DedupOps {
     * `threshold`. */
   def weightedJaccardVerifyPairs(cand: DataFrame, featureTfs: DataFrame,
       threshold: Double): DataFrame = {
-    // Same pair normalization as jaccardVerifyPairs: duplicates or a
-    // reversed (b, a) would double every mass and silently corrupt the
-    // score; least/greatest + distinct makes the op total over any list.
-    val pairs = cand.select(
-        least(col("a_id"), col("b_id")).as("a_id"),
-        greatest(col("a_id"), col("b_id")).as("b_id"))
-      .filter(col("a_id") =!= col("b_id"))
-      .distinct()
-    val members = pairs
-      .select(col("a_id"), col("b_id"), col("a_id").as("doc_id"), lit(0).as("side"))
-      .union(pairs
-        .select(col("a_id"), col("b_id"), col("b_id").as("doc_id"), lit(1).as("side")))
     val rows = featureTfs.select(col("doc_id"), col("sh"), col("tf"))
     // Per (pair, sh): at most one row per side, so max() reads the side's
     // tf; per pair the join on doc_id carried EVERY feature of each member,
     // so the side-sums are the full masses — no second sizes aggregate.
-    members.join(rows, "doc_id")
+    pairMembers(cand).join(rows, "doc_id")
       .groupBy(col("a_id"), col("b_id"), col("sh"))
       .agg(max(when(col("side") === 0, col("tf"))).as("__tfa"),
         max(when(col("side") === 1, col("tf"))).as("__tfb"))

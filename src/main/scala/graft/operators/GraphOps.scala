@@ -180,18 +180,10 @@ object GraphOps {
     def mass(df: DataFrame): java.math.BigDecimal =
       df.agg(coalesce(sum(col("comp").cast("decimal(38,0)")),
         lit(0).cast("decimal(38,0)"))).head.getDecimal(0)
-    val verbose = sys.env.contains("GRAFT_CC_VERBOSE")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (verbose) {
-      val t1 = System.nanoTime()
-      System.err.println(f"[cc] $tag ${(t1 - t0) / 1e9}%.3f s")
-      t0 = t1
-    }
     e.unpersist(blocking = false) // und is materialized (labels' eager checkpoint ran it)
     // One count on the persisted mirror decides the loop shape; ~free
     // relative to a single round either way.
     val contracting = und.count() >= contractFrom
-    lap("init")
     // cur = null until round 1 computes the first mass: the initial mass is
     // not worth its own job just to compare against.
     var cur: java.math.BigDecimal = null
@@ -258,7 +250,6 @@ object GraphOps {
       cur = nm
       it += 1
       budget -= 1
-      lap(s"round $it")
       free(it - 2)
       if (converged && !validated) {
         // Contraction's correctness gate: labels must agree across every
@@ -273,7 +264,6 @@ object GraphOps {
             .join(labels.select(col("node").as("dst"), col("comp").as("__dc")), "dst")
             .filter(col("__sc") =!= col("__dc"))
           validated = crossing.isEmpty
-          lap("validate")
         }
       }
     }

@@ -120,20 +120,21 @@ object SimilarityOps {
     require(maxIters >= 1, s"need maxIters >= 1, got $maxIters")
     val vecs = emb.select(col(idCol).as("vec_id"), col(embCol).cast("array<double>").as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var centroids: Seq[Seq[Double]] = vecs.orderBy(col("vec_id")).limit(k)
-      .select(col("v")).collect().toSeq.map(_.getSeq[Double](0))
-    var it = 0
-    var fixed = false
-    while (it < maxIters && !fixed) {
-      val next = lloydStep(vecs, centroids)
-      it += 1
-      fixed = stopAtFixedPoint && next == centroids
-      centroids = next
-    }
-    val out = vecs.select(col("vec_id"),
-      nearestCentroid(col("v"), centroids, "cluster").as("cluster"))
-    vecs.unpersist(blocking = false)
-    (out, centroids, it)
+    try {
+      var centroids: Seq[Seq[Double]] = vecs.orderBy(col("vec_id")).limit(k)
+        .select(col("v")).collect().toSeq.map(_.getSeq[Double](0))
+      var it = 0
+      var fixed = false
+      while (it < maxIters && !fixed) {
+        val next = lloydStep(vecs, centroids)
+        it += 1
+        fixed = stopAtFixedPoint && next == centroids
+        centroids = next
+      }
+      val out = vecs.select(col("vec_id"),
+        nearestCentroid(col("v"), centroids, "cluster").as("cluster"))
+      (out, centroids, it)
+    } finally vecs.unpersist(blocking = false)
   }
 
   /** One Lloyd iteration, shared by the fixed-count ([[kmeans]], the
@@ -426,41 +427,42 @@ object SimilarityOps {
     // the vectors (see kmeans for the 100 TB rationale).
     val vecs = embs.select(col(idCol).as("vec_id"), emb.cast("array<double>").as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val seeds = vecs.orderBy(col("vec_id")).limit(k)
-      .select(col("v")).collect().toSeq.map(_.getSeq[Double](0))
-    var books: Seq[Seq[Seq[Double]]] =
-      (0 until m).map(j => seeds.map(_.slice(j * sub, (j + 1) * sub)))
-    for (_ <- 1 to iters) {
-      // cl(j) = subspace j's assigned cluster: argmin over k centroids of
-      // −2·v_j·c + |c|² (|v_j|² is constant inside a subspace's argmin).
-      val clusterCols = books.zipWithIndex.map { case (book, j) =>
-        nearestCentroid(slice(col("v"), j * sub + 1, sub), book, "cluster")
-      }
-      // Rounded exactly as [[kmeans]]'s update (see there): pins the
-      // cross-engine match against float-summation-order drift.
-      val next = vecs
-        .withColumn("cl", array(clusterCols: _*))
-        .select(col("cl"), posexplode(col("v")).as(Seq("dim", "x")))
-        .withColumn("j", (col("dim") / lit(sub)).cast("int"))
-        .groupBy(col("j"), element_at(col("cl"), col("j") + 1).as("cluster"),
-          (col("dim") % lit(sub)).as("sdim"))
-        .agg(graft.engine.Semantics.roundz(avg(col("x")), 6).as("m"))
-        .collect()
-      val byKey = next.groupBy(r => (r.getAs[Int]("j"), r.getAs[Int]("cluster")))
-      // books(j).indices, not 0 until k: a training sample smaller than k
-      // seeds fewer centroids, and the update must not index past them
-      books = (0 until m).map { j =>
-        books(j).indices.map { i =>
-          byKey.get((j, i)) match {
-            case Some(rows) =>
-              rows.sortBy(_.getAs[Int]("sdim")).map(_.getAs[Double]("m")).toSeq
-            case None => books(j)(i) // empty cluster keeps its centroid
+    try {
+      val seeds = vecs.orderBy(col("vec_id")).limit(k)
+        .select(col("v")).collect().toSeq.map(_.getSeq[Double](0))
+      var books: Seq[Seq[Seq[Double]]] =
+        (0 until m).map(j => seeds.map(_.slice(j * sub, (j + 1) * sub)))
+      for (_ <- 1 to iters) {
+        // cl(j) = subspace j's assigned cluster: argmin over k centroids of
+        // −2·v_j·c + |c|² (|v_j|² is constant inside a subspace's argmin).
+        val clusterCols = books.zipWithIndex.map { case (book, j) =>
+          nearestCentroid(slice(col("v"), j * sub + 1, sub), book, "cluster")
+        }
+        // Rounded exactly as [[kmeans]]'s update (see there): pins the
+        // cross-engine match against float-summation-order drift.
+        val next = vecs
+          .withColumn("cl", array(clusterCols: _*))
+          .select(col("cl"), posexplode(col("v")).as(Seq("dim", "x")))
+          .withColumn("j", (col("dim") / lit(sub)).cast("int"))
+          .groupBy(col("j"), element_at(col("cl"), col("j") + 1).as("cluster"),
+            (col("dim") % lit(sub)).as("sdim"))
+          .agg(graft.engine.Semantics.roundz(avg(col("x")), 6).as("m"))
+          .collect()
+        val byKey = next.groupBy(r => (r.getAs[Int]("j"), r.getAs[Int]("cluster")))
+        // books(j).indices, not 0 until k: a training sample smaller than k
+        // seeds fewer centroids, and the update must not index past them
+        books = (0 until m).map { j =>
+          books(j).indices.map { i =>
+            byKey.get((j, i)) match {
+              case Some(rows) =>
+                rows.sortBy(_.getAs[Int]("sdim")).map(_.getAs[Double]("m")).toSeq
+              case None => books(j)(i) // empty cluster keeps its centroid
+            }
           }
         }
       }
-    }
-    vecs.unpersist(blocking = false)
-    books
+      books
+    } finally vecs.unpersist(blocking = false)
   }
 
   /** Squared PQ reconstruction error per vector against the given
@@ -796,10 +798,9 @@ object SimilarityOps {
       // and order-independent in every engine, no rounding needed.
       val rec = truth.agg(coalesce(
         avg(when(hit, 1.0).otherwise(0.0)), lit(1.0)).as("pair_recall"))
-      val mass = e.select(col("cell"),
-          explode(tableBuckets(col("v"), tables)).as("tb"))
-        .groupBy(col("cell"), col("tb")).agg(count(lit(1)).as("__n"))
-        .agg(coalesce(sum(expr("__n * (__n - 1) DIV 2")), lit(0L)).as("pair_mass"))
+      val mass = DedupOps.pairMass(
+        e.select(col("cell"), explode(tableBuckets(col("v"), tables)).as("tb")),
+        Seq("cell", "tb")).toDF("pair_mass")
       rec.crossJoin(mass) // two 1-row aggregates
         .select(lit(i).as("cfg"), lit(t).as("n_tables"), lit(p).as("n_planes"),
           col("pair_recall"), col("pair_mass"))
@@ -1010,21 +1011,22 @@ object SimilarityOps {
       s"need dim, maxIters >= 1 and 1 <= k <= dim; got $dim, $maxIters, $k")
     val vecs = emb.select(embCol.cast("array<double>").as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = vecs.count().toDouble
-    require(n > 0, "cannot fit a principal component on an empty input")
-    val muAggs = (0 until dim).map(i =>
-      graft.engine.Semantics.roundz(avg(element_at(col("v"), i + 1)), 6).as(s"m$i"))
-    val muRow = vecs.agg(muAggs.head, muAggs.tail: _*).head()
-    val mu = Array.tabulate(dim)(muRow.getDouble)
-    val comps = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
-    val iters = scala.collection.mutable.ArrayBuffer.empty[Int]
-    for (c <- 0 until k) {
-      val (w, m) = iterateComponent(vecs, mu, dim, n, comps.toSeq, c, maxIters, tol)
-      comps += w
-      iters += m
-    }
-    vecs.unpersist(blocking = false)
-    (mu.toSeq, comps.map(_.toSeq).toSeq, iters.toSeq)
+    try {
+      val n = vecs.count().toDouble
+      require(n > 0, "cannot fit a principal component on an empty input")
+      val muAggs = (0 until dim).map(i =>
+        graft.engine.Semantics.roundz(avg(element_at(col("v"), i + 1)), 6).as(s"m$i"))
+      val muRow = vecs.agg(muAggs.head, muAggs.tail: _*).head()
+      val mu = Array.tabulate(dim)(muRow.getDouble)
+      val comps = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
+      val iters = scala.collection.mutable.ArrayBuffer.empty[Int]
+      for (c <- 0 until k) {
+        val (w, m) = iterateComponent(vecs, mu, dim, n, comps.toSeq, c, maxIters, tol)
+        comps += w
+        iters += m
+      }
+      (mu.toSeq, comps.map(_.toSeq).toSeq, iters.toSeq)
+    } finally vecs.unpersist(blocking = false)
   }
 
   /** One component's power-iteration loop, shared by the fixed-count

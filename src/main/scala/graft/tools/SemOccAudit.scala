@@ -26,10 +26,8 @@ object SemOccAudit {
       val cells = embs.select(col("label")).distinct().count()
       val depth = SharedPipelines.tunedSemanticDepth(spark, dir)
       val tables = SimilarityOps.lshTables(SharedPipelines.semTables, depth, 64)
-      val mass = SimilarityOps.lshCandidateRows(embs, "vec_id",
-          col("embedding"), col("label"), tables, "n_")
-        .groupBy(col("cell"), col("tb")).agg(count(lit(1)).as("__n"))
-        .agg(coalesce(sum(expr("__n * (__n - 1) DIV 2")), lit(0L)))
+      val mass = DedupOps.pairMass(SimilarityOps.lshCandidateRows(embs, "vec_id",
+          col("embedding"), col("label"), tables, "n_"), Seq("cell", "tb"))
         .head.getLong(0)
       val t0 = System.nanoTime()
       val verified = DedupOps.embeddingNearDupsTables(embs, "vec_id",

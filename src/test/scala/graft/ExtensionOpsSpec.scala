@@ -82,6 +82,17 @@ class ExtensionOpsSpec extends SparkSpec {
     }
     // the S-curve payoff: strictly fewer candidates than r=1 on skew
     assert(banded.size < r1.size, s"banded=${banded.size} r1=${r1.size}")
+    // r = 1 through the banded form (string band key) is the long-keyed
+    // r = 1 generator pair-for-pair, n_shared_bands included
+    val banded1 = DedupOps.minhashLshCandidatesBanded(rows, 8, rowsPerBand = 1)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getAs[Long]("n_shared_bands")).toMap
+    assert(banded1 === r1)
+  }
+
+  test("X2: pairMass is the sum of C(n, 2) over groups, 0 on an empty input") {
+    val rows = Seq("a", "a", "a", "b", "b", "c").toDF("g")
+    assert(DedupOps.pairMass(rows, Seq("g")).head.getLong(0) === 4L) // 3 + 1 + 0
+    assert(DedupOps.pairMass(rows.filter(lit(false)), Seq("g")).head.getLong(0) === 0L)
   }
 
   test("X2: hot-shingle df cap bounds the shared-shingle join on a skewed corpus") {

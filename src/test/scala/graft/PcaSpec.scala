@@ -96,4 +96,17 @@ class PcaSpec extends SparkSpec {
     assert(mu === Seq(1.0, 2.0, 3.0))
     assert(v === Seq(0.0, 0.0, 0.0))
   }
+
+  test("X3: an empty input refuses and leaves no cached vectors behind") {
+    val df = Seq.empty[Tuple1[Seq[Double]]].toDF("embedding")
+    val err = intercept[IllegalArgumentException] {
+      SimilarityOps.powerIterationTop(df, col("embedding"), dim = 3, iters = 2)
+    }
+    assert(err.getMessage.contains("empty input"))
+    // The trainer's persisted projection, rebuilt: no cache entry may match
+    // it once the refusal has propagated.
+    val vecs = df.select(col("embedding").cast("array<double>").as("v"))
+    assert(spark.sharedState.cacheManager
+      .lookupCachedData(vecs.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isEmpty)
+  }
 }
