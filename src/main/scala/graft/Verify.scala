@@ -125,7 +125,7 @@ object Verify {
         // normalization treat -0.0 == +0.0 inside the nesting — refuse
         // rather than silently weaken the gate (r13 advice). Float-free
         // nesting (e.g. array<array<string>>) is bit-exact under plain
-        // equality and passes through, matching check_oracle_timed.py's
+        // equality and passes through, matching check_oracle.py's
         // nested-FLOAT refusal rule (r14 advice).
         case dt @ (_: StructType | _: MapType | ArrayType(_: ArrayType, _) |
             ArrayType(_: StructType, _) | ArrayType(_: MapType, _))

@@ -129,7 +129,10 @@ object DedupOps {
     * df ≤ 1 cut drops every SHARED shingle, true duplicates included
     * (candidates measured to exactly 0). The threshold never goes below
     * `floor`; the default 1 is a no-op (df ≥ 1 always), production wide-
-    * shingle configs pass ≥ 2 so shared evidence always survives. */
+    * shingle configs pass ≥ 2 so shared evidence always survives.
+    *
+    * Form choice: ANY `LogicalRDD` anywhere in the input plan selects the
+    * window form — a union of a checkpointed and a raw branch included. */
   def capShingleDfQuantile(shingles: DataFrame, q: Double, floor: Int = 1): DataFrame = {
     // Two physically different forms, identical results — chosen by what
     // the INPUT costs to evaluate (r16; every number below is a same-box

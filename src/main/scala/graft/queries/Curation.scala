@@ -22,14 +22,9 @@ object Curation extends QueryGroup {
       .agg(count(lit(1)).as("n_docs"),
         Semantics.roundz(avg(col("n_chars")), 6).as("avg_chars"))
       .orderBy(col("split")),
-    Some("""WITH b AS (
-           |  SELECT n_chars,
-           |    ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 100 AS bucket
-           |  FROM documents)
-           |SELECT CASE WHEN bucket < 80 THEN 'train'
-           |            WHEN bucket < 90 THEN 'valid' ELSE 'test' END AS split,
+    Some(s"""SELECT ${OracleSql.hashSplitSql("doc_id")} AS split,
            |  count(*) AS n_docs, round(avg(n_chars), 6) + 0.0 AS avg_chars
-           |FROM b GROUP BY 1 ORDER BY 1""".stripMargin))
+           |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin))
 
   /** Per-source quota sampling — keep at most 10 docs per source,
     * deterministically ranked by (md5(doc_id), doc_id). The kept SET is the
@@ -140,17 +135,11 @@ object Curation extends QueryGroup {
           Semantics.roundz(col("n_contaminated").cast("double") / col("n_shingles").cast("double"), 6))
         .orderBy(col("doc_id"))
     },
-    Some("""WITH b AS (
+    Some(s"""WITH b AS (
            |  SELECT doc_id, text,
            |    ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 100 AS bucket
            |  FROM documents),
-           |sets AS (
-           |  SELECT doc_id, bucket,
-           |    list_distinct(CASE WHEN len(string_split(text,' ')) >= 3
-           |      THEN list_transform(range(len(string_split(text,' ')) - 2),
-           |        i -> string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2] || ' ' || string_split(text,' ')[i+3])
-           |      ELSE [] END) AS shset
-           |  FROM b),
+           |${OracleSql.shingleSetsCte(3, "doc_id, bucket", "b")},
            |ex AS (SELECT doc_id, bucket, unnest(shset) AS sh FROM sets WHERE len(shset) > 0),
            |train AS (SELECT DISTINCT sh FROM ex WHERE bucket < 80),
            |test AS (SELECT doc_id, sh FROM ex WHERE bucket >= 90)
@@ -195,7 +184,7 @@ object Curation extends QueryGroup {
           Semantics.roundz(avg(col("quality")), 6).as("avg_quality"))
         .orderBy(col("split"))
     },
-    Some("""WITH t AS (
+    Some(s"""WITH t AS (
            |  SELECT doc_id, text, n_chars,
            |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
            |    round(CAST(len(list_filter(string_split(text,' '), x -> x IN ('the','a','an','of','and','to','in','is','it','on','for'))) AS DOUBLE)
@@ -220,15 +209,10 @@ object Curation extends QueryGroup {
            |kept AS (SELECT * FROM q WHERE predicted_lang = 'en' AND quality >= 0.7),
            |dedup AS (
            |  SELECT min(doc_id) AS doc_id, max(quality) AS quality
-           |  FROM kept GROUP BY md5(text)),
-           |sp AS (
-           |  SELECT quality,
-           |    ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 100 AS bucket
-           |  FROM dedup)
-           |SELECT CASE WHEN bucket < 80 THEN 'train'
-           |            WHEN bucket < 90 THEN 'valid' ELSE 'test' END AS split,
+           |  FROM kept GROUP BY md5(text))
+           |SELECT ${OracleSql.hashSplitSql("doc_id")} AS split,
            |  count(*) AS n_docs, round(avg(quality), 6) + 0.0 AS avg_quality
-           |FROM sp GROUP BY 1 ORDER BY 1""".stripMargin))
+           |FROM dedup GROUP BY 1 ORDER BY 1""".stripMargin))
 
   /** Source-weighted mixture sampling — downsample over-represented sources
     * to a target training mixture (the web-scale "data mixing" step). The
@@ -384,35 +368,14 @@ object Curation extends QueryGroup {
       CurationOps.pairSplitAudit(pairs, splits)
         .orderBy(col("split_lo"), col("split_hi"))
     },
-    Some("""WITH sets AS (
-           |  SELECT doc_id,
-           |    list_distinct(CASE WHEN len(string_split(text,' ')) >= 3
-           |      THEN list_transform(range(len(string_split(text,' ')) - 2),
-           |        i -> string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2] || ' ' || string_split(text,' ')[i+3])
-           |      ELSE [] END) AS shset
-           |  FROM documents),
+    Some(s"""WITH ${OracleSql.shingleSetsCte(3)},
            |ex0 AS (SELECT doc_id, unnest(shset) AS sh FROM sets WHERE len(shset) > 0),
            |ex AS (SELECT * FROM ex0 QUALIFY count(*) OVER (PARTITION BY sh) <= 50),
-           |hashed AS (
-           |  SELECT doc_id,
-           |    CAST('0x' || substr(md5(sh), 1, 10) AS BIGINT) AS h1,
-           |    CAST('0x' || substr(md5(sh), 11, 10) AS BIGINT) AS h2
-           |  FROM ex),
-           |bands AS (
-           |  SELECT doc_id, j.band, min(h1 + j.band * h2) AS h
-           |  FROM hashed, unnest(range(8)) AS j(band)
-           |  GROUP BY 1, 2),
-           |pairs AS (
-           |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-           |  FROM bands a JOIN bands b
-           |    ON a.band = b.band AND a.h = b.h AND a.doc_id < b.doc_id
-           |  GROUP BY 1, 2),
+           |${OracleSql.minhashBandCtes("ex", rowsPerBand = 1)},
+           |${OracleSql.bandPairsCte("pairs", Seq("band", "h"))},
            |sp AS (SELECT doc_id,
-           |    CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'valid'
-           |         ELSE 'test' END AS split
-           |  FROM (SELECT doc_id,
-           |      ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 100 AS b
-           |    FROM documents)),
+           |    ${OracleSql.hashSplitSql("doc_id")} AS split
+           |  FROM documents),
            |lk AS (SELECT least(coalesce(sa.split, 'unknown'), coalesce(sb.split, 'unknown')) AS split_lo,
            |    greatest(coalesce(sa.split, 'unknown'), coalesce(sb.split, 'unknown')) AS split_hi
            |  FROM pairs
@@ -1376,8 +1339,7 @@ object Curation extends QueryGroup {
          |hits AS (
          |  SELECT ev.vec_id, count(DISTINCT tr.vec_id) AS n
          |  FROM ev JOIN tr ON ev.label = tr.label AND ($orCond)
-         |  WHERE round(list_dot_product(ev.v, tr.v)
-         |    / (sqrt(list_dot_product(ev.v, ev.v)) * sqrt(list_dot_product(tr.v, tr.v))), 6) >= 0.35
+         |  WHERE ${OracleSql.cosineSql("ev.v", "tr.v")} >= 0.35
          |  GROUP BY 1)
          |SELECT ev.vec_id, CAST(coalesce(h.n, 0) AS BIGINT) AS n_train_neighbors,
          |  coalesce(h.n, 0) > 0 AS contaminated

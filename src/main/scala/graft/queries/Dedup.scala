@@ -35,13 +35,7 @@ object Dedup extends QueryGroup {
       .select(col("a_id"), col("b_id"), col("n_common"), col("jaccard"))
       .orderBy(desc("jaccard"), col("a_id"), col("b_id"))
       .limit(20),
-    Some("""WITH sets AS (
-           |  SELECT doc_id, source,
-           |    list_distinct(CASE WHEN len(string_split(text,' ')) >= 3
-           |      THEN list_transform(range(len(string_split(text,' ')) - 2),
-           |        i -> string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2] || ' ' || string_split(text,' ')[i+3])
-           |      ELSE [] END) AS shset
-           |  FROM documents),
+    Some(s"""WITH ${OracleSql.shingleSetsCte(3, "doc_id, source")},
            |ex0 AS (SELECT doc_id, source, unnest(shset) AS sh FROM sets WHERE len(shset) > 0),
            |ex AS (SELECT * FROM ex0 QUALIFY count(*) OVER (PARTITION BY source, sh) <= 50),
            |sizes AS (SELECT doc_id, CAST(len(shset) AS BIGINT) AS setsize FROM sets WHERE len(shset) > 0),
@@ -50,7 +44,7 @@ object Dedup extends QueryGroup {
            |  FROM ex a JOIN ex b ON a.source = b.source AND a.sh = b.sh AND a.doc_id < b.doc_id
            |  GROUP BY 1, 2)
            |SELECT a_id, b_id, n_common,
-           |  round(CAST(n_common AS DOUBLE) / CAST(sa.setsize + sb.setsize - n_common AS DOUBLE), 6) AS jaccard
+           |  ${OracleSql.setJaccardSql("n_common", "sa.setsize", "sb.setsize")} AS jaccard
            |FROM common
            |JOIN sizes sa ON sa.doc_id = a_id
            |JOIN sizes sb ON sb.doc_id = b_id
@@ -65,29 +59,11 @@ object Dedup extends QueryGroup {
     (s, dir) => DedupOps
       .minhashLshCandidatesFromRows(docShingleRows(s, dir), 8, maxDf = 50)
       .orderBy(col("a_id"), col("b_id")),
-    Some("""WITH sets AS (
-           |  SELECT doc_id, source,
-           |    list_distinct(CASE WHEN len(string_split(text,' ')) >= 3
-           |      THEN list_transform(range(len(string_split(text,' ')) - 2),
-           |        i -> string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2] || ' ' || string_split(text,' ')[i+3])
-           |      ELSE [] END) AS shset
-           |  FROM documents),
+    Some(s"""WITH ${OracleSql.shingleSetsCte(3, "doc_id, source")},
            |ex0 AS (SELECT doc_id, source, unnest(shset) AS sh FROM sets WHERE len(shset) > 0),
            |ex AS (SELECT * FROM ex0 QUALIFY count(*) OVER (PARTITION BY source, sh) <= 50),
-           |hashed AS (
-           |  SELECT doc_id, source,
-           |    CAST('0x' || substr(md5(sh), 1, 10) AS BIGINT) AS h1,
-           |    CAST('0x' || substr(md5(sh), 11, 10) AS BIGINT) AS h2
-           |  FROM ex),
-           |bands AS (
-           |  SELECT doc_id, source, j.band, min(h1 + j.band * h2) AS h
-           |  FROM hashed, unnest(range(8)) AS j(band)
-           |  GROUP BY 1, 2, 3),
-           |pairs AS (
-           |  SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS n_shared_bands
-           |  FROM bands a JOIN bands b
-           |    ON a.source = b.source AND a.band = b.band AND a.h = b.h AND a.doc_id < b.doc_id
-           |  GROUP BY 1, 2)
+           |${OracleSql.minhashBandCtes("ex", rowsPerBand = 1, "doc_id, source")},
+           |${OracleSql.bandPairsCte("pairs", Seq("source", "band", "h"), counted = true)}
            |SELECT a_id, b_id, n_shared_bands FROM pairs ORDER BY a_id, b_id""".stripMargin))
 
   /** X2c: SimHash-63 near-dups — same-source pairs within Hamming ≤ 6,
@@ -155,11 +131,9 @@ object Dedup extends QueryGroup {
            |bk AS (SELECT vec_id, label, v,
            |  ${OracleSql.signLshBucketSql("v", q32Planes)} AS bucket FROM e)
            |SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-           |  round(list_dot_product(a.v, b.v)
-           |    / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6) + 0.0 AS cosine
+           |  ${OracleSql.cosineSql("a.v", "b.v")} + 0.0 AS cosine
            |FROM bk a JOIN bk b ON a.label = b.label AND a.bucket = b.bucket AND a.vec_id < b.vec_id
-           |WHERE round(list_dot_product(a.v, b.v)
-           |    / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6) >= 0.35
+           |WHERE ${OracleSql.cosineSql("a.v", "b.v")} >= 0.35
            |ORDER BY cosine DESC, a_id, b_id""".stripMargin))
 
   /** X1 incremental form — dedup a NEW crawl against the EXISTING corpus:
@@ -264,13 +238,7 @@ object Dedup extends QueryGroup {
         docShingleRows(s, dir), maxDf = 50, minCosine = 0.02,
         pairMassBudget = 1000000000L)
       .orderBy(desc("cosine"), col("a_id"), col("b_id")),
-    Some("""WITH sets AS (
-           |  SELECT doc_id, source,
-           |    list_distinct(CASE WHEN len(string_split(text,' ')) >= 3
-           |      THEN list_transform(range(len(string_split(text,' ')) - 2),
-           |        i -> string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2] || ' ' || string_split(text,' ')[i+3])
-           |      ELSE [] END) AS shset
-           |  FROM documents),
+    Some(s"""WITH ${OracleSql.shingleSetsCte(3, "doc_id, source")},
            |ex0 AS (SELECT doc_id, source, unnest(shset) AS sh FROM sets WHERE len(shset) > 0),
            |ex AS (SELECT *, count(*) OVER (PARTITION BY source, sh) AS df
            |       FROM ex0 QUALIFY df <= 50),
@@ -345,31 +313,17 @@ object Dedup extends QueryGroup {
           sum(when(col("lsh_suspect") === true, 1L).otherwise(0L)).as("n_suspect"))
         .orderBy(col("source"))
     },
-    Some(s"""WITH sets AS (
-           |  SELECT doc_id, source,
-           |    list_distinct(CASE WHEN len(string_split(text,' ')) >= 3
-           |      THEN list_transform(range(len(string_split(text,' ')) - 2),
-           |        i -> string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2] || ' ' || string_split(text,' ')[i+3])
-           |      ELSE [] END) AS shset
-           |  FROM documents),
+    Some(s"""WITH ${OracleSql.shingleSetsCte(3, "doc_id, source")},
            |exC0 AS (SELECT doc_id, unnest(shset) AS sh FROM sets
            |  WHERE source NOT IN (${newSources.map(x => s"'$x'").mkString(", ")}) AND len(shset) > 0),
            |exC AS (SELECT * FROM exC0 QUALIFY count(*) OVER (PARTITION BY sh) <= 50),
            |exF0 AS (SELECT doc_id, unnest(shset) AS sh FROM sets
            |  WHERE source IN (${newSources.map(x => s"'$x'").mkString(", ")}) AND len(shset) > 0),
            |exF AS (SELECT * FROM exF0 QUALIFY count(*) OVER (PARTITION BY sh) <= 50),
-           |hC AS (SELECT doc_id,
-           |    CAST('0x' || substr(md5(sh), 1, 10) AS BIGINT) AS h1,
-           |    CAST('0x' || substr(md5(sh), 11, 10) AS BIGINT) AS h2 FROM exC),
-           |hF AS (SELECT doc_id,
-           |    CAST('0x' || substr(md5(sh), 1, 10) AS BIGINT) AS h1,
-           |    CAST('0x' || substr(md5(sh), 11, 10) AS BIGINT) AS h2 FROM exF),
-           |bC AS (SELECT doc_id, j.band, min(h1 + j.band * h2) AS h
-           |  FROM hC, unnest(range(8)) AS j(band) GROUP BY 1, 2),
-           |bF AS (SELECT doc_id, j.band, min(h1 + j.band * h2) AS h
-           |  FROM hF, unnest(range(8)) AS j(band) GROUP BY 1, 2),
+           |${OracleSql.minhashBandCtes("exC", rowsPerBand = 1, tag = "C")},
+           |${OracleSql.minhashBandCtes("exF", rowsPerBand = 1, tag = "F")},
            |suspects AS (SELECT DISTINCT f.doc_id
-           |  FROM bF f JOIN bC c ON f.band = c.band AND f.h = c.h)
+           |  FROM bandsF f JOIN bandsC c ON f.band = c.band AND f.h = c.h)
            |SELECT d.source, count(*) AS n_new,
            |  CAST(sum(CASE WHEN s.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_suspect
            |FROM documents d LEFT JOIN suspects s USING (doc_id)
@@ -441,12 +395,10 @@ object Dedup extends QueryGroup {
          |bk AS (SELECT vec_id, label, v,
          |  $bucketCols FROM e)
          |SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-         |  round(list_dot_product(a.v, b.v)
-         |    / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6) + 0.0 AS cosine
+         |  ${OracleSql.cosineSql("a.v", "b.v")} + 0.0 AS cosine
          |FROM bk a JOIN bk b ON a.label = b.label AND a.vec_id < b.vec_id
          |  AND ($orCond)
-         |WHERE round(list_dot_product(a.v, b.v)
-         |    / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6) >= 0.35
+         |WHERE ${OracleSql.cosineSql("a.v", "b.v")} >= 0.35
          |ORDER BY cosine DESC, a_id, b_id""".stripMargin
     })
 
@@ -515,33 +467,9 @@ object Dedup extends QueryGroup {
         DedupOps.CandidateGen.QuantileCapped(q = 0.95, floor = 1,
           numHashes = 8, rowsPerBand = 1))
       .orderBy(col("a_id"), col("b_id")),
-    Some("""WITH sets AS (
-           |  SELECT doc_id,
-           |    list_distinct(CASE WHEN len(string_split(text,' ')) >= 3
-           |      THEN list_transform(range(len(string_split(text,' ')) - 2),
-           |        i -> string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2] || ' ' || string_split(text,' ')[i+3])
-           |      ELSE [] END) AS shset
-           |  FROM documents),
+    Some(s"""WITH ${OracleSql.shingleSetsCte(3)},
            |ex0 AS (SELECT doc_id, unnest(shset) AS sh FROM sets WHERE len(shset) > 0),
-           |dfs AS (SELECT sh, count(*) AS df FROM ex0 GROUP BY 1),
-           |thr AS (SELECT min(df) AS t FROM (
-           |  SELECT df, cume_dist() OVER (ORDER BY df) AS cd FROM dfs) WHERE cd >= 0.95),
-           |ex AS (SELECT ex0.doc_id, ex0.sh FROM ex0 JOIN dfs USING (sh), thr
-           |  WHERE dfs.df <= thr.t),
-           |hashed AS (
-           |  SELECT doc_id,
-           |    CAST('0x' || substr(md5(sh), 1, 10) AS BIGINT) AS h1,
-           |    CAST('0x' || substr(md5(sh), 11, 10) AS BIGINT) AS h2
-           |  FROM ex),
-           |bands AS (
-           |  SELECT doc_id, j.band, min(h1 + j.band * h2) AS h
-           |  FROM hashed, unnest(range(8)) AS j(band)
-           |  GROUP BY 1, 2),
-           |pairs AS (
-           |  SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS n_shared_bands
-           |  FROM bands a JOIN bands b
-           |    ON a.band = b.band AND a.h = b.h AND a.doc_id < b.doc_id
-           |  GROUP BY 1, 2)
+           |${OracleSql.quantileCappedPairsCtes("ex0", floor = 1, rowsPerBand = 1, counted = true)}
            |SELECT a_id, b_id, n_shared_bands FROM pairs ORDER BY a_id, b_id""".stripMargin))
 
   /** X2×X8 verification-shrinkage audit — what the exact-verify stage
@@ -576,17 +504,13 @@ object Dedup extends QueryGroup {
         .unionAll(audit(SharedPipelines.calibratedComps(s, dir), "verified"))
         .orderBy(col("variant"))
     },
-    Some(OracleSql.calibratedCompsPrefix + (""",
+    Some(OracleSql.calibratedCompsPrefix + (s""",
            |cand_und AS (SELECT a_id AS src, b_id AS dst FROM pairs
            |  UNION SELECT b_id AS src, a_id AS dst FROM pairs),
-           |cand_walk AS (
-           |  SELECT DISTINCT src AS node, src AS comp FROM cand_und
-           |  UNION
-           |  SELECT u.dst AS node, w.comp FROM cand_walk w JOIN cand_und u ON u.src = w.node),
-           |cand_comps AS (SELECT node, min(comp) AS comp FROM cand_walk GROUP BY node)
+           |${OracleSql.closureCtes("cand_und", "_cand")}
            |SELECT 'candidates' AS variant, count(*) AS n_clusters,
            |  CAST(sum(n) AS BIGINT) AS n_nodes, max(n) AS max_cluster
-           |FROM (SELECT comp, count(*) AS n FROM cand_comps GROUP BY 1)
+           |FROM (SELECT comp, count(*) AS n FROM comps_cand GROUP BY 1)
            |UNION ALL
            |SELECT 'verified' AS variant, count(*) AS n_clusters,
            |  CAST(sum(n) AS BIGINT) AS n_nodes, max(n) AS max_cluster
@@ -614,36 +538,9 @@ object Dedup extends QueryGroup {
         DedupOps.CandidateGen.QuantileCapped(q = 0.95, floor = 1,
           numHashes = 8, rowsPerBand = 2))
       .orderBy(col("a_id"), col("b_id")),
-    Some("""WITH sets AS (
-           |  SELECT doc_id,
-           |    list_distinct(CASE WHEN len(string_split(text,' ')) >= 3
-           |      THEN list_transform(range(len(string_split(text,' ')) - 2),
-           |        i -> string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2] || ' ' || string_split(text,' ')[i+3])
-           |      ELSE [] END) AS shset
-           |  FROM documents),
+    Some(s"""WITH ${OracleSql.shingleSetsCte(3)},
            |ex0 AS (SELECT doc_id, unnest(shset) AS sh FROM sets WHERE len(shset) > 0),
-           |dfs AS (SELECT sh, count(*) AS df FROM ex0 GROUP BY 1),
-           |thr AS (SELECT min(df) AS t FROM (
-           |  SELECT df, cume_dist() OVER (ORDER BY df) AS cd FROM dfs) WHERE cd >= 0.95),
-           |ex AS (SELECT ex0.doc_id, ex0.sh FROM ex0 JOIN dfs USING (sh), thr
-           |  WHERE dfs.df <= thr.t),
-           |hashed AS (
-           |  SELECT doc_id,
-           |    CAST('0x' || substr(md5(sh), 1, 10) AS BIGINT) AS h1,
-           |    CAST('0x' || substr(md5(sh), 11, 10) AS BIGINT) AS h2
-           |  FROM ex),
-           |mh AS (
-           |  SELECT doc_id, j.j AS j, min(h1 + j.j * h2) AS h
-           |  FROM hashed, unnest(range(8)) AS j(j)
-           |  GROUP BY 1, 2),
-           |bands AS (
-           |  SELECT doc_id, j // 2 AS band, string_agg(h::VARCHAR, ':' ORDER BY j) AS bk
-           |  FROM mh GROUP BY 1, 2),
-           |pairs AS (
-           |  SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS n_shared_bands
-           |  FROM bands a JOIN bands b
-           |    ON a.band = b.band AND a.bk = b.bk AND a.doc_id < b.doc_id
-           |  GROUP BY 1, 2)
+           |${OracleSql.quantileCappedPairsCtes("ex0", floor = 1, rowsPerBand = 2, counted = true)}
            |SELECT a_id, b_id, n_shared_bands FROM pairs ORDER BY a_id, b_id""".stripMargin))
 
   /** X1 sub-document, arbitrary-alignment: ExactSubstr-style repeated-span
@@ -1014,14 +911,9 @@ object Dedup extends QueryGroup {
           threshold = 0.2)
         .orderBy(col("a_id"), col("b_id"))
     },
-    Some("""WITH shl AS (
+    Some(s"""WITH shl AS (
            |  SELECT doc_id,
-           |    CASE WHEN len(string_split(text,' ')) >= 5
-           |      THEN list_transform(range(len(string_split(text,' ')) - 4),
-           |        i -> string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2]
-           |          || ' ' || string_split(text,' ')[i+3] || ' ' || string_split(text,' ')[i+4]
-           |          || ' ' || string_split(text,' ')[i+5])
-           |      ELSE [] END AS shs
+           |    ${OracleSql.ngramsSql(5)} AS shs
            |  FROM documents),
            |toks AS (
            |  SELECT doc_id, u.sh AS tok, count(*) AS tf
@@ -1030,27 +922,7 @@ object Dedup extends QueryGroup {
            |ex AS (
            |  SELECT doc_id, tok || '#' || i.i AS sh
            |  FROM toks, unnest(range(1, least(tf, 4) + 1)) AS i(i)),
-           |dfs AS (SELECT sh, count(*) AS df FROM ex GROUP BY 1),
-           |thr AS (SELECT greatest(min(df), 2) AS t FROM (
-           |  SELECT df, cume_dist() OVER (ORDER BY df) AS cd FROM dfs) WHERE cd >= 0.95),
-           |exc AS (SELECT ex.doc_id, ex.sh FROM ex JOIN dfs USING (sh), thr
-           |  WHERE dfs.df <= thr.t),
-           |hashed AS (
-           |  SELECT doc_id,
-           |    CAST('0x' || substr(md5(sh), 1, 10) AS BIGINT) AS h1,
-           |    CAST('0x' || substr(md5(sh), 11, 10) AS BIGINT) AS h2
-           |  FROM exc),
-           |mh AS (
-           |  SELECT doc_id, j.j AS j, min(h1 + j.j * h2) AS h
-           |  FROM hashed, unnest(range(8)) AS j(j)
-           |  GROUP BY 1, 2),
-           |bands AS (
-           |  SELECT doc_id, j // 2 AS band, string_agg(h::VARCHAR, ':' ORDER BY j) AS bk
-           |  FROM mh GROUP BY 1, 2),
-           |pairs AS (
-           |  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-           |  FROM bands a JOIN bands b
-           |    ON a.band = b.band AND a.bk = b.bk AND a.doc_id < b.doc_id),
+           |${OracleSql.quantileCappedPairsCtes("ex", floor = 2, rowsPerBand = 2, capped = "exc")},
            |shared AS (
            |  SELECT p.a_id, p.b_id, CAST(sum(least(ta.tf, tb.tf)) AS BIGINT) AS w_common
            |  FROM pairs p
@@ -1061,14 +933,12 @@ object Dedup extends QueryGroup {
            |SELECT p.a_id, p.b_id,
            |  COALESCE(s.w_common, 0) AS w_common,
            |  la.mass AS a_mass, lb.mass AS b_mass,
-           |  round(CAST(COALESCE(s.w_common, 0) AS DOUBLE)
-           |    / CAST(la.mass + lb.mass - COALESCE(s.w_common, 0) AS DOUBLE), 6) AS w_jaccard
+           |  ${OracleSql.setJaccardSql("COALESCE(s.w_common, 0)", "la.mass", "lb.mass")} AS w_jaccard
            |FROM pairs p
            |LEFT JOIN shared s ON s.a_id = p.a_id AND s.b_id = p.b_id
            |JOIN lens la ON la.doc_id = p.a_id
            |JOIN lens lb ON lb.doc_id = p.b_id
-           |WHERE round(CAST(COALESCE(s.w_common, 0) AS DOUBLE)
-           |    / CAST(la.mass + lb.mass - COALESCE(s.w_common, 0) AS DOUBLE), 6) >= 0.2
+           |WHERE ${OracleSql.setJaccardSql("COALESCE(s.w_common, 0)", "la.mass", "lb.mass")} >= 0.2
            |ORDER BY p.a_id, p.b_id""".stripMargin))
 
   /** X2 blocking-strategy recall A/B — "measure, don't guess" applied to
@@ -1122,15 +992,7 @@ object Dedup extends QueryGroup {
         .withColumn("snm_recall", recall(col("n_snm")))
         .withColumn("lsh_recall", recall(col("n_lsh")))
     },
-    Some("""WITH sets AS (
-           |  SELECT doc_id,
-           |    list_distinct(CASE WHEN len(string_split(text,' ')) >= 5
-           |      THEN list_transform(range(len(string_split(text,' ')) - 4),
-           |        i -> string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2]
-           |          || ' ' || string_split(text,' ')[i+3] || ' ' || string_split(text,' ')[i+4]
-           |          || ' ' || string_split(text,' ')[i+5])
-           |      ELSE [] END) AS shset
-           |  FROM documents),
+    Some(s"""WITH ${OracleSql.shingleSetsCte(5)},
            |ex0 AS (SELECT doc_id, unnest(shset) AS sh FROM sets WHERE len(shset) > 0),
            |sizes AS (SELECT doc_id, len(shset) AS setsize FROM sets WHERE len(shset) > 0),
            |jac AS (
@@ -1141,35 +1003,14 @@ object Dedup extends QueryGroup {
            |  SELECT a_id, b_id FROM jac
            |  JOIN sizes sa ON sa.doc_id = a_id
            |  JOIN sizes sb ON sb.doc_id = b_id
-           |  WHERE round(CAST(n_common AS DOUBLE)
-           |      / CAST(sa.setsize + sb.setsize - n_common AS DOUBLE), 6) >= 0.5),
+           |  WHERE ${OracleSql.setJaccardSql("n_common", "sa.setsize", "sb.setsize")} >= 0.5),
            |r AS (SELECT doc_id, row_number() OVER (ORDER BY n_chars, doc_id) AS rk
            |  FROM documents),
            |snmp AS (
            |  SELECT DISTINCT least(a.doc_id, b.doc_id) AS a_id,
            |    greatest(a.doc_id, b.doc_id) AS b_id
            |  FROM r a CROSS JOIN unnest(range(1, 8)) AS o(k) JOIN r b ON b.rk = a.rk + o.k),
-           |dfs AS (SELECT sh, count(*) AS df FROM ex0 GROUP BY 1),
-           |thr AS (SELECT greatest(min(df), 2) AS t FROM (
-           |  SELECT df, cume_dist() OVER (ORDER BY df) AS cd FROM dfs) WHERE cd >= 0.95),
-           |ex AS (SELECT ex0.doc_id, ex0.sh FROM ex0 JOIN dfs USING (sh), thr
-           |  WHERE dfs.df <= thr.t),
-           |hashed AS (
-           |  SELECT doc_id,
-           |    CAST('0x' || substr(md5(sh), 1, 10) AS BIGINT) AS h1,
-           |    CAST('0x' || substr(md5(sh), 11, 10) AS BIGINT) AS h2
-           |  FROM ex),
-           |mh AS (
-           |  SELECT doc_id, j.j AS j, min(h1 + j.j * h2) AS h
-           |  FROM hashed, unnest(range(8)) AS j(j)
-           |  GROUP BY 1, 2),
-           |bands AS (
-           |  SELECT doc_id, j // 2 AS band, string_agg(h::VARCHAR, ':' ORDER BY j) AS bk
-           |  FROM mh GROUP BY 1, 2),
-           |lshp AS (
-           |  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-           |  FROM bands a JOIN bands b
-           |    ON a.band = b.band AND a.bk = b.bk AND a.doc_id < b.doc_id),
+           |${OracleSql.quantileCappedPairsCtes("ex0", floor = 2, rowsPerBand = 2, pairs = "lshp")},
            |agg AS (
            |  SELECT CAST(count(*) AS BIGINT) AS n_true,
            |    CAST(COALESCE(sum(CASE WHEN s.a_id IS NOT NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_snm,
@@ -1230,15 +1071,7 @@ object Dedup extends QueryGroup {
           round(col("n_union").cast("double") / col("n_true").cast("double"), 6))
           .otherwise(lit(0.0)))
     },
-    Some("""WITH sets AS (
-           |  SELECT doc_id,
-           |    list_distinct(CASE WHEN len(string_split(text,' ')) >= 5
-           |      THEN list_transform(range(len(string_split(text,' ')) - 4),
-           |        i -> string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2]
-           |          || ' ' || string_split(text,' ')[i+3] || ' ' || string_split(text,' ')[i+4]
-           |          || ' ' || string_split(text,' ')[i+5])
-           |      ELSE [] END) AS shset
-           |  FROM documents),
+    Some(s"""WITH ${OracleSql.shingleSetsCte(5)},
            |ex0 AS (SELECT doc_id, unnest(shset) AS sh FROM sets WHERE len(shset) > 0),
            |sizes AS (SELECT doc_id, len(shset) AS setsize FROM sets WHERE len(shset) > 0),
            |jac AS (
@@ -1249,8 +1082,7 @@ object Dedup extends QueryGroup {
            |  SELECT a_id, b_id FROM jac
            |  JOIN sizes sa ON sa.doc_id = a_id
            |  JOIN sizes sb ON sb.doc_id = b_id
-           |  WHERE round(CAST(n_common AS DOUBLE)
-           |      / CAST(sa.setsize + sb.setsize - n_common AS DOUBLE), 6) >= 0.5),
+           |  WHERE ${OracleSql.setJaccardSql("n_common", "sa.setsize", "sb.setsize")} >= 0.5),
            |rl AS (SELECT doc_id, row_number() OVER (ORDER BY n_chars, doc_id) AS rk
            |  FROM documents),
            |lp AS (

@@ -209,12 +209,10 @@ object Graph extends QueryGroup {
         Seq("train" -> 80, "valid" -> 90, "test" -> 100))
       .orderBy(col("doc_id")),
     Some(OracleSql.calibratedCompsPrefix +
-      ("""
+      (s"""
            |SELECT d.doc_id,
            |  CAST(coalesce(c.comp, d.doc_id) AS BIGINT) AS rep_id,
-           |  CASE WHEN ('0x' || substr(md5(CAST(coalesce(c.comp, d.doc_id) AS VARCHAR)), 1, 8))::BIGINT % 100 < 80 THEN 'train'
-           |       WHEN ('0x' || substr(md5(CAST(coalesce(c.comp, d.doc_id) AS VARCHAR)), 1, 8))::BIGINT % 100 < 90 THEN 'valid'
-           |       ELSE 'test' END AS split
+           |  ${OracleSql.hashSplitSql("coalesce(c.comp, d.doc_id)")} AS split
            |FROM documents d LEFT JOIN comps c ON c.node = d.doc_id
            |ORDER BY d.doc_id""").stripMargin))
 
@@ -254,13 +252,8 @@ object Graph extends QueryGroup {
         .orderBy(col("old_split"), col("new_split"))
     },
     Some(OracleSql.calibratedCompsPrefix +
-      (""",
-           |und_old AS (SELECT src, dst FROM und WHERE src % 3 <> 0 AND dst % 3 <> 0),
-           |walk_old AS (
-           |  SELECT DISTINCT src AS node, src AS comp FROM und_old
-           |  UNION
-           |  SELECT u.dst AS node, w.comp FROM walk_old w JOIN und_old u ON u.src = w.node),
-           |comps_old AS (SELECT node, min(comp) AS comp FROM walk_old GROUP BY node),
+      (s""",
+           |${OracleSql.calibratedOldCompsCtes},
            |standing AS (
            |  SELECT d.doc_id,
            |    coalesce(co.comp, d.doc_id) AS old_rep,
@@ -271,12 +264,8 @@ object Graph extends QueryGroup {
            |  WHERE d.doc_id % 3 <> 0),
            |lab AS (
            |  SELECT doc_id,
-           |    CASE WHEN ('0x' || substr(md5(CAST(old_rep AS VARCHAR)), 1, 8))::BIGINT % 100 < 80 THEN 'train'
-           |         WHEN ('0x' || substr(md5(CAST(old_rep AS VARCHAR)), 1, 8))::BIGINT % 100 < 90 THEN 'valid'
-           |         ELSE 'test' END AS old_split,
-           |    CASE WHEN ('0x' || substr(md5(CAST(new_rep AS VARCHAR)), 1, 8))::BIGINT % 100 < 80 THEN 'train'
-           |         WHEN ('0x' || substr(md5(CAST(new_rep AS VARCHAR)), 1, 8))::BIGINT % 100 < 90 THEN 'valid'
-           |         ELSE 'test' END AS new_split
+           |    ${OracleSql.hashSplitSql("old_rep")} AS old_split,
+           |    ${OracleSql.hashSplitSql("new_rep")} AS new_split
            |  FROM standing)
            |SELECT old_split, new_split, count(*) AS n_docs
            |FROM lab GROUP BY 1, 2 ORDER BY 1, 2""").stripMargin))
@@ -307,24 +296,15 @@ object Graph extends QueryGroup {
         .orderBy(col("doc_id"))
     },
     Some(OracleSql.calibratedCompsPrefix +
-      (""",
-           |und_old AS (SELECT src, dst FROM und WHERE src % 3 <> 0 AND dst % 3 <> 0),
-           |walk_old AS (
-           |  SELECT DISTINCT src AS node, src AS comp FROM und_old
-           |  UNION
-           |  SELECT u.dst AS node, w.comp FROM walk_old w JOIN und_old u ON u.src = w.node),
-           |comps_old AS (SELECT node, min(comp) AS comp FROM walk_old GROUP BY node),
+      (s""",
+           |${OracleSql.calibratedOldCompsCtes},
            |ns AS (
            |  SELECT d.doc_id,
            |    coalesce(c.comp, d.doc_id) AS new_rep,
            |    CASE WHEN d.doc_id % 3 <> 0 THEN
-           |      CASE WHEN ('0x' || substr(md5(CAST(coalesce(co.comp, d.doc_id) AS VARCHAR)), 1, 8))::BIGINT % 100 < 80 THEN 'train'
-           |           WHEN ('0x' || substr(md5(CAST(coalesce(co.comp, d.doc_id) AS VARCHAR)), 1, 8))::BIGINT % 100 < 90 THEN 'valid'
-           |           ELSE 'test' END
+           |      ${OracleSql.hashSplitSql("coalesce(co.comp, d.doc_id)")}
            |      ELSE 'none' END AS old_split,
-           |    CASE WHEN ('0x' || substr(md5(CAST(coalesce(c.comp, d.doc_id) AS VARCHAR)), 1, 8))::BIGINT % 100 < 80 THEN 'train'
-           |         WHEN ('0x' || substr(md5(CAST(coalesce(c.comp, d.doc_id) AS VARCHAR)), 1, 8))::BIGINT % 100 < 90 THEN 'valid'
-           |         ELSE 'test' END AS new_split
+           |    ${OracleSql.hashSplitSql("coalesce(c.comp, d.doc_id)")} AS new_split
            |  FROM documents d
            |  LEFT JOIN comps c ON c.node = d.doc_id
            |  LEFT JOIN comps_old co ON co.node = d.doc_id),

@@ -216,89 +216,233 @@ object SharedPipelines {
     }
 }
 
-/** Oracle-SQL fragments shared across query groups. */
+/** Oracle-SQL fragments shared across query groups. ONE generator per
+  * fragment that two or more oracles use, so a hashing, cap, band,
+  * rounding or sweep change can never fork the oracles. New oracles
+  * compose these instead of re-typing them:
+  *
+  *  - shingling: [[ngramsSql]] (word n-gram list), [[shingleSetsCte]]
+  *    (the `sets` CTE of distinct n-grams);
+  *  - near-dup candidates: [[quantileCapCtes]] (`dfs`/`thr` df-quantile
+  *    cap), [[minhashBandCtes]] (md5 → (h1, h2) `hashed` → minima → band
+  *    keys), [[bandPairsCte]] (band self-join), [[quantileCappedPairsCtes]]
+  *    (the three composed, [[graft.operators.DedupOps.nearDupCandidates]]'s
+  *    replay);
+  *  - scores: [[setJaccardSql]], [[cosineSql]], [[hllEstimateSql]] (over
+  *    [[hllGroupedRegsCtes]]'s registers);
+  *  - graphs and splits: [[closureCtes]] (recursive min-label components),
+  *    [[hashSplitSql]] (the 80/90/100 md5 split);
+  *  - LSH: [[signLshBucketSql]], [[annSweepCtes]] +
+  *    [[annSweepChosenSelect]] (the recall-targeted config sweep),
+  *    [[pairLshSweepCtes]], [[tunedSemanticCompsPrefix]];
+  *  - the calibrated near-dup prefixes: [[calibratedPairsCtes]],
+  *    [[calibratedEdgesCtes]], [[calibratedCompsPrefix]] (+
+  *    [[calibratedOldCompsCtes]]);
+  *  - unrolled trainers: [[kmeansCtes]], [[logisticCtes]], [[bpeCtes]],
+  *    [[pcaCtes]]; tokenization: [[subwordWalkSql]].
+  *
+  * Interpolated fragments span lines; none starts a line with `|`, so
+  * the caller's `.stripMargin` leaves them intact. */
 object OracleSql {
+
+  /** The word n-gram list of the token list `toks` (by default `text`
+    * split on single spaces): `n` consecutive tokens joined by one space,
+    * empty when there are fewer than `n` —
+    * [[graft.operators.TextOps.shingleRows]]'s representation. */
+  def ngramsSql(n: Int, toks: String = "string_split(text,' ')"): String = {
+    val gram = (1 to n).map(k => s"$toks[i+$k]").mkString(" || ' ' || ")
+    s"""CASE WHEN len($toks) >= $n
+       |      THEN list_transform(range(len($toks) - ${n - 1}),
+       |        i -> $gram)
+       |      ELSE [] END""".stripMargin
+  }
+
+  /** `sets(<cols>, shset)`: each row of `from` with its DISTINCT word
+    * n-grams ([[ngramsSql]]). */
+  def shingleSetsCte(n: Int, cols: String = "doc_id", from: String = "documents"): String =
+    s"""sets AS (
+       |  SELECT $cols,
+       |    list_distinct(${ngramsSql(n)}) AS shset
+       |  FROM $from)""".stripMargin
+
+  /** The df-quantile hot-shingle cap ([[graft.operators.DedupOps
+    * .capShingleDfQuantile]]) over `src(doc_id, sh)`: `dfs` (per-shingle
+    * df), `thr` (the smallest df whose cume_dist reaches 0.95 — the
+    * Spark side's distinct-df histogram cumulative — floored at `floor`)
+    * and `out(doc_id, sh)`, the rows at or under it. */
+  def quantileCapCtes(src: String, out: String, floor: Int): String =
+    s"""dfs AS (SELECT sh, count(*) AS df FROM $src GROUP BY 1),
+       |thr AS (SELECT greatest(min(df), $floor) AS t FROM (
+       |  SELECT df, cume_dist() OVER (ORDER BY df) AS cd FROM dfs) WHERE cd >= 0.95),
+       |$out AS (SELECT $src.doc_id, $src.sh FROM $src JOIN dfs USING (sh), thr
+       |  WHERE dfs.df <= thr.t)""".stripMargin
+
+  /** 8 Kirsch–Mitzenmacher minhashes ([[graft.operators.DedupOps
+    * .minhashMinima]]) over `src(<cols>, sh)`, banded by `rowsPerBand`:
+    * `hashed<tag>` — one md5 per shingle split into 40-bit (h1, h2);
+    * hash j = min(h1 + j·h2). With r = 1 the minima ARE the band rows,
+    * `bands<tag>(<cols>, band, h)`; with r ≥ 2 they are
+    * `mh<tag>(<cols>, j, h)` and `bands<tag>(<cols>, band, bk)` carries
+    * the ':'-joined decimal minima of each band, ordered by j. */
+  def minhashBandCtes(src: String, rowsPerBand: Int, cols: String = "doc_id",
+      tag: String = ""): String = {
+    val groupBy = (1 to cols.split(",").length + 1).mkString(", ")
+    def minima(name: String, idx: String) =
+      s"""$name AS (
+         |  SELECT $cols, j.j AS $idx, min(h1 + j.j * h2) AS h
+         |  FROM hashed$tag, unnest(range(8)) AS j(j)
+         |  GROUP BY $groupBy)""".stripMargin
+    val hashed =
+      s"""hashed$tag AS (
+         |  SELECT $cols,
+         |    CAST('0x' || substr(md5(sh), 1, 10) AS BIGINT) AS h1,
+         |    CAST('0x' || substr(md5(sh), 11, 10) AS BIGINT) AS h2
+         |  FROM $src)""".stripMargin
+    if (rowsPerBand == 1) hashed + ",\n" + minima(s"bands$tag", "band")
+    else
+      s"""$hashed,
+         |${minima(s"mh$tag", "j")},
+         |bands$tag AS (
+         |  SELECT $cols, j // $rowsPerBand AS band, string_agg(h::VARCHAR, ':' ORDER BY j) AS bk
+         |  FROM mh$tag GROUP BY $groupBy)""".stripMargin
+  }
+
+  /** The band self-join ([[graft.operators.DedupOps]]'s `bandCollisions`):
+    * doc pairs (a_id < b_id) of `bands` rows agreeing on every column of
+    * `on`. DISTINCT pairs, or with `counted` one row per pair with
+    * `n_shared_bands`. */
+  def bandPairsCte(name: String, on: Seq[String], counted: Boolean = false): String = {
+    val cond = (on.map(c => s"a.$c = b.$c") :+ "a.doc_id < b.doc_id").mkString(" AND ")
+    if (counted)
+      s"""$name AS (
+         |  SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS n_shared_bands
+         |  FROM bands a JOIN bands b
+         |    ON $cond
+         |  GROUP BY 1, 2)""".stripMargin
+    else
+      s"""$name AS (
+         |  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
+         |  FROM bands a JOIN bands b
+         |    ON $cond)""".stripMargin
+  }
+
+  /** DuckDB replay of [[graft.operators.DedupOps.nearDupCandidates]] under
+    * `QuantileCapped(q = 0.95, floor, numHashes = 8, rowsPerBand)` over
+    * `src(doc_id, sh)`, one global bucket: [[quantileCapCtes]] into
+    * `capped` → [[minhashBandCtes]] → [[bandPairsCte]] into `pairs`. */
+  def quantileCappedPairsCtes(src: String, floor: Int, rowsPerBand: Int,
+      pairs: String = "pairs", capped: String = "ex", counted: Boolean = false): String = {
+    val key = if (rowsPerBand == 1) "h" else "bk"
+    Seq(quantileCapCtes(src, capped, floor), minhashBandCtes(capped, rowsPerBand),
+      bandPairsCte(pairs, Seq("band", key), counted)).mkString(",\n")
+  }
+
+  /** Set Jaccard |A∩B| / |A∪B| from the common count and both set sizes,
+    * rounded 1e-6 ([[graft.operators.DedupOps.jaccardVerifyPairs]]'s
+    * score; the weighted form passes multiset masses). */
+  def setJaccardSql(common: String, sizeA: String, sizeB: String): String =
+    s"round(CAST($common AS DOUBLE) / CAST($sizeA + $sizeB - $common AS DOUBLE), 6)"
+
+  /** Recursive min-label closure over the undirected edge CTE `und(src,
+    * dst)`: `walk<suffix>(node, comp)` reachability and
+    * `comps<suffix>(node, comp)`, the component labeling
+    * ([[graft.operators.GraphOps.connectedComponents]]). Needs
+    * `WITH RECURSIVE`. */
+  def closureCtes(und: String, suffix: String = ""): String =
+    s"""walk$suffix AS (
+       |  SELECT DISTINCT src AS node, src AS comp FROM $und
+       |  UNION
+       |  SELECT u.dst AS node, w.comp FROM walk$suffix w JOIN $und u ON u.src = w.node),
+       |comps$suffix AS (SELECT node, min(comp) AS comp FROM walk$suffix GROUP BY node)""".stripMargin
+
+  /** The deterministic train/valid/test assignment of an integer `key`
+    * ([[graft.operators.CurationOps.hashSplit]] with cuts 80/90/100 over
+    * the first 32 md5 bits mod 100). */
+  def hashSplitSql(key: String): String = {
+    val b = s"('0x' || substr(md5(CAST($key AS VARCHAR)), 1, 8))::BIGINT % 100"
+    s"CASE WHEN $b < 80 THEN 'train' WHEN $b < 90 THEN 'valid' ELSE 'test' END"
+  }
+
+  /** The raw HyperLogLog estimate at p = 8 ([[graft.operators.SketchOps
+    * .hllEstimate]]): α·m² · 2^53 / `harmonicFp`, where `harmonicFp` is
+    * the fixed-point harmonic sum Σ 2^(53 − reg); rounded 1e-6, −0.0
+    * normalized. */
+  def hllEstimateSql(harmonicFp: String): String =
+    s"""round((0.7213 / (1 + 1.079 / 256.0)) * 256.0 * 256.0
+       |        * 9007199254740992.0 / CAST($harmonicFp AS DOUBLE), 6) + 0.0""".stripMargin
+
+  /** The p = 8 HyperLogLog registers of `user_id` per `event_type` over
+    * `events` ([[graft.operators.SketchOps.hllRegistersGrouped]]): opens
+    * `WITH`, ends at `regs(g, bucket, reg)`, every (group, bucket) of the DISTINCT
+    * groups × range(256) frame, empty registers 0. */
+  val hllGroupedRegsCtes: String =
+    """WITH hx AS (SELECT event_type AS g, md5(user_id::VARCHAR) AS h FROM events),
+      |pr AS (SELECT g, ('0x' || substr(h, 1, 2))::BIGINT AS bucket,
+      |    ('0x' || substr(h, 3, 13))::BIGINT AS w FROM hx),
+      |rg AS (SELECT g, bucket,
+      |    max(CASE WHEN w = 0 THEN 53 ELSE 53 - length(bin(w)) END) AS reg
+      |  FROM pr GROUP BY 1, 2),
+      |frame AS (SELECT t.g, r.range AS bucket
+      |  FROM (SELECT DISTINCT event_type AS g FROM events) t
+      |  CROSS JOIN range(256) r),
+      |regs AS (SELECT frame.g, frame.bucket, coalesce(rg.reg, 0) AS reg
+      |  FROM frame LEFT JOIN rg ON frame.g = rg.g AND frame.bucket = rg.bucket)""".stripMargin
 
   /** DuckDB replay of the CALIBRATED candidate generator
     * ([[SharedPipelines.calibratedCandidates]] ≡ [[graft.operators.DedupOps
     * .nearDupCandidates]] under the QuantileCapped default): 5-gram global
     * shingles → 0.95 df-quantile cap floored at 2 → 8 minhashes banded
     * r = 2 → DISTINCT band-collision pairs. CTE chain ends at
-    * `pairs(a_id, b_id)`; also exposes `ex0` (uncapped shingle rows) and
-    * `sizes` (full set sizes) for the verify stage. ONE copy of the
-    * generator SQL serves every consumer (q65/q114/q124 and the CC
-    * family's closure prefix), so a hashing/cap/band change can never fork
-    * the oracles. */
+    * `pairs(a_id, b_id)`; also exposes `ex0` (uncapped shingle rows),
+    * `sizes` (full set sizes) for the verify stage, `ex` (the capped rows)
+    * and `mh` (the minima). Consumers: q65/q75/q107/q114/q124 and the CC
+    * family's closure prefix. The sf10 harness materializes these CTEs by
+    * name (`scripts/build_cal_prefix.py`), so names and bodies are fixed. */
   val calibratedPairsCtes: String =
-    ("""sets AS (
-           |  SELECT doc_id,
-           |    list_distinct(CASE WHEN len(string_split(text,' ')) >= 5
-           |      THEN list_transform(range(len(string_split(text,' ')) - 4),
-           |        i -> string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2]
-           |          || ' ' || string_split(text,' ')[i+3] || ' ' || string_split(text,' ')[i+4]
-           |          || ' ' || string_split(text,' ')[i+5])
-           |      ELSE [] END) AS shset
-           |  FROM documents),
-           |ex0 AS (SELECT doc_id, unnest(shset) AS sh FROM sets WHERE len(shset) > 0),
-           |sizes AS (SELECT doc_id, len(shset) AS setsize FROM sets WHERE len(shset) > 0),
-           |dfs AS (SELECT sh, count(*) AS df FROM ex0 GROUP BY 1),
-           |thr AS (SELECT greatest(min(df), 2) AS t FROM (
-           |  SELECT df, cume_dist() OVER (ORDER BY df) AS cd FROM dfs) WHERE cd >= 0.95),
-           |ex AS (SELECT ex0.doc_id, ex0.sh FROM ex0 JOIN dfs USING (sh), thr
-           |  WHERE dfs.df <= thr.t),
-           |hashed AS (
-           |  SELECT doc_id,
-           |    CAST('0x' || substr(md5(sh), 1, 10) AS BIGINT) AS h1,
-           |    CAST('0x' || substr(md5(sh), 11, 10) AS BIGINT) AS h2
-           |  FROM ex),
-           |mh AS (
-           |  SELECT doc_id, j.j AS j, min(h1 + j.j * h2) AS h
-           |  FROM hashed, unnest(range(8)) AS j(j)
-           |  GROUP BY 1, 2),
-           |bands AS (
-           |  SELECT doc_id, j // 2 AS band, string_agg(h::VARCHAR, ':' ORDER BY j) AS bk
-           |  FROM mh GROUP BY 1, 2),
-           |pairs AS (
-           |  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-           |  FROM bands a JOIN bands b
-           |    ON a.band = b.band AND a.bk = b.bk AND a.doc_id < b.doc_id)""").stripMargin
+    s"""${shingleSetsCte(5)},
+       |ex0 AS (SELECT doc_id, unnest(shset) AS sh FROM sets WHERE len(shset) > 0),
+       |sizes AS (SELECT doc_id, len(shset) AS setsize FROM sets WHERE len(shset) > 0),
+       |${quantileCappedPairsCtes("ex0", floor = 2, rowsPerBand = 2)}""".stripMargin
 
   /** [[calibratedPairsCtes]] + the exact full-set-Jaccard verify at 0.5
     * ([[SharedPipelines.calibratedPairs]] ≡ [[graft.operators.DedupOps
     * .jaccardVerifyPairs]]) — ends at `edges(src, dst)`, the verified
     * near-dup edge set. */
   val calibratedEdgesCtes: String = calibratedPairsCtes +
-    (""",
-           |cmn AS (
-           |  SELECT p.a_id, p.b_id, count(*) AS n_common
-           |  FROM pairs p
-           |  JOIN ex0 a ON a.doc_id = p.a_id
-           |  JOIN ex0 b ON b.doc_id = p.b_id AND b.sh = a.sh
-           |  GROUP BY 1, 2),
-           |edges AS (
-           |  SELECT a_id AS src, b_id AS dst FROM cmn
-           |  JOIN sizes sa ON sa.doc_id = a_id
-           |  JOIN sizes sb ON sb.doc_id = b_id
-           |  WHERE round(CAST(n_common AS DOUBLE)
-           |      / CAST(sa.setsize + sb.setsize - n_common AS DOUBLE), 6) >= 0.5)""").stripMargin
+    s""",
+       |cmn AS (
+       |  SELECT p.a_id, p.b_id, count(*) AS n_common
+       |  FROM pairs p
+       |  JOIN ex0 a ON a.doc_id = p.a_id
+       |  JOIN ex0 b ON b.doc_id = p.b_id AND b.sh = a.sh
+       |  GROUP BY 1, 2),
+       |edges AS (
+       |  SELECT a_id AS src, b_id AS dst FROM cmn
+       |  JOIN sizes sa ON sa.doc_id = a_id
+       |  JOIN sizes sb ON sb.doc_id = b_id
+       |  WHERE ${setJaccardSql("n_common", "sa.setsize", "sb.setsize")} >= 0.5)""".stripMargin
 
-  /** Recursive-CTE min-label closure over [[calibratedEdgesCtes]], ending
-    * at the `comps(node, comp)` labeling ([[SharedPipelines
-    * .calibratedComps]]). Opens `WITH RECURSIVE`; callers append either a
-    * final SELECT (keepers, split assignment) or further CTEs after a
-    * comma. Also exposes `und` (the undirected edge list) for consumers
-    * that re-close over a filtered subgraph (q173/q175's standing
-    * labeling). Tractable at oracle scale because reachability pairs are
-    * bounded by the VERIFIED pair graph — true near-dups only, sparser
-    * than any candidate pool. */
+  /** Recursive-CTE min-label closure ([[closureCtes]]) over
+    * [[calibratedEdgesCtes]], ending at the `comps(node, comp)` labeling
+    * ([[SharedPipelines.calibratedComps]]). Opens `WITH RECURSIVE`;
+    * callers append either a final SELECT (keepers, split assignment) or
+    * further CTEs after a comma. Also exposes `und` (the undirected edge
+    * list) for consumers that re-close over a filtered subgraph
+    * (q173/q175's standing labeling). Tractable at oracle scale because
+    * reachability pairs are bounded by the VERIFIED pair graph — true
+    * near-dups only, sparser than any candidate pool. */
   val calibratedCompsPrefix: String = "WITH RECURSIVE " + calibratedEdgesCtes +
-    (""",
-           |und AS (SELECT src, dst FROM edges UNION SELECT dst AS src, src AS dst FROM edges),
-           |walk AS (
-           |  SELECT DISTINCT src AS node, src AS comp FROM und
-           |  UNION
-           |  SELECT u.dst AS node, w.comp FROM walk w JOIN und u ON u.src = w.node),
-           |comps AS (SELECT node, min(comp) AS comp FROM walk GROUP BY node)""").stripMargin
+    s""",
+       |und AS (SELECT src, dst FROM edges UNION SELECT dst AS src, src AS dst FROM edges),
+       |${closureCtes("und")}""".stripMargin
+
+  /** After [[calibratedCompsPrefix]]: the STANDING labeling
+    * ([[SharedPipelines.calibratedOldCompsMod3]]) — `und_old`, the
+    * verified edges not touching a doc_id ≡ 0 mod 3, closed into
+    * `comps_old(node, comp)` (q173/q175). */
+  val calibratedOldCompsCtes: String =
+    s"""und_old AS (SELECT src, dst FROM und WHERE src % 3 <> 0 AND dst % 3 <> 0),
+       |${closureCtes("und_old", "_old")}""".stripMargin
 
   /** DuckDB expression equivalent to
     * [[graft.operators.SimilarityOps.signLshBucket]] over LITERAL
@@ -314,12 +458,84 @@ object OracleSql {
     }.mkString(" + ")
 
   /** The exact-cosine expression both engines evaluate identically (one
-    * dot per operand pair + two norms, rounded 1e-6) — shared by the
-    * semantic-family oracle fragments so a rounding change can't fork
-    * them. */
-  private def cosineSql(a: String, b: String): String =
+    * dot per operand pair + two norms, rounded 1e-6). Output columns add
+    * `+ 0.0` (−0.0 normalized); thresholds and rank keys use it bare. */
+  def cosineSql(a: String, b: String): String =
     s"""round(list_dot_product($a, $b)
        |      / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b))), 6)""".stripMargin
+
+  /** DuckDB replay of [[graft.operators.SimilarityOps.lshAutoTune]]'s
+    * recall sweep for the `qs(q_id, <cell>, q_v)` query batch over `from`
+    * — a FROM item aliased `e` with (vec_id, <cell>, v):
+    *
+    *  - `tru` — the exact same-cell top-`k` by cosine per query;
+    *  - per config i: `cfg<i>_cand` (DISTINCT candidates agreeing on any
+    *    table's literal-plane bucket), `cfg<i>_ann` (their top-`k`:
+    *    q_id, n_id, cosine, rank), `cfg<i>_rec` (hits against `tru`) and
+    *    `cfg<i>` (n_tables, n_planes, mean_recall, candidate_pairs);
+    *  - `allc` (every config's row), `flg` (+ meets_target =
+    *    mean_recall ≥ `recallTarget`) and `win` (+ chosen: the cheapest
+    *    meeting config by candidate pairs, ties to fewer tables, then
+    *    fewer planes). */
+  def annSweepCtes(configs: Seq[(Int, Int)], from: String, cell: String, k: Int,
+      recallTarget: Double): String = {
+    import graft.operators.SimilarityOps.lshTables
+    val cos = cosineSql("e.v", "qs.q_v")
+    val cfgs = configs.zipWithIndex.map { case ((t, p), i) =>
+      val anyTable = lshTables(t, p, 64).map(planes =>
+        s"(${signLshBucketSql("e.v", planes)})" +
+          s" = (${signLshBucketSql("qs.q_v", planes)})")
+        .mkString("(", "\n      OR ", ")")
+      s"""cfg${i}_cand AS (
+         |  SELECT DISTINCT qs.q_id, e.vec_id AS n_id
+         |  FROM $from JOIN qs ON e.$cell = qs.$cell AND $anyTable
+         |  WHERE e.vec_id <> qs.q_id),
+         |cfg${i}_ann AS (
+         |  SELECT q_id, n_id, cosine, CAST(rk AS BIGINT) AS rank FROM (
+         |    SELECT c.q_id, c.n_id, $cos + 0.0 AS cosine,
+         |      row_number() OVER (PARTITION BY c.q_id ORDER BY
+         |        $cos DESC, c.n_id) AS rk
+         |    FROM cfg${i}_cand c
+         |    JOIN $from ON e.vec_id = c.n_id
+         |    JOIN qs ON qs.q_id = c.q_id) WHERE rk <= $k),
+         |cfg${i}_rec AS (
+         |  SELECT t.q_id, count(*) AS n_truth, count(a.n_id) AS n_hit
+         |  FROM tru t LEFT JOIN cfg${i}_ann a
+         |    ON a.q_id = t.q_id AND a.n_id = t.n_id
+         |  GROUP BY 1),
+         |cfg$i AS (
+         |  SELECT $t AS n_tables, $p AS n_planes,
+         |    round(avg(n_hit::DOUBLE / n_truth::DOUBLE), 6) + 0.0 AS mean_recall,
+         |    (SELECT count(*) FROM cfg${i}_cand) AS candidate_pairs
+         |  FROM cfg${i}_rec)""".stripMargin
+    }.mkString(",\n")
+    val unioned = configs.indices.map(i => s"SELECT * FROM cfg$i").mkString("\n  UNION ALL ")
+    s"""tru AS (
+       |  SELECT q_id, n_id FROM (
+       |    SELECT qs.q_id, e.vec_id AS n_id,
+       |      row_number() OVER (PARTITION BY qs.q_id ORDER BY
+       |        $cos DESC, e.vec_id) AS rk
+       |    FROM $from JOIN qs ON e.$cell = qs.$cell
+       |    WHERE e.vec_id <> qs.q_id) WHERE rk <= $k),
+       |$cfgs,
+       |allc AS ($unioned),
+       |flg AS (SELECT *, mean_recall >= $recallTarget AS meets_target FROM allc),
+       |win AS (SELECT *,
+       |    meets_target AND row_number() OVER (ORDER BY meets_target DESC,
+       |      candidate_pairs, n_tables, n_planes) = 1 AS chosen
+       |  FROM flg)""".stripMargin
+  }
+
+  /** The chosen config's ANN rows after [[annSweepCtes]]: the union of
+    * every `cfg<i>_ann` gated on its `win.chosen` flag, config columns
+    * riding each row (q_id, n_id, cosine, rank, n_tables, n_planes). */
+  def annSweepChosenSelect(configs: Seq[(Int, Int)]): String =
+    configs.zipWithIndex.map { case ((t, p), i) =>
+      s"""SELECT q_id, n_id, cosine, rank, $t AS n_tables, $p AS n_planes
+         |  FROM cfg${i}_ann
+         |  WHERE (SELECT bool_or(chosen) FROM win
+         |         WHERE n_tables = $t AND n_planes = $p)""".stripMargin
+    }.mkString("\n  UNION ALL ")
 
   /** DuckDB replay of [[graft.operators.SimilarityOps.pairLshAutoTune]] —
     * the PAIR-geometry sweep (per config: pair recall on the sampled true
@@ -430,11 +646,7 @@ object OracleSql {
        |  FROM spr p JOIN e a ON a.vec_id = p.a_id JOIN e b ON b.vec_id = p.b_id
        |  WHERE ${cosineSql("a.v", "b.v")} >= $threshold),
        |und AS (SELECT src, dst FROM edges UNION SELECT dst AS src, src AS dst FROM edges),
-       |walk AS (
-       |  SELECT DISTINCT src AS node, src AS comp FROM und
-       |  UNION
-       |  SELECT u.dst AS node, w.comp FROM walk w JOIN und u ON u.src = w.node),
-       |comps AS (SELECT node, min(comp) AS comp FROM walk GROUP BY node)""".stripMargin
+       |${closureCtes("und")}""".stripMargin
   }
 
   /** Unrolled deterministic Lloyd's k-means as DuckDB CTE blocks — the

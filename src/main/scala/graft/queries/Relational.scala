@@ -52,7 +52,7 @@ object Relational extends QueryGroup {
         .withColumn("rel_err", roundz(
           col("hll_estimate") / col("exact_users").cast("double") - lit(1.0), 6))
     },
-    Some("""WITH hx AS (SELECT md5(user_id::VARCHAR) AS h FROM events),
+    Some(s"""WITH hx AS (SELECT md5(user_id::VARCHAR) AS h FROM events),
            |pr AS (SELECT ('0x' || substr(h, 1, 2))::BIGINT AS bucket,
            |    ('0x' || substr(h, 3, 13))::BIGINT AS w FROM hx),
            |rg AS (SELECT bucket,
@@ -67,9 +67,7 @@ object Relational extends QueryGroup {
            |      AS harmonic_fp
            |  FROM regs),
            |est AS (SELECT m, nonzero_regs, harmonic_fp,
-           |    round((0.7213 / (1 + 1.079 / 256.0)) * 256.0 * 256.0
-           |        * 9007199254740992.0 / CAST(harmonic_fp AS DOUBLE), 6) + 0.0
-           |      AS hll_estimate
+           |    ${OracleSql.hllEstimateSql("harmonic_fp")} AS hll_estimate
            |  FROM agg)
            |SELECT m, nonzero_regs, harmonic_fp, hll_estimate, exact_users,
            |  round(hll_estimate / CAST(exact_users AS DOUBLE) - 1, 6) + 0.0 AS rel_err
@@ -109,26 +107,14 @@ object Relational extends QueryGroup {
         // a user diffing raw outputs should see one order.
         .orderBy(asc_nulls_last("event_type"))
     },
-    Some("""WITH hx AS (SELECT event_type AS g, md5(user_id::VARCHAR) AS h FROM events),
-           |pr AS (SELECT g, ('0x' || substr(h, 1, 2))::BIGINT AS bucket,
-           |    ('0x' || substr(h, 3, 13))::BIGINT AS w FROM hx),
-           |rg AS (SELECT g, bucket,
-           |    max(CASE WHEN w = 0 THEN 53 ELSE 53 - length(bin(w)) END) AS reg
-           |  FROM pr GROUP BY 1, 2),
-           |frame AS (SELECT t.g, r.range AS bucket
-           |  FROM (SELECT DISTINCT event_type AS g FROM events) t
-           |  CROSS JOIN range(256) r),
-           |regs AS (SELECT frame.g, frame.bucket, coalesce(rg.reg, 0) AS reg
-           |  FROM frame LEFT JOIN rg ON frame.g = rg.g AND frame.bucket = rg.bucket),
+    Some(s"""${OracleSql.hllGroupedRegsCtes},
            |agg AS (SELECT g, CAST(count(*) AS BIGINT) AS m,
            |    CAST(sum(CASE WHEN reg > 0 THEN 1 ELSE 0 END) AS BIGINT) AS nonzero_regs,
            |    CAST(sum(CAST(1 AS BIGINT) << CAST(53 - reg AS INTEGER)) AS BIGINT)
            |      AS harmonic_fp
            |  FROM regs GROUP BY 1),
            |est AS (SELECT g, m, nonzero_regs, harmonic_fp,
-           |    round((0.7213 / (1 + 1.079 / 256.0)) * 256.0 * 256.0
-           |        * 9007199254740992.0 / CAST(harmonic_fp AS DOUBLE), 6) + 0.0
-           |      AS hll_estimate
+           |    ${OracleSql.hllEstimateSql("harmonic_fp")} AS hll_estimate
            |  FROM agg),
            |ex AS (SELECT event_type AS g, CAST(count(DISTINCT user_id) AS BIGINT)
            |    AS exact_users FROM events GROUP BY 1)
@@ -171,29 +157,13 @@ object Relational extends QueryGroup {
         .withColumnRenamed("ga", "type_a").withColumnRenamed("gb", "type_b")
         .orderBy(asc_nulls_last("type_a"), asc_nulls_last("type_b"))
     },
-    Some("""WITH hx AS (SELECT event_type AS g, md5(user_id::VARCHAR) AS h FROM events),
-           |pr AS (SELECT g, ('0x' || substr(h, 1, 2))::BIGINT AS bucket,
-           |    ('0x' || substr(h, 3, 13))::BIGINT AS w FROM hx),
-           |rg AS (SELECT g, bucket,
-           |    max(CASE WHEN w = 0 THEN 53 ELSE 53 - length(bin(w)) END) AS reg
-           |  FROM pr GROUP BY 1, 2),
-           |frame AS (SELECT t.g, r.range AS bucket
-           |  FROM (SELECT DISTINCT event_type AS g FROM events) t
-           |  CROSS JOIN range(256) r),
-           |regs AS (SELECT frame.g, frame.bucket, coalesce(rg.reg, 0) AS reg
-           |  FROM frame LEFT JOIN rg ON frame.g = rg.g AND frame.bucket = rg.bucket),
+    Some(s"""${OracleSql.hllGroupedRegsCtes},
            |marg AS (SELECT g,
-           |    round((0.7213 / (1 + 1.079 / 256.0)) * 256.0 * 256.0
-           |        * 9007199254740992.0
-           |        / CAST(sum(CAST(1 AS BIGINT) << CAST(53 - reg AS INTEGER)) AS DOUBLE),
-           |      6) + 0.0 AS est
+           |    ${OracleSql.hllEstimateSql("sum(CAST(1 AS BIGINT) << CAST(53 - reg AS INTEGER))")} AS est
            |  FROM regs GROUP BY 1),
            |un AS (SELECT a.g AS ga, b.g AS gb,
-           |    round((0.7213 / (1 + 1.079 / 256.0)) * 256.0 * 256.0
-           |        * 9007199254740992.0
-           |        / CAST(sum(CAST(1 AS BIGINT)
-           |            << CAST(53 - greatest(a.reg, b.reg) AS INTEGER)) AS DOUBLE),
-           |      6) + 0.0 AS union_est
+           |    ${OracleSql.hllEstimateSql(
+                  "sum(CAST(1 AS BIGINT) << CAST(53 - greatest(a.reg, b.reg) AS INTEGER))")} AS union_est
            |  FROM regs a JOIN regs b ON a.bucket = b.bucket AND a.g < b.g
            |  GROUP BY 1, 2),
            |ex AS (SELECT ta.g AS ga, tb.g AS gb, CAST(count(*) AS BIGINT) AS exact_overlap

@@ -16,11 +16,9 @@ object Similarity extends QueryGroup {
       val emb = Tables.embeddings(s, dir)
       SimilarityOps.cosineTopK(emb, emb.filter(col("vec_id") === 0), 10)
     },
-    Some("""WITH q AS (SELECT embedding::DOUBLE[] AS q_emb FROM embeddings WHERE vec_id = 0)
+    Some(s"""WITH q AS (SELECT embedding::DOUBLE[] AS q_emb FROM embeddings WHERE vec_id = 0)
            |SELECT e.vec_id,
-           |  round(list_dot_product(e.embedding::DOUBLE[], q.q_emb)
-           |    / (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))
-           |     * sqrt(list_dot_product(q.q_emb, q.q_emb))), 6) + 0.0 AS cosine
+           |  ${OracleSql.cosineSql("e.embedding::DOUBLE[]", "q.q_emb")} + 0.0 AS cosine
            |FROM embeddings e CROSS JOIN q
            |WHERE e.vec_id <> 0
            |ORDER BY cosine DESC, e.vec_id LIMIT 10""".stripMargin))
@@ -34,11 +32,9 @@ object Similarity extends QueryGroup {
       val emb = Tables.embeddings(s, dir)
       SimilarityOps.cosineTopKIvf(emb, emb.filter(col("vec_id") === 0), "label", 10)
     },
-    Some("""WITH q AS (SELECT embedding::DOUBLE[] AS q_emb, label AS q_label FROM embeddings WHERE vec_id = 0)
+    Some(s"""WITH q AS (SELECT embedding::DOUBLE[] AS q_emb, label AS q_label FROM embeddings WHERE vec_id = 0)
            |SELECT e.vec_id,
-           |  round(list_dot_product(e.embedding::DOUBLE[], q.q_emb)
-           |    / (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))
-           |     * sqrt(list_dot_product(q.q_emb, q.q_emb))), 6) + 0.0 AS cosine
+           |  ${OracleSql.cosineSql("e.embedding::DOUBLE[]", "q.q_emb")} + 0.0 AS cosine
            |FROM embeddings e JOIN q ON e.label = q.q_label
            |WHERE e.vec_id <> 0
            |ORDER BY cosine DESC, e.vec_id LIMIT 10""".stripMargin))
@@ -63,9 +59,7 @@ object Similarity extends QueryGroup {
            |qs AS (SELECT vec_id AS q_id, label, bucket, v AS q_emb FROM bk WHERE vec_id < 5),
            |scored AS (
            |  SELECT qs.q_id, e.vec_id AS n_id,
-           |    round(list_dot_product(e.v, qs.q_emb)
-           |      / (sqrt(list_dot_product(e.v, e.v))
-           |       * sqrt(list_dot_product(qs.q_emb, qs.q_emb))), 6) + 0.0 AS cosine
+           |    ${OracleSql.cosineSql("e.v", "qs.q_emb")} + 0.0 AS cosine
            |  FROM bk e JOIN qs ON e.label = qs.label AND e.bucket = qs.bucket
            |  WHERE e.vec_id <> qs.q_id),
            |ranked AS (
@@ -95,8 +89,7 @@ object Similarity extends QueryGroup {
            |  FROM embeddings),
            |q AS (SELECT vec_id AS q_id, v AS q_v, bucket FROM bk WHERE vec_id = 0)
            |SELECT bk.vec_id,
-           |  round(list_dot_product(bk.v, q.q_v)
-           |    / (sqrt(list_dot_product(bk.v, bk.v)) * sqrt(list_dot_product(q.q_v, q.q_v))), 6) + 0.0 AS cosine
+           |  ${OracleSql.cosineSql("bk.v", "q.q_v")} + 0.0 AS cosine
            |FROM bk JOIN q ON bk.bucket = q.bucket
            |WHERE bk.vec_id <> q.q_id
            |ORDER BY cosine DESC, bk.vec_id LIMIT 10""".stripMargin))
@@ -269,9 +262,7 @@ object Similarity extends QueryGroup {
          |qs AS (SELECT vec_id AS q_id, label, $bNames, v AS q_emb FROM bk WHERE vec_id < 5),
          |scored AS (
          |  SELECT DISTINCT qs.q_id, e.vec_id AS n_id,
-         |    round(list_dot_product(e.v, qs.q_emb)
-         |      / (sqrt(list_dot_product(e.v, e.v))
-         |       * sqrt(list_dot_product(qs.q_emb, qs.q_emb))), 6) + 0.0 AS cosine
+         |    ${OracleSql.cosineSql("e.v", "qs.q_emb")} + 0.0 AS cosine
          |  FROM bk e JOIN qs ON e.label = qs.label AND ($orCond)
          |  WHERE e.vec_id <> qs.q_id),
          |ranked AS (
@@ -375,8 +366,7 @@ object Similarity extends QueryGroup {
          |  FROM embeddings),
          |q AS (SELECT vec_id AS q_id, v AS q_v, bucket AS q_bucket FROM bk WHERE vec_id = 0)
          |SELECT bk.vec_id,
-         |  round(list_dot_product(bk.v, q.q_v)
-         |    / (sqrt(list_dot_product(bk.v, bk.v)) * sqrt(list_dot_product(q.q_v, q.q_v))), 6) + 0.0 AS cosine
+         |  ${OracleSql.cosineSql("bk.v", "q.q_v")} + 0.0 AS cosine
          |FROM bk CROSS JOIN q
          |WHERE bk.vec_id <> q.q_id AND xor(bk.bucket, q.q_bucket) IN ($probeXors)
          |ORDER BY cosine DESC, bk.vec_id LIMIT 10""".stripMargin
@@ -411,9 +401,7 @@ object Similarity extends QueryGroup {
            |q AS (SELECT vec_id AS q_id, v AS q_v, cluster AS q_cell
            |  FROM cells WHERE vec_id = 0)
            |SELECT c.vec_id,
-           |  round(list_dot_product(c.v, q.q_v)
-           |    / (sqrt(list_dot_product(c.v, c.v))
-           |     * sqrt(list_dot_product(q.q_v, q.q_v))), 6) + 0.0 AS cosine
+           |  ${OracleSql.cosineSql("c.v", "q.q_v")} + 0.0 AS cosine
            |FROM cells c JOIN q ON c.cluster = q.q_cell
            |WHERE c.vec_id <> q.q_id
            |ORDER BY cosine DESC, c.vec_id LIMIT 10""".stripMargin))
@@ -482,9 +470,7 @@ object Similarity extends QueryGroup {
            |qs AS (SELECT vec_id AS q_id, label, bucket, v AS q_emb FROM bk WHERE vec_id < 10),
            |scored AS (
            |  SELECT qs.q_id, e2.vec_id AS n_id,
-           |    round(list_dot_product(e2.v, qs.q_emb)
-           |      / (sqrt(list_dot_product(e2.v, e2.v))
-           |       * sqrt(list_dot_product(qs.q_emb, qs.q_emb))), 6) + 0.0 AS cosine
+           |    ${OracleSql.cosineSql("e2.v", "qs.q_emb")} + 0.0 AS cosine
            |  FROM bk e2 JOIN qs ON e2.label = qs.label AND e2.bucket = qs.bucket
            |  WHERE e2.vec_id <> qs.q_id),
            |neg AS (
@@ -527,18 +513,14 @@ object Similarity extends QueryGroup {
            |  SELECT q_id, n_id FROM (
            |    SELECT qs.q_id, e.vec_id AS n_id,
            |      row_number() OVER (PARTITION BY qs.q_id ORDER BY
-           |        round(list_dot_product(e.v, qs.q_emb)
-           |          / (sqrt(list_dot_product(e.v, e.v))
-           |           * sqrt(list_dot_product(qs.q_emb, qs.q_emb))), 6) DESC, e.vec_id) AS rk
+           |        ${OracleSql.cosineSql("e.v", "qs.q_emb")} DESC, e.vec_id) AS rk
            |    FROM bk e JOIN qs ON e.label = qs.label
            |    WHERE e.vec_id <> qs.q_id) WHERE rk <= 10),
            |ann AS (
            |  SELECT q_id, n_id FROM (
            |    SELECT qs.q_id, e.vec_id AS n_id,
            |      row_number() OVER (PARTITION BY qs.q_id ORDER BY
-           |        round(list_dot_product(e.v, qs.q_emb)
-           |          / (sqrt(list_dot_product(e.v, e.v))
-           |           * sqrt(list_dot_product(qs.q_emb, qs.q_emb))), 6) DESC, e.vec_id) AS rk
+           |        ${OracleSql.cosineSql("e.v", "qs.q_emb")} DESC, e.vec_id) AS rk
            |    FROM bk e JOIN qs ON e.label = qs.label AND e.bucket = qs.bucket
            |    WHERE e.vec_id <> qs.q_id) WHERE rk <= 10)
            |SELECT t.q_id, count(*) AS n_truth,
@@ -584,7 +566,7 @@ object Similarity extends QueryGroup {
           coalesce(lit(1d) / (lit(60d) + col("sem_rank")), lit(0d)), 6))
         .orderBy(desc("rrf"), col("doc_id")).limit(10)
     },
-    Some("""WITH d AS (SELECT doc_id, len(string_split(text, ' ')) AS dl FROM documents),
+    Some(s"""WITH d AS (SELECT doc_id, len(string_split(text, ' ')) AS dl FROM documents),
            |st AS (SELECT count(*)::DOUBLE AS n_docs, avg(dl::DOUBLE) AS avgdl FROM d),
            |tm AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
            |tf AS (SELECT doc_id, term, count(*)::DOUBLE AS tf FROM tm
@@ -600,9 +582,7 @@ object Similarity extends QueryGroup {
            |  FROM sc QUALIFY lex_rank <= 20),
            |q AS (SELECT embedding::DOUBLE[] AS q_emb FROM embeddings WHERE vec_id = 0),
            |cs AS (SELECT e.vec_id,
-           |    round(list_dot_product(e.embedding::DOUBLE[], q.q_emb)
-           |      / (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))
-           |       * sqrt(list_dot_product(q.q_emb, q.q_emb))), 6) + 0.0 AS cosine
+           |    ${OracleSql.cosineSql("e.embedding::DOUBLE[]", "q.q_emb")} + 0.0 AS cosine
            |  FROM embeddings e CROSS JOIN q WHERE e.vec_id <> 0),
            |sem AS (SELECT vec_id AS doc_id,
            |    CAST(row_number() OVER (ORDER BY cosine DESC, vec_id) AS BIGINT) AS sem_rank
@@ -629,59 +609,11 @@ object Similarity extends QueryGroup {
           k = 10, configs = q117Configs, dim = 64, recallTarget = 0.8)
         .orderBy(col("n_tables"), col("n_planes"))
     },
-    Some {
-      val cos = (a: String, b: String) =>
-        s"""round(list_dot_product($a, $b)
-           |        / (sqrt(list_dot_product($a, $a))
-           |         * sqrt(list_dot_product($b, $b))), 6)""".stripMargin
-      val cfgs = q117Configs.zipWithIndex.map { case ((t, p), i) =>
-        val tables = SimilarityOps.lshTables(t, p, 64)
-        val anyTable = tables.map(planes =>
-          s"(${OracleSql.signLshBucketSql("e.v", planes)})" +
-            s" = (${OracleSql.signLshBucketSql("qs.q_v", planes)})")
-          .mkString("(", "\n      OR ", ")")
-        s"""cfg${i}_cand AS (
-           |  SELECT DISTINCT qs.q_id, e.vec_id AS n_id
-           |  FROM e JOIN qs ON e.label = qs.label AND $anyTable
-           |  WHERE e.vec_id <> qs.q_id),
-           |cfg${i}_ann AS (
-           |  SELECT q_id, n_id FROM (
-           |    SELECT c.q_id, c.n_id,
-           |      row_number() OVER (PARTITION BY c.q_id ORDER BY
-           |        ${cos("e.v", "qs.q_v")} DESC, c.n_id) AS rk
-           |    FROM cfg${i}_cand c
-           |    JOIN e ON e.vec_id = c.n_id
-           |    JOIN qs ON qs.q_id = c.q_id) WHERE rk <= 10),
-           |cfg${i}_rec AS (
-           |  SELECT t.q_id, count(*) AS n_truth, count(a.n_id) AS n_hit
-           |  FROM tru t LEFT JOIN cfg${i}_ann a
-           |    ON a.q_id = t.q_id AND a.n_id = t.n_id
-           |  GROUP BY 1),
-           |cfg$i AS (
-           |  SELECT $t AS n_tables, $p AS n_planes,
-           |    round(avg(n_hit::DOUBLE / n_truth::DOUBLE), 6) + 0.0 AS mean_recall,
-           |    (SELECT count(*) FROM cfg${i}_cand) AS candidate_pairs
-           |  FROM cfg${i}_rec)""".stripMargin
-      }.mkString(",\n")
-      val unioned = q117Configs.indices
-        .map(i => s"SELECT * FROM cfg$i").mkString("\n  UNION ALL ")
-      s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-         |qs AS (SELECT vec_id AS q_id, label, v AS q_v FROM e WHERE vec_id < 10),
-         |tru AS (
-         |  SELECT q_id, n_id FROM (
-         |    SELECT qs.q_id, e.vec_id AS n_id,
-         |      row_number() OVER (PARTITION BY qs.q_id ORDER BY
-         |        ${cos("e.v", "qs.q_v")} DESC, e.vec_id) AS rk
-         |    FROM e JOIN qs ON e.label = qs.label
-         |    WHERE e.vec_id <> qs.q_id) WHERE rk <= 10),
-         |$cfgs,
-         |allc AS ($unioned),
-         |flg AS (SELECT *, mean_recall >= 0.8 AS meets_target FROM allc)
-         |SELECT n_tables, n_planes, mean_recall, candidate_pairs, meets_target,
-         |  meets_target AND row_number() OVER (ORDER BY meets_target DESC,
-         |    candidate_pairs, n_tables, n_planes) = 1 AS chosen
-         |FROM flg ORDER BY n_tables, n_planes""".stripMargin
-    })
+    Some(s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+           |qs AS (SELECT vec_id AS q_id, label, v AS q_v FROM e WHERE vec_id < 10),
+           |${OracleSql.annSweepCtes(q117Configs, "e", "label", k = 10, recallTarget = 0.8)}
+           |SELECT n_tables, n_planes, mean_recall, candidate_pairs, meets_target, chosen
+           |FROM win ORDER BY n_tables, n_planes""".stripMargin))
 
   /** X3+X7 (cluster-balanced curation — the SemDeDup/topic-balance shape):
     * train the coarse quantizer (q41's deterministic Lloyd, k = 8, 2
@@ -802,67 +734,11 @@ object Similarity extends QueryGroup {
         .withColumn("n_planes", lit(p))
         .orderBy(col("q_id"), col("rank"))
     },
-    Some {
-      val cos = (a: String, b: String) =>
-        s"""round(list_dot_product($a, $b)
-           |        / (sqrt(list_dot_product($a, $a))
-           |         * sqrt(list_dot_product($b, $b))), 6)""".stripMargin
-      val cfgs = q117Configs.zipWithIndex.map { case ((t, p), i) =>
-        val tables = SimilarityOps.lshTables(t, p, 64)
-        val anyTable = tables.map(planes =>
-          s"(${OracleSql.signLshBucketSql("e.v", planes)})" +
-            s" = (${OracleSql.signLshBucketSql("qs.q_v", planes)})")
-          .mkString("(", "\n      OR ", ")")
-        s"""cfg${i}_cand AS (
-           |  SELECT DISTINCT qs.q_id, e.vec_id AS n_id
-           |  FROM e JOIN qs ON e.label = qs.label AND $anyTable
-           |  WHERE e.vec_id <> qs.q_id),
-           |cfg${i}_ann AS (
-           |  SELECT q_id, n_id, cosine, CAST(rk AS BIGINT) AS rank FROM (
-           |    SELECT c.q_id, c.n_id, ${cos("e.v", "qs.q_v")} + 0.0 AS cosine,
-           |      row_number() OVER (PARTITION BY c.q_id ORDER BY
-           |        ${cos("e.v", "qs.q_v")} DESC, c.n_id) AS rk
-           |    FROM cfg${i}_cand c
-           |    JOIN e ON e.vec_id = c.n_id
-           |    JOIN qs ON qs.q_id = c.q_id) WHERE rk <= 10),
-           |cfg${i}_rec AS (
-           |  SELECT t.q_id, count(*) AS n_truth, count(a.n_id) AS n_hit
-           |  FROM tru t LEFT JOIN cfg${i}_ann a
-           |    ON a.q_id = t.q_id AND a.n_id = t.n_id
-           |  GROUP BY 1),
-           |cfg$i AS (
-           |  SELECT $t AS n_tables, $p AS n_planes,
-           |    round(avg(n_hit::DOUBLE / n_truth::DOUBLE), 6) + 0.0 AS mean_recall,
-           |    (SELECT count(*) FROM cfg${i}_cand) AS candidate_pairs
-           |  FROM cfg${i}_rec)""".stripMargin
-      }.mkString(",\n")
-      val unioned = q117Configs.indices
-        .map(i => s"SELECT * FROM cfg$i").mkString("\n  UNION ALL ")
-      val gated = q117Configs.zipWithIndex.map { case ((t, p), i) =>
-        s"""SELECT q_id, n_id, cosine, rank, $t AS n_tables, $p AS n_planes
-           |  FROM cfg${i}_ann
-           |  WHERE (SELECT bool_or(chosen) FROM win
-           |         WHERE n_tables = $t AND n_planes = $p)""".stripMargin
-      }.mkString("\n  UNION ALL ")
-      s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-         |qs AS (SELECT vec_id AS q_id, label, v AS q_v FROM e WHERE vec_id < 10),
-         |tru AS (
-         |  SELECT q_id, n_id FROM (
-         |    SELECT qs.q_id, e.vec_id AS n_id,
-         |      row_number() OVER (PARTITION BY qs.q_id ORDER BY
-         |        ${cos("e.v", "qs.q_v")} DESC, e.vec_id) AS rk
-         |    FROM e JOIN qs ON e.label = qs.label
-         |    WHERE e.vec_id <> qs.q_id) WHERE rk <= 10),
-         |$cfgs,
-         |allc AS ($unioned),
-         |flg AS (SELECT *, mean_recall >= 0.8 AS meets_target FROM allc),
-         |win AS (SELECT n_tables, n_planes,
-         |    meets_target AND row_number() OVER (ORDER BY meets_target DESC,
-         |      candidate_pairs, n_tables, n_planes) = 1 AS chosen
-         |  FROM flg)
-         |$gated
-         |ORDER BY q_id, rank""".stripMargin
-    })
+    Some(s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+           |qs AS (SELECT vec_id AS q_id, label, v AS q_v FROM e WHERE vec_id < 10),
+           |${OracleSql.annSweepCtes(q117Configs, "e", "label", k = 10, recallTarget = 0.8)}
+           |${OracleSql.annSweepChosenSelect(q117Configs)}
+           |ORDER BY q_id, rank""".stripMargin))
 
   /** X3 ANN index staleness monitor ([[SimilarityOps.annIndexDrift]]):
     * train the coarse quantizer on a hash-split 'ref' snapshot (q151's
@@ -1031,70 +907,14 @@ object Similarity extends QueryGroup {
         .withColumn("n_planes", lit(back.planesPerTable))
         .orderBy(col("q_id"), col("rank"))
     },
-    Some {
-      val cos = (a: String, b: String) =>
-        s"""round(list_dot_product($a, $b)
-           |        / (sqrt(list_dot_product($a, $a))
-           |         * sqrt(list_dot_product($b, $b))), 6)""".stripMargin
-      val cfgs = q117Configs.zipWithIndex.map { case ((t, p), i) =>
-        val tables = SimilarityOps.lshTables(t, p, 64)
-        val anyTable = tables.map(planes =>
-          s"(${OracleSql.signLshBucketSql("e.v", planes)})" +
-            s" = (${OracleSql.signLshBucketSql("qs.q_v", planes)})")
-          .mkString("(", "\n      OR ", ")")
-        s"""cfg${i}_cand AS (
-           |  SELECT DISTINCT qs.q_id, e.vec_id AS n_id
-           |  FROM cells e JOIN qs ON e.cell = qs.cell AND $anyTable
-           |  WHERE e.vec_id <> qs.q_id),
-           |cfg${i}_ann AS (
-           |  SELECT q_id, n_id, cosine, CAST(rk AS BIGINT) AS rank FROM (
-           |    SELECT c.q_id, c.n_id, ${cos("e.v", "qs.q_v")} + 0.0 AS cosine,
-           |      row_number() OVER (PARTITION BY c.q_id ORDER BY
-           |        ${cos("e.v", "qs.q_v")} DESC, c.n_id) AS rk
-           |    FROM cfg${i}_cand c
-           |    JOIN cells e ON e.vec_id = c.n_id
-           |    JOIN qs ON qs.q_id = c.q_id) WHERE rk <= 10),
-           |cfg${i}_rec AS (
-           |  SELECT t.q_id, count(*) AS n_truth, count(a.n_id) AS n_hit
-           |  FROM tru t LEFT JOIN cfg${i}_ann a
-           |    ON a.q_id = t.q_id AND a.n_id = t.n_id
-           |  GROUP BY 1),
-           |cfg$i AS (
-           |  SELECT $t AS n_tables, $p AS n_planes,
-           |    round(avg(n_hit::DOUBLE / n_truth::DOUBLE), 6) + 0.0 AS mean_recall,
-           |    (SELECT count(*) FROM cfg${i}_cand) AS candidate_pairs
-           |  FROM cfg${i}_rec)""".stripMargin
-      }.mkString(",\n")
-      val unioned = q117Configs.indices
-        .map(i => s"SELECT * FROM cfg$i").mkString("\n  UNION ALL ")
-      val gated = q117Configs.zipWithIndex.map { case ((t, p), i) =>
-        s"""SELECT q_id, n_id, cosine, rank, $t AS n_tables, $p AS n_planes
-           |  FROM cfg${i}_ann
-           |  WHERE (SELECT bool_or(chosen) FROM win
-           |         WHERE n_tables = $t AND n_planes = $p)""".stripMargin
-      }.mkString("\n  UNION ALL ")
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |${OracleSql.kmeansCtes("km", "e", k = 4, iters = 2, dim = 64)},
-         |cells AS (SELECT vec_id, v, cluster AS cell
-         |  FROM (${OracleSql.kmeansAssignSelect("kmc2", "e")})),
-         |qs AS (SELECT vec_id AS q_id, cell, v AS q_v FROM cells WHERE vec_id < 10),
-         |tru AS (
-         |  SELECT q_id, n_id FROM (
-         |    SELECT qs.q_id, e.vec_id AS n_id,
-         |      row_number() OVER (PARTITION BY qs.q_id ORDER BY
-         |        ${cos("e.v", "qs.q_v")} DESC, e.vec_id) AS rk
-         |    FROM cells e JOIN qs ON e.cell = qs.cell
-         |    WHERE e.vec_id <> qs.q_id) WHERE rk <= 10),
-         |$cfgs,
-         |allc AS ($unioned),
-         |flg AS (SELECT *, mean_recall >= 0.8 AS meets_target FROM allc),
-         |win AS (SELECT n_tables, n_planes,
-         |    meets_target AND row_number() OVER (ORDER BY meets_target DESC,
-         |      candidate_pairs, n_tables, n_planes) = 1 AS chosen
-         |  FROM flg)
-         |$gated
-         |ORDER BY q_id, rank""".stripMargin
-    })
+    Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+           |${OracleSql.kmeansCtes("km", "e", k = 4, iters = 2, dim = 64)},
+           |cells AS (SELECT vec_id, v, cluster AS cell
+           |  FROM (${OracleSql.kmeansAssignSelect("kmc2", "e")})),
+           |qs AS (SELECT vec_id AS q_id, cell, v AS q_v FROM cells WHERE vec_id < 10),
+           |${OracleSql.annSweepCtes(q117Configs, "cells e", "cell", k = 10, recallTarget = 0.8)}
+           |${OracleSql.annSweepChosenSelect(q117Configs)}
+           |ORDER BY q_id, rank""".stripMargin))
 
   /** X3 the PAIR-geometry sweep as a query ([[SimilarityOps
     * .pairLshAutoTune]]) — per (tables, planes) config: the measured

@@ -129,19 +129,13 @@ object Text extends QueryGroup {
           col("min_wfp"), col("max_wfp"))
         .orderBy(col("doc_id"))
     },
-    Some("""WITH ph AS (
+    Some(s"""WITH ph AS (
            |  SELECT doc_id,
            |    list_reduce(list_prepend(0::BIGINT,
            |      list_transform(string_split_regex(text, ''), c -> ascii(c)::BIGINT)),
            |      (h, c) -> (h * 31 + c) % 1000000007) AS doc_fp
            |  FROM documents),
-           |sets AS (
-           |  SELECT doc_id,
-           |    list_distinct(CASE WHEN len(string_split(text,' ')) >= 3
-           |      THEN list_transform(range(len(string_split(text,' ')) - 2),
-           |        i -> string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2] || ' ' || string_split(text,' ')[i+3])
-           |      ELSE [] END) AS shset
-           |  FROM documents),
+           |${OracleSql.shingleSetsCte(3)},
            |w AS (
            |  SELECT doc_id, count(*) AS n_windows,
            |    min(list_reduce(list_prepend(0::BIGINT,
@@ -246,11 +240,9 @@ object Text extends QueryGroup {
       .withColumn("pmi", Semantics.roundz(col("pmi"), 6))
       .orderBy(desc("pmi"), col("w1"), col("w2"))
       .limit(20),
-    Some("""WITH sp AS (SELECT doc_id, string_split(text, ' ') AS s FROM documents),
+    Some(s"""WITH sp AS (SELECT doc_id, string_split(text, ' ') AS s FROM documents),
            |bi0 AS (
-           |  SELECT unnest(CASE WHEN len(s) >= 2
-           |    THEN list_transform(range(len(s) - 1), i -> s[i+1] || ' ' || s[i+2])
-           |    ELSE [] END) AS bg
+           |  SELECT unnest(${OracleSql.ngramsSql(2, "s")}) AS bg
            |  FROM sp),
            |bi AS (SELECT string_split(bg, ' ')[1] AS w1, string_split(bg, ' ')[2] AS w2 FROM bi0),
            |uni AS (SELECT unnest(s) AS tok FROM sp),
@@ -347,12 +339,10 @@ object Text extends QueryGroup {
     (s, dir) => TextOps.repetitionStats(
         Tables.documents(s, dir), col("doc_id"), col("text"))
       .orderBy(col("doc_id")),
-    Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+    Some(s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
            |g AS (SELECT doc_id, toks,
-           |  CASE WHEN len(toks) >= 2 THEN list_transform(range(len(toks) - 1),
-           |    i -> toks[i+1] || ' ' || toks[i+2]) ELSE [] END AS bi,
-           |  CASE WHEN len(toks) >= 3 THEN list_transform(range(len(toks) - 2),
-           |    i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3]) ELSE [] END AS tri
+           |  ${OracleSql.ngramsSql(2, "toks")} AS bi,
+           |  ${OracleSql.ngramsSql(3, "toks")} AS tri
            |  FROM t)
            |SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
            |  CASE WHEN len(toks) > 0 THEN round((len(toks) - len(list_distinct(toks)))

@@ -1387,6 +1387,42 @@ class ExtensionOpsSpec extends SparkSpec {
     assert(keptGroups(DedupOps.capShingleDf(shingles(10), 50)) === 5L)
   }
 
+  test("X2: capShingleDfQuantile picks its form by LogicalRDD in the input plan; " +
+    "both forms keep the same rows") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    import org.apache.spark.sql.execution.LogicalRDD
+    // Groups s0..s9 with df 1..10: at q = 0.9 the cap drops s9 only.
+    def shingles(groups: Range) = groups.flatMap { i =>
+      (0 to i).map(d => (i * 100L + d, "b", s"s$i"))
+    }.toDF("doc_id", "bucket", "sh")
+    def rdds(df: DataFrame) =
+      df.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id }.toSet
+    // The per-(bucket, sh) df window; the threshold's histogram window is
+    // unpartitioned and present in both forms.
+    def groupWindows(df: DataFrame) =
+      df.queryExecution.analyzed.collect { case w: LWindow if w.partitionSpec.nonEmpty => w }.size
+    def rows(df: DataFrame) = df.as[(Long, String, String)].collect().sorted.toSeq
+    def cap(df: DataFrame) = DedupOps.capShingleDfQuantile(df, q = 0.9)
+
+    // Raw input: checkpoint + LEFT SEMI form — one new LogicalRDD, no group window.
+    val raw = shingles(0 until 10)
+    val rawOut = cap(raw)
+    assert(rdds(raw).isEmpty && rdds(rawOut).size === 1 && groupWindows(rawOut) === 0)
+    // Already-checkpointed input: window form — no new LogicalRDD.
+    val mat = shingles(0 until 10).localCheckpoint(true)
+    val matOut = cap(mat)
+    assert(rdds(matOut) === rdds(mat) && groupWindows(matOut) > 0)
+    assert(rows(rawOut) === rows(matOut))
+    assert(!rows(rawOut).exists(_._3 == "s9") && rows(rawOut).size === 45)
+    // Documented limit: ANY LogicalRDD selects the window form, so a union
+    // of a checkpointed branch and a raw branch takes it too.
+    val mixed = shingles(0 until 5).localCheckpoint(true).unionByName(shingles(5 until 10))
+    val mixedOut = cap(mixed)
+    assert(rdds(mixedOut) === rdds(mixed) && groupWindows(mixedOut) > 0)
+    assert(rows(mixedOut) === rows(rawOut))
+  }
+
   test("X1: repeated-span scrub removes a cross-doc passage at ANY alignment, merging overlaps") {
     val df = Seq(
       (1L, "u1 u2 A B C D E F u3"), // shared passage at offset 2
