@@ -1,8 +1,7 @@
 package graft.engine
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
+import scala.jdk.CollectionConverters._
 
 /** Session-state hygiene for long-lived drivers.
   *
@@ -14,49 +13,16 @@ import org.apache.spark.sql.execution.LogicalRDD
   * entries, broadcast blocks, and shuffle files. Round 6's bench measured
   * the cost: composite queries ran 6–50× slower mid-session than in a
   * fresh session, purely from this accumulation. The fix is twofold:
-  * operators release superseded iteration state eagerly (see
-  * [[graft.operators.GraphOps.connectedComponents]]'s sliding-window
-  * release), and session drivers call [[sweep]] between queries.
+  * operators release superseded iteration state eagerly (the
+  * [[Materialize]] policy's `scoped` and `rounds`), and session drivers
+  * call [[sweep]] between queries.
   */
 object Hygiene {
 
-  /** RDDs [[sweep]] must never unpersist: session-scoped shared
-    * materializations ([[Shared]]) that later queries will re-read.
-    * (A localCheckpointed RDD is UNRECOMPUTABLE once its blocks drop —
-    * lineage was truncated — so sweeping a still-referenced one would
-    * fail the next reader, not slow it.)
-    *
-    * Keyed by (applicationId, rddId), not the bare integer id: the set is
-    * JVM-global, and a SparkContext that stops without [[Shared.clear]]
-    * would otherwise leave stale small-integer pins that silently exempt
-    * UNRELATED fresh RDDs of the next context in the same JVM (fresh
-    * contexts reuse small ids) — re-opening the leak sweep exists to fix.
-    * Entries of dead applications can never match a live sweep's key; they
-    * cost a few bytes each until JVM exit. */
-  private val pinned =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Int)]()
-
-  def pin(rdds: Iterable[RDD[_]]): Unit =
-    rdds.foreach(r => pinned.add((r.sparkContext.applicationId, r.id)))
-  def unpin(rdds: Iterable[RDD[_]]): Unit =
-    rdds.foreach(r => pinned.remove((r.sparkContext.applicationId, r.id)))
-
-  /** The RDDs physically backing `df`'s plan — the `LogicalRDD` leaves a
-    * `localCheckpoint`/`checkpoint` rewrote the plan to. Empty for a plan
-    * that was never checkpointed. */
-  def backingRdds(df: DataFrame): Seq[RDD[_]] =
-    df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
-
-  /** Free the block-manager blocks behind a checkpointed DataFrame the
-    * caller has finished consuming. After this the DataFrame must not be
-    * used again (its lineage is truncated; the blocks were its only
-    * materialization). Safe on never-materialized lazy checkpoints and on
-    * non-checkpointed plans (no-op). */
-  def release(df: DataFrame): Unit =
-    backingRdds(df).foreach(_.unpersist(blocking = false))
-
   /** Between-query state reset for a long-lived session. Unpersists every
-    * persistent RDD not [[pin]]ned (localCheckpoint leftovers included),
+    * persistent RDD (localCheckpoint leftovers included) but the
+    * checkpoints behind this application's [[Shared]] entries (later
+    * queries re-read them, and a dropped one cannot be recomputed),
     * clears the CacheManager, and — when `gc` — runs a full GC plus a
     * short pause so the ContextCleaner drains its reference queue
     * (broadcast and shuffle cleanup ride on GC noticing dead references;
@@ -65,10 +31,10 @@ object Hygiene {
     * running query (it would unpersist mid-flight iteration state). */
   def sweep(spark: SparkSession, gc: Boolean = false): Unit = {
     spark.catalog.clearCache()
-    val app = spark.sparkContext.applicationId
-    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!pinned.contains((app, id))) rdd.unpersist(blocking = false)
-    }
+    val shared = Shared.backing(spark)
+    Materialize.free(spark.sparkContext.getPersistentRDDs.collect {
+      case (id, rdd) if !shared(id) => rdd
+    })
     if (gc) {
       System.gc()
       // The ContextCleaner's keepCleaning thread polls a ReferenceQueue the
@@ -85,7 +51,7 @@ object Hygiene {
   * are computed ONCE per (application, key) and served from an eager
   * localCheckpoint. Each query's RESULT is unchanged — only the shared
   * prefix's recomputation is elided — so oracle semantics are untouched.
-  * Entries are pinned against [[Hygiene.sweep]]; [[Shared.clear]] drops
+  * [[Hygiene.sweep]] keeps the entries; [[Shared.clear]] drops
   * and frees them (end of session, or tests). */
 object Shared {
 
@@ -93,7 +59,7 @@ object Shared {
     new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
 
   /** The shared materialization for `key`, building it from `build` on
-    * first use. The build is materialized eagerly (localCheckpoint) so
+    * first use. The build is cut eagerly ([[Materialize.checkpoint]]) so
     * every consumer — including the first — reads blocks, not a live plan
     * whose lineage would re-run per consumer. Keyed by applicationId so a
     * new SparkContext in the same JVM never reads a dead context's blocks.
@@ -109,13 +75,11 @@ object Shared {
     val hit = cache.get(k)
     if (hit != null) hit
     else {
-      val out = build.localCheckpoint(eager = true)
-      Hygiene.pin(Hygiene.backingRdds(out))
+      val out = Materialize.checkpoint(build)
       val prior = cache.putIfAbsent(k, out)
       if (prior == null) out
       else {
-        Hygiene.unpin(Hygiene.backingRdds(out))
-        Hygiene.release(out)
+        Materialize.release(out)
         prior
       }
     }
@@ -130,7 +94,7 @@ object Shared {
     * (training is the expensive step) and then consulted cheaply. Same
     * build-outside-the-lock / publish-with-putIfAbsent discipline as
     * [[cached]]; the loser's duplicate needs no release (plain JVM value,
-    * no pinned blocks). Keyed by applicationId like the DataFrame cache so
+    * no blocks). Keyed by applicationId like the DataFrame cache so
     * a value derived from one context's data is never served to another. */
   def cachedValue[T <: AnyRef](spark: SparkSession, key: String)(build: => T): T = {
     val k = (spark.sparkContext.applicationId, key)
@@ -143,6 +107,13 @@ object Shared {
     }
   }
 
+  /** The ids of the RDDs behind this application's entries. */
+  private[engine] def backing(spark: SparkSession): Set[Int] = {
+    val app = spark.sparkContext.applicationId
+    cache.asScala.collect { case ((`app`, _), df) => Materialize.backingRdds(df) }
+      .flatten.map(_.id).toSet
+  }
+
   /** Drop and free every shared entry of this application. */
   def clear(spark: SparkSession): Unit = {
     val app = spark.sparkContext.applicationId
@@ -150,8 +121,7 @@ object Shared {
     while (it.hasNext) {
       val e = it.next()
       if (e.getKey._1 == app) {
-        Hygiene.unpin(Hygiene.backingRdds(e.getValue))
-        Hygiene.release(e.getValue)
+        Materialize.release(e.getValue)
         it.remove()
       }
     }

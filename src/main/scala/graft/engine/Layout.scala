@@ -111,7 +111,7 @@ object Layout {
       // manifest only ever flows through distributed filter/union. The
       // recomputed rows are materialized once so collecting their
       // spellings doesn't re-scan the data.
-      val fresh = manifestAgg(spark.read.parquet(changed: _*), cols).localCheckpoint(true)
+      val fresh = Materialize.checkpoint(manifestAgg(spark.read.parquet(changed: _*), cols))
       val freshSpellings = fresh.select(col("file")).collect().map(_.getString(0)).toSeq
       val stale = (changed ++ removed ++ freshSpellings).distinct
       manifest.filter(!col("file").isin(stale: _*)).union(fresh)

@@ -64,12 +64,10 @@ object ClassifierOps {
     // A constant feature standardizes to all-zeros (sd floor), contributing
     // nothing rather than dividing by zero.
     val sd = Array.tabulate(d)(i => math.max(st.getDouble(2 * i + 1), 1e-12))
-    val z = data.select(
-      (0 until d).map(i => ((col(s"f$i") - mean(i)) / sd(i)).as(s"z$i"))
-        :+ col("y"): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val w = Array.fill(d + 1)(0.0) // bias last
-    try {
+    graft.engine.Materialize.scoped(data.select(
+        (0 until d).map(i => ((col(s"f$i") - mean(i)) / sd(i)).as(s"z$i"))
+          :+ col("y"): _*)) { z =>
       val n = z.count().toDouble
       for (_ <- 0 until iters) {
         val margin = (0 until d).map(i => col(s"z$i") * lit(w(i)))
@@ -81,7 +79,7 @@ object ClassifierOps {
         w(d) -= lr / n * g.getDouble(0)
         for (i <- 0 until d) w(i) -= lr / n * g.getDouble(i + 1)
       }
-    } finally z.unpersist(blocking = false)
+    }
     // Fold standardization into the weights: w·(x−m)/s + b = (w/s)·x + (b − w·m/s).
     val raw = Array.tabulate(d)(i => w(i) / sd(i))
     val bias = w(d) - (0 until d).map(i => w(i) * mean(i) / sd(i)).sum
@@ -142,12 +140,10 @@ object ClassifierOps {
     }
     val mean = Array.tabulate(d)(i => st.getDouble(2 * i))
     val sd = Array.tabulate(d)(i => st.getDouble(2 * i + 1))
-    val z = data.select(
-      (0 until d).map(i => ((col(s"f$i") - mean(i)) / sd(i)).as(s"z$i"))
-        :+ col("y"): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val w = Array.fill(d + 1)(0.0) // bias last
-    try {
+    graft.engine.Materialize.scoped(data.select(
+        (0 until d).map(i => ((col(s"f$i") - mean(i)) / sd(i)).as(s"z$i"))
+          :+ col("y"): _*)) { z =>
       val n = z.count().toDouble
       for (_ <- 0 until iters) {
         // Margin accumulates bias-first then features in order — the oracle
@@ -164,7 +160,7 @@ object ClassifierOps {
         w(d) -= lr * g.getDouble(0)
         for (i <- 0 until d) w(i) -= lr * g.getDouble(i + 1)
       }
-    } finally z.unpersist(blocking = false)
+    }
     (w.toSeq, mean.toSeq, sd.toSeq)
   }
 

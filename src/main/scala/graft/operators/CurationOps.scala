@@ -413,8 +413,7 @@ object CurationOps {
     // across two separate jobs, where exchange reuse cannot fire. Checkpoint
     // it once (lineage-truncated, ContextCleaner-reclaimed) so the corpus
     // scan + distinct shuffle runs a single time.
-    val train = trainShingles.select(col("sh")).distinct()
-      .localCheckpoint(true)
+    val train = graft.engine.Materialize.checkpoint(trainShingles.select(col("sh")).distinct())
     val m = if (mBits > 0) mBits else BloomUtil.sizeFor(train.count(), k)
     val bloomAgg = org.apache.spark.sql.functions.udaf(
       new BloomBuild(m, k), org.apache.spark.sql.Encoders.STRING)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.engine.Materialize
 
 /** Deduplication operators for the training-data extension surface (builder
   * prompt; SURVEY §2.10 X1/X2): exact, MinHash+LSH, SimHash, n-gram Jaccard.
@@ -131,8 +132,8 @@ object DedupOps {
     * `floor`; the default 1 is a no-op (df ≥ 1 always), production wide-
     * shingle configs pass ≥ 2 so shared evidence always survives.
     *
-    * Form choice: ANY `LogicalRDD` anywhere in the input plan selects the
-    * window form — a union of a checkpointed and a raw branch included. */
+    * Form choice: [[graft.engine.Materialize.isMaterialized]] (a checkpoint
+    * anywhere in the input plan, a mixed union included) selects the window form. */
   def capShingleDfQuantile(shingles: DataFrame, q: Double, floor: Int = 1): DataFrame = {
     // Two physically different forms, identical results — chosen by what
     // the INPUT costs to evaluate (r16; every number below is a same-box
@@ -161,9 +162,7 @@ object DedupOps {
     // the ordered frame pins count() to the whole group (unbounded both
     // ways), so __df is byte-identical to the unordered form, and
     // row_number = 1 picks one row per group for the histogram.
-    val inputMaterialized = shingles.queryExecution.analyzed.exists(
-      _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
-    if (inputMaterialized) {
+    if (Materialize.isMaterialized(shingles)) {
       val w = Window.partitionBy(col("bucket"), col("sh")).orderBy(col("doc_id"))
       val withDf = shingles
         .withColumn("__df", count(lit(1)).over(
@@ -176,7 +175,7 @@ object DedupOps {
         .filter(col("__df") <= col("__thr"))
         .drop("__df", "__thr", "__rn")
     } else {
-      val mat = shingles.localCheckpoint(true)
+      val mat = Materialize.checkpoint(shingles)
       val dfs = mat.groupBy(col("bucket"), col("sh"))
         .agg(count(lit(1)).as("__df"))
       val thr = dfQuantileThreshold(dfs.select(col("__df")), q, floor)
@@ -705,16 +704,16 @@ object DedupOps {
     // and both self-join sides — and the guard wrapper on side `a` makes
     // the sides canonically different, so ReusedExchange can never serve
     // them: the r16 executed plan showed the embeddings scan + per-vector
-    // bucket dots evaluated 3× per run. One eager localCheckpoint (the
+    // bucket dots evaluated 3× per run. One eager checkpoint (the
     // q162 idiom — materializes INSIDE the run, guide §2.4 "share one
     // evaluation") makes all three consumers read the same blocks; the
     // rows are linear in the corpus (|vecs| × tables), so the
     // materialization is the cheap side of the trade at every tier.
-    val raw = embs.select(col(id), cellCol.as("cell"), emb.cast("array<double>").as("v"))
-      .withColumn("nrm", SimilarityOps.l2norm(col("v")))
-      .withColumn("bucket",
-        if (planes.isEmpty) lit(0L) else SimilarityOps.signLshBucket(col("v"), planes))
-      .localCheckpoint(true)
+    val raw = Materialize.checkpoint(
+      embs.select(col(id), cellCol.as("cell"), emb.cast("array<double>").as("v"))
+        .withColumn("nrm", SimilarityOps.l2norm(col("v")))
+        .withColumn("bucket",
+          if (planes.isEmpty) lit(0L) else SimilarityOps.signLshBucket(col("v"), planes)))
     // Guard ONE side only (the [[embeddingNearDupsTables]] discipline):
     // both sides are the same row set, so Σ C(n, 2) over side `a`'s groups
     // already prices the join — wrapping both sides would duplicate the
@@ -747,13 +746,13 @@ object DedupOps {
   def embeddingNearDupsTables(embs: DataFrame, id: String, emb: Column, cellCol: Column,
       threshold: Double, tables: Seq[Seq[Seq[Double]]],
       bucketMassBudget: Long = DefaultPairMassBudget): DataFrame = {
-    // One eager localCheckpoint of the exploded (vector, table) rows — the
+    // One eager checkpoint of the exploded (vector, table) rows — the
     // same 3-consumer dedup as [[embeddingNearDups]] (guard mass aggregate
     // + both join sides previously each re-scanned embeddings and re-paid
     // the T × planes bucket dots; r16 executed-plan evidence in
     // plans/r16). Linear rows (|vecs| × T), so cheap to materialize.
-    val rows = SimilarityOps.lshCandidateRows(embs, id, emb, cellCol, tables, "a_")
-      .localCheckpoint(true)
+    val rows = Materialize.checkpoint(
+      SimilarityOps.lshCandidateRows(embs, id, emb, cellCol, tables, "a_"))
     // Guard ONE side: both sides are the same row set, and Σ C(n, 2) over
     // the exploded (cell, tb) groups IS the join's pre-dedup output size.
     val a = bucketPairMassGuard(
@@ -1338,13 +1337,16 @@ object DedupOps {
       mBits: Int = 0): BloomIndex = {
     import graft.functions.{BloomBuild, BloomUtil}
     require(mBits >= 0, s"mBits must be >= 0 (0 = auto-size), got $mBits")
-    val keys = corpus.select(fp.cast("string").as("__fp")).distinct()
-      .localCheckpoint(true)
-    val n = keys.count()
-    val m = if (mBits > 0) mBits else BloomUtil.sizeFor(n, k)
-    val agg = udaf(new BloomBuild(m, k), org.apache.spark.sql.Encoders.STRING)
-    val sketch = keys.agg(agg(col("__fp"))).head.getAs[Array[Byte]](0)
-    BloomIndex(m, k, n, sketch)
+    // The count and the sketch both read the keys; the sketch is driver
+    // state, so they are freed on return (a stream builds one per batch).
+    val keys = Materialize.checkpoint(corpus.select(fp.cast("string").as("__fp")).distinct())
+    try {
+      val n = keys.count()
+      val m = if (mBits > 0) mBits else BloomUtil.sizeFor(n, k)
+      val agg = udaf(new BloomBuild(m, k), org.apache.spark.sql.Encoders.STRING)
+      val sketch = keys.agg(agg(col("__fp"))).head.getAs[Array[Byte]](0)
+      BloomIndex(m, k, n, sketch)
+    } finally Materialize.release(keys)
   }
 
   /** Persist a [[BloomIndex]] as a single-row parquet artifact (metadata +
@@ -1420,8 +1422,8 @@ object DedupOps {
     * branches). A non-deterministic input — `sample`/`rand`/uuid-derived
     * fingerprints — can land a row in both branches or neither,
     * duplicating or dropping it relative to the plain anti-join.
-    * Materialize such inputs first (`localCheckpoint()`, as ScaleAudit
-    * does at its call site) before handing them here. */
+    * Materialize such inputs first ([[graft.engine.Materialize.checkpoint]],
+    * as ScaleAudit does at its call site) before handing them here. */
   def bloomPrunedNovel(fresh: DataFrame, fpName: String, corpusFps: DataFrame,
       idx: BloomIndex): DataFrame = {
     import graft.functions.GraftFunctions

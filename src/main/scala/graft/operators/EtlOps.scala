@@ -99,14 +99,15 @@ object EtlOps {
 
   /** S7 (transform.py:114-126): corrupt-line-tolerant JSONL scan. PERMISSIVE
     * mode mirrors the reference's skip-and-log loop: bad lines land in
-    * `_corrupt_record` instead of failing the job. Returns (good, corrupt). */
+    * `_corrupt_record` instead of failing the job. Returns (good, corrupt),
+    * one lazily checkpointed scan under both: free it with
+    * [[graft.engine.Materialize.release]] of either once both are read. */
   def readJsonlTolerant(spark: SparkSession, path: String, schema: StructType): (DataFrame, DataFrame) = {
-    val raw = spark.read
+    val raw = graft.engine.Materialize.checkpoint(spark.read
       .schema(schema)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(path)
-      .cache() // one scan serves both splits; unpersist is the caller's call
+      .json(path), eager = false)
     val good = raw.filter(col("_corrupt_record").isNull).drop("_corrupt_record")
     val bad = raw.filter(col("_corrupt_record").isNotNull).select(col("_corrupt_record"))
     (good, bad)

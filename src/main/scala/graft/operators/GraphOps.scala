@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.engine.Materialize
 
 /** Graph operators for the training-data extension surface: connected
   * components over a pair list — the CLUSTER-RESOLUTION step that turns
@@ -20,24 +20,24 @@ import org.apache.spark.storage.StorageLevel
   * Scale posture: each round relaxes edges AND pointer-jumps (a node takes
   * min over self, neighbors, and its label's label), so rounds grow as
   * O(log diameter) — the doubling discipline of the large-star/small-star
-  * family (Kiveris et al.) in min-label form. Edges are persisted
-  * (MEMORY_AND_DISK) so iteration i doesn't recompute the candidate-
-  * generation pipeline i times, and each round's labels are
-  * localCheckpointed to keep the lineage flat (Catalyst would otherwise
-  * re-plan an exponentially nesting tree); convergence is detected by the
-  * MONOTONE label mass (labels only ever decrease, so an unchanged
+  * family (Kiveris et al.) in min-label form. The iteration state follows
+  * [[graft.engine.Materialize]]'s `rounds` policy: edges are held
+  * persisted so iteration i doesn't recompute the candidate-generation
+  * pipeline i times, each round's labels are cut to keep the lineage flat
+  * (Catalyst would otherwise re-plan an exponentially nesting tree), and
+  * superseded rounds are freed as the loop goes. Convergence is detected
+  * by the MONOTONE label mass (labels only ever decrease, so an unchanged
   * sum(comp) is a fixpoint) — one cheap aggregate per round instead of a
   * change-detection join.
   */
 object GraphOps {
 
-  /** How [[connectedComponents]] truncates lineage each round. */
+  /** How [[connectedComponents]] truncates lineage each round: the mode of
+    * its [[graft.engine.Materialize.rounds]] arena. */
   sealed trait CheckpointStrategy
   object CheckpointStrategy {
-    /** Executor-local truncation (default): fastest, no external storage,
-      * but blocks live only on executor block managers — an executor loss
-      * can drop result partitions and fail the job. The right trade for
-      * single-process runs and short batch jobs that simply retry. */
+    /** Executor-local truncation (default): fastest, no external storage;
+      * an executor loss fails the job ([[graft.engine.Materialize]]). */
     case object Local extends CheckpointStrategy
     /** Reliable checkpoint into `dir` (HDFS / object store): each round's
       * labels are persisted off-executor, so a multi-hour CC run on a real
@@ -92,52 +92,6 @@ object GraphOps {
       edgeCounts: scala.collection.mutable.Buffer[Long] = null,
       contractFrom: Long = 1L << 16,
       checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
-    // Reliable mode: point the context at the durable dir once up front
-    // (setCheckpointDir mints a fresh run-scoped subdirectory).
-    checkpoint match {
-      case CheckpointStrategy.Reliable(dir) =>
-        edges.sparkSession.sparkContext.setCheckpointDir(dir)
-      case CheckpointStrategy.Local => ()
-    }
-    // Every checkpoint this invocation creates is tracked with the round
-    // that created it, and freed on a two-round delay (see the release
-    // note below) — without this, a long session accumulates one block set
-    // PER ROUND PER INVOCATION until the ContextCleaner happens to run,
-    // which round 6's bench measured as a 6–50× mid-session slowdown.
-    var round = 0
-    val spawned = scala.collection.mutable.Buffer.empty[(Int, DataFrame)]
-    def ckpt(df: DataFrame, eager: Boolean): DataFrame = {
-      val out = checkpoint match {
-        case CheckpointStrategy.Local => df.localCheckpoint(eager)
-        case _: CheckpointStrategy.Reliable =>
-          // A reliable checkpoint does NOT cache: its write job re-computes
-          // the plan after the eager count already ran it — on the multi-hour
-          // runs this mode exists for, that doubles every round's dominant
-          // cost. Persist around the checkpoint so the write reads the cache,
-          // then release. The lazy case (contracted edge set) checkpoints
-          // eagerly here for the same reason: its first consumer plus the
-          // checkpoint write would otherwise both recompute the contraction.
-          val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-          val out = cached.checkpoint(eager = true)
-          cached.unpersist(blocking = false)
-          out
-      }
-      spawned += ((round, out))
-      out
-    }
-    // Free rounds ≤ `upTo`. Sound at `round - 2`: when round r completes,
-    // everything up to round r−1 is materialized (round r's eager label
-    // checkpoint computed through the lazy round-(r−1) active set), and the
-    // only possibly-UNmaterialized plan — round r's lazy active set — only
-    // references round r−1 and r. Round r−2 and older can have no live
-    // reader, so their blocks (localCheckpoints are unrecomputable but also
-    // unreferenced) are safe to drop.
-    def free(upTo: Int): Unit = {
-      val (dead, live) = spawned.partition(_._1 <= upTo)
-      dead.foreach { case (_, df) => graft.engine.Hygiene.release(df) }
-      spawned.clear()
-      spawned ++= live
-    }
     // Node ids must already be integral: a silent cast("long") on e.g. a
     // hex-fingerprint string column would turn every id into NULL and
     // "converge" to one garbage (null, null) component.
@@ -151,137 +105,130 @@ object GraphOps {
           s"${dt.simpleString} — map string keys to longs (e.g. via a " +
           "dense-rank or hash id) before clustering")
     }
-    // Persist the caller's edge list BEFORE mirroring it: the pair list is
-    // typically the output of an expensive candidate-generation pipeline
-    // (minhash join etc.), and the union below references it twice —
-    // without the persist its cost would ride on exchange reuse firing.
-    val e = edges.select(col(src).cast("long").as("src"), col(dst).cast("long").as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Undirected: propagate along both directions. distinct() also dedups a
-    // multi-edge input so each round's join fan-out is the true degree.
-    val und = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Every round localCheckpoints its result: the lineage would otherwise
-    // nest one full join+agg plan PER ROUND, and Catalyst re-plans that
-    // exponentially-growing tree each iteration (stack overflow by ~round
-    // 12). Truncating per round keeps planning O(1) per iteration; the
-    // materialization it forces is work mass() needs anyway. Checkpointed
-    // RDDs are released by the ContextCleaner once unreferenced — nothing
-    // accumulates in the CacheManager across invocations. The truncation
-    // mechanism is the `checkpoint` parameter: Local (default) here, or
-    // CheckpointStrategy.Reliable(dir) on a real cluster so executor loss
-    // can't drop result partitions.
-    var labels = ckpt(und.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("comp")), eager = true)
-    // decimal(38,0) so the convergence metric can't overflow at any node
-    // count × id range; coalesce so an edgeless input converges (sum over
-    // zero rows is NULL) instead of NPE-ing the comparison.
-    def mass(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("comp").cast("decimal(38,0)")),
-        lit(0).cast("decimal(38,0)"))).head.getDecimal(0)
-    e.unpersist(blocking = false) // und is materialized (labels' eager checkpoint ran it)
-    // One count on the persisted mirror decides the loop shape; ~free
-    // relative to a single round either way.
-    val contracting = und.count() >= contractFrom
-    // cur = null until round 1 computes the first mass: the initial mass is
-    // not worth its own job just to compare against.
-    var cur: java.math.BigDecimal = null
-    var it = 0
-    var converged = false
-    var validated = false
-    var active = und
-    // maxIters label-changing rounds + 1 confirming round; the (never yet
-    // observed) validation-reseed path gets one fresh budget of its own.
-    var budget = maxIters + 1
-    var reseeds = 0
-    while ((!converged || !validated) && budget > 0) {
-      round = it + 1
-      if (converged && !validated) {
-        // Post-convergence validation found a crossing edge: reseed the
-        // active set from the ORIGINAL edges and resume relaxing, once.
-        require(reseeds == 0,
-          "connectedComponents: labels failed edge validation twice — " +
-            "this indicates a bug in the contraction step, not an input problem")
-        reseeds += 1
-        budget = maxIters + 1
-        active = und
-        converged = false
-        cur = null
+    // Superseded rounds are freed as the loop goes: a long session would
+    // otherwise hold one block set PER ROUND PER INVOCATION until the
+    // ContextCleaner ran (a 6–50× mid-session slowdown in round 6's bench).
+    val reliableDir = Some(checkpoint).collect { case CheckpointStrategy.Reliable(dir) => dir }
+    Materialize.rounds(reliableDir) { rounds =>
+      // Persist the caller's edge list BEFORE mirroring it: the pair list is
+      // typically the output of an expensive candidate-generation pipeline
+      // (minhash join etc.), and the union below references it twice —
+      // without the persist its cost would ride on exchange reuse firing.
+      val (und, init) = Materialize.scoped(
+          edges.select(col(src).cast("long").as("src"), col(dst).cast("long").as("dst"))) { e =>
+        // Undirected: propagate along both directions. distinct() also dedups
+        // a multi-edge input so each round's join fan-out is the true degree.
+        val und = rounds.hold(e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+          .distinct())
+        // Every round cuts its result's lineage: it would otherwise nest one
+        // full join+agg plan PER ROUND, and Catalyst re-plans that
+        // exponentially-growing tree each iteration (stack overflow by
+        // ~round 12). Truncating per round keeps planning O(1) per iteration;
+        // the materialization it forces is work mass() needs anyway.
+        (und, rounds.cut(und.select(col("src").as("node")).distinct()
+          .select(col("node"), col("node").as("comp"))))
       }
-      // One round relaxes every ACTIVE edge (neighbor min) AND pointer-jumps
-      // (comp∘comp): label indirection halves each round, so rounds grow as
-      // O(log diameter), not O(diameter). comp values are node ids, so the
-      // hop join always finds its target row.
-      val hop = labels.select(col("node"), col("comp").as("__via"))
-        .join(labels.select(col("node").as("__via"), col("comp")), "__via")
-        .select(col("node"), col("comp"))
-      val (prop, nextActive) =
-        if (!contracting) {
-          // Small graphs: per-round cost is scheduler latency, not edge
-          // volume — the plain full-set relaxation has the fewest stages.
-          (active.join(labels.withColumnRenamed("node", "src"), "src")
-            .select(col("dst").as("node"), col("comp")), active)
-        } else {
-          // The same (active × labels²) join feeds both the propagation and
-          // the contraction, so contraction adds no join beyond the one the
-          // relaxation already pays. Contraction uses the labels the round
-          // STARTED from (one round stale is still a valid contraction —
-          // validation is the correctness gate); contracted endpoints are
-          // representative ids, which are node ids, so the next round's
-          // label joins always find their rows. The contracted set is
-          // lazily checkpointed: it materializes inside its first consumer
-          // (the NEXT round's mass job), and each plan nests at most one
-          // un-truncated level, never the exponential tower.
-          val j = active
-            .join(labels.select(col("node").as("src"), col("comp").as("__sc")), "src")
-            .join(labels.select(col("node").as("dst"), col("comp").as("__dc")), "dst")
-          (j.select(col("dst").as("node"), col("__sc").as("comp")),
-            ckpt(j.select(col("__sc").as("src"), col("__dc").as("dst"))
-              .filter(col("src") =!= col("dst")).distinct(), eager = false))
+      var labels = init
+      // decimal(38,0) so the convergence metric can't overflow at any node
+      // count × id range; coalesce so an edgeless input converges (sum over
+      // zero rows is NULL) instead of NPE-ing the comparison.
+      def mass(df: DataFrame): java.math.BigDecimal =
+        df.agg(coalesce(sum(col("comp").cast("decimal(38,0)")),
+          lit(0).cast("decimal(38,0)"))).head.getDecimal(0)
+      // One count on the persisted mirror decides the loop shape; ~free
+      // relative to a single round either way.
+      val contracting = und.count() >= contractFrom
+      // cur = null until round 1 computes the first mass: the initial mass is
+      // not worth its own job just to compare against.
+      var cur: java.math.BigDecimal = null
+      var converged = false
+      var validated = false
+      var active = und
+      // maxIters label-changing rounds + 1 confirming round; the (never yet
+      // observed) validation-reseed path gets one fresh budget of its own.
+      var budget = maxIters + 1
+      var reseeds = 0
+      while ((!converged || !validated) && budget > 0) {
+        // Free rounds two behind: when round r−1 completed, everything up to
+        // round r−2 was materialized (its eager label cut computed through
+        // the lazy round-(r−2) active set), and the only possibly
+        // UNmaterialized plan — round r−1's lazy active set — only references
+        // rounds r−2 and r−1. Older rounds have no live reader.
+        rounds.advance(keep = 2)
+        if (converged && !validated) {
+          // Post-convergence validation found a crossing edge: reseed the
+          // active set from the ORIGINAL edges and resume relaxing, once.
+          require(reseeds == 0,
+            "connectedComponents: labels failed edge validation twice — " +
+              "this indicates a bug in the contraction step, not an input problem")
+          reseeds += 1
+          budget = maxIters + 1
+          active = und
+          converged = false
+          cur = null
         }
-      val next = ckpt(labels.select(col("node"), col("comp")).union(prop).union(hop)
-        .groupBy(col("node")).agg(min(col("comp")).as("comp")), eager = true)
-      if (edgeCounts != null) edgeCounts += nextActive.count()
-      val nm = mass(next)
-      labels = next
-      active = nextActive
-      converged = cur != null && nm.compareTo(cur) == 0
-      cur = nm
-      it += 1
-      budget -= 1
-      free(it - 2)
-      if (converged && !validated) {
-        // Contraction's correctness gate: labels must agree across every
-        // ORIGINAL edge; with the min-label invariants that is equivalent
-        // to full correctness (see scaladoc). The uncontracted loop relaxes
-        // the full edge set every round, so its no-change fixpoint IS that
-        // agreement — no separate join needed.
-        if (!contracting) validated = true
-        else {
-          val crossing = und
-            .join(labels.select(col("node").as("src"), col("comp").as("__sc")), "src")
-            .join(labels.select(col("node").as("dst"), col("comp").as("__dc")), "dst")
-            .filter(col("__sc") =!= col("__dc"))
-          validated = crossing.isEmpty
+        // One round relaxes every ACTIVE edge (neighbor min) AND pointer-jumps
+        // (comp∘comp): label indirection halves each round, so rounds grow as
+        // O(log diameter), not O(diameter). comp values are node ids, so the
+        // hop join always finds its target row.
+        val hop = labels.select(col("node"), col("comp").as("__via"))
+          .join(labels.select(col("node").as("__via"), col("comp")), "__via")
+          .select(col("node"), col("comp"))
+        val (prop, nextActive) =
+          if (!contracting) {
+            // Small graphs: per-round cost is scheduler latency, not edge
+            // volume — the plain full-set relaxation has the fewest stages.
+            (active.join(labels.withColumnRenamed("node", "src"), "src")
+              .select(col("dst").as("node"), col("comp")), active)
+          } else {
+            // The same (active × labels²) join feeds both the propagation and
+            // the contraction, so contraction adds no join beyond the one the
+            // relaxation already pays. Contraction uses the labels the round
+            // STARTED from (one round stale is still a valid contraction —
+            // validation is the correctness gate); contracted endpoints are
+            // representative ids, which are node ids, so the next round's
+            // label joins always find their rows. The contracted set is
+            // lazily checkpointed: it materializes inside its first consumer
+            // (the NEXT round's mass job), and each plan nests at most one
+            // un-truncated level, never the exponential tower.
+            val j = active
+              .join(labels.select(col("node").as("src"), col("comp").as("__sc")), "src")
+              .join(labels.select(col("node").as("dst"), col("comp").as("__dc")), "dst")
+            (j.select(col("dst").as("node"), col("__sc").as("comp")),
+              rounds.cut(j.select(col("__sc").as("src"), col("__dc").as("dst"))
+                .filter(col("src") =!= col("dst")).distinct(), eager = false))
+          }
+        val next = rounds.cut(labels.select(col("node"), col("comp")).union(prop).union(hop)
+          .groupBy(col("node")).agg(min(col("comp")).as("comp")))
+        if (edgeCounts != null) edgeCounts += nextActive.count()
+        val nm = mass(next)
+        labels = next
+        active = nextActive
+        converged = cur != null && nm.compareTo(cur) == 0
+        cur = nm
+        budget -= 1
+        if (converged && !validated) {
+          // Contraction's correctness gate: labels must agree across every
+          // ORIGINAL edge; with the min-label invariants that is equivalent
+          // to full correctness (see scaladoc). The uncontracted loop relaxes
+          // the full edge set every round, so its no-change fixpoint IS that
+          // agreement — no separate join needed.
+          if (!contracting) validated = true
+          else {
+            val crossing = und
+              .join(labels.select(col("node").as("src"), col("comp").as("__sc")), "src")
+              .join(labels.select(col("node").as("dst"), col("comp").as("__dc")), "dst")
+              .filter(col("__sc") =!= col("__dc"))
+            validated = crossing.isEmpty
+          }
         }
       }
+      require(converged && validated,
+        s"connectedComponents did not converge in $maxIters label-changing " +
+          "rounds (+1 confirmation); raise maxIters (rounds needed ~ log2 of " +
+          "component diameter)")
+      labels
     }
-    und.unpersist(blocking = false)
-    // Release every remaining iteration checkpoint EXCEPT the blocks
-    // backing the returned labels (the caller still reads those; they are
-    // freed by the caller via Hygiene.release / Hygiene.sweep when done).
-    val keep = graft.engine.Hygiene.backingRdds(labels).map(_.id).toSet
-    spawned.foreach { case (_, df) =>
-      graft.engine.Hygiene.backingRdds(df)
-        .filterNot(r => keep.contains(r.id))
-        .foreach(_.unpersist(blocking = false))
-    }
-    require(converged && validated,
-      s"connectedComponents did not converge in $maxIters label-changing " +
-        "rounds (+1 confirmation); raise maxIters (rounds needed ~ log2 of " +
-        "component diameter)")
-    labels
   }
 
   /** Dedup keeper selection from a component assignment: one row per
@@ -381,56 +328,55 @@ object GraphOps {
     * table, one edge join, one hash aggregate — the CC round shape. The
     * dangling mass is a 1-value aggregate collected per iteration
     * (driver state: one long, like a trainer's centroids), and each
-    * round's ranks are localCheckpoint'd so iteration k never replays
-    * rounds 1..k−1 (the lineage-growth trap of iterative DataFrames).
+    * round's ranks are cut ([[graft.engine.Materialize.rounds]]) so
+    * iteration k never replays rounds 1..k−1 (the lineage-growth trap of
+    * iterative DataFrames); superseded rounds are freed as it goes.
     * Nodes = every id incident to an edge, as in [[connectedComponents]]. */
   def pageRankFixedPoint(edges: DataFrame, src: String, dst: String,
       iters: Int, dampingPct: Int = 85): DataFrame = {
     require(iters >= 1 && iters <= 100, s"iters must be in [1,100], got $iters")
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct must be in [0,100], got $dampingPct")
-    // Persist the caller's edge list — the [[connectedComponents]]
-    // discipline, missing here until r16: nodes, out-degrees, AND every
-    // iteration's contribution join each re-evaluated the caller's edge
-    // pipeline (q159: documents scan + union + distinct per consumer —
-    // 2 + iters evaluations).
-    val e = edges.select(col(src).cast("long").as("src"),
-      col(dst).cast("long").as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct().persist()
-    val n = nodes.count()
-    require(n > 0, "pageRank needs at least one edge")
-    val outd = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("od")).persist()
-    val base = (100L - dampingPct) * 1000000L / 100L
-    var r = nodes.withColumn("r", lit(1000000L))
-    for (_ <- 1 to iters) {
-      val withOd = r.join(outd, Seq("id"), "left")
-      // Dangling mass rides the SAME plan as the rank update (r15): the
-      // pre-r15 form collected it per iteration (`.head`), which both
-      // blocked the driver once per round AND re-evaluated the rank⋈outd
-      // join in a separate job. As a broadcast 1-row aggregate the value
-      // is identical (sum of non-negative longs; x DIV n = the collected
-      // form's x / n for x ≥ 0) and each iteration is ONE job — the
-      // localCheckpoint materialization. Driver state unchanged: nothing
-      // corpus-sized is collected either way.
-      val dangDf = withOd.filter(col("od").isNull)
-        .agg(coalesce(sum(col("r")), lit(0L)).as("__dang"))
-      val share = withOd.filter(col("od").isNotNull)
-        .select(col("id").as("src"), expr("r DIV od").as("sh"))
-      val contrib = e.join(share, "src")
-        .groupBy(col("dst").as("id")).agg(sum(col("sh")).as("c"))
-      r = nodes.join(contrib, Seq("id"), "left")
-        .crossJoin(broadcast(dangDf))
-        .select(col("id"), expr(
-          s"$base + ($dampingPct * (coalesce(c, CAST(0 AS BIGINT)) + __dang DIV $n)) DIV 100")
-          .as("r"))
-        .localCheckpoint()
+    // Hold the caller's edge list — the [[connectedComponents]] discipline,
+    // missing here until r16: nodes, out-degrees, AND every iteration's
+    // contribution join each re-evaluated the caller's edge pipeline (q159:
+    // documents scan + union + distinct per consumer — 2 + iters
+    // evaluations).
+    Materialize.rounds() { rounds =>
+      val e = rounds.hold(edges.select(col(src).cast("long").as("src"),
+        col(dst).cast("long").as("dst")))
+      val nodes = rounds.hold(e.select(col("src").as("id"))
+        .union(e.select(col("dst").as("id"))).distinct())
+      val n = nodes.count()
+      require(n > 0, "pageRank needs at least one edge")
+      val outd = rounds.hold(e.groupBy(col("src").as("id")).agg(count(lit(1)).as("od")))
+      val base = (100L - dampingPct) * 1000000L / 100L
+      var r = nodes.withColumn("r", lit(1000000L))
+      for (_ <- 1 to iters) {
+        rounds.advance(keep = 1) // round k reads only round k−1's ranks
+        val withOd = r.join(outd, Seq("id"), "left")
+        // Dangling mass rides the SAME plan as the rank update (r15): the
+        // pre-r15 form collected it per iteration (`.head`), which both
+        // blocked the driver once per round AND re-evaluated the rank⋈outd
+        // join in a separate job. As a broadcast 1-row aggregate the value
+        // is identical (sum of non-negative longs; x DIV n = the collected
+        // form's x / n for x ≥ 0) and each iteration is ONE job — the
+        // cut's materialization. Driver state unchanged: nothing
+        // corpus-sized is collected either way.
+        val dangDf = withOd.filter(col("od").isNull)
+          .agg(coalesce(sum(col("r")), lit(0L)).as("__dang"))
+        val share = withOd.filter(col("od").isNotNull)
+          .select(col("id").as("src"), expr("r DIV od").as("sh"))
+        val contrib = e.join(share, "src")
+          .groupBy(col("dst").as("id")).agg(sum(col("sh")).as("c"))
+        r = rounds.cut(nodes.join(contrib, Seq("id"), "left")
+          .crossJoin(broadcast(dangDf))
+          .select(col("id"), expr(
+            s"$base + ($dampingPct * (coalesce(c, CAST(0 AS BIGINT)) + __dang DIV $n)) DIV 100")
+            .as("r")))
+      }
+      r.select(col("id"), col("r").as("rank_micro"))
     }
-    nodes.unpersist()
-    outd.unpersist()
-    e.unpersist()
-    r.select(col("id"), col("r").as("rank_micro"))
   }
 
   /** Leakage-SAFE train/valid/test split — the constructive counterpart of

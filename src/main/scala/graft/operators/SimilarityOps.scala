@@ -118,9 +118,8 @@ object SimilarityOps {
   private def kmeansFit(emb: DataFrame, idCol: String, embCol: String, k: Int,
       maxIters: Int, stopAtFixedPoint: Boolean): (DataFrame, Seq[Seq[Double]], Int) = {
     require(maxIters >= 1, s"need maxIters >= 1, got $maxIters")
-    val vecs = emb.select(col(idCol).as("vec_id"), col(embCol).cast("array<double>").as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.engine.Materialize.scoped(
+        emb.select(col(idCol).as("vec_id"), col(embCol).cast("array<double>").as("v"))) { vecs =>
       var centroids: Seq[Seq[Double]] = vecs.orderBy(col("vec_id")).limit(k)
         .select(col("v")).collect().toSeq.map(_.getSeq[Double](0))
       var it = 0
@@ -134,7 +133,7 @@ object SimilarityOps {
       val out = vecs.select(col("vec_id"),
         nearestCentroid(col("v"), centroids, "cluster").as("cluster"))
       (out, centroids, it)
-    } finally vecs.unpersist(blocking = false)
+    }
   }
 
   /** One Lloyd iteration, shared by the fixed-count ([[kmeans]], the
@@ -425,9 +424,8 @@ object SimilarityOps {
     val sub = dim / m
     // Persisted for the duration of training — each Lloyd iteration rescans
     // the vectors (see kmeans for the 100 TB rationale).
-    val vecs = embs.select(col(idCol).as("vec_id"), emb.cast("array<double>").as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.engine.Materialize.scoped(
+        embs.select(col(idCol).as("vec_id"), emb.cast("array<double>").as("v"))) { vecs =>
       val seeds = vecs.orderBy(col("vec_id")).limit(k)
         .select(col("v")).collect().toSeq.map(_.getSeq[Double](0))
       var books: Seq[Seq[Seq[Double]]] =
@@ -462,7 +460,7 @@ object SimilarityOps {
         }
       }
       books
-    } finally vecs.unpersist(blocking = false)
+    }
   }
 
   /** Squared PQ reconstruction error per vector against the given
@@ -1009,9 +1007,7 @@ object SimilarityOps {
       k: Int, tol: Option[Double]): (Seq[Double], Seq[Seq[Double]], Seq[Int]) = {
     require(dim >= 1 && maxIters >= 1 && k >= 1 && k <= dim,
       s"need dim, maxIters >= 1 and 1 <= k <= dim; got $dim, $maxIters, $k")
-    val vecs = emb.select(embCol.cast("array<double>").as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.engine.Materialize.scoped(emb.select(embCol.cast("array<double>").as("v"))) { vecs =>
       val n = vecs.count().toDouble
       require(n > 0, "cannot fit a principal component on an empty input")
       val muAggs = (0 until dim).map(i =>
@@ -1026,7 +1022,7 @@ object SimilarityOps {
         iters += m
       }
       (mu.toSeq, comps.map(_.toSeq).toSeq, iters.toSeq)
-    } finally vecs.unpersist(blocking = false)
+    }
   }
 
   /** One component's power-iteration loop, shared by the fixed-count

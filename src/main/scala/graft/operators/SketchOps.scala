@@ -282,7 +282,7 @@ object SketchOps {
     // consumer — defeating the operator's never-rescan-the-corpus point.
     // |groups|·2^p rows, so the checkpoint is always small; cleaned by
     // the session's Hygiene sweep like the other pinned materializations.
-    val regs = registers.localCheckpoint(true)
+    val regs = graft.engine.Materialize.checkpoint(registers)
     val a = regs.select(col("g").as("ga"), col("bucket"), col("reg").as("ra"))
     val b = regs.select(col("g").as("gb"), col("bucket"), col("reg").as("rb"))
     val unionEst = a.join(b, Seq("bucket"))

@@ -427,45 +427,47 @@ object TextOps {
     * practice, and the deterministic-vocab contract is unchanged). */
   def bpeTrain(docs: DataFrame, text: Column, numMerges: Int): Seq[(String, String, Long)] = {
     require(numMerges >= 1, "need numMerges >= 1")
-    // Each generation is localCheckpointed (eager): one materialization job
-    // per merge, flat lineage — without it iteration i would re-run i
-    // chained fold passes from the source (and Catalyst would re-plan a
-    // growing tree), the same discipline as GraphOps' CC rounds.
-    var words = docs.select(explode(split(text, " ")).as("w"))
-      .filter(length(col("w")) > 0)
-      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-      .select(col("freq"),
-        expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))").as("syms"))
-      .localCheckpoint(true)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-    var exhausted = false
-    while (merges.size < numMerges && !exhausted) {
-      val top = words.filter(size(col("syms")) >= 2)
-        .select(col("freq"), explode(expr(
-          "transform(sequence(0, size(syms) - 2), " +
-            "i -> struct(element_at(syms, i + 1) AS a, element_at(syms, i + 2) AS b))")).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("freq")).as("n"))
-        .orderBy(desc("n"), col("a"), col("b"))
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true // every word is a single symbol
-      else {
-        val (a, b, n) = (top.head.getString(0), top.head.getString(1), top.head.getLong(2))
-        merges += ((a, b, n))
-        // Greedy left-to-right non-overlapping replacement of (a, b) with
-        // the merged token, as an array fold: a freshly merged token can't
-        // re-match as the LEFT of the same pair (it is strictly longer
-        // than `a`), which is exactly BPE's non-overlap rule.
-        val merged = aggregate(col("syms"),
-          typedlit(Seq.empty[String]),
-          (acc, s) => when(
-            size(acc) > 0 && element_at(acc, -1) === lit(a) && s === lit(b),
-            concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
-            .otherwise(concat(acc, array(s))))
-        words = words.select(col("freq"), merged.as("syms")).localCheckpoint(true)
+    // Each generation is cut (eager): one materialization job per merge,
+    // flat lineage — without it iteration i would re-run i chained fold
+    // passes from the source (and Catalyst would re-plan a growing tree),
+    // the same discipline as GraphOps' CC rounds.
+    graft.engine.Materialize.rounds() { rounds =>
+      var words = rounds.cut(docs.select(explode(split(text, " ")).as("w"))
+        .filter(length(col("w")) > 0)
+        .groupBy(col("w")).agg(count(lit(1)).as("freq"))
+        .select(col("freq"),
+          expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))").as("syms")))
+      val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
+      var exhausted = false
+      while (merges.size < numMerges && !exhausted) {
+        rounds.advance(keep = 1) // only the current generation is read
+        val top = words.filter(size(col("syms")) >= 2)
+          .select(col("freq"), explode(expr(
+            "transform(sequence(0, size(syms) - 2), " +
+              "i -> struct(element_at(syms, i + 1) AS a, element_at(syms, i + 2) AS b))")).as("p"))
+          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+          .agg(sum(col("freq")).as("n"))
+          .orderBy(desc("n"), col("a"), col("b"))
+          .limit(1).collect()
+        if (top.isEmpty) exhausted = true // every word is a single symbol
+        else {
+          val (a, b, n) = (top.head.getString(0), top.head.getString(1), top.head.getLong(2))
+          merges += ((a, b, n))
+          // Greedy left-to-right non-overlapping replacement of (a, b) with
+          // the merged token, as an array fold: a freshly merged token can't
+          // re-match as the LEFT of the same pair (it is strictly longer
+          // than `a`), which is exactly BPE's non-overlap rule.
+          val merged = aggregate(col("syms"),
+            typedlit(Seq.empty[String]),
+            (acc, s) => when(
+              size(acc) > 0 && element_at(acc, -1) === lit(a) && s === lit(b),
+              concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
+              .otherwise(concat(acc, array(s))))
+          words = rounds.cut(words.select(col("freq"), merged.as("syms")))
+        }
       }
+      merges.toSeq
     }
-    merges.toSeq
   }
 
   /** Persist a trained BPE merge table ([[bpeTrain]]'s output) as a

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.engine.Tables
+import graft.engine.{Materialize, Tables}
 import graft.operators.{DedupOps, TextOps}
 import org.apache.spark.sql.functions._
 
@@ -900,9 +900,8 @@ object Dedup extends QueryGroup {
       // shingle+tf pipeline evaluated twice per run. The tf table is the
       // AGGREGATED frequency view (≤ one row per (doc, 5-gram)), far
       // smaller than the positional stream it folds.
-      val tfs = DedupOps.featureTfRows(TextOps.shinglePosRows(
-        Tables.documents(s, dir), col("doc_id"), lit("all"), col("text"), n = 5))
-        .localCheckpoint(true)
+      val tfs = Materialize.checkpoint(DedupOps.featureTfRows(TextOps.shinglePosRows(
+        Tables.documents(s, dir), col("doc_id"), lit("all"), col("text"), n = 5)))
       val cands = DedupOps.nearDupCandidates(
         DedupOps.weightedExpandRows(tfs, tfCap = 4),
         DedupOps.CandidateGen.QuantileCapped(q = 0.95, floor = 2,
@@ -962,8 +961,8 @@ object Dedup extends QueryGroup {
       // Used by truth (both self-join sides), the LSH generator, and two
       // verifies across separate jobs — checkpoint once (ScaleAudit's
       // idiom; exchange reuse cannot fire across actions).
-      val sh5 = TextOps.shingleRows(docs, col("doc_id"), lit("all"),
-        col("text"), n = 5).localCheckpoint(true)
+      val sh5 = Materialize.checkpoint(TextOps.shingleRows(docs, col("doc_id"), lit("all"),
+        col("text"), n = 5))
       val truth = DedupOps.jaccardPairsFromRows(sh5)
         .filter(col("jaccard") >= 0.5).select(col("a_id"), col("b_id"))
       // No verify stage: a generated pair that is in truth passes the
@@ -1047,8 +1046,8 @@ object Dedup extends QueryGroup {
     "q164_snm_multipass",
     (s, dir) => {
       val docs = Tables.documents(s, dir)
-      val sh5 = TextOps.shingleRows(docs, col("doc_id"), lit("all"),
-        col("text"), n = 5).localCheckpoint(true)
+      val sh5 = Materialize.checkpoint(TextOps.shingleRows(docs, col("doc_id"), lit("all"),
+        col("text"), n = 5))
       val truth = DedupOps.jaccardPairsFromRows(sh5)
         .filter(col("jaccard") >= 0.5).select(col("a_id"), col("b_id"))
       def norm(cands: org.apache.spark.sql.DataFrame, flag: String) =

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.engine.{Semantics, Tables}
+import graft.engine.{Materialize, Semantics, Tables}
 import graft.operators.TextOps
 import org.apache.spark.sql.functions._
 
@@ -167,8 +167,7 @@ object Text extends QueryGroup {
       // count(1) and drops the count from that copy of the aggregate),
       // recreating the double tokenize. tf is the smallest shared point —
       // ≤ one narrow row per (doc, distinct term).
-      val tf = terms.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        .localCheckpoint(true)
+      val tf = Materialize.checkpoint(terms.groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
       val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
       val n = docs.agg(countDistinct(col("doc_id")).as("n_docs"))
       tf.join(dfreq, "term").crossJoin(n)

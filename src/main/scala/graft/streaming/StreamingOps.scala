@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import graft.engine.Materialize
 
 /** The reference's streaming ingest path (/root/reference/data_subscriber.py)
   * re-expressed as Structured Streaming (SURVEY §2.9 T1-T6).
@@ -253,13 +254,12 @@ object StreamingOps {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
         val spark = batch.sparkSession
-        val bands = graft.operators.DedupOps.minhashBandRows(
+        Materialize.scoped(graft.operators.DedupOps.minhashBandRows(
           graft.operators.TextOps.shingleRows(
             batch.toDF(), col("doc_id"), lit("all"), col("text")),
-          numHashes, maxDf)
-          .persist() // probed AND registered — compute the signatures once
-        try flagAndRegisterBands(batch.toDF(), id, bands, indexPath, outPath, compactEvery)
-        finally bands.unpersist(false)
+          numHashes, maxDf)) { bands => // probed AND registered — compute once
+          flagAndRegisterBands(batch.toDF(), id, bands, indexPath, outPath, compactEvery)
+        }
       }
 
   /** The probe→flag→register tail both lexical streaming dedup operators
@@ -353,9 +353,9 @@ object StreamingOps {
         import graft.operators.{DedupOps, TextOps}
         StandingStore.maybeCompact(spark, statsPath, id, compactEvery,
           _.groupBy(col("bucket"), col("sh")).agg(sum(col("__df")).as("__df")))
-        val sh = TextOps.shingleRows(batch.toDF(), col("doc_id"), lit("all"), col("text"))
-          .persist() // df-counted, capped, AND banded — compute once
-        try {
+        Materialize.scoped(
+            TextOps.shingleRows(batch.toDF(), col("doc_id"), lit("all"), col("text"))) { sh =>
+          // df-counted, capped, AND banded — computed once
           val batchDf = sh.groupBy(col("bucket"), col("sh")).agg(count(lit(1)).as("__df"))
           val standing = StandingStore.readBefore(spark, statsPath, id) match {
             case Some(p) => p.unionByName(batchDf)
@@ -367,17 +367,15 @@ object StreamingOps {
             .crossJoin(broadcast(thr))
             .filter(col("__df") <= col("__thr"))
             .select(col("doc_id"), col("bucket"), col("sh"))
-          val bands = DedupOps.minhashBandedRows(capped, numHashes, rowsPerBand)
-            .withColumnRenamed("bk", "h")
-            .persist() // probed AND registered — compute the signatures once
-          try {
+          Materialize.scoped(DedupOps.minhashBandedRows(capped, numHashes, rowsPerBand)
+              .withColumnRenamed("bk", "h")) { bands => // probed AND registered — compute once
             flagAndRegisterBands(batch.toDF(), id, bands, indexPath, outPath, compactEvery,
               decorate = out => out.crossJoin(broadcast(thr))
                 .withColumn("df_threshold", col("__thr"))
                 .drop("__thr"))
             StandingStore.writeRaw(batchDf, statsPath, id)
-          } finally bands.unpersist(false)
-        } finally sh.unpersist(false)
+          }
+        }
       }
 
   /** X2/X3 (streaming): the EMBEDDING analogue of [[streamingLshSuspects]]
@@ -401,12 +399,10 @@ object StreamingOps {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
         val spark = batch.sparkSession
         StandingStore.maybeCompact(spark, indexPath, id, compactEvery, identity)
-        val buckets = batch.toDF()
-          .select(col("vec_id"), explode(graft.operators.SimilarityOps.tableBuckets(
-            col("embedding").cast("array<double>"), tables)).as("tb"))
-          .select(col("vec_id"), col("tb.t").as("t"), col("tb.b").as("b"))
-          .persist() // probed AND registered — compute the buckets once
-        try {
+        Materialize.scoped(batch.toDF() // probed AND registered — compute the buckets once
+            .select(col("vec_id"), explode(graft.operators.SimilarityOps.tableBuckets(
+              col("embedding").cast("array<double>"), tables)).as("tb"))
+            .select(col("vec_id"), col("tb.t").as("t"), col("tb.b").as("b"))) { buckets =>
           val index = StandingStore.readBefore(spark, indexPath, id)
           val cross = index match {
             case Some(idx) => buckets.join(idx, Seq("t", "b"), "left_semi")
@@ -424,7 +420,7 @@ object StreamingOps {
             .withColumn("sem_suspect", coalesce(col("sem_suspect"), lit(false)))
             .write.mode("append").parquet(outPath)
           StandingStore.writeRaw(buckets, indexPath, id)
-        } finally buckets.unpersist(false)
+        }
       }
 
   /** Streaming distinct-count monitor — the deterministic HLL
@@ -539,92 +535,87 @@ object StreamingOps {
           _.groupBy(col("source"), col("n_chars"), col("kept"), col("novel"),
               col("h_ok"))
             .agg(sum(col("n")).as("n")))
-        val b = batch.toDF().persist()
-        // (1) revisit dedup: within-batch min doc_id per curl, then the
-        // standing index (strictly earlier batches) — first batch wins.
-        val intraKept = b.withColumn("__rn", row_number().over(
-            Window.partitionBy(col("curl")).orderBy(col("doc_id"))))
-          .filter(col("__rn") === 1).drop("__rn")
-        val kept = (StandingStore.readBefore(spark, urlIndexPath, id) match {
-          case Some(seen) => intraKept.join(
-            seen.select(col("curl")).distinct(), Seq("curl"), "left_anti")
-          case None => intraKept
-        }).persist()
-        // (2) novelty vs the standing corpus; (3) entropy on the novel
-        // sliver only (exactly q150's evaluation set).
-        val corpusNovel = DedupOps.bloomPrunedNovel(kept, "fp", corpusFps, corpusBloom)
-        // (2b, opt-in) novelty vs the STREAM so far: content-dedup within
-        // the batch (first doc_id per fp — the curl-stage rule), then the
-        // Bloom-accelerated probe of fps admitted by earlier batches.
-        val novel = (streamFpIndexPath match {
-          case None => corpusNovel
-          case Some(fpPath) =>
-            StandingStore.maybeCompact(spark, fpPath, id, compactEvery,
-              _.select(col("fp")).distinct())
-            val intra = corpusNovel.withColumn("__fn", row_number().over(
-                Window.partitionBy(col("fp")).orderBy(col("doc_id"))))
-              .filter(col("__fn") === 1).drop("__fn")
-            val out = StandingStore.readBefore(spark, fpPath, id) match {
-              case Some(seen) =>
-                val seenFps = seen.select(col("fp")).distinct()
-                DedupOps.bloomPrunedNovel(intra, "fp", seenFps,
-                  StreamFpBloom.getOrRebuild(spark, fpPath, seenFps))
-              case None => intra
+        Materialize.scoped(batch.toDF()) { b =>
+          // (1) revisit dedup: within-batch min doc_id per curl, then the
+          // standing index (strictly earlier batches) — first batch wins.
+          val intraKept = b.withColumn("__rn", row_number().over(
+              Window.partitionBy(col("curl")).orderBy(col("doc_id"))))
+            .filter(col("__rn") === 1).drop("__rn")
+          Materialize.scoped(StandingStore.readBefore(spark, urlIndexPath, id) match {
+            case Some(seen) => intraKept.join(
+              seen.select(col("curl")).distinct(), Seq("curl"), "left_anti")
+            case None => intraKept
+          }) { kept =>
+            // (2) novelty vs the standing corpus; (3) entropy on the novel
+            // sliver only (exactly q150's evaluation set).
+            val corpusNovel = DedupOps.bloomPrunedNovel(kept, "fp", corpusFps, corpusBloom)
+            // (2b, opt-in) novelty vs the STREAM so far: content-dedup within
+            // the batch (first doc_id per fp — the curl-stage rule), then the
+            // Bloom-accelerated probe of fps admitted by earlier batches.
+            Materialize.scoped(streamFpIndexPath match {
+              case None => corpusNovel
+              case Some(fpPath) =>
+                StandingStore.maybeCompact(spark, fpPath, id, compactEvery,
+                  _.select(col("fp")).distinct())
+                val intra = corpusNovel.withColumn("__fn", row_number().over(
+                    Window.partitionBy(col("fp")).orderBy(col("doc_id"))))
+                  .filter(col("__fn") === 1).drop("__fn")
+                StandingStore.readBefore(spark, fpPath, id) match {
+                  case Some(seen) =>
+                    val seenFps = seen.select(col("fp")).distinct()
+                    DedupOps.bloomPrunedNovel(intra, "fp", seenFps,
+                      StreamFpBloom.getOrRebuild(spark, fpPath, seenFps))
+                  case None => intra
+                }
+            }) { novel =>
+              streamFpIndexPath.foreach { fpPath =>
+                val outFps = novel.select(col("fp")).distinct()
+                StandingStore.writeRaw(outFps, fpPath, id)
+                StreamFpBloom.mergeIn(spark, fpPath, outFps)
+              }
+              val hOk = TextOps.docCharEntropy(novel, col("doc_id"), col("text"))
+                .select(col("doc_id"), (col("h") >= entropyMin).as("__h_ok"))
+              // register this batch's partials: flag histogram + curl keys
+              val partial = b.select(col("doc_id"), col("source"), col("n_chars"))
+                .join(kept.select(col("doc_id"))
+                  .withColumn("__kept", lit(true)), Seq("doc_id"), "left")
+                .join(novel.select(col("doc_id"))
+                  .withColumn("__novel", lit(true)), Seq("doc_id"), "left")
+                .join(hOk, Seq("doc_id"), "left")
+                .groupBy(col("source"), col("n_chars"),
+                  coalesce(col("__kept"), lit(false)).as("kept"),
+                  coalesce(col("__novel"), lit(false)).as("novel"),
+                  coalesce(col("__h_ok"), lit(false)).as("h_ok"))
+                .agg(count(lit(1)).as("n"))
+              StandingStore.writeRaw(partial, statsPath, id)
+              StandingStore.writeRaw(kept.select(col("curl")).distinct(),
+                urlIndexPath, id)
+              // (4)+(5): funnel REDERIVED over the merged standing histogram —
+              // the snapshot that equals batch q150 on the prefix through `id`.
+              Materialize.scoped(StandingStore.readThrough(spark, statsPath, id).get
+                  .groupBy(col("source"), col("n_chars"), col("kept"), col("novel"),
+                    col("h_ok"))
+                  .agg(sum(col("n")).as("n"))) { merged =>
+                val fence = CurationOps.robustStatsWeighted(
+                  merged, "source", col("n_chars"), col("n"))
+                val funnel = merged.groupBy(col("source"))
+                  .agg(sum(col("n")).as("n_fetched"),
+                    sum(when(col("kept"), col("n")).otherwise(0L)).as("n_url_unique"),
+                    sum(when(col("kept") && col("novel"), col("n")).otherwise(0L))
+                      .as("n_novel"))
+                val admitted = merged.join(broadcast(fence), Seq("source"))
+                  .filter(col("kept") && col("novel") && col("h_ok") &&
+                    abs(col("n_chars") - col("med")) <= lit(z) * col("mad"))
+                  .groupBy(col("source")).agg(sum(col("n")).as("n_admitted"))
+                StandingStore.writeRaw(
+                  funnel.join(admitted, Seq("source"), "left")
+                    .select(col("source"), col("n_fetched"), col("n_url_unique"),
+                      col("n_novel"),
+                      coalesce(col("n_admitted"), lit(0L)).as("n_admitted")),
+                  outPath, id)
+              }
             }
-            out
-        }).persist()
-        try {
-          streamFpIndexPath.foreach { fpPath =>
-            val outFps = novel.select(col("fp")).distinct()
-            StandingStore.writeRaw(outFps, fpPath, id)
-            StreamFpBloom.mergeIn(spark, fpPath, outFps)
           }
-          val hOk = TextOps.docCharEntropy(novel, col("doc_id"), col("text"))
-            .select(col("doc_id"), (col("h") >= entropyMin).as("__h_ok"))
-          // register this batch's partials: flag histogram + curl keys
-          val partial = b.select(col("doc_id"), col("source"), col("n_chars"))
-            .join(kept.select(col("doc_id"))
-              .withColumn("__kept", lit(true)), Seq("doc_id"), "left")
-            .join(novel.select(col("doc_id"))
-              .withColumn("__novel", lit(true)), Seq("doc_id"), "left")
-            .join(hOk, Seq("doc_id"), "left")
-            .groupBy(col("source"), col("n_chars"),
-              coalesce(col("__kept"), lit(false)).as("kept"),
-              coalesce(col("__novel"), lit(false)).as("novel"),
-              coalesce(col("__h_ok"), lit(false)).as("h_ok"))
-            .agg(count(lit(1)).as("n"))
-          StandingStore.writeRaw(partial, statsPath, id)
-          StandingStore.writeRaw(kept.select(col("curl")).distinct(),
-            urlIndexPath, id)
-          // (4)+(5): funnel REDERIVED over the merged standing histogram —
-          // the snapshot that equals batch q150 on the prefix through `id`.
-          val merged = StandingStore.readThrough(spark, statsPath, id).get
-            .groupBy(col("source"), col("n_chars"), col("kept"), col("novel"),
-              col("h_ok"))
-            .agg(sum(col("n")).as("n")).persist()
-          try {
-            val fence = CurationOps.robustStatsWeighted(
-              merged, "source", col("n_chars"), col("n"))
-            val funnel = merged.groupBy(col("source"))
-              .agg(sum(col("n")).as("n_fetched"),
-                sum(when(col("kept"), col("n")).otherwise(0L)).as("n_url_unique"),
-                sum(when(col("kept") && col("novel"), col("n")).otherwise(0L))
-                  .as("n_novel"))
-            val admitted = merged.join(broadcast(fence), Seq("source"))
-              .filter(col("kept") && col("novel") && col("h_ok") &&
-                abs(col("n_chars") - col("med")) <= lit(z) * col("mad"))
-              .groupBy(col("source")).agg(sum(col("n")).as("n_admitted"))
-            StandingStore.writeRaw(
-              funnel.join(admitted, Seq("source"), "left")
-                .select(col("source"), col("n_fetched"), col("n_url_unique"),
-                  col("n_novel"),
-                  coalesce(col("n_admitted"), lit(0L)).as("n_admitted")),
-              outPath, id)
-          } finally merged.unpersist(false)
-        } finally {
-          novel.unpersist(false)
-          kept.unpersist(false)
-          b.unpersist(false)
         }
       }
 

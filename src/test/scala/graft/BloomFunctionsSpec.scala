@@ -112,6 +112,20 @@ class BloomFunctionsSpec extends SparkSpec {
     assert(err.getMessage.contains("exactly 1 row"))
   }
 
+  test("build frees its key checkpoint once the sketch is collected") {
+    import graft.operators.DedupOps
+    // The streaming funnel builds one sketch per micro-batch; a kept key
+    // checkpoint would add one block set per batch to a driver that never
+    // sweeps.
+    val corpus = (1L to 300L).map(i => (i, s"fp_${i % 120}")).toDF("id", "fp")
+    DedupOps.buildFingerprintBloom(corpus, col("fp"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val idx = DedupOps.buildFingerprintBloom(corpus, col("fp"))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(idx.nKeys === 120)
+    assert(leaked.isEmpty, s"buildFingerprintBloom left persistent RDDs $leaked")
+  }
+
   test("bloomPrunedNovel equals the plain anti-join on random overlapping batches") {
     import graft.operators.DedupOps
     val rnd = new scala.util.Random(11)

@@ -117,4 +117,16 @@ class BpeTrainSpec extends SparkSpec {
       TextOps.readBpeVocab(spark, path + "_bad")
     }
   }
+
+  test("training frees every generation it checkpointed") {
+    // One localCheckpoint per merge; the result is a driver Seq, so none
+    // may outlive the call (a leaking loop adds numMerges + 1 RDDs).
+    val docs = docsOf("low lower lowest newer newest wider widest")
+    TextOps.bpeTrain(docs, col("text"), numMerges = 8)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val got = TextOps.bpeTrain(docs, col("text"), numMerges = 8)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(got.size === 8)
+    assert(leaked.isEmpty, s"bpeTrain left persistent RDDs $leaked")
+  }
 }

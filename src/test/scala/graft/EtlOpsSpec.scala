@@ -80,6 +80,12 @@ class EtlOpsSpec extends SparkSpec {
     val (good, bad) = EtlOps.readJsonlTolerant(spark, f.getAbsolutePath, graft.engine.Tables.breadcrumbRawSchema)
     assert(good.count() === 2)
     assert(bad.count() === 1)
+    // Both splits read one scan, and releasing either split frees it.
+    val scan = graft.engine.Materialize.backingRdds(good).map(_.id)
+    assert(scan.nonEmpty && scan === graft.engine.Materialize.backingRdds(bad).map(_.id))
+    assert(scan.forall(spark.sparkContext.getPersistentRDDs.contains))
+    graft.engine.Materialize.release(good)
+    assert(!scan.exists(spark.sparkContext.getPersistentRDDs.contains))
   }
 
   test("S9: dynamic partition overwrite replaces only the reloaded date (transform.py:62-83)") {

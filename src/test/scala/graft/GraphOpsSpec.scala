@@ -171,6 +171,40 @@ class GraphOpsSpec extends SparkSpec {
     assert(after - before < 25, s"persistent RDDs grew $before -> $after over 5 calls")
   }
 
+  test("an iterative call leaves only its result's blocks behind") {
+    // Superseded rounds must be freed by the operator, not left to the
+    // ContextCleaner (which reclaims an unreferenced checkpoint only when
+    // a GC happens to notice it, so a loose count over several calls can
+    // miss a leak): right after a call, the only new persistent RDDs are
+    // the checkpoint the returned plan reads.
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("s", "d")
+    Seq[() => org.apache.spark.sql.DataFrame](
+      () => GraphOps.connectedComponents(edges, "s", "d"),
+      () => GraphOps.pageRankFixedPoint(edges, "s", "d", iters = 10)).foreach { call =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val out = call()
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(left === graft.engine.Materialize.backingRdds(out).map(_.id).toSet)
+      assert(out.count() === 4)
+    }
+  }
+
+  test("pageRankFixedPoint: an empty edge list refuses and leaves nothing cached") {
+    val e = Seq.empty[(Long, Long)].toDF("s", "d")
+    val err = intercept[IllegalArgumentException] {
+      GraphOps.pageRankFixedPoint(e, "s", "d", iters = 2)
+    }
+    assert(err.getMessage.contains("at least one edge"))
+    // The operator's persisted edge list and node set, rebuilt: no cache
+    // entry may match them once the refusal has propagated.
+    val held = e.select(col("s").cast("long").as("src"), col("d").cast("long").as("dst"))
+    val nodes = held.select(col("src").as("id")).union(held.select(col("dst").as("id"))).distinct()
+    Seq(held, nodes).foreach { df =>
+      assert(spark.sharedState.cacheManager
+        .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isEmpty)
+    }
+  }
+
   test("pageRankFixedPoint: hand case — sink accumulates, dangling mass redistributes") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
