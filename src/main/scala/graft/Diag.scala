@@ -3,7 +3,6 @@ package graft
 import graft.engine.{Engine, Hygiene}
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 import scala.collection.mutable
 
@@ -29,28 +28,18 @@ import scala.collection.mutable
   */
 object Diag {
 
-  /** The un-cached shared-build DataFrames: the exact DataFrames
-    * [[graft.queries.SharedPipelines]] hands to `Shared.cached`, rebuilt
-    * without the cache wrapper so the full lineage is visible instead of a
+  /** The un-cached shared-build DataFrames: the bodies
+    * [[graft.queries.SharedPipelines]] hands to `Shared.cached`, without
+    * the cache wrapper so the full lineage is visible instead of a
     * checkpoint scan. */
   def sharedBuilds(spark: SparkSession, dir: String): Map[String, () => DataFrame] = {
-    import graft.engine.Tables
-    import graft.operators.{DedupOps, GraphOps, SimilarityOps}
-    import graft.queries.SharedPipelines
-    def semanticEdges(): DataFrame = DedupOps.embeddingNearDupsTables(
-      Tables.embeddings(spark, dir), "vec_id",
-      col("embedding"), col("label"), SharedPipelines.semPairThreshold,
-      SimilarityOps.lshTables(SharedPipelines.semTables,
-        SharedPipelines.tunedSemanticDepth(spark, dir), 64))
+    import graft.queries.SharedPipelines._
     Map(
-      "calib_candidates" -> (() => DedupOps.nearDupCandidates(
-        SharedPipelines.calibratedShingleRows(spark, dir))),
-      "calib_pairs" -> (() => DedupOps.jaccardVerifyPairs(
-        DedupOps.nearDupCandidates(SharedPipelines.calibratedShingleRows(spark, dir)),
-        SharedPipelines.calibratedShingleRows(spark, dir), 0.5)),
-      "semantic_edges" -> (() => semanticEdges()),
-      "semantic_cc" -> (() => GraphOps.connectedComponents(
-        semanticEdges(), "a_id", "b_id")))
+      "calib_candidates" -> (() => buildCalibratedCandidates(spark, dir)),
+      "calib_pairs" -> (() => buildCalibratedPairs(buildCalibratedCandidates(spark, dir),
+        spark, dir)),
+      "semantic_edges" -> (() => buildSemanticEdges(spark, dir)),
+      "semantic_cc" -> (() => buildSemanticComps(spark, dir)))
   }
 
   private final case class StageRow(name: String, tasks: Int, runMs: Long,

@@ -7,7 +7,8 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** The library's one materialization policy, and the only `src/main`
-  * module that checkpoints, persists or unpersists (`MaterializeSitesSpec`).
+  * module, with no exemptions, that checkpoints, persists or unpersists
+  * (`MaterializeSitesSpec`).
   * A re-read intermediate is [[checkpoint]]ed when the result plan reads
   * it, [[scoped]] when one body does, and cut per round in [[rounds]]. A
   * lost local checkpoint block fails its reader ("Checkpoint block … not

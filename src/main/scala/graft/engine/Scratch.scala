@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * through a filesystem format (q44 CSV, q51 ORC). All paths live under
   * `java.io.tmpdir/graft-scratch/<applicationId>/`, and the first allocation
   * per application registers ONE JVM shutdown hook that deletes the whole
-  * application root recursively — so repeated Bench/Verify/ScaleAudit
+  * application root recursively — so repeated Bench/Verify/Diag
   * sessions stop accumulating `/tmp/graft_*` litter (each session cleans up
   * after itself on exit; keying by applicationId still keeps concurrent
   * sessions from overwriting each other mid-read). */

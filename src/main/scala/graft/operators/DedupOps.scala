@@ -741,8 +741,9 @@ object DedupOps {
     * (one codegen'd VecDot — a pair caught by several tables recomputes the
     * same cheap dot), the threshold filter shrinks the stream, and only the
     * scalar (a_id, b_id, cosine) triple passes the final dedup shuffle.
-    * Candidate volume ≤ T × single-table — density-bounded
-    * ([[graft.ScaleAudit]] tracks the T = 2 generator beside q32's). */
+    * Candidate volume ≤ T × single-table — density-bounded (the T = 2
+    * generator's count beside q32's is recorded in BASELINE.md and
+    * `SCALE_AUDIT_FINAL.jsonl`; MultiTableLshSpec pins the ≤ 2× bound). */
   def embeddingNearDupsTables(embs: DataFrame, id: String, emb: Column, cellCol: Column,
       threshold: Double, tables: Seq[Seq[Seq[Double]]],
       bucketMassBudget: Long = DefaultPairMassBudget): DataFrame = {
@@ -811,9 +812,9 @@ object DedupOps {
     * 1's all-pairs plan grew 6k → 622k pairs from sf0.01 → sf0.1).
     *
     * '''MEASURED-SUPERLINEAR at scale — baseline/bounded use only'''
-    * (round-13 `ScaleAuditSimhash`, settling the round-12 verdict #1
-    * question). The 9-bit band space holds only 512 values, so once a
-    * bucket's population n ≫ 512 the band join's pair mass acquires a
+    * (round-13 SimHash posture audit, SURVEY §6.2, settling the round-12
+    * verdict #1 question). The 9-bit band space holds only 512 values, so
+    * once a bucket's population n ≫ 512 the band join's pair mass acquires a
     * RANDOM-collision floor ≈ 7·C(n,2)/512 per bucket — quadratic over a
     * constant, on ANY vocabulary. Measured band-join mass Σ C(n,2):
     *
@@ -862,10 +863,10 @@ object DedupOps {
 
   /** The candidate stage of [[simhashNearDupsBanded]]: distinct doc pairs
     * sharing ≥1 of the 7 9-bit bands inside a bucket, BEFORE Hamming
-    * verification. Exposed so [[graft.ScaleAudit]] can log candidate growth
-    * across scale factors — the number that must grow ~linearly with the
-    * corpus, not quadratically. */
-  def simhashBandCandidates(docs: DataFrame, id: String, tokenSet: Column,
+    * verification — the count that must grow ~linearly with the corpus,
+    * not quadratically (q24 rows in BASELINE.md and
+    * `SCALE_AUDIT_FINAL.jsonl`). */
+  private def simhashBandCandidates(docs: DataFrame, id: String, tokenSet: Column,
       bucketCol: Column, maxBucket: Int = 0,
       bandMassBudget: Long = DefaultPairMassBudget): DataFrame = {
     val allBands = simhashBandRows(docs, id, tokenSet, bucketCol)
@@ -905,7 +906,7 @@ object DedupOps {
     * simhash, band, bits), one row per doc and each of the 7 disjoint
     * 9-bit bands. `bucket` rides through the signature aggregate
     * (functionally dependent on the doc id) — no join to re-attach it. */
-  private[graft] def simhashBandRows(docs: DataFrame, id: String, tokenSet: Column,
+  private def simhashBandRows(docs: DataFrame, id: String, tokenSet: Column,
       bucketCol: Column): DataFrame =
     simhash63(docs.withColumn("bucket", bucketCol), id, tokenSet, Seq("bucket"))
       .select(col(id), col("bucket"), col("simhash"),
@@ -998,7 +999,8 @@ object DedupOps {
     *
     * Same bounded join shape as q22: candidates form ONLY on shared
     * (bucket, shingle) rows with the df ≤ `maxDf` hot-shingle cap, so pair
-    * volume is density-bounded at any corpus size (ScaleAudit's q22 row);
+    * volume is density-bounded at any corpus size (the q22 row of the
+    * BASELINE.md candidate-volume audit);
     * idf and the per-doc norm ride windows over the (bucket, sh) / doc_id
     * partitionings the join and aggregate already need. The bucket doc
     * count (idf numerator) is a tiny broadcast dim. */
@@ -1116,10 +1118,10 @@ object DedupOps {
   }
 
   /** The chunking stage of [[cdcChunkRemoval]]: one row per content-defined
-    * chunk — (doc_id, chunk_id, chunk, cpos, ch = md5(chunk)). Exposed so
-    * [[graft.ScaleAudit]] can measure the DISTINCT-chunk state (the
-    * saturating df-table quantity) directly. */
-  def cdcChunks(docs: DataFrame, id: String, text: Column,
+    * chunk — (doc_id, chunk_id, chunk, cpos, ch = md5(chunk)). Its
+    * DISTINCT-chunk count is the saturating df-table state (the q85 rows in
+    * BASELINE.md and `SCALE_AUDIT_FINAL.jsonl`). */
+  private def cdcChunks(docs: DataFrame, id: String, text: Column,
       window: Int = 3, divisor: Int = 16): DataFrame = {
     require(window >= 2 && divisor >= 2, "need window >= 2, divisor >= 2")
     val w = Window.partitionBy("doc_id").orderBy("pos")
@@ -1140,35 +1142,6 @@ object DedupOps {
           x => x.getField("tok")), " ").as("chunk"),
         min(col("pos")).as("cpos"))
       .withColumn("ch", md5(col("chunk")))
-  }
-
-  /** The candidate stage of [[embeddingNearDups]]: distinct vector pairs
-    * sharing (cell, sign-LSH bucket), BEFORE the exact-cosine verifier.
-    * Exposed for [[graft.ScaleAudit]]. */
-  def embeddingCandidates(embs: DataFrame, id: String, emb: Column, cellCol: Column,
-      planes: Seq[Seq[Double]]): DataFrame = {
-    val e = embs.select(col(id), cellCol.as("cell"), emb.cast("array<double>").as("v"))
-      .withColumn("bucket",
-        if (planes.isEmpty) lit(0L) else SimilarityOps.signLshBucket(col("v"), planes))
-      .select(col(id), col("cell"), col("bucket"))
-    val a = e.toDF("a_id", "cell", "bucket")
-    val b = e.toDF("b_id", "cell", "bucket")
-    a.join(b, Seq("cell", "bucket")).filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"))
-  }
-
-  /** The candidate stage of [[embeddingNearDupsTables]]: DISTINCT vector
-    * pairs sharing (cell, (t, bucket)) for any table, before the cosine
-    * verifier. Exposed for [[graft.ScaleAudit]]. */
-  def embeddingCandidatesTables(embs: DataFrame, id: String, emb: Column, cellCol: Column,
-      tables: Seq[Seq[Seq[Double]]]): DataFrame = {
-    val e = embs.select(col(id), cellCol.as("cell"), emb.cast("array<double>").as("v"))
-      .select(col(id), col("cell"),
-        explode(SimilarityOps.tableBuckets(col("v"), tables)).as("tb"))
-    val a = e.toDF("a_id", "cell", "tb")
-    val b = e.toDF("b_id", "cell", "tb")
-    a.join(b, Seq("cell", "tb")).filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id")).distinct()
   }
 
   /** MinHash estimator calibration: for every LSH candidate pair, the
@@ -1422,8 +1395,8 @@ object DedupOps {
     * branches). A non-deterministic input — `sample`/`rand`/uuid-derived
     * fingerprints — can land a row in both branches or neither,
     * duplicating or dropping it relative to the plain anti-join.
-    * Materialize such inputs first ([[graft.engine.Materialize.checkpoint]],
-    * as ScaleAudit does at its call site) before handing them here. */
+    * Materialize such inputs first ([[graft.engine.Materialize.checkpoint]])
+    * before handing them here. */
   def bloomPrunedNovel(fresh: DataFrame, fpName: String, corpusFps: DataFrame,
       idx: BloomIndex): DataFrame = {
     import graft.functions.GraftFunctions

@@ -1182,8 +1182,9 @@ object SimilarityOps {
     * sweep under them, and return an [[AnnIndex]] carrying the tuner's
     * chosen geometry. [[writeAnnIndex]] persists it; a serving fleet
     * [[readAnnIndex]]s + [[serveAnn]]s and never pays the sweep again —
-    * serve-time cost is the k-NN join only (ScaleAudit's
-    * q141_serve_from_artifact row measures the split).
+    * serve-time cost is the k-NN join only (the split is measured by the
+    * q141_serve_from_artifact rows in BASELINE.md and
+    * `SCALE_AUDIT_FINAL.jsonl`).
     *
     * `queries` is the train-time recall probe (a sampled query batch drawn
     * from the corpus — ids shared, self-pairs excluded, exactly

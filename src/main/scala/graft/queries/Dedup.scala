@@ -71,7 +71,7 @@ object Dedup extends QueryGroup {
     * bands × 9 bits; pigeonhole makes recall exact for Hamming ≤ 6), so
     * the all-pairs oracle below computes the identical result.
     *
-    * Scale posture (round 13, measured — `ScaleAuditSimhash`): the 9-bit
+    * Scale posture (round 13, measured — SURVEY §6.2): the 9-bit
     * band space gives the band join a quadratic/512 random-collision
     * floor once buckets outgrow ~512 docs, on ANY vocabulary (Heaps-tier
     * mass 1.46 M → 146.6 M on a 10× corpus; fixture tier 4.69 B at 500 k
@@ -888,8 +888,8 @@ object Dedup extends QueryGroup {
     * measured the 3-gram universe saturating on this fixture (q120's
     * candidates ~112× at 10× docs) while the 5-gram pipeline tracks dup
     * density (~11×); the multiset variant measured the same contrast
-    * (ScaleAudit q162 rows: 100× on 3-gram multisets, density-tracking on
-    * 5). */
+    * (BASELINE.md q162 rows: 100× on 3-gram multisets, density-tracking
+    * on 5). */
   private val q162 = QueryDef(
     "q162_weighted_jaccard",
     (s, dir) => {
@@ -959,8 +959,8 @@ object Dedup extends QueryGroup {
     (s, dir) => {
       val docs = Tables.documents(s, dir)
       // Used by truth (both self-join sides), the LSH generator, and two
-      // verifies across separate jobs — checkpoint once (ScaleAudit's
-      // idiom; exchange reuse cannot fire across actions).
+      // verifies across separate jobs — checkpoint once (exchange reuse
+      // cannot fire across actions).
       val sh5 = Materialize.checkpoint(TextOps.shingleRows(docs, col("doc_id"), lit("all"),
         col("text"), n = 5))
       val truth = DedupOps.jaccardPairsFromRows(sh5)

@@ -77,9 +77,26 @@ object SharedPipelines {
     * 0.85–0.88 recall; SURVEY §6.1). This pool feeds the exact verifiers:
     * Jaccard ([[calibratedPairs]]) and edit distance (q65). */
   def calibratedCandidates(s: SparkSession, dir: String): DataFrame =
-    Shared.cached(s, s"calib-cand:$dir") {
-      DedupOps.nearDupCandidates(shingles5(s, dir))
-    }
+    Shared.cached(s, s"calib-cand:$dir")(buildCalibratedCandidates(s, dir))
+
+  /** The uncached bodies the shared builds wrap in `Shared.cached`, which
+    * `graft.Diag` plans and times as `shared:<build>`. */
+  private[graft] def buildCalibratedCandidates(s: SparkSession, dir: String): DataFrame =
+    DedupOps.nearDupCandidates(shingles5(s, dir))
+
+  private[graft] def buildCalibratedPairs(cand: DataFrame, s: SparkSession,
+      dir: String): DataFrame =
+    DedupOps.jaccardVerifyPairs(cand, shingles5(s, dir), 0.5)
+
+  private[graft] def buildSemanticEdges(s: SparkSession, dir: String): DataFrame = {
+    val p = tunedSemanticDepth(s, dir)
+    DedupOps.embeddingNearDupsTables(Tables.embeddings(s, dir), "vec_id",
+      col("embedding"), col("label"), semPairThreshold,
+      SimilarityOps.lshTables(semTables, p, 64))
+  }
+
+  private[graft] def buildSemanticComps(s: SparkSession, dir: String): DataFrame =
+    GraphOps.connectedComponents(buildSemanticEdges(s, dir), "a_id", "b_id")
 
   /** The calibrated VERIFIED pair graph — [[calibratedCandidates]] passed
     * through exact full-set Jaccard ≥ 0.5 ([[DedupOps.jaccardVerifyPairs]];
@@ -89,9 +106,7 @@ object SharedPipelines {
     * giant-cluster lesson — so the shared graph is the verified one. */
   def calibratedPairs(s: SparkSession, dir: String): DataFrame = {
     val cand = calibratedCandidates(s, dir)
-    Shared.cached(s, s"calib-pairs:$dir") {
-      DedupOps.jaccardVerifyPairs(cand, shingles5(s, dir), 0.5)
-    }
+    Shared.cached(s, s"calib-pairs:$dir")(buildCalibratedPairs(cand, s, dir))
   }
 
   /** Connected components over [[calibratedPairs]] — the (node, comp)
@@ -206,14 +221,7 @@ object SharedPipelines {
     * [[semTables]] OR-tables) under the DEFAULT bucket-mass budget; every
     * pair is exact-cosine verified (≥ 0.35) before clustering. */
   def semanticComps(s: SparkSession, dir: String): DataFrame =
-    Shared.cached(s, s"semantic-cc:$dir") {
-      val p = tunedSemanticDepth(s, dir)
-      GraphOps.connectedComponents(
-        DedupOps.embeddingNearDupsTables(Tables.embeddings(s, dir), "vec_id",
-          col("embedding"), col("label"), semPairThreshold,
-          SimilarityOps.lshTables(semTables, p, 64)),
-        "a_id", "b_id")
-    }
+    Shared.cached(s, s"semantic-cc:$dir")(buildSemanticComps(s, dir))
 }
 
 /** Oracle-SQL fragments shared across query groups. ONE generator per

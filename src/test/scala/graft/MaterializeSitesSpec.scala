@@ -6,12 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The materialization policy has one home, checked on the source text,
   * no SparkSession: outside comments and string literals, only
   * `engine/Materialize.scala` may call `localCheckpoint`, `checkpoint`,
-  * `persist`, `cache` or `unpersist` in `src/main` (the audit tools
-  * `ScaleAudit.scala` and `tools/` aside), and only it may name
-  * `LogicalRDD`, so "is this input materialized?" has one definition. */
+  * `persist`, `cache` or `unpersist` in `src/main`, with no exemptions,
+  * and only it may name `LogicalRDD`, so "is this input materialized?"
+  * has one definition. */
 class MaterializeSitesSpec extends AnyFunSuite {
   private val root = new File("src/main/scala")
-  private val exempt = Seq("graft/engine/Materialize.scala", "graft/ScaleAudit.scala", "graft/tools/")
+  private val home = "graft/engine/Materialize.scala"
   private val direct =
     """localCheckpoint\(|(?<!Materialize)\.checkpoint\(|\.persist\(|\.cache\(\)|\.unpersist\(""".r
 
@@ -75,17 +75,17 @@ class MaterializeSitesSpec extends AnyFunSuite {
 
   test("only engine/Materialize.scala materializes or frees in src/main") {
     val strays = for {
-      (path, code) <- sources if !exempt.exists(path.startsWith)
+      (path, code) <- sources if path != home
       line <- hits(code, direct)
     } yield s"$path:$line"
     assert(strays.isEmpty, s"direct materialization outside graft.engine.Materialize: $strays")
-    val home = sources.collectFirst { case (p, c) if p == exempt.head => hits(c, direct) }
-    assert(home.exists(_.size >= 4), "the scan no longer sees Materialize's own calls")
+    val own = sources.collectFirst { case (p, c) if p == home => hits(c, direct) }
+    assert(own.exists(_.size >= 4), "the scan no longer sees Materialize's own calls")
   }
 
   test("LogicalRDD is named only by Materialize; the cap asks Materialize.isMaterialized") {
     val naming = sources.collect { case (p, c) if c.contains("LogicalRDD") => p }
-    assert(naming === Seq(exempt.head))
+    assert(naming === Seq(home))
     val dedup = sources.collectFirst { case (p, c) if p == "graft/operators/DedupOps.scala" => c }
     val cap = dedup.map(c => c.substring(c.indexOf("def capShingleDfQuantile(")))
       .map(c => c.substring(0, c.indexOf("\n  def ")))

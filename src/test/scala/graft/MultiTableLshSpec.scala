@@ -76,12 +76,16 @@ class MultiTableLshSpec extends SparkSpec {
   }
 
   test("candidate volume stays <= T x single-table and deduped") {
-    val c1 = DedupOps.embeddingCandidates(emb, "vec_id", col("embedding"), col("label"),
-      t1.head).count()
-    val c2df = DedupOps.embeddingCandidatesTables(emb, "vec_id", col("embedding"), col("label"), t2)
+    // threshold -1: every candidate passes cosine >= -1, so the counts are
+    // the production generators' candidate volumes.
+    val c1 = DedupOps.embeddingNearDups(emb, "vec_id", col("embedding"), col("label"),
+      threshold = -1.0, planes = t1.head).count()
+    val c2df = DedupOps.embeddingNearDupsTables(emb, "vec_id", col("embedding"), col("label"),
+      threshold = -1.0, tables = t2)
     val c2 = c2df.count()
     assert(c2 <= 2 * c1)
-    assert(c2 === c2df.distinct().count(), "candidates must be distinct pairs")
+    assert(c2 === c2df.select("a_id", "b_id").distinct().count(),
+      "candidates must be distinct pairs")
   }
 
   test("knnJoinTables: neighbors dominate single-table cosine at every rank") {
