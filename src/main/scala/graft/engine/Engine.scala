@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.StructType
 
 /** One-time session preparation: nanos-as-long parquet reading, graft's
   * native function registration, and the sargable-timestamp optimizer rule.
@@ -9,10 +10,11 @@ import org.apache.spark.sql.SparkSession
   * `SparkEntry.queries` a ready session), so there is no builder hook to
   * attach `SparkSessionExtensions` to — session preparation has to happen on
   * first use instead. It lives here, explicitly, rather than as a hidden
-  * side effect sprinkled through readers; [[Tables.table]] calls it, and
-  * library users with their own sessions can call it directly. Guarded
-  * per-session (weak refs — sessions are never pinned), so repeated reads
-  * never re-mutate shared state.
+  * side effect sprinkled through readers; [[Tables.table]] runs it through
+  * [[schemaCache]], and library users with their own sessions can call
+  * [[ensureInitialized]] directly. Guarded per-session (weak refs — sessions
+  * are never pinned), so repeated reads never re-mutate shared state; the
+  * same registry holds each session's table schemas.
   *
   * Entry points that do construct their own session (Bench, Verify, the
   * generators and the diagnostics) all go through [[session]], so every
@@ -20,8 +22,14 @@ import org.apache.spark.sql.SparkSession
   */
 object Engine {
 
-  private val initialized = java.util.Collections.newSetFromMap(
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+  /** [[Tables.table]]'s schema cache: qualified path -> (version, schema). */
+  private[engine] type SchemaCache =
+    java.util.concurrent.ConcurrentHashMap[String, (Tables.Version, StructType)]
+
+  /** Prepared sessions, each with its own schema cache: the inferred schema
+    * depends on session confs (`nanosAsLong`, `inferTimestampNTZ`). Nothing
+    * in a cache refers to its session, so the weak keys pin none. */
+  private val sessions = new java.util.WeakHashMap[SparkSession, SchemaCache]()
 
   /** Local parallelism for in-repo sessions: `SPARK_GRAFT_CPUS` when set,
     * else the cores this JVM may use. */
@@ -80,10 +88,17 @@ object Engine {
     else None
   }
 
-  def ensureInitialized(spark: SparkSession): Unit = synchronized {
-    if (!initialized.contains(spark)) {
-      // events.parquet stores TIMESTAMP(NANOS), unrepresentable in Spark's
-      // µs TimestampType; read as raw int64 nanos (Tables.events derives µs).
+  def ensureInitialized(spark: SparkSession): Unit = schemaCache(spark)
+
+  /** The session's schema cache, preparing the session on its first call. */
+  private[engine] def schemaCache(spark: SparkSession): SchemaCache = synchronized {
+    val known = sessions.get(spark)
+    if (known != null) known
+    else {
+      // The current tiers stamp events.ts as TIMESTAMP(MICROS) (read as
+      // NTZ); the nanos form is still read. TIMESTAMP(NANOS) is
+      // unrepresentable in Spark's µs TimestampType, so it is read as raw
+      // int64 nanos (Tables.events derives µs).
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       // AQE coalescing floor 1m → 64k (r15, guide §2.5): this engine's hot
       // operators are CPU-DENSE PER BYTE (shingle md5/minhash folds, banded
@@ -129,7 +144,9 @@ object Engine {
       graft.functions.GraftFunctions.register(spark)
       if (!spark.experimental.extraOptimizations.contains(graft.plans.SargableTimestampRules))
         spark.experimental.extraOptimizations ++= Seq(graft.plans.SargableTimestampRules)
-      initialized.add(spark)
+      val fresh = new SchemaCache
+      sessions.put(spark, fresh)
+      fresh
     }
   }
 }

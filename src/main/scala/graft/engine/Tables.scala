@@ -1,5 +1,6 @@
 package graft.engine
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -9,9 +10,13 @@ import org.apache.spark.sql.types._
   * `StructType`s here — schema-on-read with a declared contract, so Catalyst
   * can prune columns and push filters into the Parquet scan.
   *
-  * All readers are pure `(SparkSession, sfDir) => DataFrame`; no caching, no
-  * mutable state — at 100 TB each of these is a straight columnar scan whose
-  * partitioning is inherited from the file layout.
+  * All readers are `(SparkSession, sfDir) => DataFrame` plans — at 100 TB
+  * each of these is a straight columnar scan whose partitioning is inherited
+  * from the file layout. The one thing remembered is each table's schema:
+  * inferring it from the footer costs a Spark job per read, so it is
+  * inferred once per session and version of the file, keyed on the
+  * qualified path plus [[Version]], and held in the session's
+  * [[Engine.schemaCache]]. The file listing is not cached.
   */
 object Tables {
 
@@ -22,8 +27,47 @@ object Tables {
   /** Plain parquet scan. Filter/projection pushdown is Catalyst's job —
     * callers declare plans, never pre-materialize. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    Engine.ensureInitialized(spark) // once per session, guarded
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  /** What changes when a table is rewritten in place: a file's modification
+    * time and length; for a directory (a Spark output, as GenData writes
+    * some tables), the newest modification time and total length of its
+    * leaf files. */
+  private[engine] final case class Version(modified: Long, length: Long)
+
+  private def versionOf(fs: FileSystem, path: Path): Version = {
+    val status = fs.getFileStatus(path)
+    if (status.isFile) Version(status.getModificationTime, status.getLen)
+    else {
+      val leaves = fs.listFiles(path, true)
+      var v = Version(0L, 0L)
+      while (leaves.hasNext) {
+        val f = leaves.next()
+        v = Version(math.max(v.modified, f.getModificationTime), v.length + f.getLen)
+      }
+      v
+    }
+  }
+
+  /** The schema Spark infers for `path`, inferred on the session's first
+    * read of this version and remembered after. The version is taken
+    * before inferring, so a rewrite racing the inference re-infers on the
+    * next read instead of pinning a stale schema. */
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val cache = Engine.schemaCache(spark) // prepares the session once
+    val raw = new Path(path)
+    val fs = raw.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qualified = fs.makeQualified(raw)
+    val version = versionOf(fs, qualified)
+    Option(cache.get(qualified.toString)) match {
+      case Some((`version`, schema)) => schema
+      case _ =>
+        val schema = spark.read.parquet(path).schema
+        cache.put(qualified.toString, (version, schema))
+        schema
+    }
   }
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "lineitem")

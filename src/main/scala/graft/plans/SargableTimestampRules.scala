@@ -8,10 +8,11 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 /** Optimizer rule making derived-timestamp predicates sargable
   * (SURVEY §4 "optional date-predicate canonicalization", now load-bearing).
   *
-  * The events table stores TIMESTAMP(NANOS), which Spark reads as a raw
-  * int64 `ts_ns`; the queryable `ts` is the derived
-  * `timestamp_micros(ts_ns div 1000)` (Tables.events). A range predicate on
-  * `ts` — e.g. the half-open day range Semantics.onDate emits for
+  * The current tiers stamp the events table's `ts` as TIMESTAMP(MICROS)
+  * (read as NTZ, layer 3 below); the nanos form is still read. Spark reads
+  * TIMESTAMP(NANOS) as a raw int64 `ts_ns`, and the queryable `ts` is the
+  * derived `timestamp_micros(ts_ns div 1000)` (Tables.events). A range
+  * predicate on `ts` — e.g. the half-open day range Semantics.onDate emits for
   * `ts::date = d` (analytic.sql:4,8,31) — is an expression over `ts_ns`, so
   * the parquet scan gets NO pushed filter and, at 100 TB, no row-group
   * skipping or partition pruning.
