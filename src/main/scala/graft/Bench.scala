@@ -123,11 +123,9 @@ object Bench {
     // guards — the asserted behavior at that mass) would otherwise turn
     // the whole bench into a nonzero exit; default empty, so every other
     // tier still runs the full surface and a typo'd name fails loudly.
-    val skip: Set[String] = sys.env.get("SPARK_GRAFT_BENCH_SKIP")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).getOrElse(Set.empty)
-    val unknownSkip = skip -- SparkEntry.queries.keySet
-    require(unknownSkip.isEmpty,
-      s"SPARK_GRAFT_BENCH_SKIP names unknown queries: ${unknownSkip.toSeq.sorted.mkString(", ")}")
+    val skip = SparkEntry.knownQueries(sys.env.get("SPARK_GRAFT_BENCH_SKIP")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).getOrElse(Set.empty),
+      "SPARK_GRAFT_BENCH_SKIP")
     val spark = graft.engine.Engine.session()
     val loadBefore = loadavgStamp()
     // Untimed session warmup (JVM/codegen/catalog init) so whichever query

@@ -65,7 +65,7 @@ object Diag {
           s"unknown shared build '$b'; known: ${shared.keys.toSeq.sorted.mkString(", ")}")
         shared(b)()
       case q =>
-        require(SparkEntry.queries.contains(q), s"unknown query '$q'")
+        SparkEntry.knownQueries(Set(q), "the name list")
         SparkEntry.queries(q)(spark, dir)
     }
     // Untimed warm-up (JVM/codegen/catalog init) so the first name is not

@@ -1,10 +1,7 @@
 package graft
 
-import graft.functions.{BloomMightContain, BoundedLevenshtein, GraftFunctions, NfcNormalize, StringPolyHash, SubwordEncode, VecDot}
-import graft.plans.SargableTimestampRules
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Standard `SparkSessionExtensions` entry point for graft's Catalyst
   * extensions — the construction-time injection path:
@@ -14,36 +11,16 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * --conf spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * Sessions we don't construct (the driver's Verify/Bench harness) get the
-  * same behavior at runtime: Tables.table registers the function through the
-  * FunctionRegistry and the rule through experimental.extraOptimizations.
+  * It injects every row of [[GraftFunctions.table]] and every rule of
+  * [[GraftFunctions.rules]]. Sessions graft does not construct (one handed to
+  * `SparkEntry.queries`) get the same table and rules at runtime from
+  * `graft.engine.Engine.ensureInitialized`, which registers the functions
+  * through the session's FunctionRegistry and adds the rules to
+  * `experimental.extraOptimizations`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => SargableTimestampRules)
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.VecDotName),
-      new ExpressionInfo(classOf[VecDot].getName, GraftFunctions.VecDotName),
-      (exprs: Seq[Expression]) => VecDot(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.PolyHashName),
-      new ExpressionInfo(classOf[StringPolyHash].getName, GraftFunctions.PolyHashName),
-      (exprs: Seq[Expression]) => StringPolyHash(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.SubwordEncodeName),
-      new ExpressionInfo(classOf[SubwordEncode].getName, GraftFunctions.SubwordEncodeName),
-      (exprs: Seq[Expression]) => SubwordEncode(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.BoundedLevenshteinName),
-      new ExpressionInfo(classOf[BoundedLevenshtein].getName, GraftFunctions.BoundedLevenshteinName),
-      (exprs: Seq[Expression]) => BoundedLevenshtein(exprs.head, exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.BloomContainsName),
-      new ExpressionInfo(classOf[BloomMightContain].getName, GraftFunctions.BloomContainsName),
-      (exprs: Seq[Expression]) => BloomMightContain(exprs.head, exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.NfcNormalizeName),
-      new ExpressionInfo(classOf[NfcNormalize].getName, GraftFunctions.NfcNormalizeName),
-      (exprs: Seq[Expression]) => NfcNormalize(exprs.head)))
+    GraftFunctions.rules.foreach(r => ext.injectOptimizerRule(_ => r))
+    GraftFunctions.table.foreach(ext.injectFunction)
   }
 }

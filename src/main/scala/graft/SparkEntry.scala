@@ -34,6 +34,15 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.spark).toMap
 
+  /** `names`, once every one of them is a key of [[queries]]; otherwise
+    * fails naming the unknown ones and `where` they came from. */
+  def knownQueries(names: Set[String], where: String): Set[String] = {
+    val unknown = names -- queries.keySet
+    require(unknown.isEmpty,
+      s"unknown queries in $where: ${unknown.toSeq.sorted.mkString(", ")}")
+    names
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -195,14 +195,15 @@ object Verify {
     if (ok != rows.size) sys.exit(1)
   }
 
+  /** The queries a comma-separated name list selects; all when absent. */
+  private def queryList(csv: Option[String]): Set[String] =
+    csv.map(a => SparkEntry.knownQueries(a.split(",").toSet, "the query list"))
+      .getOrElse(SparkEntry.queries.keySet)
+
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("--invariance")) {
       val Array(sfDir, outBase) = args.slice(1, 3)
-      val only: Set[String] = args.drop(3).headOption
-        .map(_.split(",").toSet).getOrElse(SparkEntry.queries.keySet)
-      val unknown = only -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+      val only = queryList(args.drop(3).headOption)
       // Default: this box's cores and one fewer — always two different,
       // coprime partition counts.
       val cpus = math.max(2, Engine.defaultCpus)
@@ -214,11 +215,7 @@ object Verify {
     }
     // args: <sfDir> <outDir> [comma-separated query names — default all]
     val Array(sfDir, outDir) = args.take(2)
-    val only: Set[String] = args.drop(2).headOption
-      .map(_.split(",").toSet).getOrElse(SparkEntry.queries.keySet)
-    val unknown = only -- SparkEntry.queries.keySet
-    require(unknown.isEmpty,
-      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+    val only = queryList(args.drop(2).headOption)
     val spark = Engine.session()
     val failures = dump(spark, sfDir, outDir, SparkEntry.queries.filter(kv => only(kv._1)))
     def q(s: String): String = "\"" + jsonEscape(s) + "\""

@@ -3,8 +3,10 @@ package graft.engine
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 
-/** One-time session preparation: nanos-as-long parquet reading, graft's
-  * native function registration, and the sargable-timestamp optimizer rule.
+/** One-time session preparation: nanos-as-long parquet reading, and
+  * graft's native functions and optimizer rules (`GraftFunctions.table` and
+  * `GraftFunctions.rules`, the ones `graft.GraftExtensions` injects into a
+  * session it builds).
   *
   * The driver CONSTRUCTS the SparkSession (the contract hands
   * `SparkEntry.queries` a ready session), so there is no builder hook to
@@ -142,8 +144,8 @@ object Engine {
       spark.conf.set("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
         sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m"))
       graft.functions.GraftFunctions.register(spark)
-      if (!spark.experimental.extraOptimizations.contains(graft.plans.SargableTimestampRules))
-        spark.experimental.extraOptimizations ++= Seq(graft.plans.SargableTimestampRules)
+      spark.experimental.extraOptimizations ++= graft.functions.GraftFunctions.rules
+        .filterNot(spark.experimental.extraOptimizations.contains)
       val fresh = new SchemaCache
       sessions.put(spark, fresh)
       fresh

@@ -45,89 +45,93 @@ object Hygiene {
   }
 }
 
-/** Session-scoped shared materializations: deterministic intermediates
-  * several queries rebuild identically (the minhash candidate-pair list
-  * feeding q53/q101/q111, the semantic near-dup clusters feeding q61/q110)
-  * are computed ONCE per (application, key) and served from an eager
-  * localCheckpoint. Each query's RESULT is unchanged — only the shared
-  * prefix's recomputation is elided — so oracle semantics are untouched.
-  * [[Hygiene.sweep]] keeps the entries; [[Shared.clear]] drops
-  * and frees them (end of session, or tests). */
+/** Application-scoped memo: deterministic intermediates several queries
+  * rebuild identically are computed ONCE per (application, key) and served
+  * from then on. Three kinds of entry share its one map:
+  *  - [[cached]] DataFrames, cut into an eager localCheckpoint (the minhash
+  *    candidate-pair list feeding q53/q101/q111, the semantic near-dup
+  *    clusters feeding q61/q110);
+  *  - [[cachedValue]] driver-side values (a trained ANN index, a fitted
+  *    config tuple);
+  *  - [[merge]]d accumulators (the streaming admission funnel's Bloom
+  *    sketch, key `stream-fp-bloom:<path>`).
+  * Each query's RESULT is unchanged — only the shared prefix's
+  * recomputation is elided — so oracle semantics are untouched. Entries are
+  * keyed by applicationId, so a new SparkContext in the same JVM never
+  * reads a dead context's blocks or values; keys are one namespace.
+  * [[Hygiene.sweep]] keeps the entries; [[Shared.clear]] drops every entry
+  * of the application and frees its checkpoints (end of session, or tests).
+  */
 object Shared {
 
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  private val memo =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), AnyRef]()
+
+  private def slot(spark: SparkSession, key: String): (String, String) =
+    (spark.sparkContext.applicationId, key)
+
+  /** The one get-or-build. The build runs OUTSIDE any map lock: an eager
+    * localCheckpoint is a full Spark job (potentially minutes for a CC
+    * prefix), and running it inside `computeIfAbsent` would hold the bin
+    * lock for the duration — blocking unrelated keys on the same stripe
+    * and deadlocking a build that re-enters the map. Two racing threads
+    * may both build; the publish is `putIfAbsent` and the loser's
+    * duplicate goes to `release`. */
+  private def getOrBuild[T <: AnyRef](spark: SparkSession, key: String)(
+      build: => T, release: T => Unit): T = {
+    val k = slot(spark, key)
+    val hit = memo.get(k)
+    if (hit != null) hit.asInstanceOf[T]
+    else {
+      val out = build
+      val prior = memo.putIfAbsent(k, out)
+      if (prior == null) out
+      else {
+        release(out)
+        prior.asInstanceOf[T]
+      }
+    }
+  }
 
   /** The shared materialization for `key`, building it from `build` on
     * first use. The build is cut eagerly ([[Materialize.checkpoint]]) so
     * every consumer — including the first — reads blocks, not a live plan
-    * whose lineage would re-run per consumer. Keyed by applicationId so a
-    * new SparkContext in the same JVM never reads a dead context's blocks.
-    *
-    * The build runs OUTSIDE any map lock: an eager localCheckpoint is a
-    * full Spark job (potentially minutes for a CC prefix), and running it
-    * inside `computeIfAbsent` would hold the bin lock for the duration —
-    * blocking unrelated keys on the same stripe and deadlocking a build
-    * that re-enters the map. Two racing threads may both build; the
-    * publish is `putIfAbsent` and the loser releases its duplicate. */
-  def cached(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val k = (spark.sparkContext.applicationId, key)
-    val hit = cache.get(k)
-    if (hit != null) hit
-    else {
-      val out = Materialize.checkpoint(build)
-      val prior = cache.putIfAbsent(k, out)
-      if (prior == null) out
-      else {
-        Materialize.release(out)
-        prior
+    * whose lineage would re-run per consumer. A race's losing build is
+    * released. */
+  def cached(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
+    getOrBuild[DataFrame](spark, key)(Materialize.checkpoint(build), Materialize.release)
+
+  /** [[cached]] for small DRIVER-side artifacts that are not DataFrames:
+    * values whose whole point is to be computed once per session (training
+    * is the expensive step) and then consulted cheaply. The loser's
+    * duplicate needs no release (plain JVM value, no blocks). */
+  def cachedValue[T <: AnyRef](spark: SparkSession, key: String)(build: => T): T =
+    getOrBuild[T](spark, key)(build, _ => ())
+
+  /** Folds `value` into the entry for `key` with `f(entry, value)`, or
+    * makes `value` the entry when there is none; atomic per key. `f` runs
+    * under the map's bin lock, so it must be a cheap driver-side fold. */
+  def merge[T <: AnyRef](spark: SparkSession, key: String, value: T)(f: (T, T) => T): T =
+    memo.merge(slot(spark, key), value,
+      (a: AnyRef, b: AnyRef) => f(a.asInstanceOf[T], b.asInstanceOf[T])).asInstanceOf[T]
+
+  /** This application's entries. */
+  private def entries(spark: SparkSession): Iterator[java.util.Map.Entry[(String, String), AnyRef]] = {
+    val app = spark.sparkContext.applicationId
+    memo.entrySet().iterator().asScala.filter(_.getKey._1 == app)
+  }
+
+  /** The ids of the RDDs behind this application's DataFrame entries. */
+  private[graft] def backing(spark: SparkSession): Set[Int] =
+    entries(spark).map(_.getValue).collect { case df: DataFrame @unchecked => df }
+      .flatMap(Materialize.backingRdds).map(_.id).toSet
+
+  /** Drop every entry of this application and free its checkpoints. */
+  def clear(spark: SparkSession): Unit =
+    entries(spark).foreach { e =>
+      memo.remove(e.getKey) match {
+        case df: DataFrame @unchecked => Materialize.release(df)
+        case _ =>
       }
     }
-  }
-
-  private val valueCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), AnyRef]()
-
-  /** [[cached]] for small DRIVER-side artifacts that are not DataFrames —
-    * a trained [[graft.operators.SimilarityOps.AnnIndex]], a fitted config
-    * tuple: values whose whole point is to be computed once per session
-    * (training is the expensive step) and then consulted cheaply. Same
-    * build-outside-the-lock / publish-with-putIfAbsent discipline as
-    * [[cached]]; the loser's duplicate needs no release (plain JVM value,
-    * no blocks). Keyed by applicationId like the DataFrame cache so
-    * a value derived from one context's data is never served to another. */
-  def cachedValue[T <: AnyRef](spark: SparkSession, key: String)(build: => T): T = {
-    val k = (spark.sparkContext.applicationId, key)
-    val hit = valueCache.get(k)
-    if (hit != null) hit.asInstanceOf[T]
-    else {
-      val out = build
-      val prior = valueCache.putIfAbsent(k, out)
-      if (prior == null) out else prior.asInstanceOf[T]
-    }
-  }
-
-  /** The ids of the RDDs behind this application's entries. */
-  private[engine] def backing(spark: SparkSession): Set[Int] = {
-    val app = spark.sparkContext.applicationId
-    cache.asScala.collect { case ((`app`, _), df) => Materialize.backingRdds(df) }
-      .flatten.map(_.id).toSet
-  }
-
-  /** Drop and free every shared entry of this application. */
-  def clear(spark: SparkSession): Unit = {
-    val app = spark.sparkContext.applicationId
-    val it = cache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 == app) {
-        Materialize.release(e.getValue)
-        it.remove()
-      }
-    }
-    val vit = valueCache.entrySet().iterator()
-    while (vit.hasNext) {
-      if (vit.next().getKey._1 == app) vit.remove()
-    }
-  }
 }

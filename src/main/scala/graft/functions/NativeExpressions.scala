@@ -1,12 +1,17 @@
 package graft.functions
 
+import graft.plans.SargableTimestampRules
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.{call_function, lit, typedlit}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
+import scala.reflect.{ClassTag, classTag}
 
 /** Native Catalyst expression for the embedding dot product.
   *
@@ -474,10 +479,12 @@ object NfcNormalize {
   }
 }
 
-/** Session-level registration + Column-API surface for graft's native
-  * expressions. Registration goes through the public FunctionRegistry so the
-  * expressions resolve in any session (including driver-owned ones we don't
-  * construct); `register` is idempotent. */
+/** The one table of graft's native Catalyst functions plus their Column-API
+  * surface. Each function is declared once, as a (name, builder) row of
+  * [[table]]; both registration paths iterate it: [[register]] at runtime
+  * (from `Engine.ensureInitialized`, for sessions graft does not build) and
+  * [[graft.GraftExtensions]] at builder time. [[rules]] lists the optimizer
+  * rules beside it. */
 object GraftFunctions {
 
   val VecDotName = "graft_vec_dot"
@@ -488,81 +495,81 @@ object GraftFunctions {
   val NfcNormalizeName = "graft_nfc_normalize"
   val DoubleBitsName = "graft_double_bits"
 
-  def register(spark: SparkSession): Unit = {
+  /** A function as `SparkSessionExtensions.injectFunction` takes it. */
+  private[graft] type Native = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+
+  private def native[E <: Expression: ClassTag](name: String)(
+      build: Seq[Expression] => E): Native =
+    (FunctionIdentifier(name), new ExpressionInfo(classTag[E].runtimeClass.getName, name), build)
+
+  /** Every native function graft adds to a session. */
+  private[graft] val table: Seq[Native] = Seq(
+    native(VecDotName)(e => VecDot(e(0), e(1))),
+    native(PolyHashName)(e => StringPolyHash(e(0))),
+    native(BloomContainsName)(e => BloomMightContain(e(0), e(1), e(2))),
+    native(SubwordEncodeName)(e => SubwordEncode(e(0), e(1))),
+    native(BoundedLevenshteinName)(e => BoundedLevenshtein(e(0), e(1), e(2))),
+    native(NfcNormalizeName)(e => NfcNormalize(e(0))),
+    native(DoubleBitsName)(e => DoubleBits(e(0))))
+
+  /** The optimizer rules graft adds beside its functions. */
+  private[graft] val rules: Seq[Rule[LogicalPlan]] = Seq(SargableTimestampRules)
+
+  private val byName: Map[String, Native] = table.map(f => f._1.funcName -> f).toMap
+
+  /** Registers every function of [[table]] in `spark`; idempotent. */
+  def register(spark: SparkSession): Unit = table.foreach(ensure(spark, _))
+
+  // Each function guards on ITS OWN existence (a session where one exists
+  // but not another — partial/external registration — still gets the
+  // missing one); the guard only exists to avoid per-query "replaced a
+  // previously registered function" WARN spam.
+  private def ensure(spark: SparkSession, f: Native): Unit = {
     val reg = spark.sessionState.functionRegistry
-    // Each function guards on ITS OWN existence (a session where one exists
-    // but not the other — partial/external registration — still gets the
-    // missing one); the guard only exists to avoid per-query "replaced a
-    // previously registered function" WARN spam.
-    def ensure(name: String)(builder: Seq[org.apache.spark.sql.catalyst.expressions.Expression]
-        => org.apache.spark.sql.catalyst.expressions.Expression): Unit =
-      if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-    ensure(VecDotName)(exprs => VecDot(exprs.head, exprs(1)))
-    ensure(PolyHashName)(exprs => StringPolyHash(exprs.head))
-    ensure(BloomContainsName)(exprs => BloomMightContain(exprs.head, exprs(1), exprs(2)))
-    ensure(SubwordEncodeName)(exprs => SubwordEncode(exprs.head, exprs(1)))
-    ensure(BoundedLevenshteinName)(exprs =>
-      BoundedLevenshtein(exprs.head, exprs(1), exprs(2)))
-    ensure(NfcNormalizeName)(exprs => NfcNormalize(exprs.head))
-    ensure(DoubleBitsName)(exprs => DoubleBits(exprs.head))
+    if (!reg.functionExists(f._1)) reg.registerFunction(f._1, f._2, f._3)
   }
 
-  /** Codegen'd dot product of two array<double> columns. Registers against
-    * the active session at plan-construction time (idempotent), so any
-    * driver-owned session resolves the function without setup. */
-  def vecDot(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(VecDotName, a, b)
+  /** `name` applied to `args`. The function is registered in the active
+    * session first (idempotent), so any driver-owned session resolves it
+    * without setup. */
+  private def call(name: String, args: Column*): Column = {
+    SparkSession.getActiveSession.foreach(ensure(_, byName(name)))
+    call_function(name, args: _*)
   }
+
+  /** Codegen'd dot product of two array<double> columns. */
+  def vecDot(a: Column, b: Column): Column = call(VecDotName, a, b)
 
   /** Codegen'd polynomial rolling hash of a string column (long). */
-  def polyHash(s: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(PolyHashName, s)
-  }
+  def polyHash(s: Column): Column = call(PolyHashName, s)
 
   /** Codegen'd greedy longest-match subword tokenization of a string column
     * against a literal vocabulary (see [[SubwordEncode]]). Returns
     * array<string>; `size(...)` of it is the subword token count. */
-  def subwordEncode(text: Column, vocab: Seq[String]): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(SubwordEncodeName, text, org.apache.spark.sql.functions.typedlit(vocab))
-  }
+  def subwordEncode(text: Column, vocab: Seq[String]): Column =
+    call(SubwordEncodeName, text, typedlit(vocab))
 
   /** Codegen'd threshold-bounded Levenshtein distance (int; -1 above the
     * threshold) — drop-in for 3-arg `levenshtein` on the near-dup verify
     * hot path (see [[BoundedLevenshtein]]). */
-  def levenshteinBounded(a: Column, b: Column, threshold: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(BoundedLevenshteinName, a, b,
-      org.apache.spark.sql.functions.lit(threshold))
-  }
+  def levenshteinBounded(a: Column, b: Column, threshold: Int): Column =
+    call(BoundedLevenshteinName, a, b, lit(threshold))
 
   /** Codegen'd Unicode NFC normalization of a string column (see
     * [[NfcNormalize]]) — run before fingerprinting so canonically-equivalent
     * byte encodings hash identically. Oracle equivalent: DuckDB
     * `nfc_normalize`. */
-  def nfcNormalize(s: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(NfcNormalizeName, s)
-  }
+  def nfcNormalize(s: Column): Column = call(NfcNormalizeName, s)
 
   /** Codegen'd IEEE-754 bit pattern of a double column as a long (see
     * [[DoubleBits]]) — the bitwise-float projection for invariance
     * comparison; floats cast to double first (exact, sign-of-zero
     * preserving). */
-  def doubleBits(d: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(DoubleBitsName, d)
-  }
+  def doubleBits(d: Column): Column = call(DoubleBitsName, d)
 
   /** Codegen'd Bloom membership probe of a string column against a collected
     * bloom sketch (see [[BloomUtil]]). The sketch rides the plan as a binary
     * literal — broadcast-by-literal, no join, no shuffle. */
-  def bloomContains(s: Column, bloom: Array[Byte], k: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(BloomContainsName, s, org.apache.spark.sql.functions.lit(bloom),
-      org.apache.spark.sql.functions.lit(k))
-  }
+  def bloomContains(s: Column, bloom: Array[Byte], k: Int): Column =
+    call(BloomContainsName, s, lit(bloom), lit(k))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
-import graft.engine.Materialize
+import graft.engine.{Materialize, Shared}
 
 /** The reference's streaming ingest path (/root/reference/data_subscriber.py)
   * re-expressed as Structured Streaming (SURVEY §2.9 T1-T6).
@@ -623,43 +623,34 @@ object StreamingOps {
     * ([[streamingAdmissionFunnel]]'s opt-in stage): per batch the admitted
     * fps' sketch OR-merges into the standing one
     * ([[graft.operators.DedupOps.mergeBloomIndexes]]) — KB-sized driver
-    * state however long the stream runs, rebuilt from the exact store on
-    * restart (cache keyed by applicationId + path). FIXED geometry (2^21
+    * state however long the stream runs, held in [[graft.engine.Shared]]
+    * under `stream-fp-bloom:<path>` and rebuilt from the exact store on a
+    * miss (fresh driver, or after `Shared.clear`). FIXED geometry (2^21
     * bits, k = 5 — ~0.1% fp rate at 10^5 keys) so every batch's sketch is
     * merge-compatible; saturation only raises the false-positive rate,
     * which costs exact rescans, never correctness (the bloomPrunedNovel
     * contract). Merge is idempotent (OR of the same bits), so a replayed
     * batch cannot corrupt the sketch. */
-  private object StreamFpBloom {
+  private[graft] object StreamFpBloom {
     import graft.operators.DedupOps
     private val mBits = 1 << 21
     private val k = 5
-    private val cache = new java.util.concurrent.ConcurrentHashMap[
-      (String, String), DedupOps.BloomIndex]()
+
+    private def key(path: String): String = s"stream-fp-bloom:$path"
 
     /** The standing sketch for `path`, rebuilt from the exact store's fps
-      * on a cache miss (fresh driver). */
+      * on a miss. */
     def getOrRebuild(spark: SparkSession, path: String,
-        seenFps: DataFrame): DedupOps.BloomIndex = {
-      val key = (spark.sparkContext.applicationId, path)
-      val hit = cache.get(key)
-      if (hit != null) hit
-      else {
-        val built = DedupOps.buildFingerprintBloom(seenFps, col("fp"), k, mBits)
-        val prior = cache.putIfAbsent(key, built)
-        if (prior == null) built else prior
-      }
-    }
+        seenFps: DataFrame): DedupOps.BloomIndex =
+      Shared.cachedValue(spark, key(path))(
+        DedupOps.buildFingerprintBloom(seenFps, col("fp"), k, mBits))
 
-    /** OR-merge one batch's fps into the standing sketch (seeds the cache
+    /** OR-merge one batch's fps into the standing sketch (seeds the entry
       * when this is the stream's first batch). */
-    def mergeIn(spark: SparkSession, path: String, batchFps: DataFrame): Unit = {
-      val key = (spark.sparkContext.applicationId, path)
-      val b = DedupOps.buildFingerprintBloom(batchFps, col("fp"), k, mBits)
-      cache.merge(key, b,
-        (a: DedupOps.BloomIndex, x: DedupOps.BloomIndex) =>
-          DedupOps.mergeBloomIndexes(a, x))
-    }
+    def mergeIn(spark: SparkSession, path: String, batchFps: DataFrame): Unit =
+      Shared.merge(spark, key(path),
+        DedupOps.buildFingerprintBloom(batchFps, col("fp"), k, mBits))(
+        DedupOps.mergeBloomIndexes)
   }
 
   /** Convenience: run a streaming query until all currently-available input

@@ -1,15 +1,38 @@
 package graft
 
+import graft.engine.Engine
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.SparkSession
 
-/** The construction-time injection path: a session built with
-  * `spark.sql.extensions=graft.GraftExtensions` must resolve EVERY native
-  * function by name with no runtime registration — the contract a
-  * driver-owned cluster config relies on. (Runtime registration through
-  * `GraftFunctions.register` is covered by every other spec.) */
+/** Both registration paths serve the one function table: every row of
+  * [[GraftFunctions.table]] must resolve by name through `spark.sql` in a
+  * session built with `SparkSessionExtensions` injection (the contract a
+  * cluster-wide session config relies on) and in a session prepared at
+  * runtime by `Engine.ensureInitialized`. */
 class GraftExtensionsSpec extends SparkSpec {
 
-  test("all six native functions resolve via SparkSessionExtensions injection") {
+  /** One call per table row: its SQL arguments and the value it must give. */
+  private val samples: Map[String, (String, Any)] = Map(
+    GraftFunctions.VecDotName -> ("array(1d, 2d), array(3d, 4d)", 11.0),
+    GraftFunctions.PolyHashName -> ("'abc'", ('a' * 31L + 'b') * 31L + 'c'),
+    GraftFunctions.SubwordEncodeName -> ("'ab', array('a', 'b')", Seq("a", "b")),
+    GraftFunctions.BoundedLevenshteinName -> ("'abc', 'abd', 2", 1),
+    GraftFunctions.NfcNormalizeName -> ("'a\u0301'", "\u00e1"),
+    // empty filter: nothing probes true
+    GraftFunctions.BloomContainsName -> ("'x', unhex(repeat('00', 16)), 5", false),
+    GraftFunctions.DoubleBitsName -> ("1.5d", java.lang.Double.doubleToRawLongBits(1.5)))
+
+  private def names: Seq[String] = GraftFunctions.table.map(_._1.funcName)
+
+  private def assertEveryFunctionResolves(s: SparkSession): Unit = {
+    assert(samples.keySet === names.toSet, "every table row needs exactly one sample")
+    names.foreach { name =>
+      val (args, want) = samples(name)
+      assert(s.sql(s"SELECT $name($args)").head.get(0) === want, name)
+    }
+  }
+
+  test("every function of the table resolves via SparkSessionExtensions injection") {
     val base = spark // force the shared session (and its SparkContext) first
     try {
       SparkSession.clearActiveSession()
@@ -23,23 +46,20 @@ class GraftExtensionsSpec extends SparkSpec {
         .withExtensions(new GraftExtensions)
         .getOrCreate()
       assert(s2 ne base, "expected a fresh session for the extensions path")
-      val r = s2.sql(
-        """SELECT graft_vec_dot(array(1d, 2d), array(3d, 4d)) AS d,
-          |  graft_poly_hash('abc') AS h,
-          |  graft_subword_encode('ab', array('a', 'b')) AS sw,
-          |  graft_levenshtein_bounded('abc', 'abd', 2) AS lev,
-          |  graft_nfc_normalize('a\u0301') AS nfc,
-          |  graft_bloom_contains('x', unhex(repeat('00', 16)), 5) AS bc
-          |""".stripMargin).head
-      assert(r.getDouble(0) === 11.0)
-      assert(r.getLong(1) === ('a' * 31 + 'b') * 31 + 'c')
-      assert(r.getSeq[String](2) === Seq("a", "b"))
-      assert(r.getInt(3) === 1)
-      assert(r.getString(4) === "\u00e1")
-      assert(r.getBoolean(5) === false) // empty filter: nothing probes true
+      assertEveryFunctionResolves(s2)
     } finally {
       SparkSession.setDefaultSession(base)
       SparkSession.setActiveSession(base)
     }
+  }
+
+  test("every function of the table resolves in a session Engine.ensureInitialized prepared") {
+    val s = spark.newSession()
+    val reg = s.sessionState.functionRegistry
+    assert(GraftFunctions.table.forall(f => !reg.functionExists(f._1)),
+      "a fresh session must not already hold graft's functions")
+    Engine.ensureInitialized(s)
+    assertEveryFunctionResolves(s)
+    assert(GraftFunctions.rules.forall(s.experimental.extraOptimizations.contains))
   }
 }

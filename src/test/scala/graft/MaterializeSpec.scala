@@ -84,4 +84,32 @@ class MaterializeSpec extends SparkSpec {
     assert(Seq(raw, mat, mixed).map(Materialize.isMaterialized) === Seq(false, true, true))
     Seq(raw, mat, mixed).foreach(df => assert(windowForm(df) === Materialize.isMaterialized(df)))
   }
+
+  test("Shared.clear drops every entry of the application: checkpoints, values, the stream sketch") {
+    import graft.engine.Shared
+    import graft.streaming.StreamingOps.StreamFpBloom
+    val df = Shared.cached(spark, "memo-spec:df")(spark.range(0, 20, 1, 2).toDF("id"))
+    assert(Shared.cached(spark, "memo-spec:df")(fail("a hit rebuilt")) eq df)
+    assert(persistent(df).nonEmpty && persistent(df).toSet.subsetOf(Shared.backing(spark)))
+    var builds = 0
+    def value() = Shared.cachedValue(spark, "memo-spec:value") { builds += 1; new Object }
+    val v = value()
+    assert((value() eq v) && builds === 1)
+    // The sketch's standing state (two merged batches) differs from what
+    // its store alone rebuilds, so a served hit and a rebuild are told apart.
+    val (path, store) = ("memo-spec-fp-index", Seq("z").toDF("fp"))
+    def fromStore() = StreamFpBloom.getOrRebuild(spark, path, store)
+    StreamFpBloom.mergeIn(spark, path, Seq("a", "b").toDF("fp"))
+    StreamFpBloom.mergeIn(spark, path, Seq("c").toDF("fp"))
+    val standing = fromStore()
+    val rebuilt = DedupOps.buildFingerprintBloom(store, col("fp"), standing.k, standing.mBits)
+    assert(standing.nKeys === 3 && standing.sketch.toSeq != rebuilt.sketch.toSeq)
+
+    Shared.clear(spark)
+    assert(Shared.backing(spark).isEmpty && persistent(df).isEmpty)
+    value()
+    assert(builds === 2)
+    assert(fromStore().sketch.toSeq === rebuilt.sketch.toSeq)
+    Shared.clear(spark)
+  }
 }
