@@ -78,17 +78,14 @@ object Engine {
   }
 
   /** The AQE-floor decision, pure so the pairing contract is testable:
-    * Some(floor) only when the session pinned `spark.buffer.pageSize` at or
-    * below 4m ([[session]] pins 1m) or the operator set the env
-    * override — never for a session with auto-derived task pages. */
-  private[graft] def aqeFloorFor(pageSize: Option[String],
-      envOverride: Option[String]): Option[String] = {
-    val pagePinnedSmall = pageSize.exists(p =>
-      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(p) <= 4L * 1024 * 1024)
-    if (envOverride.isDefined) envOverride
-    else if (pagePinnedSmall) Some("64k")
+    * Some("64k") only when the session pinned `spark.buffer.pageSize` at or
+    * below 4m ([[session]] pins 1m) — never for a session with
+    * auto-derived task pages. */
+  private[graft] def aqeFloorFor(pageSize: Option[String]): Option[String] =
+    if (pageSize.exists(p =>
+        org.apache.spark.network.util.JavaUtils.byteStringAsBytes(p) <= 4L * 1024 * 1024))
+      Some("64k")
     else None
-  }
 
   def ensureInitialized(spark: SparkSession): Unit = schemaCache(spark)
 
@@ -122,13 +119,9 @@ object Engine {
       // pins 1m), i.e. the two knobs now live or die TOGETHER; a
       // session without the page pin (an external consumer, a bare spark-
       // shell) keeps Spark's default floor and can never inherit the
-      // measured floor-without-pages pathology. The env override remains
-      // unconditional — an operator setting SPARK_GRAFT_MIN_PARTITION_SIZE
-      // is stating the pairing explicitly. Results are partition-count-
-      // invariant by construction (bitwise invariance gate).
-      aqeFloorFor(
-        spark.sparkContext.getConf.getOption("spark.buffer.pageSize"),
-        sys.env.get("SPARK_GRAFT_MIN_PARTITION_SIZE")).foreach(
+      // measured floor-without-pages pathology. Results are partition-
+      // count-invariant by construction (bitwise invariance gate).
+      aqeFloorFor(spark.sparkContext.getConf.getOption("spark.buffer.pageSize")).foreach(
         spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", _))
       // Let AQE rewrite sort-merge joins to shuffled-hash at runtime when
       // every post-shuffle build partition fits under this bound (r16,
@@ -140,9 +133,8 @@ object Engine {
       // calibrated build 14.0 s hash vs 16.9 s sort-merge, q118 89 s
       // broadcast vs 103 s when a hint pinned shuffle-hash and blocked the
       // broadcast). 64m bounds per-task build memory (× cores = well under
-      // any sane executor heap); env-overridable.
-      spark.conf.set("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m"))
+      // any sane executor heap).
+      spark.conf.set("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
       graft.functions.GraftFunctions.register(spark)
       spark.experimental.extraOptimizations ++= graft.functions.GraftFunctions.rules
         .filterNot(spark.experimental.extraOptimizations.contains)

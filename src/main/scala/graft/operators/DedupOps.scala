@@ -18,7 +18,8 @@ import graft.engine.Materialize
   *
   * Pair core — one private helper per decision; new generators reuse them:
   * [[bandCollisions]] (band self-join + per-pair band count),
-  * [[minhashMinima]] (md5 → (h1, h2) → per-doc minima), [[sizedCapped]] +
+  * [[minhashMinima]] (md5 → (h1, h2) → per-doc minima, the one signature
+  * aggregate behind [[minhashBandedRows]]), [[sizedCapped]] +
   * [[sharedShingleOverlap]] (set sizes → priced fixed cap → (bucket, sh)
   * self-join), [[simhashBandRows]] (7 × 9-bit band explode), [[pairMass]]
   * (Σ C(n,2) over groups) and [[refuseAbove]] (the priced `raise_error`).
@@ -32,37 +33,12 @@ object DedupOps {
     df.groupBy(md5(content).as("content_hash"))
       .agg(min(id).as("keeper_id"), count(lit(1)).as("n_copies"))
 
-  /** MinHash signature column: for hash function j, h_j(doc) = MIN over the
-    * doc's shingle set of md5(j || ':' || shingle). md5 hex strings compare
-    * lexicographically uniformly, so the string MIN is a valid minwise
-    * hash — and is reproducible in any engine with md5. */
-  def minhashSignature(shingleSet: Column, numHashes: Int): Column =
-    array((0 until numHashes).map { j =>
-      array_min(transform(shingleSet, s => md5(concat(lit(j.toString), lit(":"), s))))
-    }: _*)
-
-  /** X2 (MinHash+LSH): candidate near-dup pairs. Explodes each doc's
-    * signature into (bandKey, doc) rows and self-joins per band — the LSH
-    * bucket join. One minhash per band (r = 1) suits the tiny test corpus
-    * (low true Jaccard); production corpora raise the per-band bar with
-    * [[minhashBandedRows]]'s r = 2..4 to keep buckets selective.
-    * Output: (a_id, b_id, n_shared_bands), a < b, deterministic. */
-  def minhashLshCandidates(docs: DataFrame, id: String, shingleSet: Column,
-      numHashes: Int, bucketCol: Column): DataFrame = {
-    val sigs = docs
-      .select(col(id), bucketCol.as("bucket"), minhashSignature(shingleSet, numHashes).as("sig"))
-      .filter(size(col("sig")) > 0)
-    bandCollisions(
-      sigs.select(col(id), col("bucket"), posexplode(col("sig")).as(Seq("band", "h"))),
-      "h", "n_shared_bands")
-  }
-
-  /** The LSH band self-join: (id, bucket, band, `key`) rows → (a_id, b_id,
+  /** The LSH band self-join: (id, bucket, band, h) rows → (a_id, b_id,
     * `as`), a < b, `as` = the number of bands the pair collides on. */
-  private def bandCollisions(bands: DataFrame, key: String, as: String): DataFrame = {
-    val a = bands.toDF("a_id", "bucket", "band", key)
-    val b = bands.toDF("b_id", "bucket", "band", key)
-    a.join(b, Seq("bucket", "band", key))
+  private def bandCollisions(bands: DataFrame, as: String): DataFrame = {
+    val a = bands.toDF("a_id", "bucket", "band", "h")
+    val b = bands.toDF("b_id", "bucket", "band", "h")
+    a.join(b, Seq("bucket", "band", "h"))
       .filter(col("a_id") < col("b_id"))
       .groupBy(col("a_id"), col("b_id"))
       .agg(count(lit(1)).as(as))
@@ -209,33 +185,18 @@ object DedupOps {
       .agg(greatest(min(col("__df")), lit(floor.toLong)).as("__thr"))
   }
 
-  /** X2 (MinHash+LSH, row form — the scale path): same candidate semantics
-    * as [[minhashLshCandidates]] but over exploded (doc_id, bucket, sh) rows
-    * from [[TextOps.shingleRows]], with Kirsch–Mitzenmacher hashing: ONE
+  /** The signature aggregate behind [[minhashBandedRows]]: (doc_id, bucket,
+    * m0..m{numHashes−1}) over exploded (doc_id, bucket, sh) rows from
+    * [[TextOps.shingleRows]], with Kirsch–Mitzenmacher hashing: ONE
     * codegen'd md5 per shingle split into two 40-bit halves (h1, h2), then
-    * hash function j is min(h1 + j·h2) — a plain hash aggregate. Everything
-    * stays inside WholeStageCodegen (profiled 20× faster than the
-    * interpreted per-j lambda-md5 variant), and 40-bit values keep
-    * h1 + 7·h2 < 2^43, overflow-safe in engines that error on BIGINT
-    * overflow (DuckDB). */
-  def minhashLshCandidatesFromRows(shingles: DataFrame, numHashes: Int,
-      maxDf: Int = 0): DataFrame =
-    bandCollisions(minhashBandRows(shingles, numHashes, maxDf), "h", "n_shared_bands")
-
-  /** The band-signature stage of [[minhashLshCandidatesFromRows]]:
-    * (doc_id, bucket, band, h) rows, one per (doc, band) — the LSH "index
-    * entries". Exposed so incremental dedup can probe a STANDING band index
-    * with fresh documents instead of self-joining a recomputed corpus. */
-  def minhashBandRows(shingles: DataFrame, numHashes: Int,
-      maxDf: Int = 0): DataFrame =
-    minhashMinima(shingles, numHashes, maxDf).select(col("doc_id"), col("bucket"),
-      posexplode(array((0 until numHashes).map(j => col(s"m$j")): _*)).as(Seq("band", "h")))
-
-  /** The signature aggregate both band forms share: (doc_id, bucket,
-    * m0..m{numHashes−1}) with m_j = min over the doc's (optionally df-capped)
-    * shingles of h1 + j·h2, (h1, h2) the two 40-bit halves of md5(sh). */
-  private def minhashMinima(shingles: DataFrame, numHashes: Int, maxDf: Int): DataFrame = {
-    val hashed = (if (maxDf > 0) capShingleDf(shingles, maxDf) else shingles)
+    * m_j = min(h1 + j·h2) — a plain hash aggregate. Everything stays
+    * inside WholeStageCodegen (profiled 20× faster than an interpreted
+    * per-j lambda-md5 signature), and 40-bit values keep h1 + 7·h2 < 2^43,
+    * overflow-safe in engines that error on BIGINT overflow (DuckDB). A df
+    * cap, when wanted, is the caller's ([[capShingleDf]] /
+    * [[capShingleDfQuantile]] on the rows passed in). */
+  private def minhashMinima(shingles: DataFrame, numHashes: Int): DataFrame = {
+    val hashed = shingles
       .withColumn("h", md5(col("sh")))
       .withColumn("h1", conv(substring(col("h"), 1, 10), 16, 10).cast("long"))
       .withColumn("h2", conv(substring(col("h"), 11, 10), 16, 10).cast("long"))
@@ -243,44 +204,49 @@ object DedupOps {
     hashed.groupBy(col("doc_id"), col("bucket")).agg(mins.head, mins.tail: _*)
   }
 
-  /** The r-rows-per-band generalization of [[minhashBandRows]] — the
-    * SELECTIVITY knob the round-7 sf1 audit showed is mandatory on
-    * self-similar corpora. With r = 1 a pair collides on a band whenever
-    * ONE minhash agrees (P = j per band, j = true Jaccard), and under
-    * vocabulary saturation shared hot shingles make that near-certain for
-    * unrelated pairs — the audit measured 27k candidates at sf0.1 /
-    * quadratic growth to sf1 on the global bucket. Banding r minwise
-    * values into one key raises the per-band collision bar to ALL r
-    * agreeing (P = j^r): the classic S-curve P(candidate) = 1 − (1 − j^r)^b
-    * (Broder; MMDS ch.3), which crushes the low-Jaccard mass (j = 0.2,
-    * r=2, b=4: 0.83 → 0.063) while keeping true near-dups (j = 0.9:
-    * 1.0 → 0.98). The band key is the ':'-joined decimal minhash values —
-    * reproducible in any engine with md5 + string_agg, so the query
-    * carrying it keeps a hard hash oracle.
+  /** The MinHash band rows: (doc_id, bucket, band, h), one per (doc,
+    * band) — the LSH "index entries" the candidate self-join
+    * ([[minhashLshCandidatesBanded]]) and a standing-index probe
+    * ([[incrementalLshSuspects]], the streaming suspect operators) both
+    * consume. Band b bands `rowsPerBand` consecutive minhashes into ONE
+    * string key `h`, the ':'-joined decimal minima — reproducible in any
+    * engine with md5 + string_agg, so the query carrying it keeps a hard
+    * hash oracle. r = 1 is this function too: the key is then the one
+    * minimum's decimal string, so collisions are those of the long value.
     *
-    * Same plan shape as r = 1: one codegen'd md5 per shingle, one
-    * (doc, bucket) hash aggregate for all numHashes minima, then a
-    * numHashes/r-row explode — the band join downstream shuffles FEWER
-    * rows than r = 1 (b rows per doc instead of numHashes). */
-  def minhashBandedRows(shingles: DataFrame, numHashes: Int, rowsPerBand: Int,
-      maxDf: Int = 0): DataFrame = {
+    * `rowsPerBand` is the SELECTIVITY knob the round-7 sf1 audit showed is
+    * mandatory on self-similar corpora. With r = 1 a pair collides on a
+    * band whenever ONE minhash agrees (P = j per band, j = true Jaccard),
+    * and under vocabulary saturation shared hot shingles make that
+    * near-certain for unrelated pairs — the audit measured 27k candidates
+    * at sf0.1 / quadratic growth to sf1 on the global bucket. Banding r
+    * minwise values into one key raises the per-band collision bar to ALL
+    * r agreeing (P = j^r): the classic S-curve P(candidate) = 1 − (1 −
+    * j^r)^b (Broder; MMDS ch.3), which crushes the low-Jaccard mass
+    * (j = 0.2, r=2, b=4: 0.83 → 0.063) while keeping true near-dups
+    * (j = 0.9: 1.0 → 0.98). r = 1 suits the tiny test corpus (low true
+    * Jaccard); production corpora use r = 2..4.
+    *
+    * Plan shape at every r: one codegen'd md5 per shingle, one (doc,
+    * bucket) hash aggregate for all numHashes minima, then a
+    * numHashes/r-row explode — b rows per doc. */
+  def minhashBandedRows(shingles: DataFrame, numHashes: Int, rowsPerBand: Int): DataFrame = {
     require(rowsPerBand >= 1 && numHashes % rowsPerBand == 0,
       s"rowsPerBand=$rowsPerBand must divide numHashes=$numHashes")
     val keys = (0 until numHashes / rowsPerBand).map { b =>
       concat_ws(":", (0 until rowsPerBand).map(i => col(s"m${b * rowsPerBand + i}")): _*)
     }
-    minhashMinima(shingles, numHashes, maxDf).select(col("doc_id"), col("bucket"),
-      posexplode(array(keys: _*)).as(Seq("band", "bk")))
+    minhashMinima(shingles, numHashes).select(col("doc_id"), col("bucket"),
+      posexplode(array(keys: _*)).as(Seq("band", "h")))
   }
 
-  /** X2 (banded MinHash+LSH): [[minhashLshCandidatesFromRows]] with the
-    * r-rows-per-band S-curve of [[minhashBandedRows]] — candidates form
-    * only where all r minhashes of some band agree. (a_id, b_id,
-    * n_shared_bands), a < b, deterministic. */
+  /** X2 (MinHash+LSH): candidate near-dup pairs — the band self-join over
+    * [[minhashBandedRows]]; candidates form only where all r minhashes of
+    * some band agree inside a bucket. (a_id, b_id, n_shared_bands), a < b,
+    * deterministic. */
   def minhashLshCandidatesBanded(shingles: DataFrame, numHashes: Int,
-      rowsPerBand: Int, maxDf: Int = 0): DataFrame =
-    bandCollisions(minhashBandedRows(shingles, numHashes, rowsPerBand, maxDf),
-      "bk", "n_shared_bands")
+      rowsPerBand: Int): DataFrame =
+    bandCollisions(minhashBandedRows(shingles, numHashes, rowsPerBand), "n_shared_bands")
 
   /** Default ceiling for [[subCapPairMassGuard]]: 200 M pre-aggregation
     * join rows. Calibration (round-13): q22's fixed df ≤ 50 pool measures
@@ -666,24 +632,6 @@ object DedupOps {
       .union(pairs.select(col("a_id"), col("b_id"), col("b_id").as("doc_id"), lit(1).as("side")))
   }
 
-  /** X2 (n-gram Jaccard verifier): true Jaccard over shingle sets for pairs
-    * sharing ≥1 shingle inside a bucket. The shingle join generates only
-    * pairs with nonzero intersection — never the cross product. */
-  def jaccardPairs(docs: DataFrame, id: String, shingleSet: Column, bucketCol: Column): DataFrame = {
-    val sets = docs.select(col(id), bucketCol.as("bucket"), shingleSet.as("shset"))
-      .filter(size(col("shset")) > 0)
-    val sizes = sets.select(col(id), col("bucket"), size(col("shset")).cast("long").as("setsize"))
-    val ex = sets.select(col(id), col("bucket"), explode(col("shset")).as("sh"))
-    val common = ex.toDF("a_id", "bucket", "sh")
-      .join(ex.toDF("b_id", "bucket", "sh"), Seq("bucket", "sh"))
-      .filter(col("a_id") < col("b_id"))
-      .groupBy("a_id", "b_id").agg(count(lit(1)).as("n_common"))
-    common
-      .join(sizes.select(col(id).as("a_id"), col("setsize").as("a_size")), "a_id")
-      .join(sizes.select(col(id).as("b_id"), col("setsize").as("b_size")), "b_id")
-      .withColumn("jaccard", round(overlapJaccard, 6))
-  }
-
   /** X2 (embedding-cosine near-dup): pairs whose embedding cosine meets the
     * threshold. Candidate generation is bounded by (coarse cell ×
     * sign-LSH bucket): the cell is the IVF-style quantizer / partition key,
@@ -951,7 +899,7 @@ object DedupOps {
 
   /** Edit-distance VERIFIER over an arbitrary candidate pair list — the
     * composition a production pipeline runs: a recall-tuned generator
-    * (MinHash-LSH bands, [[minhashLshCandidatesFromRows]]) bounds the pair
+    * (MinHash-LSH bands, [[minhashLshCandidatesBanded]]) bounds the pair
     * volume by near-dup density, then each candidate pays one
     * threshold-bounded `levenshtein` (banded DP, early exit). Length-band
     * blocking ([[editDistancePairs]]) is complete for the token metric but
@@ -1147,16 +1095,17 @@ object DedupOps {
   /** MinHash estimator calibration: for every LSH candidate pair, the
     * sketch's Jaccard ESTIMATE (fraction of the `numHashes` minwise hashes
     * that agree — the unbiased estimator the banding math is built on) next
-    * to the EXACT Jaccard, both over the SAME capped shingle universe (set
-    * sizes recomputed AFTER the df cap, unlike [[jaccardPairsFromRows]]'s
-    * full-set sizes — an estimator audit must compare like with like). This
+    * to the EXACT Jaccard, both over the SAME shingle universe (set sizes
+    * taken over the rows passed in, so a caller that caps them first gets
+    * capped sizes, unlike [[jaccardPairsFromRows]]'s full-set sizes — an
+    * estimator audit must compare like with like). This
     * is the sketch-quality report a dedup pipeline ships before trusting a
     * signature width: E[|est − exact|] ≈ √(J(1−J)/k) tells you whether k
-    * hashes justify the banding thresholds ([[minhashLshCandidates]]'
+    * hashes justify the banding thresholds ([[minhashBandedRows]]'
     * r/b tuning reads directly off it).
     *
-    * Plan shape: the capped shingle stream is touched twice — once through
-    * [[minhashBandRows]]' signature aggregate (k·docs rows), once through
+    * Plan shape: the shingle stream is touched twice — once through
+    * [[minhashBandedRows]]' r = 1 signature rows (k·docs rows), once through
     * the bounded shared-shingle join (q22's generator, same df-cap bound on
     * candidate volume); both self-joins are equi-joins on (bucket, key).
     * The estimate needs NO extra work: the band join's match count IS
@@ -1165,12 +1114,11 @@ object DedupOps {
     * join — a calibration row without an exact value is noise, not signal.
     * Output: (a_id, b_id, n_equal_hashes, est_jaccard, jaccard, abs_err),
     * unrounded — callers round for cross-engine comparison. */
-  def minhashCalibration(shingles: DataFrame, numHashes: Int, maxDf: Int = 0): DataFrame = {
-    val capped = if (maxDf > 0) capShingleDf(shingles, maxDf) else shingles
-    val cand = bandCollisions(minhashBandRows(capped, numHashes), "h", "n_equal_hashes")
-    // Sizes over the CAPPED stream (no second cap): the estimator and the
+  def minhashCalibration(shingles: DataFrame, numHashes: Int): DataFrame = {
+    val cand = bandCollisions(minhashBandedRows(shingles, numHashes, 1), "n_equal_hashes")
+    // Sizes over the same stream (no cap here): the estimator and the
     // exact side must see the same sets.
-    calibrationReport(cand, sharedShingleOverlap(sizedCapped(capped, maxDf = 0,
+    calibrationReport(cand, sharedShingleOverlap(sizedCapped(shingles, maxDf = 0,
       budget = 0L, site = "minhashCalibration")), numHashes)
   }
 
@@ -1212,7 +1160,7 @@ object DedupOps {
     // blocks; no second materialization is needed at this level.
     // Per-hash minwise rows over the SAME capped universe the exact side
     // sees; one row per (doc, hash index) under the global bucket.
-    val sig = minhashBandRows(cappedShingles, numHashes)
+    val sig = minhashBandedRows(cappedShingles, numHashes, 1)
       .select(col("doc_id"), col("band").as("__j"), col("h"))
     val est = pairMembers(cand).join(sig, "doc_id")
       .groupBy(col("a_id"), col("b_id"), col("__j"), col("h"))

@@ -55,16 +55,6 @@ object TextOps {
   def stopwordCount(tokens: Column, stops: Seq[String] = defaultStopwords): Column =
     size(filter(tokens, t => t.isin(stops: _*))).cast("long")
 
-  /** Word 3-gram shingles (1-based element_at matches DuckDB list indexing,
-    * so oracle SQL mirrors this expression exactly). Empty array when the
-    * document has fewer than 3 tokens — sequence() would otherwise produce a
-    * descending range. */
-  def shingles3(tokens: Column): Column =
-    when(size(tokens) >= 3,
-      transform(sequence(lit(0), size(tokens) - lit(3)),
-        i => concat_ws(" ", element_at(tokens, i + 1), element_at(tokens, i + 2), element_at(tokens, i + 3))))
-      .otherwise(array().cast("array<string>"))
-
   /** Exploded distinct word-3-gram shingles as ROWS: (doc_id, bucket, sh).
     *
     * Lambda-free on purpose: higher-order array functions (`transform`,

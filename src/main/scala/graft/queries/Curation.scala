@@ -359,9 +359,10 @@ object Curation extends QueryGroup {
     "q78_split_leakage_audit",
     (s, dir) => {
       val docs = Tables.documents(s, dir)
-      val pairs = graft.operators.DedupOps.minhashLshCandidatesFromRows(
-        graft.operators.TextOps.shingleRows(docs, col("doc_id"), lit("all"), col("text")),
-        8, maxDf = 50)
+      val pairs = graft.operators.DedupOps.minhashLshCandidatesBanded(
+        graft.operators.DedupOps.capShingleDf(
+          graft.operators.TextOps.shingleRows(docs, col("doc_id"), lit("all"), col("text")), 50),
+        8, 1)
       val splits = docs.select(col("doc_id"),
         CurationOps.hashSplit(col("doc_id"),
           Seq("train" -> 80, "valid" -> 90, "test" -> 100)).as("split"))

@@ -57,7 +57,7 @@ object Dedup extends QueryGroup {
   private val q23 = QueryDef(
     "q23_minhash_lsh_pairs",
     (s, dir) => DedupOps
-      .minhashLshCandidatesFromRows(docShingleRows(s, dir), 8, maxDf = 50)
+      .minhashLshCandidatesBanded(DedupOps.capShingleDf(docShingleRows(s, dir), 50), 8, 1)
       .orderBy(col("a_id"), col("b_id")),
     Some(s"""WITH ${OracleSql.shingleSetsCte(3, "doc_id, source")},
            |ex0 AS (SELECT doc_id, source, unnest(shset) AS sh FROM sets WHERE len(shset) > 0),
@@ -301,8 +301,9 @@ object Dedup extends QueryGroup {
     "q74_incremental_lsh_dedup",
     (s, dir) => {
       val docs = Tables.documents(s, dir)
-      def bands(d: org.apache.spark.sql.DataFrame) = DedupOps.minhashBandRows(
-        TextOps.shingleRows(d, col("doc_id"), lit("all"), col("text")), 8, maxDf = 50)
+      def bands(d: org.apache.spark.sql.DataFrame) = DedupOps.minhashBandedRows(
+        DedupOps.capShingleDf(TextOps.shingleRows(d, col("doc_id"), lit("all"), col("text")), 50),
+        8, 1)
       val fresh = docs.filter(col("source").isin(newSources: _*))
       val flagged = DedupOps.incrementalLshSuspects(
         bands(fresh), bands(docs.filter(!col("source").isin(newSources: _*))))

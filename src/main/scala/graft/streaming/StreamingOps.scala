@@ -248,58 +248,53 @@ object StreamingOps {
     * small-file accumulation a 10⁵-micro-batch deployment would otherwise
     * hit. 0 disables. */
   def streamingLshSuspects(docs: DataFrame, checkpoint: String, indexPath: String,
-      outPath: String, numHashes: Int = 8, maxDf: Int = 0,
+      outPath: String, numHashes: Int = 8,
       compactEvery: Int = 16): DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val spark = batch.sparkSession
-        Materialize.scoped(graft.operators.DedupOps.minhashBandRows(
-          graft.operators.TextOps.shingleRows(
-            batch.toDF(), col("doc_id"), lit("all"), col("text")),
-          numHashes, maxDf)) { bands => // probed AND registered — compute once
-          flagAndRegisterBands(batch.toDF(), id, bands, indexPath, outPath, compactEvery)
-        }
+    foreachBatchHandoff(docs, checkpoint) { (batch, id) =>
+      Materialize.scoped(graft.operators.DedupOps.minhashBandedRows(
+        graft.operators.TextOps.shingleRows(batch, col("doc_id"), lit("all"), col("text")),
+        numHashes, 1)) { bands => // probed AND registered — compute once
+        flagAndRegister(batch, id, bands, LshKeys, indexPath, outPath, compactEvery)
       }
+    }
 
-  /** The probe→flag→register tail both lexical streaming dedup operators
-    * share ([[streamingLshSuspects]], [[streamingCalibratedLshSuspects]]):
-    * LEFT SEMI probe of the standing band index (strictly earlier
-    * batches), the within-batch earlier-id collision that closes the
-    * intra-batch blind spot (doc_id order stands in for arrival order
-    * inside a batch), the flag join back onto the batch rows, the output
-    * append, and the band registration under `batch=<id>`. Factored so a
+  /** What a suspect operator's index rows are keyed by: the id column,
+    * the columns a collision must agree on, and the output flag's name. */
+  private final case class SuspectKeys(id: String, on: Seq[String], flag: String)
+  private val LshKeys = SuspectKeys("doc_id", Seq("bucket", "band", "h"), "lsh_suspect")
+
+  /** The probe→flag→register tail all three streaming suspect operators
+    * share ([[streamingLshSuspects]], [[streamingCalibratedLshSuspects]],
+    * [[streamingSemanticSuspects]]): compact the standing index, LEFT SEMI
+    * probe it (strictly earlier batches only), add the within-batch
+    * earlier-id collisions that close the intra-batch blind spot (id order
+    * stands in for arrival order inside a batch), flag the batch rows
+    * (rows without index entries — docs too short to shingle, or whose
+    * every shingle a cap dropped — are never suspects), append them, and
+    * register the batch's own rows under `batch=<id>`. Factored so a
     * change to the replay contract or the blind-spot logic cannot drift
-    * between the two operators. `decorate` attaches variant-specific
+    * between the operators. `decorate` attaches variant-specific
     * observability columns before the append. Index state lives in a
     * [[StandingStore]] (raw per-batch partitions + periodic compaction);
     * the identity merge is correct for a semi-join index — row
     * multiplicity never changes a LEFT SEMI probe. */
-  private def flagAndRegisterBands(batch: DataFrame, id: Long, bands: DataFrame,
-      indexPath: String, outPath: String, compactEvery: Int,
+  private def flagAndRegister(batch: DataFrame, id: Long, rows: DataFrame,
+      keys: SuspectKeys, indexPath: String, outPath: String, compactEvery: Int,
       decorate: DataFrame => DataFrame = identity): Unit = {
     val spark = batch.sparkSession
     StandingStore.maybeCompact(spark, indexPath, id, compactEvery, identity)
-    val index = StandingStore.readBefore(spark, indexPath, id)
-    val flagged = index match {
-      case Some(idx) => graft.operators.DedupOps.incrementalLshSuspects(bands, idx)
-      case None => bands.select(col("doc_id")).distinct()
-        .withColumn("lsh_suspect", lit(false))
-    }
-    val intra = bands.as("p").join(bands.as("e"),
-        col("p.bucket") === col("e.bucket") && col("p.band") === col("e.band") &&
-          col("p.h") === col("e.h") && col("e.doc_id") < col("p.doc_id"),
-        "left_semi")
-      .select(col("doc_id")).distinct().withColumn("__intra", lit(true))
-    decorate(batch.join(flagged, Seq("doc_id"), "left")
-        .join(intra, Seq("doc_id"), "left")
-        // docs too short to shingle — or whose every shingle the cap
-        // dropped — have no bands and are never suspects
-        .withColumn("lsh_suspect",
-          coalesce(col("lsh_suspect"), lit(false)) || coalesce(col("__intra"), lit(false)))
-        .drop("__intra"))
+    val earlier = StandingStore.readBefore(spark, indexPath, id)
+      .map(idx => rows.join(idx, keys.on, "left_semi"))
+    val intra = rows.as("p").join(rows.as("e"),
+      keys.on.map(k => col(s"p.$k") === col(s"e.$k")).reduce(_ && _) &&
+        col(s"e.${keys.id}") < col(s"p.${keys.id}"),
+      "left_semi")
+    val suspects = (earlier.toSeq :+ intra).map(_.select(col(keys.id))).reduce(_ union _)
+      .distinct().withColumn(keys.flag, lit(true))
+    decorate(batch.join(suspects, Seq(keys.id), "left")
+        .withColumn(keys.flag, coalesce(col(keys.flag), lit(false))))
       .write.mode("append").parquet(outPath)
-    StandingStore.writeRaw(bands, indexPath, id)
+    StandingStore.writeRaw(rows, indexPath, id)
   }
 
   /** X2 (streaming, CALIBRATED): [[streamingLshSuspects]] with the
@@ -346,37 +341,35 @@ object StreamingOps {
       indexPath: String, statsPath: String, outPath: String,
       numHashes: Int = 8, rowsPerBand: Int = 2, q: Double = 0.95,
       floor: Int = 2, compactEvery: Int = 16): DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val spark = batch.sparkSession
-        import graft.operators.{DedupOps, TextOps}
-        StandingStore.maybeCompact(spark, statsPath, id, compactEvery,
-          _.groupBy(col("bucket"), col("sh")).agg(sum(col("__df")).as("__df")))
-        Materialize.scoped(
-            TextOps.shingleRows(batch.toDF(), col("doc_id"), lit("all"), col("text"))) { sh =>
-          // df-counted, capped, AND banded — computed once
-          val batchDf = sh.groupBy(col("bucket"), col("sh")).agg(count(lit(1)).as("__df"))
-          val standing = StandingStore.readBefore(spark, statsPath, id) match {
-            case Some(p) => p.unionByName(batchDf)
-              .groupBy(col("bucket"), col("sh")).agg(sum(col("__df")).as("__df"))
-            case None => batchDf
-          }
-          val thr = DedupOps.dfQuantileThreshold(standing.select(col("__df")), q, floor)
-          val capped = sh.join(standing, Seq("bucket", "sh"))
-            .crossJoin(broadcast(thr))
-            .filter(col("__df") <= col("__thr"))
-            .select(col("doc_id"), col("bucket"), col("sh"))
-          Materialize.scoped(DedupOps.minhashBandedRows(capped, numHashes, rowsPerBand)
-              .withColumnRenamed("bk", "h")) { bands => // probed AND registered — compute once
-            flagAndRegisterBands(batch.toDF(), id, bands, indexPath, outPath, compactEvery,
-              decorate = out => out.crossJoin(broadcast(thr))
-                .withColumn("df_threshold", col("__thr"))
-                .drop("__thr"))
-            StandingStore.writeRaw(batchDf, statsPath, id)
-          }
+    foreachBatchHandoff(docs, checkpoint) { (batch, id) =>
+      val spark = batch.sparkSession
+      import graft.operators.{DedupOps, TextOps}
+      StandingStore.maybeCompact(spark, statsPath, id, compactEvery,
+        _.groupBy(col("bucket"), col("sh")).agg(sum(col("__df")).as("__df")))
+      Materialize.scoped(
+          TextOps.shingleRows(batch, col("doc_id"), lit("all"), col("text"))) { sh =>
+        // df-counted, capped, AND banded — computed once
+        val batchDf = sh.groupBy(col("bucket"), col("sh")).agg(count(lit(1)).as("__df"))
+        val standing = StandingStore.readBefore(spark, statsPath, id) match {
+          case Some(p) => p.unionByName(batchDf)
+            .groupBy(col("bucket"), col("sh")).agg(sum(col("__df")).as("__df"))
+          case None => batchDf
+        }
+        val thr = DedupOps.dfQuantileThreshold(standing.select(col("__df")), q, floor)
+        val capped = sh.join(standing, Seq("bucket", "sh"))
+          .crossJoin(broadcast(thr))
+          .filter(col("__df") <= col("__thr"))
+          .select(col("doc_id"), col("bucket"), col("sh"))
+        // probed AND registered — compute once
+        Materialize.scoped(DedupOps.minhashBandedRows(capped, numHashes, rowsPerBand)) { bands =>
+          flagAndRegister(batch, id, bands, LshKeys, indexPath, outPath, compactEvery,
+            decorate = out => out.crossJoin(broadcast(thr))
+              .withColumn("df_threshold", col("__thr"))
+              .drop("__thr"))
+          StandingStore.writeRaw(batchDf, statsPath, id)
         }
       }
+    }
 
   /** X2/X3 (streaming): the EMBEDDING analogue of [[streamingLshSuspects]]
     * — incremental SEMANTIC near-dup suspect flagging. Each micro-batch
@@ -394,34 +387,15 @@ object StreamingOps {
   def streamingSemanticSuspects(embs: DataFrame, checkpoint: String, indexPath: String,
       outPath: String, tables: Seq[Seq[Seq[Double]]],
       compactEvery: Int = 16): DataStreamWriter[org.apache.spark.sql.Row] =
-    embs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val spark = batch.sparkSession
-        StandingStore.maybeCompact(spark, indexPath, id, compactEvery, identity)
-        Materialize.scoped(batch.toDF() // probed AND registered — compute the buckets once
-            .select(col("vec_id"), explode(graft.operators.SimilarityOps.tableBuckets(
-              col("embedding").cast("array<double>"), tables)).as("tb"))
-            .select(col("vec_id"), col("tb.t").as("t"), col("tb.b").as("b"))) { buckets =>
-          val index = StandingStore.readBefore(spark, indexPath, id)
-          val cross = index match {
-            case Some(idx) => buckets.join(idx, Seq("t", "b"), "left_semi")
-              .select(col("vec_id")).distinct()
-            case None => buckets.select(col("vec_id")).filter(lit(false))
-          }
-          val intra = buckets.as("p").join(buckets.as("e"),
-              col("p.t") === col("e.t") && col("p.b") === col("e.b") &&
-                col("e.vec_id") < col("p.vec_id"),
-              "left_semi")
-            .select(col("vec_id")).distinct()
-          val suspects = cross.union(intra).distinct()
-            .withColumn("sem_suspect", lit(true))
-          batch.toDF().join(suspects, Seq("vec_id"), "left")
-            .withColumn("sem_suspect", coalesce(col("sem_suspect"), lit(false)))
-            .write.mode("append").parquet(outPath)
-          StandingStore.writeRaw(buckets, indexPath, id)
-        }
+    foreachBatchHandoff(embs, checkpoint) { (batch, id) =>
+      Materialize.scoped(batch // probed AND registered — compute the buckets once
+          .select(col("vec_id"), explode(graft.operators.SimilarityOps.tableBuckets(
+            col("embedding").cast("array<double>"), tables)).as("tb"))
+          .select(col("vec_id"), col("tb.t").as("t"), col("tb.b").as("b"))) { buckets =>
+        flagAndRegister(batch, id, buckets, SuspectKeys("vec_id", Seq("t", "b"), "sem_suspect"),
+          indexPath, outPath, compactEvery)
       }
+    }
 
   /** Streaming distinct-count monitor — the deterministic HLL
     * ([[graft.operators.SketchOps]], q126) on the streaming path: each
@@ -449,21 +423,19 @@ object StreamingOps {
   def streamingHllMonitor(events: DataFrame, key: String, checkpoint: String,
       registersPath: String, outPath: String, p: Int = 8,
       compactEvery: Int = 16): DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val spark = batch.sparkSession
-        import graft.operators.SketchOps
-        StandingStore.maybeCompact(spark, registersPath, id, compactEvery,
-          _.groupBy(col("bucket")).agg(max(col("reg")).as("reg")))
-        StandingStore.writeRaw(
-          SketchOps.hllRegisters(batch.toDF(), col(key), p), registersPath, id)
-        val standing = StandingStore.readThrough(spark, registersPath, id).get
-          .groupBy(col("bucket")).agg(max(col("reg")).as("reg"))
-        SketchOps.hllEstimate(standing, p)
-          .withColumn("batch", lit(id))
-          .write.mode("append").parquet(outPath)
-      }
+    foreachBatchHandoff(events, checkpoint) { (batch, id) =>
+      val spark = batch.sparkSession
+      import graft.operators.SketchOps
+      StandingStore.maybeCompact(spark, registersPath, id, compactEvery,
+        _.groupBy(col("bucket")).agg(max(col("reg")).as("reg")))
+      StandingStore.writeRaw(
+        SketchOps.hllRegisters(batch, col(key), p), registersPath, id)
+      val standing = StandingStore.readThrough(spark, registersPath, id).get
+        .groupBy(col("bucket")).agg(max(col("reg")).as("reg"))
+      SketchOps.hllEstimate(standing, p)
+        .withColumn("batch", lit(id))
+        .write.mode("append").parquet(outPath)
+    }
 
   /** X1×X4×X7 STREAMING ingest-admission funnel — q150's five batch stages
     * under the streaming envelope (the last un-streamed production
@@ -523,101 +495,99 @@ object StreamingOps {
       entropyMin: Double = 4.0, z: Double = 3.5,
       compactEvery: Int = 16,
       streamFpIndexPath: Option[String] = None): DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val spark = batch.sparkSession
-        import graft.operators.{CurationOps, DedupOps, TextOps}
-        import org.apache.spark.sql.expressions.Window
-        StandingStore.maybeCompact(spark, urlIndexPath, id, compactEvery,
-          _.select(col("curl")).distinct())
-        StandingStore.maybeCompact(spark, statsPath, id, compactEvery,
-          _.groupBy(col("source"), col("n_chars"), col("kept"), col("novel"),
-              col("h_ok"))
-            .agg(sum(col("n")).as("n")))
-        Materialize.scoped(batch.toDF()) { b =>
-          // (1) revisit dedup: within-batch min doc_id per curl, then the
-          // standing index (strictly earlier batches) — first batch wins.
-          val intraKept = b.withColumn("__rn", row_number().over(
-              Window.partitionBy(col("curl")).orderBy(col("doc_id"))))
-            .filter(col("__rn") === 1).drop("__rn")
-          Materialize.scoped(StandingStore.readBefore(spark, urlIndexPath, id) match {
-            case Some(seen) => intraKept.join(
-              seen.select(col("curl")).distinct(), Seq("curl"), "left_anti")
-            case None => intraKept
-          }) { kept =>
-            // (2) novelty vs the standing corpus; (3) entropy on the novel
-            // sliver only (exactly q150's evaluation set).
-            val corpusNovel = DedupOps.bloomPrunedNovel(kept, "fp", corpusFps, corpusBloom)
-            // (2b, opt-in) novelty vs the STREAM so far: content-dedup within
-            // the batch (first doc_id per fp — the curl-stage rule), then the
-            // Bloom-accelerated probe of fps admitted by earlier batches.
-            Materialize.scoped(streamFpIndexPath match {
-              case None => corpusNovel
-              case Some(fpPath) =>
-                StandingStore.maybeCompact(spark, fpPath, id, compactEvery,
-                  _.select(col("fp")).distinct())
-                val intra = corpusNovel.withColumn("__fn", row_number().over(
-                    Window.partitionBy(col("fp")).orderBy(col("doc_id"))))
-                  .filter(col("__fn") === 1).drop("__fn")
-                StandingStore.readBefore(spark, fpPath, id) match {
-                  case Some(seen) =>
-                    val seenFps = seen.select(col("fp")).distinct()
-                    DedupOps.bloomPrunedNovel(intra, "fp", seenFps,
-                      StreamFpBloom.getOrRebuild(spark, fpPath, seenFps))
-                  case None => intra
-                }
-            }) { novel =>
-              streamFpIndexPath.foreach { fpPath =>
-                val outFps = novel.select(col("fp")).distinct()
-                StandingStore.writeRaw(outFps, fpPath, id)
-                StreamFpBloom.mergeIn(spark, fpPath, outFps)
+    foreachBatchHandoff(docs, checkpoint) { (batch, id) =>
+      val spark = batch.sparkSession
+      import graft.operators.{CurationOps, DedupOps, TextOps}
+      import org.apache.spark.sql.expressions.Window
+      StandingStore.maybeCompact(spark, urlIndexPath, id, compactEvery,
+        _.select(col("curl")).distinct())
+      StandingStore.maybeCompact(spark, statsPath, id, compactEvery,
+        _.groupBy(col("source"), col("n_chars"), col("kept"), col("novel"),
+            col("h_ok"))
+          .agg(sum(col("n")).as("n")))
+      Materialize.scoped(batch) { b =>
+        // (1) revisit dedup: within-batch min doc_id per curl, then the
+        // standing index (strictly earlier batches) — first batch wins.
+        val intraKept = b.withColumn("__rn", row_number().over(
+            Window.partitionBy(col("curl")).orderBy(col("doc_id"))))
+          .filter(col("__rn") === 1).drop("__rn")
+        Materialize.scoped(StandingStore.readBefore(spark, urlIndexPath, id) match {
+          case Some(seen) => intraKept.join(
+            seen.select(col("curl")).distinct(), Seq("curl"), "left_anti")
+          case None => intraKept
+        }) { kept =>
+          // (2) novelty vs the standing corpus; (3) entropy on the novel
+          // sliver only (exactly q150's evaluation set).
+          val corpusNovel = DedupOps.bloomPrunedNovel(kept, "fp", corpusFps, corpusBloom)
+          // (2b, opt-in) novelty vs the STREAM so far: content-dedup within
+          // the batch (first doc_id per fp — the curl-stage rule), then the
+          // Bloom-accelerated probe of fps admitted by earlier batches.
+          Materialize.scoped(streamFpIndexPath match {
+            case None => corpusNovel
+            case Some(fpPath) =>
+              StandingStore.maybeCompact(spark, fpPath, id, compactEvery,
+                _.select(col("fp")).distinct())
+              val intra = corpusNovel.withColumn("__fn", row_number().over(
+                  Window.partitionBy(col("fp")).orderBy(col("doc_id"))))
+                .filter(col("__fn") === 1).drop("__fn")
+              StandingStore.readBefore(spark, fpPath, id) match {
+                case Some(seen) =>
+                  val seenFps = seen.select(col("fp")).distinct()
+                  DedupOps.bloomPrunedNovel(intra, "fp", seenFps,
+                    StreamFpBloom.getOrRebuild(spark, fpPath, seenFps))
+                case None => intra
               }
-              val hOk = TextOps.docCharEntropy(novel, col("doc_id"), col("text"))
-                .select(col("doc_id"), (col("h") >= entropyMin).as("__h_ok"))
-              // register this batch's partials: flag histogram + curl keys
-              val partial = b.select(col("doc_id"), col("source"), col("n_chars"))
-                .join(kept.select(col("doc_id"))
-                  .withColumn("__kept", lit(true)), Seq("doc_id"), "left")
-                .join(novel.select(col("doc_id"))
-                  .withColumn("__novel", lit(true)), Seq("doc_id"), "left")
-                .join(hOk, Seq("doc_id"), "left")
-                .groupBy(col("source"), col("n_chars"),
-                  coalesce(col("__kept"), lit(false)).as("kept"),
-                  coalesce(col("__novel"), lit(false)).as("novel"),
-                  coalesce(col("__h_ok"), lit(false)).as("h_ok"))
-                .agg(count(lit(1)).as("n"))
-              StandingStore.writeRaw(partial, statsPath, id)
-              StandingStore.writeRaw(kept.select(col("curl")).distinct(),
-                urlIndexPath, id)
-              // (4)+(5): funnel REDERIVED over the merged standing histogram —
-              // the snapshot that equals batch q150 on the prefix through `id`.
-              Materialize.scoped(StandingStore.readThrough(spark, statsPath, id).get
-                  .groupBy(col("source"), col("n_chars"), col("kept"), col("novel"),
-                    col("h_ok"))
-                  .agg(sum(col("n")).as("n"))) { merged =>
-                val fence = CurationOps.robustStatsWeighted(
-                  merged, "source", col("n_chars"), col("n"))
-                val funnel = merged.groupBy(col("source"))
-                  .agg(sum(col("n")).as("n_fetched"),
-                    sum(when(col("kept"), col("n")).otherwise(0L)).as("n_url_unique"),
-                    sum(when(col("kept") && col("novel"), col("n")).otherwise(0L))
-                      .as("n_novel"))
-                val admitted = merged.join(broadcast(fence), Seq("source"))
-                  .filter(col("kept") && col("novel") && col("h_ok") &&
-                    abs(col("n_chars") - col("med")) <= lit(z) * col("mad"))
-                  .groupBy(col("source")).agg(sum(col("n")).as("n_admitted"))
-                StandingStore.writeRaw(
-                  funnel.join(admitted, Seq("source"), "left")
-                    .select(col("source"), col("n_fetched"), col("n_url_unique"),
-                      col("n_novel"),
-                      coalesce(col("n_admitted"), lit(0L)).as("n_admitted")),
-                  outPath, id)
-              }
+          }) { novel =>
+            streamFpIndexPath.foreach { fpPath =>
+              val outFps = novel.select(col("fp")).distinct()
+              StandingStore.writeRaw(outFps, fpPath, id)
+              StreamFpBloom.mergeIn(spark, fpPath, outFps)
+            }
+            val hOk = TextOps.docCharEntropy(novel, col("doc_id"), col("text"))
+              .select(col("doc_id"), (col("h") >= entropyMin).as("__h_ok"))
+            // register this batch's partials: flag histogram + curl keys
+            val partial = b.select(col("doc_id"), col("source"), col("n_chars"))
+              .join(kept.select(col("doc_id"))
+                .withColumn("__kept", lit(true)), Seq("doc_id"), "left")
+              .join(novel.select(col("doc_id"))
+                .withColumn("__novel", lit(true)), Seq("doc_id"), "left")
+              .join(hOk, Seq("doc_id"), "left")
+              .groupBy(col("source"), col("n_chars"),
+                coalesce(col("__kept"), lit(false)).as("kept"),
+                coalesce(col("__novel"), lit(false)).as("novel"),
+                coalesce(col("__h_ok"), lit(false)).as("h_ok"))
+              .agg(count(lit(1)).as("n"))
+            StandingStore.writeRaw(partial, statsPath, id)
+            StandingStore.writeRaw(kept.select(col("curl")).distinct(),
+              urlIndexPath, id)
+            // (4)+(5): funnel REDERIVED over the merged standing histogram —
+            // the snapshot that equals batch q150 on the prefix through `id`.
+            Materialize.scoped(StandingStore.readThrough(spark, statsPath, id).get
+                .groupBy(col("source"), col("n_chars"), col("kept"), col("novel"),
+                  col("h_ok"))
+                .agg(sum(col("n")).as("n"))) { merged =>
+              val fence = CurationOps.robustStatsWeighted(
+                merged, "source", col("n_chars"), col("n"))
+              val funnel = merged.groupBy(col("source"))
+                .agg(sum(col("n")).as("n_fetched"),
+                  sum(when(col("kept"), col("n")).otherwise(0L)).as("n_url_unique"),
+                  sum(when(col("kept") && col("novel"), col("n")).otherwise(0L))
+                    .as("n_novel"))
+              val admitted = merged.join(broadcast(fence), Seq("source"))
+                .filter(col("kept") && col("novel") && col("h_ok") &&
+                  abs(col("n_chars") - col("med")) <= lit(z) * col("mad"))
+                .groupBy(col("source")).agg(sum(col("n")).as("n_admitted"))
+              StandingStore.writeRaw(
+                funnel.join(admitted, Seq("source"), "left")
+                  .select(col("source"), col("n_fetched"), col("n_url_unique"),
+                    col("n_novel"),
+                    coalesce(col("n_admitted"), lit(0L)).as("n_admitted")),
+                outPath, id)
             }
           }
         }
       }
+    }
 
   /** Driver-held Bloom over the growing stream-fingerprint index
     * ([[streamingAdmissionFunnel]]'s opt-in stage): per batch the admitted

@@ -6,21 +6,17 @@ import graft.engine.Engine
   * AQE coalescing floor and the 1m task-page pin were measured to only be
   * safe TOGETHER (floor alone under auto-derived ~16m pages made the minhash
   * family 3-4× worse), so Engine must arm the floor only for sessions that
-  * pinned the pages small — or when the operator states the pairing
-  * explicitly via the env override.
+  * pinned the pages small.
   */
 class EngineConfSpec extends SparkSpec {
 
   test("floor engages only when pageSize is pinned small") {
     // In-repo builders: 1m pages → paired floor.
-    assert(Engine.aqeFloorFor(Some("1m"), None).contains("64k"))
-    assert(Engine.aqeFloorFor(Some("4m"), None).contains("64k"))
+    assert(Engine.aqeFloorFor(Some("1m")).contains("64k"))
+    assert(Engine.aqeFloorFor(Some("4m")).contains("64k"))
     // Auto-derived or large pages → Spark's default floor stays.
-    assert(Engine.aqeFloorFor(None, None).isEmpty)
-    assert(Engine.aqeFloorFor(Some("16m"), None).isEmpty)
-    // Env override is the operator stating the pairing — unconditional.
-    assert(Engine.aqeFloorFor(None, Some("128k")).contains("128k"))
-    assert(Engine.aqeFloorFor(Some("16m"), Some("1m")).contains("1m"))
+    assert(Engine.aqeFloorFor(None).isEmpty)
+    assert(Engine.aqeFloorFor(Some("16m")).isEmpty)
   }
 
   test("unpinned session keeps Spark's default floor after init") {
@@ -43,7 +39,7 @@ class EngineConfSpec extends SparkSpec {
       assert(c("spark.sql.session.timeZone") === "UTC")
       assert(c("spark.ui.enabled") === "false")
       // The page pin is what arms the paired AQE floor.
-      assert(Engine.aqeFloorFor(c.get("spark.buffer.pageSize"), None).contains("64k"))
+      assert(Engine.aqeFloorFor(c.get("spark.buffer.pageSize")).contains("64k"))
     }
   }
 }

@@ -19,21 +19,8 @@ class ExtensionOpsSpec extends SparkSpec {
       .agg(max("n_copies")).as[Long].head() === 1L)
   }
 
-  test("X2: identical docs agree on all minhashes; jaccard of identical shingle sets is 1") {
-    val docs = Seq((1L, "a b c d e", "s"), (2L, "a b c d e", "s"), (3L, "x y z w v", "s"))
-      .toDF("doc_id", "text", "source")
-      .withColumn("shset", array_distinct(TextOps.shingles3(TextOps.tokenize(col("text")))))
-    val cand = DedupOps.minhashLshCandidates(docs, "doc_id", col("shset"), 8, col("source"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getAs[Long]("n_shared_bands")).toMap
-    assert(cand((1L, 2L)) === 8L) // identical sets agree on every hash
-    assert(!cand.contains((1L, 3L))) // disjoint sets share no minhash (w.h.p.)
-    val jac = DedupOps.jaccardPairs(docs, "doc_id", col("shset"), col("source"))
-      .filter(col("a_id") === 1 && col("b_id") === 2)
-      .select("jaccard").as[Double].head()
-    assert(jac === 1.0)
-  }
-
-  test("X2 row form: shingleRows + row jaccard + KM minhash match array-form semantics") {
+  test("X2: shingleRows + row jaccard + r = 1 KM minhash — identical docs agree on " +
+    "all 8 hashes with jaccard 1, disjoint docs share none") {
     val docs = Seq((1L, "a b c d e", "s"), (2L, "a b c d e", "s"), (3L, "x y z w v", "s"))
       .toDF("doc_id", "text", "source")
     val rows = TextOps.shingleRows(docs, col("doc_id"), col("source"), col("text"))
@@ -51,7 +38,7 @@ class ExtensionOpsSpec extends SparkSpec {
     val r1 = TextOps.shingleRows(docs, col("doc_id"), col("source"), col("text"), n = 1)
     assert(r1.filter(col("doc_id") === 1).select("sh").as[String].collect().toSet ===
       Set("a", "b", "c", "d", "e"))
-    val cand = DedupOps.minhashLshCandidatesFromRows(rows, 8)
+    val cand = DedupOps.minhashLshCandidatesBanded(rows, 8, rowsPerBand = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getAs[Long]("n_shared_bands")).toMap
     assert(cand((1L, 2L)) === 8L) // identical sets agree on every hash
     assert(!cand.contains((1L, 3L))) // disjoint sets share no minhash (w.h.p.)
@@ -68,7 +55,7 @@ class ExtensionOpsSpec extends SparkSpec {
       (i.toLong, s"hot hot hot $body", "s")
     }.toDF("doc_id", "text", "source")
     val rows = TextOps.shingleRows(docs, col("doc_id"), col("source"), col("text"))
-    val r1 = DedupOps.minhashLshCandidatesFromRows(rows, 8)
+    val r1 = DedupOps.minhashLshCandidatesBanded(rows, 8, rowsPerBand = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getAs[Long]("n_shared_bands")).toMap
     val banded = DedupOps.minhashLshCandidatesBanded(rows, 8, rowsPerBand = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getAs[Long]("n_shared_bands")).toMap
@@ -82,11 +69,16 @@ class ExtensionOpsSpec extends SparkSpec {
     }
     // the S-curve payoff: strictly fewer candidates than r=1 on skew
     assert(banded.size < r1.size, s"banded=${banded.size} r1=${r1.size}")
-    // r = 1 through the banded form (string band key) is the long-keyed
-    // r = 1 generator pair-for-pair, n_shared_bands included
-    val banded1 = DedupOps.minhashLshCandidatesBanded(rows, 8, rowsPerBand = 1)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getAs[Long]("n_shared_bands")).toMap
-    assert(banded1 === r1)
+    // r = 1 (string band key) is pair-for-pair what the long-keyed r = 1
+    // generator produced on this corpus, n_shared_bands included: the dup
+    // pair agrees on all 8 hashes, and every other pair of these 10 docs
+    // (each one's minimum on a single hash is the shared hot shingle) on 1
+    val hotMin = Seq(0L, 1L, 9L, 10L, 15L, 27L, 28L, 29L, 33L, 37L)
+    val expected = hotMin.combinations(2).map { case Seq(a, b) =>
+      (a, b) -> (if (a == 0L && b == 1L) 8L else 1L)
+    }.toMap
+    assert(expected.size === 45)
+    assert(r1 === expected)
   }
 
   test("X2: pairMass is the sum of C(n, 2) over groups, 0 on an empty input") {
@@ -110,7 +102,7 @@ class ExtensionOpsSpec extends SparkSpec {
     val capped = DedupOps.jaccardPairsFromRows(rows, maxDf = 10)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     assert(capped === Set((0L, 1L)))
-    val mh = DedupOps.minhashLshCandidatesFromRows(rows, 8, maxDf = 10)
+    val mh = DedupOps.minhashLshCandidatesBanded(DedupOps.capShingleDf(rows, 10), 8, 1)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     assert(mh === Set((0L, 1L)))
   }
@@ -132,11 +124,11 @@ class ExtensionOpsSpec extends SparkSpec {
       numHashes = 8, rowsPerBand = 2))
     assert(viaDefault === byHand)
     assert(viaDefault.exists { case (a, b, _) => a == 0L && b == 1L }, "true dup survives")
-    // FixedCap opt-in reproduces the legacy r=1 fixed-cap candidate pairs
-    // (band keys differ in type — string vs long — but collision sets don't).
+    // FixedCap opt-in reproduces the r=1 fixed-cap candidate pairs that
+    // q23/q78 compose by hand (cap at the call site, then band).
     val viaFixed = tuples(DedupOps.nearDupCandidates(rows,
       DedupOps.CandidateGen.FixedCap(maxDf = 10, numHashes = 8)))
-    val legacy = tuples(DedupOps.minhashLshCandidatesFromRows(rows, 8, maxDf = 10))
+    val legacy = tuples(DedupOps.minhashLshCandidatesBanded(DedupOps.capShingleDf(rows, 10), 8, 1))
     assert(viaFixed === legacy)
     // The one-call verified form == generate + verify composed by hand.
     val v1 = DedupOps.nearDupVerifiedPairs(rows, minJaccard = 0.5)
@@ -515,8 +507,8 @@ class ExtensionOpsSpec extends SparkSpec {
       (10L, "w1 w2 w3 w4 w5 w6"),      // identical -> all bands collide
       (11L, "z1 z2 z3 z4 z5 z6")       // disjoint shingles -> no collision
     ).toDF("doc_id", "text")
-    def bands(d: org.apache.spark.sql.DataFrame) = DedupOps.minhashBandRows(
-      TextOps.shingleRows(d, col("doc_id"), lit("all"), col("text")), 4)
+    def bands(d: org.apache.spark.sql.DataFrame) = DedupOps.minhashBandedRows(
+      TextOps.shingleRows(d, col("doc_id"), lit("all"), col("text")), 4, 1)
     val got = DedupOps.incrementalLshSuspects(bands(fresh), bands(corpus))
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(got === Map(10L -> true, 11L -> false))

@@ -99,6 +99,41 @@ class StreamingOpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("X2-stream: a band index written with a long h key flags a repeat of its " +
+    "document or refuses the batch, never admits it unflagged") {
+    import graft.operators.{DedupOps, TextOps}
+    import graft.streaming.StandingStore
+    val input = MemoryStream[(Long, String)](spark)
+    val docs = input.toDF().toDF("doc_id", "text")
+    val (cp, idx, out) = (tmp("lshl_cp"), tmp("lshl_idx"), tmp("lshl_out"))
+    val text = "the quick brown fox jumps over the lazy dog again and again"
+    val q = StreamingOps.streamingLshSuspects(docs, cp, idx, out).start()
+    try {
+      input.addData((1L, text))
+      q.processAllAvailable()
+      // Rewrite batch 0's partition in the older layout, where the r = 1
+      // band key h was the long minimum itself (the string key is its
+      // decimal form).
+      val legacy = DedupOps.minhashBandedRows(TextOps.shingleRows(
+          Seq((1L, text)).toDF("doc_id", "text"), col("doc_id"), lit("all"), col("text")), 8, 1)
+        .withColumn("h", col("h").cast("long"))
+      StandingStore.writeRaw(legacy, idx, 0)
+      assert(spark.read.parquet(s"$idx/raw/batch=0").schema("h").dataType ===
+        org.apache.spark.sql.types.LongType)
+      input.addData((2L, text))
+      val refused =
+        try { q.processAllAvailable(); false }
+        catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => true }
+      if (!refused) {
+        val flags = spark.read.parquet(out)
+          .select(col("doc_id"), col("lsh_suspect"))
+          .as[(Long, Boolean)].collect().toMap
+        assert(flags === Map(1L -> false, 2L -> true),
+          "a repeat probed against a long-keyed index must be flagged")
+      }
+    } finally q.stop()
+  }
+
   test("X2-stream calibrated: standing df stats recalibrate the quantile cap to the full-corpus threshold") {
     import graft.operators.{DedupOps, TextOps}
     val input = MemoryStream[(Long, String)](spark)
