@@ -19,8 +19,24 @@ class ExtensionOpsSpec extends SparkSpec {
       .agg(max("n_copies")).as[Long].head() === 1L)
   }
 
-  test("X2: shingleRows + row jaccard + r = 1 KM minhash — identical docs agree on " +
-    "all 8 hashes with jaccard 1, disjoint docs share none") {
+  test("X2: identical docs agree on all minhashes; jaccard of identical shingle sets is 1") {
+    val docs = Seq((1L, "a b c d e", "s"), (2L, "a b c d e", "s"), (3L, "x y z w v", "s"))
+      .toDF("doc_id", "text", "source")
+    val rows = TextOps.shingleRows(docs, col("doc_id"), col("source"), col("text"))
+    val cand = DedupOps.minhashLshCandidatesBanded(rows, 8, rowsPerBand = 1)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getAs[Long]("n_shared_bands")).toMap
+    assert(cand((1L, 2L)) === 8L) // identical sets agree on every hash
+    assert(!cand.contains((1L, 3L))) // disjoint sets share no minhash (w.h.p.)
+    val jac = DedupOps.jaccardPairsFromRows(rows)
+      .filter(col("a_id") === 1 && col("b_id") === 2)
+      .select("jaccard").as[Double].head()
+    assert(jac === 1.0)
+  }
+
+  test("X2 row form: shingleRows + row jaccard + KM minhash match array-form semantics") {
+    // The array-signature form is gone; its semantics are the assertions
+    // it made on these docs (3-shingles, jaccard 1, 8 agreeing hashes, no
+    // disjoint candidate), which the row form must still make.
     val docs = Seq((1L, "a b c d e", "s"), (2L, "a b c d e", "s"), (3L, "x y z w v", "s"))
       .toDF("doc_id", "text", "source")
     val rows = TextOps.shingleRows(docs, col("doc_id"), col("source"), col("text"))
