@@ -3,6 +3,7 @@ package graft
 import graft.engine.{Engine, Hygiene}
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 
 import scala.collection.mutable
 
@@ -10,15 +11,20 @@ import scala.collection.mutable
   * [[Engine.session]] — the same confs Bench and Verify run:
   *
   * {{{
-  * graft.Diag time      <sfDir> <name…>  — two timed count() runs each
+  * graft.Diag time      <sfDir> <name…>  — two timed runs each, with the
+  *                                          Spark jobs each launched
   *                                          (run1 − run2 ≈ codegen/JIT)
-  * graft.Diag profile   <sfDir> <name…>  — one warm count() per name plus
+  * graft.Diag profile   <sfDir> <name…>  — one warm run per name plus
   *                                          a per-stage cost table
   * graft.Diag plan      <sfDir> <name…>  — explain("formatted")
   * graft.Diag plan-exec <sfDir> <name…>  — collect(), then the post-AQE
   *                                          executed plan (ReusedExchange,
   *                                          skew splits, coalescing)
   * }}}
+  *
+  * A run ([[drain]]) executes the name's own result plan, as `collect()`
+  * would, and drops the rows on the executors. `count()` would time a
+  * different plan: Catalyst prunes its final sort and projections.
   *
   * A name is a `SparkEntry.queries` key or `shared:<build>` for a
   * SharedPipelines build reconstructed without its session cache (see
@@ -75,9 +81,13 @@ object Diag {
     catch { case _: Throwable => () }
     mode match {
       case "time" => for (n <- names; i <- 1 to 2) {
+        val listener = new StageListener
+        spark.sparkContext.addSparkListener(listener)
         val t0 = System.nanoTime()
-        resolve(n).count()
-        println(f"TIME $n run$i ${(System.nanoTime() - t0) / 1e9}%.3f")
+        drain(resolve(n))
+        val sec = (System.nanoTime() - t0) / 1e9
+        val (jobs, _) = listener.drained(spark)
+        println(f"TIME $n run$i $sec%.3f jobs=$jobs")
         // Same untimed between-run hygiene as Bench, so isolated Diag
         // numbers and in-bench numbers measure the same thing.
         Hygiene.sweep(spark)
@@ -99,34 +109,54 @@ object Diag {
     spark.stop()
   }
 
+  /** Runs `df`'s own result plan to the end and drops its rows on the
+    * executors: the jobs and stages of `collect()` without shipping the
+    * result to the driver. */
+  private def drain(df: DataFrame): Unit = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("drain"))(
+      qe.executedPlan.execute().foreach(_ => ()))
+  }
+
+  /** Counts the jobs and keeps one [[StageRow]] per completed stage while
+    * it is attached. Written on the listener bus thread. */
+  private final class StageListener extends SparkListener {
+    private val stages = mutable.Map[Int, StageRow]()
+    private var jobs = 0
+    override def onJobStart(j: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = synchronized {
+      val si = sc.stageInfo
+      val m = si.taskMetrics
+      if (m != null) stages(si.stageId) = StageRow(
+        si.name, si.numTasks, m.executorRunTime, m.executorCpuTime / 1000000L,
+        m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
+        m.memoryBytesSpilled + m.diskBytesSpilled, m.inputMetrics.bytesRead)
+    }
+
+    /** Detaches once the bus has delivered every event posted so far;
+      * returns the job count and the stage rows. */
+    def drained(spark: SparkSession): (Int, Seq[StageRow]) = {
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty", classOf[Long]).invoke(bus, Long.box(30000L))
+      sc.removeSparkListener(this)
+      synchronized((jobs, stages.values.toSeq))
+    }
+  }
+
   /** One warm-up run, then one listened run printing a PER-STAGE cost
     * table — executor run and CPU time, shuffle read/write, input, spill,
     * task count and the stage's name (its last call site) — plus the job
     * count, the scheduler-overhead proxy that dominates tiny tiers. */
   private def profile(spark: SparkSession, n: String, resolve: String => DataFrame): Unit = {
-    // Written on the listener bus thread, read here after the run.
-    val listener = new SparkListener {
-      val stages = mutable.Map[Int, StageRow]()
-      var jobs = 0
-      override def onJobStart(j: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = synchronized {
-        val si = sc.stageInfo
-        val m = si.taskMetrics
-        if (m != null) stages(si.stageId) = StageRow(
-          si.name, si.numTasks, m.executorRunTime, m.executorCpuTime / 1000000L,
-          m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
-          m.memoryBytesSpilled + m.diskBytesSpilled, m.inputMetrics.bytesRead)
-      }
-    }
-    resolve(n).count() // warm run (codegen/JIT), not profiled
+    drain(resolve(n)) // warm run (codegen/JIT), not profiled
     Hygiene.sweep(spark)
+    val listener = new StageListener
     spark.sparkContext.addSparkListener(listener)
     val t0 = System.nanoTime()
-    resolve(n).count()
+    drain(resolve(n))
     val wall = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(500) // the listener bus is async; let the tail drain
-    spark.sparkContext.removeSparkListener(listener)
-    val (jobs, rows) = listener.synchronized((listener.jobs, listener.stages.values.toSeq))
+    val (jobs, rows) = listener.drained(spark)
     println(f"\n===== $n wall=$wall%.3f s jobs=$jobs stages=${rows.size} =====")
     println(f"${"runMs"}%7s ${"cpuMs"}%7s ${"tasks"}%5s ${"shR_KB"}%8s ${"shW_KB"}%8s ${"in_KB"}%8s ${"spill"}%6s  name")
     rows.sortBy(-_.runMs).take(25).foreach { r =>

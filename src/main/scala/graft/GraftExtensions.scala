@@ -11,16 +11,19 @@ import org.apache.spark.sql.SparkSessionExtensions
   * --conf spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * It injects every row of [[GraftFunctions.table]] and every rule of
-  * [[GraftFunctions.rules]]. Sessions graft does not construct (one handed to
-  * `SparkEntry.queries`) get the same table and rules at runtime from
-  * `graft.engine.Engine.ensureInitialized`, which registers the functions
-  * through the session's FunctionRegistry and adds the rules to
-  * `experimental.extraOptimizations`.
+  * It injects every row of [[GraftFunctions.table]], every rule of
+  * [[GraftFunctions.rules]] and every strategy of
+  * [[GraftFunctions.strategies]]. Sessions graft does not construct (one
+  * handed to `SparkEntry.queries`) get the same table, rules and strategies
+  * at runtime from `graft.engine.Engine.ensureInitialized`, which registers
+  * the functions through the session's FunctionRegistry and adds the rules
+  * to `experimental.extraOptimizations` and the strategies to
+  * `experimental.extraStrategies`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.rules.foreach(r => ext.injectOptimizerRule(_ => r))
+    GraftFunctions.strategies.foreach(st => ext.injectPlannerStrategy(_ => st))
     GraftFunctions.table.foreach(ext.injectFunction)
   }
 }

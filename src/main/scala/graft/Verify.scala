@@ -30,6 +30,8 @@ import java.nio.file.{Files, Paths}
   *   bitwise compare; parallelisms from SPARK_GRAFT_CPUS_AB (default
   *   "<cpus>,<cpus-1>"), record at <outBase>/invariance.json
   * }}}
+  * Several queries are ONE comma-separated argument; a further argument is
+  * refused with an error naming it (exit 2), never ignored.
   */
 object Verify {
 
@@ -200,22 +202,40 @@ object Verify {
     csv.map(a => SparkEntry.knownQueries(a.split(",").toSet, "the query list"))
       .getOrElse(SparkEntry.queries.keySet)
 
+  private val usage = "usage: graft.Verify [--invariance] <sfDir> <outDir> [q1,q2,...]"
+
+  /** Both modes' positional arguments: sfDir, outDir and at most ONE
+    * comma-separated query list. A surplus argument (a second query name
+    * given space-separated) is an error naming it, never dropped. */
+  private[graft] def positionals(args: Seq[String]): Either[String, (String, String, Option[String])] =
+    args match {
+      case Seq(sfDir, outDir) => Right((sfDir, outDir, None))
+      case Seq(sfDir, outDir, names) => Right((sfDir, outDir, Some(names)))
+      case Seq(_, _, _, surplus @ _*) => Left(s"surplus argument(s) ${surplus.mkString(" ")}; " +
+        "name several queries as ONE comma-separated argument")
+      case _ => Left("missing <sfDir> or <outDir>")
+    }
+
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("--invariance")) {
-      val Array(sfDir, outBase) = args.slice(1, 3)
-      val only = queryList(args.drop(3).headOption)
+    val invarianceMode = args.headOption.contains("--invariance")
+    val (sfDir, outDir, names) =
+      positionals(args.toSeq.drop(if (invarianceMode) 1 else 0)) match {
+        case Right(p) => p
+        case Left(error) =>
+          System.err.println(s"[verify] $error\n$usage")
+          sys.exit(2)
+      }
+    val only = queryList(names)
+    if (invarianceMode) {
       // Default: this box's cores and one fewer — always two different,
       // coprime partition counts.
       val cpus = math.max(2, Engine.defaultCpus)
       val ab = sys.env.getOrElse("SPARK_GRAFT_CPUS_AB", s"$cpus,${cpus - 1}")
         .split(",").map(_.trim.toInt)
       require(ab.length == 2, "SPARK_GRAFT_CPUS_AB must be 'A,B'")
-      invariance(sfDir, outBase, only, ab(0), ab(1))
+      invariance(sfDir, outDir, only, ab(0), ab(1))
       return
     }
-    // args: <sfDir> <outDir> [comma-separated query names — default all]
-    val Array(sfDir, outDir) = args.take(2)
-    val only = queryList(args.drop(2).headOption)
     val spark = Engine.session()
     val failures = dump(spark, sfDir, outDir, SparkEntry.queries.filter(kv => only(kv._1)))
     def q(s: String): String = "\"" + jsonEscape(s) + "\""

@@ -4,9 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 
 /** One-time session preparation: nanos-as-long parquet reading, and
-  * graft's native functions and optimizer rules (`GraftFunctions.table` and
-  * `GraftFunctions.rules`, the ones `graft.GraftExtensions` injects into a
-  * session it builds).
+  * graft's native functions, optimizer rules and planner strategies
+  * (`GraftFunctions.table`, `.rules` and `.strategies`, the ones
+  * `graft.GraftExtensions` injects into a session it builds).
+  *
+  * A prepared session sorts a small query result in one task: a global
+  * sort at the plan root whose input is estimated at most
+  * `spark.sql.autoBroadcastJoinThreshold` runs without the range-sampling
+  * job (`graft.plans.GatherSmallSorts`); setting the threshold to -1 turns
+  * that off with broadcast joins.
   *
   * The driver CONSTRUCTS the SparkSession (the contract hands
   * `SparkEntry.queries` a ready session), so there is no builder hook to
@@ -138,6 +144,8 @@ object Engine {
       graft.functions.GraftFunctions.register(spark)
       spark.experimental.extraOptimizations ++= graft.functions.GraftFunctions.rules
         .filterNot(spark.experimental.extraOptimizations.contains)
+      spark.experimental.extraStrategies = graft.functions.GraftFunctions.strategies
+        .filterNot(spark.experimental.extraStrategies.contains) ++ spark.experimental.extraStrategies
       val fresh = new SchemaCache
       sessions.put(spark, fresh)
       fresh

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.plans.SargableTimestampRules
+import graft.plans.{GatherSmallSorts, GatherStrategy, SargableTimestampRules}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.functions.{call_function, lit, typedlit}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
 import scala.reflect.{ClassTag, classTag}
@@ -484,7 +485,14 @@ object NfcNormalize {
   * [[table]]; both registration paths iterate it: [[register]] at runtime
   * (from `Engine.ensureInitialized`, for sessions graft does not build) and
   * [[graft.GraftExtensions]] at builder time. [[rules]] lists the optimizer
-  * rules beside it. */
+  * rules beside it and [[strategies]] the planner strategies those rules
+  * need.
+  *
+  * One of the rules is an optimizer contract, not a rewrite of equal
+  * plans: [[graft.plans.GatherSmallSorts]] sorts a result whose estimated
+  * input is at most `spark.sql.autoBroadcastJoinThreshold` in one task (no
+  * range-sampling job); its `Gather` node plans only through
+  * [[graft.plans.GatherStrategy]], so the two always register together. */
 object GraftFunctions {
 
   val VecDotName = "graft_vec_dot"
@@ -513,7 +521,10 @@ object GraftFunctions {
     native(DoubleBitsName)(e => DoubleBits(e(0))))
 
   /** The optimizer rules graft adds beside its functions. */
-  private[graft] val rules: Seq[Rule[LogicalPlan]] = Seq(SargableTimestampRules)
+  private[graft] val rules: Seq[Rule[LogicalPlan]] = Seq(SargableTimestampRules, GatherSmallSorts)
+
+  /** The planner strategies for the logical nodes [[rules]] insert. */
+  private[graft] val strategies: Seq[SparkStrategy] = Seq(GatherStrategy)
 
   private val byName: Map[String, Native] = table.map(f => f._1.funcName -> f).toMap
 

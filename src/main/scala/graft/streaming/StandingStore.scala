@@ -224,10 +224,36 @@ object StandingStore {
     }
   }
 
-  /** Run [[compact]] every `every` batches (0 = never). The cadence test
-    * is on the batch id, so a replayed batch re-runs exactly the
-    * compactions its first attempt ran. */
+  /** Run [[compact]] every `every` batches (0 = never); true when it ran.
+    * The cadence test is on the batch id, so a replayed batch re-runs
+    * exactly the compactions its first attempt ran. */
   def maybeCompact(spark: SparkSession, root: String, id: Long, every: Int,
-      merge: DataFrame => DataFrame): Unit =
-    if (every > 0 && id > 0 && id % every == 0) compact(spark, root, id, merge)
+      merge: DataFrame => DataFrame): Boolean = {
+    val due = every > 0 && id > 0 && id % every == 0
+    if (due) compact(spark, root, id, merge)
+    due
+  }
+
+  /** TYPE GUARD: `standing` (state read from `root`) must type every key
+    * column as the batch's `rows` do. A store written by an older form of
+    * its operator (a MinHash band index with a long `h`, from before the
+    * band key became a string) would serve the probe through a cross-type
+    * comparison, and the batch's own partition would then put a second
+    * type for the column beside the first, which every later read fails
+    * on (`PARQUET_COLUMN_DATA_TYPE_MISMATCH`). Call it before the batch
+    * writes anything; like the legacy-layout guard it refuses loudly and
+    * names the migration. */
+  def requireKeyTypes(root: String, standing: DataFrame, rows: DataFrame,
+      keys: Seq[String]): Unit = {
+    def typeOf(df: DataFrame, k: String): String =
+      df.schema.find(_.name == k).map(_.dataType.simpleString).getOrElse("absent")
+    val clash = keys.filter(k => typeOf(standing, k) != typeOf(rows, k))
+    require(clash.isEmpty,
+      s"StandingStore: the state at $root types ${clash.map(k =>
+        s"$k as ${typeOf(standing, k)}").mkString(", ")}, but this batch types " +
+        s"${clash.map(k => s"$k as ${typeOf(rows, k)}").mkString(", ")}: it was " +
+        "written by an older form of its operator. Rebuild it: restart the " +
+        s"stream with a fresh checkpoint and an empty $root and replay the " +
+        "corpus — refusing to write a second type beside the first.")
+  }
 }

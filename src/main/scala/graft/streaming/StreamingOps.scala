@@ -271,7 +271,10 @@ object StreamingOps {
     * stands in for arrival order inside a batch), flag the batch rows
     * (rows without index entries — docs too short to shingle, or whose
     * every shingle a cap dropped — are never suspects), append them, and
-    * register the batch's own rows under `batch=<id>`. Factored so a
+    * register the batch's own rows under `batch=<id>`. An index whose key
+    * types differ from the batch's (one written by an older band form)
+    * refuses the batch before it writes anything
+    * ([[StandingStore.requireKeyTypes]]). Factored so a
     * change to the replay contract or the blind-spot logic cannot drift
     * between the operators. `decorate` attaches variant-specific
     * observability columns before the append. Index state lives in a
@@ -282,8 +285,10 @@ object StreamingOps {
       keys: SuspectKeys, indexPath: String, outPath: String, compactEvery: Int,
       decorate: DataFrame => DataFrame = identity): Unit = {
     val spark = batch.sparkSession
-    StandingStore.maybeCompact(spark, indexPath, id, compactEvery, identity)
-    val earlier = StandingStore.readBefore(spark, indexPath, id)
+    val standing = StandingStore.readBefore(spark, indexPath, id)
+    standing.foreach(StandingStore.requireKeyTypes(indexPath, _, rows, keys.on))
+    val compacted = StandingStore.maybeCompact(spark, indexPath, id, compactEvery, identity)
+    val earlier = (if (compacted) StandingStore.readBefore(spark, indexPath, id) else standing)
       .map(idx => rows.join(idx, keys.on, "left_semi"))
     val intra = rows.as("p").join(rows.as("e"),
       keys.on.map(k => col(s"p.$k") === col(s"e.$k")).reduce(_ && _) &&

@@ -8,7 +8,10 @@ import org.apache.spark.sql.SparkSession
   * [[GraftFunctions.table]] must resolve by name through `spark.sql` in a
   * session built with `SparkSessionExtensions` injection (the contract a
   * cluster-wide session config relies on) and in a session prepared at
-  * runtime by `Engine.ensureInitialized`. */
+  * runtime by `Engine.ensureInitialized`. Both paths also bring in the
+  * optimizer rules and the planner strategies their nodes need, so a small
+  * root sort plans as one gathered task on either; a repeated
+  * `ensureInitialized` adds nothing twice. */
 class GraftExtensionsSpec extends SparkSpec {
 
   /** One call per table row: its SQL arguments and the value it must give. */
@@ -23,6 +26,14 @@ class GraftExtensionsSpec extends SparkSpec {
     GraftFunctions.DoubleBitsName -> ("1.5d", java.lang.Double.doubleToRawLongBits(1.5)))
 
   private def names: Seq[String] = GraftFunctions.table.map(_._1.funcName)
+
+  /** A small root sort plans through `GatherStrategy` as a `GatherExec`. */
+  private def assertSmallSortGathers(s: SparkSession): Unit = {
+    val df = s.range(0, 100, 1, 4).orderBy(org.apache.spark.sql.functions.desc("id")).as[Long](s.implicits.newLongEncoder)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("Gather") && !plan.contains("rangepartitioning"), plan)
+    assert(df.collect().toSeq.map(_.longValue) === (99L to 0L by -1L))
+  }
 
   private def assertEveryFunctionResolves(s: SparkSession): Unit = {
     assert(samples.keySet === names.toSet, "every table row needs exactly one sample")
@@ -47,6 +58,9 @@ class GraftExtensionsSpec extends SparkSpec {
         .getOrCreate()
       assert(s2 ne base, "expected a fresh session for the extensions path")
       assertEveryFunctionResolves(s2)
+      assert(GraftFunctions.strategies.forall(
+        s2.sessionState.planner.extraPlanningStrategies.contains))
+      assertSmallSortGathers(s2)
     } finally {
       SparkSession.setDefaultSession(base)
       SparkSession.setActiveSession(base)
@@ -61,5 +75,17 @@ class GraftExtensionsSpec extends SparkSpec {
     Engine.ensureInitialized(s)
     assertEveryFunctionResolves(s)
     assert(GraftFunctions.rules.forall(s.experimental.extraOptimizations.contains))
+    assert(GraftFunctions.strategies.forall(s.experimental.extraStrategies.contains))
+    assertSmallSortGathers(s)
+  }
+
+  test("a second Engine.ensureInitialized adds neither a rule nor a strategy twice") {
+    val s = spark.newSession()
+    Engine.ensureInitialized(s)
+    Engine.ensureInitialized(s)
+    GraftFunctions.rules.foreach(r =>
+      assert(s.experimental.extraOptimizations.count(_ == r) === 1, r.ruleName))
+    GraftFunctions.strategies.foreach(st =>
+      assert(s.experimental.extraStrategies.count(_ == st) === 1, st.toString))
   }
 }

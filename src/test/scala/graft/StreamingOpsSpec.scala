@@ -101,6 +101,10 @@ class StreamingOpsSpec extends SparkSpec {
 
   test("X2-stream: a band index written with a long h key flags a repeat of its " +
     "document or refuses the batch, never admits it unflagged") {
+    // Three batches: the one that built the index, then two repeats of its
+    // document. A batch that served the long-keyed index once and then
+    // registered a string-keyed partition beside it would make every later
+    // read of the index fail, so no string partition may land.
     import graft.operators.{DedupOps, TextOps}
     import graft.streaming.StandingStore
     val input = MemoryStream[(Long, String)](spark)
@@ -120,16 +124,30 @@ class StreamingOpsSpec extends SparkSpec {
       StandingStore.writeRaw(legacy, idx, 0)
       assert(spark.read.parquet(s"$idx/raw/batch=0").schema("h").dataType ===
         org.apache.spark.sql.types.LongType)
-      input.addData((2L, text))
-      val refused =
-        try { q.processAllAvailable(); false }
-        catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => true }
-      if (!refused) {
-        val flags = spark.read.parquet(out)
-          .select(col("doc_id"), col("lsh_suspect"))
-          .as[(Long, Boolean)].collect().toMap
-        assert(flags === Map(1L -> false, 2L -> true),
-          "a repeat probed against a long-keyed index must be flagged")
+      var refusal: Option[Throwable] = None
+      for (doc <- Seq(2L, 3L) if refusal.isEmpty) {
+        input.addData((doc, text))
+        try q.processAllAvailable()
+        catch { case e: org.apache.spark.sql.streaming.StreamingQueryException => refusal = Some(e) }
+      }
+      refusal match {
+        case Some(e) =>
+          val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .map(t => String.valueOf(t.getMessage)).toSeq
+          assert(messages.exists(m => m.contains("h as bigint") && m.contains("Rebuild")),
+            s"a refusal must name the clashing key type and the rebuild: ${messages.mkString(" | ")}")
+        case None =>
+          val flags = spark.read.parquet(out)
+            .select(col("doc_id"), col("lsh_suspect"))
+            .as[(Long, Boolean)].collect().toMap
+          assert(flags === Map(1L -> false, 2L -> true, 3L -> true),
+            "a repeat probed against a long-keyed index must be flagged")
+      }
+      val partitions = Files.list(java.nio.file.Paths.get(s"$idx/raw")).toArray.toSeq
+        .map(_.toString).filter(_.contains("batch="))
+      partitions.foreach { p =>
+        assert(spark.read.parquet(p).schema("h").dataType === org.apache.spark.sql.types.LongType,
+          s"$p registered a second key type beside the long one")
       }
     } finally q.stop()
   }

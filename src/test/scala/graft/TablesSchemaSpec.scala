@@ -2,10 +2,8 @@ package graft
 
 import java.nio.file.Files
 import java.time.LocalDateTime
-import java.util.concurrent.atomic.AtomicInteger
 
 import graft.engine.{Engine, Tables}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -19,34 +17,6 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 class TablesSchemaSpec extends SparkSpec {
 
   private val tiers = Seq("sf0.001", "sf0.01", "sf0.1").map(t => s"/root/testdata/$t")
-
-  /** Let every posted listener event be delivered. */
-  private def drainListenerBus(): Unit = {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("waitUntilEmpty", classOf[Long]).invoke(bus, Long.box(30000L))
-  }
-
-  /** Spark jobs that `body` launches from this thread. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID.toString
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("graft.spec.tag") == tag)
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.spec.tag", tag)
-    try body
-    finally {
-      sc.setLocalProperty("graft.spec.tag", null)
-      drainListenerBus()
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
-  }
 
   test("the cached schema is the inferred schema for every table on every tier") {
     Engine.ensureInitialized(spark) // the inferring read below runs the same confs

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Verify's failure contract: a thrown query must never leave an earlier
   * run's dump behind for the oracle check to pass as stale, and must be
-  * listed in failures.json. */
+  * listed in failures.json; an argument Verify would not use is refused. */
 class VerifySpec extends SparkSpec {
 
   test("a throwing query leaves no dump dir and one failures.json entry") {
@@ -31,6 +31,16 @@ class VerifySpec extends SparkSpec {
     assert(Verify.dump(spark, "unused", out.toString, queries - "q_bad").isEmpty)
     assert(!Files.exists(out.resolve("failures.json")))
     deleteTree(out)
+  }
+
+  test("both modes refuse a surplus positional argument and name it") {
+    assert(Verify.positionals(Seq("sf", "out")) === Right(("sf", "out", None)))
+    assert(Verify.positionals(Seq("sf", "out", "q1,q2")) === Right(("sf", "out", Some("q1,q2"))))
+    // `--invariance <sf> <out> q1 q2 q3` once checked q1 alone and passed.
+    val surplus = Verify.positionals(Seq("sf", "out", "q1", "q2", "q3"))
+    assert(surplus.isLeft)
+    assert(surplus.swap.toOption.get.contains("q2 q3"))
+    assert(Verify.positionals(Seq("sf")).isLeft)
   }
 
   private def deleteTree(p: Path): Unit =
