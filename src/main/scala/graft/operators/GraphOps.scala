@@ -312,7 +312,7 @@ object GraphOps {
     * percentage), so every iteration is exact long arithmetic: shuffle
     * order, partitioning, and engine cannot change a single bit — the
     * determinism the float trainers buy with per-iteration rounding
-    * ([[graft.operators.SimilarityOps.lloydStep]]), bought exactly here
+    * ([[graft.operators.SimilarityOps.lloydFit]]), bought exactly here
     * because an iterative sum-over-in-edges reassociates floats far more
     * aggressively than a centroid mean. Floor division leaks at most
     * od−1 micro-units per ranked node per iteration (and the engine-wide

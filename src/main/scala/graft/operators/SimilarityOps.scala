@@ -32,7 +32,7 @@ object SimilarityOps {
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2norm(a) * l2norm(b))
 
   /** Nearest-centroid argmin over LITERAL centroids — the shared assignment
-    * idiom of [[kmeans]], [[assignCells]], [[pqTrain]] and [[pqEncode]]:
+    * idiom of [[lloydFit]], [[assignCells]] and [[pqEncode]]:
     * per centroid one codegen'd VecDot scores −2·v·c + |c|² (|v|² is
     * constant inside the argmin and drops), ties break to the LOWER index
     * via the (d, idx) struct ordering. Returns the winning (d, idx) struct;
@@ -97,49 +97,43 @@ object SimilarityOps {
     * (assignment = argmin over k codegen'd VecDot distances) + one
     * hash aggregate (posexplode to (cluster, dim, x) → avg) — no
     * driver-side data beyond the k×dim centroid array. Scales as
-    * O(iters · n · k · dim) map work with k·dim driver state.
+    * O(iters · n · k · dim) map work with k·dim driver state. It is
+    * [[lloydFit]] with one subspace: [[pqTrain]] with m = 1.
     *
     * Returns (assignments: vec_id → cluster, centroids). */
   def kmeans(emb: DataFrame, idCol: String, embCol: String, k: Int, iters: Int): (DataFrame, Seq[Seq[Double]]) = {
-    val (out, centroids, _) = kmeansFit(emb, idCol, embCol, k, iters, stopAtFixedPoint = false)
+    val (out, centroids, _) =
+      kmeansFit("kmeans", emb, idCol, embCol, k, iters, stopAtFixedPoint = false)
     (out, centroids)
   }
 
-  /** The ONE fit body behind [[kmeans]] (run exactly `maxIters` Lloyd
-    * steps — oracle-unrollable) and [[kmeansConverged]] (stop at the
-    * rounded-centroid fixed point) — preamble AND loop shared so the
-    * siblings cannot drift and their spec-asserted bit-identity holds by
-    * construction. Vectors are cached for the duration of training: every
-    * Lloyd iteration re-scans them, and without the cache each job
-    * re-reads (and re-decodes) the source parquet — at 100 TB that is
-    * `iters` extra full scans. MEMORY_AND_DISK so an overflowing corpus
-    * spills instead of OOM. The returned assignment is lazy (recomputes
-    * from source in the caller's single pass — training scans are done). */
-  private def kmeansFit(emb: DataFrame, idCol: String, embCol: String, k: Int,
+  /** [[kmeans]] and [[kmeansConverged]] over [[lloydFit]] at m = 1, plus
+    * the assignment against the final centroids. The assignment is lazy:
+    * it recomputes from source in the caller's single pass, since the
+    * training scans are done and the cached vectors released. */
+  private def kmeansFit(trainer: String, emb: DataFrame, idCol: String, embCol: String, k: Int,
       maxIters: Int, stopAtFixedPoint: Boolean): (DataFrame, Seq[Seq[Double]], Int) = {
-    require(maxIters >= 1, s"need maxIters >= 1, got $maxIters")
-    graft.engine.Materialize.scoped(
-        emb.select(col(idCol).as("vec_id"), col(embCol).cast("array<double>").as("v"))) { vecs =>
-      var centroids: Seq[Seq[Double]] = vecs.orderBy(col("vec_id")).limit(k)
-        .select(col("v")).collect().toSeq.map(_.getSeq[Double](0))
-      var it = 0
-      var fixed = false
-      while (it < maxIters && !fixed) {
-        val next = lloydStep(vecs, centroids)
-        it += 1
-        fixed = stopAtFixedPoint && next == centroids
-        centroids = next
-      }
-      val out = vecs.select(col("vec_id"),
-        nearestCentroid(col("v"), centroids, "cluster").as("cluster"))
-      (out, centroids, it)
-    }
+    val (vecs, books, it) = lloydFit(trainer, emb, idCol, col(embCol), m = 1, dim = None, k,
+      maxIters, stopAtFixedPoint)
+    (vecs.select(col("vec_id"), nearestCentroid(col("v"), books.head, "cluster").as("cluster")),
+      books.head, it)
   }
 
-  /** One Lloyd iteration, shared by the fixed-count ([[kmeans]], the
-    * oracle-unrollable form) and convergence-gated ([[kmeansConverged]])
-    * trainers — one body, so a converged run that stopped after m
-    * iterations is bit-identical to a fixed-count run with iters = m.
+  /** The ONE Lloyd trainer: k-means over each of `m` subspaces of the
+    * vectors, behind [[kmeans]] (run exactly `maxIters` steps — oracle-
+    * unrollable), [[kmeansConverged]] (stop at the rounded-centroid fixed
+    * point; both m = 1, `dim` None: the whole vector is the one subspace)
+    * and [[pqTrain]] (m slices of dim/m coordinates). One seeding, one
+    * stop rule and one update, so a converged run that stopped after i
+    * steps is bit-identical to a fixed-count run with iters = i, and
+    * subspace j of a product quantizer is exactly [[kmeans]] over slice j
+    * (q90's oracle runs [[graft.queries.OracleSql.kmeansCtes]] per slice).
+    *
+    * Seeds are the k lowest-id vectors, sliced per subspace; a training
+    * set smaller than k seeds fewer centroids. Each step is ONE corpus
+    * scan (m argmins of k codegen'd VecDots) and ONE (cluster, dim) hash
+    * aggregate, whatever m is: coordinate `dim` takes the cluster of its
+    * own subspace, and the driver splits `dim` into (subspace, sdim).
     *
     * Centroid means are ROUNDED (1e-6, −0.0 normalized) before they feed
     * the next assignment: avg() sums floats in shuffle-fetch order, so an
@@ -147,25 +141,62 @@ object SimilarityOps {
     * config change could shift it an ulp and flip a near-tie argmin.
     * The oracle ([[graft.queries.OracleSql.kmeansCtes]]) rounds its CTE
     * means identically, so the cross-engine match holds by construction,
-    * not by luck of summation order. An empty cluster keeps its centroid. */
-  private def lloydStep(vecs: DataFrame, centroids: Seq[Seq[Double]]): Seq[Seq[Double]] = {
-    // TWO selects, deliberately: putting the argmin and the generator in
-    // ONE select lets ExtractGenerator hoist the non-generator expression
-    // ABOVE the Generate, re-evaluating the k·dim-VecDot argmin once per
-    // EXPLODED row (dim× the work — measured 2.1× on q41). The separate
-    // projection pins the argmin below the explode, once per vector.
-    val next = vecs
-      .select(nearestCentroid(col("v"), centroids, "cluster").as("cluster"), col("v"))
-      .select(col("cluster"), posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy(col("cluster"), col("dim"))
-      .agg(graft.engine.Semantics.roundz(avg(col("x")), 6).as("m"))
-      .collect()
-    val byCluster = next.groupBy(_.getAs[Int]("cluster"))
-    centroids.indices.map { i =>
-      byCluster.get(i) match {
-        case Some(rows) => rows.sortBy(_.getAs[Int]("dim")).map(_.getAs[Double]("m")).toSeq
-        case None => centroids(i)
+    * not by luck of summation order. An empty cluster keeps its centroid.
+    *
+    * Vectors are cached for the duration of training: every step re-scans
+    * them, and without the cache each job re-reads (and re-decodes) the
+    * source parquet — at 100 TB that is `iters` extra full scans.
+    * MEMORY_AND_DISK so an overflowing corpus spills instead of OOM.
+    * Returns (the (vec_id, v) vectors, m books of centroids, steps run). */
+  private def lloydFit(trainer: String, embs: DataFrame, idCol: String, emb: Column,
+      m: Int, dim: Option[Int], k: Int, maxIters: Int,
+      stopAtFixedPoint: Boolean): (DataFrame, Seq[Seq[Seq[Double]]], Int) = {
+    require(k >= 1, s"$trainer: need k >= 1, got k = $k")
+    require(maxIters >= 1, s"$trainer: need iters >= 1, got $maxIters")
+    val vecs = embs.select(col(idCol).as("vec_id"), emb.cast("array<double>").as("v"))
+    graft.engine.Materialize.scoped(vecs) { vecs =>
+      val seeds = vecs.orderBy(col("vec_id")).limit(k)
+        .select(col("v")).collect().toSeq.map(_.getSeq[Double](0))
+      require(seeds.nonEmpty, s"$trainer: empty training input, no vector to seed k = $k centroids")
+      val sub = dim.getOrElse(seeds.head.size) / m
+      def part(j: Int): Column = if (dim.isEmpty) col("v") else slice(col("v"), j * sub + 1, sub)
+      val cl = (0 until m).map(j => col(s"c$j"))
+      // Coordinate `dim`'s cluster is its subspace's; past m·sub it is null.
+      val cluster = if (m == 1) cl.head else (1 until m).foldLeft(when(col("dim") < sub, cl.head)) {
+        (w, j) => w.when(col("dim") < (j + 1) * sub, cl(j))
       }
+      var books = (0 until m).map(j => seeds.map(_.slice(j * sub, (j + 1) * sub)))
+      var it = 0
+      var fixed = false
+      while (it < maxIters && !fixed) {
+        // TWO selects, deliberately: putting the argmin and the generator in
+        // ONE select lets ExtractGenerator hoist the non-generator expression
+        // ABOVE the Generate, re-evaluating the k·dim-VecDot argmin once per
+        // EXPLODED row (dim× the work — measured 2.1× on q41). The separate
+        // projection pins the argmin below the explode, once per vector.
+        val byKey = vecs
+          .select(books.zipWithIndex.map { case (book, j) =>
+            nearestCentroid(part(j), book, "cluster").as(s"c$j")
+          } :+ col("v"): _*)
+          .select(cl :+ posexplode(col("v")).as(Seq("dim", "x")): _*)
+          .groupBy(cluster, col("dim"))
+          .agg(graft.engine.Semantics.roundz(avg(col("x")), 6))
+          .collect()
+          .filterNot(_.isNullAt(0))
+          .groupBy(r => (r.getInt(1) / sub, r.getInt(0)))
+        // book.indices, not 0 until k: a training set smaller than k seeds
+        // fewer centroids, and the update must not index past them
+        val next = books.zipWithIndex.map { case (book, j) =>
+          book.indices.map { i =>
+            byKey.get((j, i))
+              .fold(book(i))(rows => rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq)
+          }
+        }
+        it += 1
+        fixed = stopAtFixedPoint && next == books
+        books = next
+      }
+      (vecs, books, it)
     }
   }
 
@@ -181,7 +212,7 @@ object SimilarityOps {
     * settled. Returns (assignments, centroids, iterations run). */
   def kmeansConverged(emb: DataFrame, idCol: String, embCol: String, k: Int,
       maxIters: Int): (DataFrame, Seq[Seq[Double]], Int) =
-    kmeansFit(emb, idCol, embCol, k, maxIters, stopAtFixedPoint = true)
+    kmeansFit("kmeansConverged", emb, idCol, embCol, k, maxIters, stopAtFixedPoint = true)
 
   /** Assign each vector to its nearest centroid — the IVF cell-assignment
     * (k-means INFERENCE) step: argmin over k literal centroids of
@@ -408,59 +439,16 @@ object SimilarityOps {
   /** Train PQ codebooks with per-subspace Lloyd's k-means — the production
     * path the fixed-seed [[pqCodebooks]] literals stand in for (q81/q82
     * keep literals for oracle-checkability; q90 runs this composition end
-    * to end), identical in semantics to running [[kmeans]] on each
-    * subspace slice but executed JOINTLY: every iteration is ONE corpus
-    * scan (m argmins of k codegen'd VecDots each) + ONE (subspace,
-    * cluster, dim) hash aggregate + one m·k·(dim/m)-double collect — the
-    * per-iteration job count doesn't grow with m, where m separate
-    * trainers would schedule m× the jobs over the same data. Driver state
-    * stays k·dim doubles. Deterministic for a fixed corpus: seeds are the
-    * k lowest-id vectors sliced per subspace, assignment ties break to the
-    * lower cluster id, empty clusters keep their centroid — [[kmeans]]'s
-    * exact contract per subspace. */
+    * to end). It is [[lloydFit]] over `m` slices of dim/m coordinates, so
+    * book j is exactly [[kmeans]] run on slice j, but all m subspaces
+    * train JOINTLY: every iteration is ONE corpus scan + ONE hash
+    * aggregate + one k·dim-double collect — the per-iteration job count
+    * doesn't grow with m, where m separate trainers would schedule m× the
+    * jobs over the same data. Driver state stays k·dim doubles. */
   def pqTrain(embs: DataFrame, idCol: String, emb: Column,
       m: Int, k: Int, dim: Int, iters: Int): Seq[Seq[Seq[Double]]] = {
     require(m >= 1 && dim % m == 0, s"dim=$dim must divide into m=$m subspaces")
-    val sub = dim / m
-    // Persisted for the duration of training — each Lloyd iteration rescans
-    // the vectors (see kmeans for the 100 TB rationale).
-    graft.engine.Materialize.scoped(
-        embs.select(col(idCol).as("vec_id"), emb.cast("array<double>").as("v"))) { vecs =>
-      val seeds = vecs.orderBy(col("vec_id")).limit(k)
-        .select(col("v")).collect().toSeq.map(_.getSeq[Double](0))
-      var books: Seq[Seq[Seq[Double]]] =
-        (0 until m).map(j => seeds.map(_.slice(j * sub, (j + 1) * sub)))
-      for (_ <- 1 to iters) {
-        // cl(j) = subspace j's assigned cluster: argmin over k centroids of
-        // −2·v_j·c + |c|² (|v_j|² is constant inside a subspace's argmin).
-        val clusterCols = books.zipWithIndex.map { case (book, j) =>
-          nearestCentroid(slice(col("v"), j * sub + 1, sub), book, "cluster")
-        }
-        // Rounded exactly as [[kmeans]]'s update (see there): pins the
-        // cross-engine match against float-summation-order drift.
-        val next = vecs
-          .withColumn("cl", array(clusterCols: _*))
-          .select(col("cl"), posexplode(col("v")).as(Seq("dim", "x")))
-          .withColumn("j", (col("dim") / lit(sub)).cast("int"))
-          .groupBy(col("j"), element_at(col("cl"), col("j") + 1).as("cluster"),
-            (col("dim") % lit(sub)).as("sdim"))
-          .agg(graft.engine.Semantics.roundz(avg(col("x")), 6).as("m"))
-          .collect()
-        val byKey = next.groupBy(r => (r.getAs[Int]("j"), r.getAs[Int]("cluster")))
-        // books(j).indices, not 0 until k: a training sample smaller than k
-        // seeds fewer centroids, and the update must not index past them
-        books = (0 until m).map { j =>
-          books(j).indices.map { i =>
-            byKey.get((j, i)) match {
-              case Some(rows) =>
-                rows.sortBy(_.getAs[Int]("sdim")).map(_.getAs[Double]("m")).toSeq
-              case None => books(j)(i) // empty cluster keeps its centroid
-            }
-          }
-        }
-      }
-      books
-    }
+    lloydFit("pqTrain", embs, idCol, emb, m, Some(dim), k, iters, stopAtFixedPoint = false)._2
   }
 
   /** Squared PQ reconstruction error per vector against the given
@@ -835,26 +823,6 @@ object SimilarityOps {
       .getOrElse(pMax)
   }
 
-  /** Driver-side distillation of [[pairLshAutoTune]] into the (tables,
-    * planes) the near-dup self-join deploys — bounded driver state (≤ 1 row
-    * of two ints), loud refusal when no swept config meets the pair-recall
-    * target, exactly the [[tunedLshConfig]] contract. */
-  def tunedPairLshConfig(embs: DataFrame, id: String, emb: Column, cellCol: Column,
-      recallBar: Double, configs: Seq[(Int, Int)], dim: Int,
-      recallTarget: Double, sampleN: Long, seed: Long = 42L): (Int, Int) = {
-    val chosen = pairLshAutoTune(embs, id, emb, cellCol, recallBar, configs,
-        dim, recallTarget, sampleN, seed)
-      .filter(col("chosen"))
-      .select(col("n_tables"), col("n_planes"))
-      .collect()
-    require(chosen.nonEmpty,
-      s"tunedPairLshConfig: no swept config $configs reached pair recall >= " +
-        s"$recallTarget on the sampled true near-dup pairs — widen the sweep " +
-        "(more tables / fewer planes) or lower the target; refusing to " +
-        "silently ship a below-target near-dup geometry")
-    (chosen.head.getInt(0), chosen.head.getInt(1))
-  }
-
   /** Hard-negative mining for retriever/embedding training: from scored
     * k-NN candidates ([[knnJoin]]/[[knnJoinTables]] output), drop every
     * neighbor that shares a duplicate CLUSTER with its query
@@ -1216,7 +1184,7 @@ object SimilarityOps {
     * [[nearestCentroidScored]] evaluation per row. Scale shape: one
     * linear scan (narrow map — centroids are plan literals, nothing
     * joins), one hash aggregate to ≤ k rows. The rounding is the trainer
-    * convention ([[lloydStep]]): avg() sums floats in shuffle-fetch order,
+    * convention ([[lloydFit]]): avg() sums floats in shuffle-fetch order,
     * so only the rounded mean is engine- and partitioning-reproducible. */
   def cellDistortion(df: DataFrame, emb: Column,
       centroids: Seq[Seq[Double]]): DataFrame = {

@@ -12,7 +12,7 @@ package graft
   * property instead of asserting it: every registered query runs under two
   * different shuffle-partition settings (3 and 13 — both different from the
   * suite's 4 and from each other, odd so ranges split unevenly) and must
-  * return the identical row sequence.
+  * return the identical row sequence from the plan `collect()` runs.
   *
   * Session-shared pipeline prefixes ([[graft.engine.Shared]]) are cleared
   * between passes so the CC-family prefixes genuinely REBUILD under the new
@@ -29,6 +29,20 @@ class DeterminismSpec extends SparkSpec {
 
   private val sketchExempt = Set("q36_approx_distinct_users", "q108_approx_quantiles")
 
+  /** The rows a caller's `collect()` gets, in order, rendered on the
+    * driver. `toJSON` would plan a different root (`SerializeFromObject`),
+    * so root-only rules such as the small-sort gather would never run.
+    * Doubles render as Jackson numbers: -0.0 and 0.0 differ, and so does
+    * NaN from any number. */
+  private def rendered(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().toSeq.map(_.json)
+
+  test("the rendering separates -0.0 from 0.0 and NaN from every number") {
+    import spark.implicits._
+    val r = rendered(Seq(0.0, -0.0, Double.NaN, 1.0).toDF("x"))
+    assert(r.distinct.size === 4, r)
+  }
+
   private def runAll(partitions: Int): Seq[(String, Seq[String])] = {
     spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
     // Shared prefixes were materialized under the previous partitioning;
@@ -36,7 +50,7 @@ class DeterminismSpec extends SparkSpec {
     graft.engine.Shared.clear(spark)
     SparkEntry.queries.toSeq.sortBy(_._1).collect {
       case (name, build) if !sketchExempt(name) =>
-        val rows = build(spark, dir).toJSON.collect().toSeq
+        val rows = rendered(build(spark, dir))
         graft.engine.Hygiene.sweep(spark)
         name -> rows
     }

@@ -67,6 +67,42 @@ class PqTrainSpec extends SparkSpec {
     assert(codes.count() === 80L)
   }
 
+  test("pqTrain is kmeans per subspace: book j equals kmeans over slice j (sf0.001)") {
+    val e = graft.engine.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    def kmeansOn(v: org.apache.spark.sql.Column, iters: Int) = SimilarityOps.kmeans(
+      e.select(col("vec_id"), v.as("embedding")), "vec_id", "embedding", k = 8, iters)._2
+    // q90's shape: 4 subspaces of 16 dims, k = 8, 2 iterations
+    val books =
+      SimilarityOps.pqTrain(e, "vec_id", col("embedding"), m = 4, k = 8, dim = 64, iters = 2)
+    (0 until 4).foreach { j =>
+      val sliced = kmeansOn(slice(col("embedding"), j * 16 + 1, 16), iters = 2)
+      assert(books(j) === sliced, s"subspace $j")
+    }
+    // q41's shape: one subspace is the whole vector
+    val one =
+      SimilarityOps.pqTrain(e, "vec_id", col("embedding"), m = 1, k = 8, dim = 64, iters = 3)
+    assert(one.head === kmeansOn(col("embedding"), iters = 3))
+  }
+
+  test("every trainer refuses an empty training input, k = 0 and iters = 0, naming itself") {
+    val empty = emb.filter(lit(false))
+    val trainers: Seq[(String, (org.apache.spark.sql.DataFrame, Int, Int) => Any)] = Seq(
+      "kmeans" -> ((df, k, it) => SimilarityOps.kmeans(df, "vec_id", "embedding", k, it)),
+      "kmeansConverged" -> ((df, k, it) =>
+        SimilarityOps.kmeansConverged(df, "vec_id", "embedding", k, it)),
+      "pqTrain" -> ((df, k, it) =>
+        SimilarityOps.pqTrain(df, "vec_id", col("embedding"), m, k, dim, it)))
+    trainers.foreach { case (name, train) =>
+      val noRows = intercept[IllegalArgumentException](train(empty, 3, 2)).getMessage
+      assert(noRows.contains(name) && noRows.contains("empty training input") &&
+        noRows.contains("k = 3"), noRows)
+      val noK = intercept[IllegalArgumentException](train(emb, 0, 2)).getMessage
+      assert(noK.contains(name) && noK.contains("k = 0"), noK)
+      val noIters = intercept[IllegalArgumentException](train(emb, 3, 0)).getMessage
+      assert(noIters.contains(name) && noIters.contains("iters >= 1"), noIters)
+    }
+  }
+
   test("assignCells: a vector equal to a centroid lands in that cell; assignment matches kmeans") {
     val (assign, centroids) = SimilarityOps.kmeans(emb, "vec_id", "embedding", k = 3, iters = 2)
     val viaInference = SimilarityOps.assignCells(emb, "vec_id", col("embedding"), centroids)
