@@ -635,85 +635,51 @@ object DedupOps {
   /** X2 (embedding-cosine near-dup): pairs whose embedding cosine meets the
     * threshold. Candidate generation is bounded by (coarse cell ×
     * sign-LSH bucket): the cell is the IVF-style quantizer / partition key,
-    * and when `planes` is non-empty a random-hyperplane bucket
-    * ([[SimilarityOps.signLshBucket]]) joins on top of it — round 1's
+    * and a pair is a candidate when it shares (cell, table-t bucket) for
+    * ANY of the [[SimilarityOps.lshTables]] plane sets — round 1's
     * cell-only join was all-pairs within a cell (199,666 pairs at sf0.1),
     * the composed key keeps candidates density-bounded at any corpus size.
-    * Recall per LSH table is (1 − θ/π)^planes; production ORs several plane
-    * tables for high-recall thresholds. The verifier is exact cosine. */
+    * Per-pair recall is 1 − (1 − (1 − θ/π)^planes)^T, the production knob
+    * when near-dup recall must approach exhaustive. A plane set `p` is the
+    * one-table list `Seq(p)`; `lshTables(1, 0, dim)` is the cell-only
+    * join. The verifier is exact cosine.
+    *
+    * The key is [[SimilarityOps.lshCandidateRows]]'s `tb`, so the OR stays
+    * one hash equi-join; the verifier runs per match (one codegen'd
+    * VecDot — a pair caught by several tables recomputes the same cheap
+    * dot), the threshold filter shrinks the stream, and with T > 1 only
+    * the scalar (a_id, b_id, cosine) triple passes the final dedup
+    * shuffle. Candidate volume ≤ T × single-table — density-bounded (the
+    * T = 2 generator's count beside q32's is recorded in BASELINE.md and
+    * `SCALE_AUDIT_FINAL.jsonl`; MultiTableLshSpec pins the ≤ 2× bound). */
   def embeddingNearDups(embs: DataFrame, id: String, emb: Column, cellCol: Column,
-      threshold: Double, planes: Seq[Seq[Double]] = Nil,
+      threshold: Double, tables: Seq[Seq[Seq[Double]]],
       bucketMassBudget: Long = DefaultPairMassBudget): DataFrame = {
-    // Norms are computed per VECTOR below the join's shuffle barrier (2 fold
-    // evaluations per row), not per PAIR above it (which would be quadratic
-    // in interpreted-lambda evaluations — the dot product is the only
-    // per-pair fold left).
-    // The bucketed rows feed THREE subplans — the guard's mass aggregate
+    // The candidate rows feed THREE subplans — the guard's mass aggregate
     // and both self-join sides — and the guard wrapper on side `a` makes
     // the sides canonically different, so ReusedExchange can never serve
     // them: the r16 executed plan showed the embeddings scan + per-vector
     // bucket dots evaluated 3× per run. One eager checkpoint (the
     // q162 idiom — materializes INSIDE the run, guide §2.4 "share one
     // evaluation") makes all three consumers read the same blocks; the
-    // rows are linear in the corpus (|vecs| × tables), so the
+    // rows are linear in the corpus (|vecs| × T), so the
     // materialization is the cheap side of the trade at every tier.
-    val raw = Materialize.checkpoint(
-      embs.select(col(id), cellCol.as("cell"), emb.cast("array<double>").as("v"))
-        .withColumn("nrm", SimilarityOps.l2norm(col("v")))
-        .withColumn("bucket",
-          if (planes.isEmpty) lit(0L) else SimilarityOps.signLshBucket(col("v"), planes)))
-    // Guard ONE side only (the [[embeddingNearDupsTables]] discipline):
-    // both sides are the same row set, so Σ C(n, 2) over side `a`'s groups
-    // already prices the join — wrapping both sides would duplicate the
-    // mass aggregate + crossJoin lineage into each join input.
-    val a = bucketPairMassGuard(raw, Seq("cell", "bucket"), bucketMassBudget,
-      "embeddingNearDups", "bucket").toDF("a_id", "cell", "a_v", "a_nrm", "bucket")
-    val b = raw.toDF("b_id", "cell", "b_v", "b_nrm", "bucket")
-    a.join(b, Seq("cell", "bucket"))
-      .filter(col("a_id") < col("b_id"))
-      .withColumn("cosine",
-        graft.engine.Semantics.roundz(
-          SimilarityOps.dot(col("a_v"), col("b_v")) / (col("a_nrm") * col("b_nrm")), 6))
-      .filter(col("cosine") >= threshold)
-      .select(col("a_id"), col("b_id"), col("cosine"))
-  }
-
-  /** OR-ed multi-table variant of [[embeddingNearDups]]: a pair is a
-    * candidate when it shares (cell, table-t bucket) for ANY of the
-    * [[SimilarityOps.lshTables]] plane sets — per-pair recall
-    * 1 − (1 − (1 − θ/π)^planes)^T vs a single table's (1 − θ/π)^planes,
-    * the production knob when near-dup recall must approach exhaustive.
-    *
-    * Both sides explode their (t, b) structs ([[SimilarityOps.tableBuckets]])
-    * so the OR stays one hash equi-join; the cosine verifier runs per match
-    * (one codegen'd VecDot — a pair caught by several tables recomputes the
-    * same cheap dot), the threshold filter shrinks the stream, and only the
-    * scalar (a_id, b_id, cosine) triple passes the final dedup shuffle.
-    * Candidate volume ≤ T × single-table — density-bounded (the T = 2
-    * generator's count beside q32's is recorded in BASELINE.md and
-    * `SCALE_AUDIT_FINAL.jsonl`; MultiTableLshSpec pins the ≤ 2× bound). */
-  def embeddingNearDupsTables(embs: DataFrame, id: String, emb: Column, cellCol: Column,
-      threshold: Double, tables: Seq[Seq[Seq[Double]]],
-      bucketMassBudget: Long = DefaultPairMassBudget): DataFrame = {
-    // One eager checkpoint of the exploded (vector, table) rows — the
-    // same 3-consumer dedup as [[embeddingNearDups]] (guard mass aggregate
-    // + both join sides previously each re-scanned embeddings and re-paid
-    // the T × planes bucket dots; r16 executed-plan evidence in
-    // plans/r16). Linear rows (|vecs| × T), so cheap to materialize.
     val rows = Materialize.checkpoint(
       SimilarityOps.lshCandidateRows(embs, id, emb, cellCol, tables, "a_"))
     // Guard ONE side: both sides are the same row set, and Σ C(n, 2) over
-    // the exploded (cell, tb) groups IS the join's pre-dedup output size.
+    // the (cell, tb) groups IS the join's pre-dedup output size — wrapping
+    // both sides would duplicate the mass aggregate + crossJoin lineage
+    // into each join input.
     val a = bucketPairMassGuard(
-      rows, Seq("cell", "tb"), bucketMassBudget, "embeddingNearDupsTables", "tb")
+      rows, Seq("cell", "tb"), bucketMassBudget, "embeddingNearDups", "tb")
     val b = rows.toDF("b_id", "cell", "b_v", "b_nrm", "tb")
-    a.join(b, Seq("cell", "tb"))
+    val pairs = a.join(b, Seq("cell", "tb"))
       .filter(col("a_id") < col("b_id"))
       .withColumn("cosine",
         SimilarityOps.pairCosine(col("a_v"), col("a_nrm"), col("b_v"), col("b_nrm")))
       .filter(col("cosine") >= threshold)
       .select(col("a_id"), col("b_id"), col("cosine"))
-      .distinct() // union of per-table candidate sets
+    if (tables.size == 1) pairs else pairs.distinct() // union of per-table candidate sets
   }
 
   /** X2 (SimHash): 63-bit signature (bits 0..62 from the first 16 hex

@@ -243,11 +243,20 @@ object SimilarityOps {
     * the same bucket with high probability — the LSH-bucketed ANN scale
     * path: bucket becomes the shuffle/partition key and candidate
     * generation is bucket×bucket, never corpus×corpus. Each bit is one
-    * codegen'd VecDot against a literal plane. */
-  def signLshBucket(emb: Column, planes: Seq[Seq[Double]]): Column =
-    planes.zipWithIndex.map { case (p, j) =>
+    * codegen'd VecDot against a literal plane. No planes is bucket 0 for
+    * every vector (the cell-only join). More than 63 are refused:
+    * `1L << 64 == 1L` would alias plane 64 onto bit 0, and bit 63 is the
+    * sign, so 63 keep every bucket a non-negative long and the DuckDB
+    * twin's `1L << j` literal ([[graft.queries.OracleSql.signLshBucketSql]])
+    * a positive BIGINT. */
+  def signLshBucket(emb: Column, planes: Seq[Seq[Double]]): Column = {
+    require(planes.size <= 63,
+      s"signLshBucket: ${planes.size} planes, at most 63 fit a non-negative long bucket")
+    if (planes.isEmpty) lit(0L)
+    else planes.zipWithIndex.map { case (p, j) =>
       when(dot(emb, typedlit(p)) > 0d, lit(1L << j)).otherwise(lit(0L))
     }.reduce(_ + _)
+  }
 
   /** `numTables` independent fixed-seed plane sets for OR-ed multi-table
     * LSH (table t derives from seed + t). A single table finds a pair at
@@ -273,21 +282,27 @@ object SimilarityOps {
       struct(lit(t).as("t"), signLshBucket(v, p).as("b"))
     }: _*)
 
-  /** The shared per-vector stage of every OR-ed multi-table LSH join
-    * ([[graft.operators.DedupOps.embeddingNearDupsTables]],
-    * [[knnJoinTables]], semantic decontamination): one row per (vector,
-    * table) — (<prefix>id, cell, <prefix>v, <prefix>nrm, tb) — with the
-    * norm computed below the join barrier (per VECTOR, never per pair)
-    * and the (t, b) struct ready to be the hash-join key. One definition
-    * so a key or norm change can't silently diverge across consumers. */
+  /** The shared per-vector stage of every sign-LSH join
+    * ([[graft.operators.DedupOps.embeddingNearDups]], [[knnJoin]],
+    * semantic decontamination): one row per (vector, table) —
+    * (<prefix>id, cell, <prefix>v, <prefix>nrm, tb) — with the norm
+    * computed below the join barrier (per VECTOR, never per pair) and `tb`
+    * ready to be the hash-join key. The key's form follows the table
+    * count: one table emits its plain long bucket (no explode, and a
+    * vector meets a candidate at most once, so the joins skip their
+    * dedup); T > 1 tables explode the (t, b) structs of [[tableBuckets]].
+    * One definition so a key or norm change can't silently diverge across
+    * consumers. */
   def lshCandidateRows(embs: DataFrame, id: String, emb: Column, cellCol: Column,
       tables: Seq[Seq[Seq[Double]]], prefix: String): DataFrame = {
     require(tables.nonEmpty, "need at least one LSH table")
+    val v = col(s"${prefix}v")
     embs.select(col(id).as(s"${prefix}id"), cellCol.as("cell"),
         emb.cast("array<double>").as(s"${prefix}v"))
-      .withColumn(s"${prefix}nrm", l2norm(col(s"${prefix}v")))
-      .select(col(s"${prefix}id"), col("cell"), col(s"${prefix}v"), col(s"${prefix}nrm"),
-        explode(tableBuckets(col(s"${prefix}v"), tables)).as("tb"))
+      .withColumn(s"${prefix}nrm", l2norm(v))
+      .select(col(s"${prefix}id"), col("cell"), v, col(s"${prefix}nrm"),
+        (if (tables.size == 1) signLshBucket(v, tables.head)
+         else explode(tableBuckets(v, tables))).as("tb"))
   }
 
   /** Exact-cosine verifier for candidate pairs whose norms rode up from
@@ -511,68 +526,38 @@ object SimilarityOps {
   }
 
   /** Batch k-NN join: top-k neighbors for EVERY query row (window ranking
-    * per query). Candidates are bounded by (coarse cell × sign-LSH bucket)
-    * when `planes` is non-empty: the cell is the IVF-style quantizer /
-    * partition key, and the hyperplane bucket ([[signLshBucket]]) composes
-    * into the join key on top of it — a cell-only corpus×corpus join is
+    * per query). Candidates share the coarse cell AND agree on at least
+    * ONE table's sign-LSH bucket ([[lshTables]]): the cell is the IVF-style
+    * quantizer / partition key, and the hyperplane buckets compose into
+    * the join key on top of it — a cell-only corpus×corpus join is
     * quadratic in cell size at scale, while the composed key keeps the
-    * candidate volume density-bounded (the same fix
-    * [[graft.operators.DedupOps.embeddingNearDups]] applies to the pair
-    * generator). Recall per LSH table is (1 − θ/π)^planes; when k-recall
-    * must be near-exact, OR several plane tables via [[knnJoinTables]].
+    * candidate volume density-bounded (the same generator
+    * [[graft.operators.DedupOps.embeddingNearDups]] uses). Per-table
+    * recall (1 − θ/π)^planes becomes 1 − (1 − (1 − θ/π)^planes)^T. A plane
+    * set `p` is the one-table list `Seq(p)`; the exact cell-only join is
+    * the zero-plane table `lshTables(1, 0, dim)`, which puts every vector
+    * in bucket 0.
     *
-    * Norms are computed per VECTOR below the join's shuffle barrier, not
-    * per PAIR above it — each candidate pair costs exactly one VecDot. */
+    * Plan shape ([[lshCandidateRows]]): one hash join on (cell, tb), cosine
+    * per match (one codegen'd VecDot), norms per VECTOR below the join's
+    * shuffle barrier. With T > 1 a pair can match through several tables,
+    * so the scalar (q_id, n_id, cosine) projection is deduped BEFORE
+    * ranking — vectors never pass the dedup shuffle, and candidate volume
+    * is ≤ T × the single-table join. One table needs no dedup. An equal
+    * id on both sides is the same vector (queries ⊆ corpus) and is never
+    * its own neighbor. */
   def knnJoin(corpus: DataFrame, queries: DataFrame, cellCol: String, k: Int,
-      planes: Seq[Seq[Double]] = Nil): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val bucket = (v: Column) =>
-      if (planes.isEmpty) lit(0L) else signLshBucket(v, planes)
-    val c = corpus.select(col("vec_id").as("n_id"), col(cellCol).as("cell"),
-        col("embedding").cast("array<double>").as("n_emb"))
-      .withColumn("n_nrm", l2norm(col("n_emb")))
-      .withColumn("bucket", bucket(col("n_emb")))
-    val qs = queries.select(col("vec_id").as("q_id"), col(cellCol).as("cell"),
-        col("embedding").cast("array<double>").as("q_emb"))
-      .withColumn("q_nrm", l2norm(col("q_emb")))
-      .withColumn("bucket", bucket(col("q_emb")))
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("cosine"), col("n_id"))
-    qs.join(c, Seq("cell", "bucket"))
-      .filter(col("n_id") =!= col("q_id"))
-      .withColumn("cosine", graft.engine.Semantics.roundz(
-        dot(col("n_emb"), col("q_emb")) / (col("n_nrm") * col("q_nrm")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("cosine"), col("rank").cast("long").as("rank"))
-  }
-
-  /** OR-ed multi-table variant of [[knnJoin]]: candidates share the coarse
-    * cell AND agree on at least ONE table's sign-LSH bucket. Per-table
-    * recall (1 − θ/π)^planes becomes 1 − (1 − (1 − θ/π)^planes)^T — the
-    * near-exact-recall configuration of a deployed ANN join.
-    *
-    * Plan shape: both sides explode their [[tableBuckets]] (T light rows
-    * per vector), one hash join on (cell, (t, b)), cosine per match (one
-    * codegen'd VecDot — duplicates across tables recompute the same cheap
-    * dot), then the scalar (q_id, n_id, cosine) projection is deduped
-    * BEFORE ranking. Vectors never pass the dedup shuffle, and candidate
-    * volume is ≤ T × the single-table join — density-bounded, never
-    * corpus×corpus. */
-  def knnJoinTables(corpus: DataFrame, queries: DataFrame, cellCol: String, k: Int,
-      tables: Seq[Seq[Seq[Double]]], excludeSelf: Boolean = true): DataFrame = {
+      tables: Seq[Seq[Seq[Double]]]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val c = lshCandidateRows(corpus, "vec_id", col("embedding"), col(cellCol), tables, "n_")
     val qs = lshCandidateRows(queries, "vec_id", col("embedding"), col(cellCol), tables, "q_")
     val w = Window.partitionBy(col("q_id")).orderBy(desc("cosine"), col("n_id"))
-    qs.join(c, Seq("cell", "tb"))
-      // excludeSelf treats an equal id on both sides as the same vector
-      // (queries ⊆ corpus); pass false when query ids live in their OWN id
-      // space — there, corpus row q_id is a legitimate neighbor.
-      .filter(if (excludeSelf) col("n_id") =!= col("q_id") else lit(true))
+    val scored = qs.join(c, Seq("cell", "tb"))
+      .filter(col("n_id") =!= col("q_id"))
       .withColumn("cosine",
         pairCosine(col("n_v"), col("n_nrm"), col("q_v"), col("q_nrm")))
       .select(col("q_id"), col("n_id"), col("cosine"))
-      .distinct() // union of per-table candidate sets: each pair ranks once
+    (if (tables.size == 1) scored else scored.distinct()) // each pair ranks once
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("q_id"), col("n_id"), col("cosine"), col("rank").cast("long").as("rank"))
@@ -581,7 +566,7 @@ object SimilarityOps {
   /** Recall-targeting LSH auto-tuner: q112 MEASURES one configuration's
     * recall; this operator CHOOSES one. For each candidate operating point
     * (T tables, p planes) it measures, on a sampled query batch, the mean
-    * recall@k of the OR-ed multi-table k-NN join ([[knnJoinTables]])
+    * recall@k of the OR-ed multi-table k-NN join ([[knnJoin]])
     * against the exact same-cell neighbor list, alongside the
     * DISTINCT candidate-pair volume (the cost an ANN deployment actually
     * pays — each pair is one cosine evaluation), and flags the CHEAPEST
@@ -604,7 +589,7 @@ object SimilarityOps {
       seed: Long = 42L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(configs.nonEmpty, "need at least one (tables, planes) config")
-    val truth = knnJoin(corpus, queries, cellCol, k)
+    val truth = knnJoin(corpus, queries, cellCol, k, lshTables(1, 0, dim))
     // SINGLE-PASS sweep (r15, guide §2.4): [[lshTables]] is PREFIX-CLOSED
     // in the table index (table t is lshPlanes(p, dim, seed + t) regardless
     // of how many tables a config stacks), so config (T, p)'s candidate set
@@ -636,7 +621,7 @@ object SimilarityOps {
         .select(col(s"${prefix}id"), col("cell"), v, col(s"${prefix}nrm"),
           explode(buckets).as("ptb"))
     }
-    // Per-pair reduction: cosine is computed per MATCH (the knnJoinTables
+    // Per-pair reduction: cosine is computed per MATCH (the knnJoin
     // discipline — vectors never cross the dedup shuffle) and max() folds
     // the bitwise-identical per-table copies; min(t) is the earliest table
     // the pair collides in, which decides config membership.
@@ -824,8 +809,8 @@ object SimilarityOps {
   }
 
   /** Hard-negative mining for retriever/embedding training: from scored
-    * k-NN candidates ([[knnJoin]]/[[knnJoinTables]] output), drop every
-    * neighbor that shares a duplicate CLUSTER with its query
+    * k-NN candidates ([[knnJoin]] output), drop every neighbor that
+    * shares a duplicate CLUSTER with its query
     * ([[GraphOps.connectedComponents]] over the near-dup pair graph — those
     * are positives/self-copies, not negatives), then keep the top
     * `k` most-similar survivors per query: the "close but known-different"
@@ -1121,23 +1106,16 @@ object SimilarityOps {
     * corpus-sized ever moves) and run the OR-ed multi-table join under
     * the index's derived LSH geometry. The serving job carries NO
     * training state — exactly what a 1000-executor query fleet loads at
-    * startup. `corpus`/`queries` need (idCol, emb).
-    *
-    * `queriesShareCorpusIds` (default true) states the id contract: when
-    * queries are drawn from the corpus, an equal id on both sides is the
-    * same vector and is excluded as a self-pair; pass false for an
-    * EXTERNAL query batch with its own id space, where corpus row q_id is
-    * a legitimate neighbor. */
+    * startup. `corpus`/`queries` need (idCol, emb); queries share the
+    * corpus's id space, so an equal id is a self-pair and is excluded. */
   def serveAnn(corpus: DataFrame, queries: DataFrame, idCol: String,
-      emb: Column, idx: AnnIndex, k: Int,
-      queriesShareCorpusIds: Boolean = true): DataFrame = {
+      emb: Column, idx: AnnIndex, k: Int): DataFrame = {
     def withCell(df: DataFrame) = {
       val v = emb.cast("array<double>")
       df.select(col(idCol).as("vec_id"), v.as("embedding"),
         nearestCentroid(v, idx.centroids, "cell").as("cell"))
     }
-    knnJoinTables(withCell(corpus), withCell(queries), "cell", k, idx.planes,
-      excludeSelf = queriesShareCorpusIds)
+    knnJoin(withCell(corpus), withCell(queries), "cell", k, idx.planes)
   }
 
   /** Train the COMPLETE tuned serving artifact in one call — the round-10

@@ -125,7 +125,7 @@ object Dedup extends QueryGroup {
     // 2 B sits above the measured-payable tier and below the next decade.
     (s, dir) => DedupOps
       .embeddingNearDups(Tables.embeddings(s, dir), "vec_id", col("embedding"), col("label"),
-        0.35, q32Planes, bucketMassBudget = FixedGeometryDemoBudget)
+        0.35, Seq(q32Planes), bucketMassBudget = FixedGeometryDemoBudget)
       .orderBy(desc("cosine"), col("a_id"), col("b_id")),
     Some(s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
            |bk AS (SELECT vec_id, label, v,
@@ -384,7 +384,7 @@ object Dedup extends QueryGroup {
     // 100.7 k / 10.04 M / 1.004 B at sf0.1/sf1/sf10, and the 1.0 B sf10
     // join ran to completion in 103.8 s (BENCH_sf10_r14).
     (s, dir) => DedupOps
-      .embeddingNearDupsTables(Tables.embeddings(s, dir), "vec_id", col("embedding"),
+      .embeddingNearDups(Tables.embeddings(s, dir), "vec_id", col("embedding"),
         col("label"), 0.35, q88Tables, bucketMassBudget = FixedGeometryDemoBudget)
       .orderBy(desc("cosine"), col("a_id"), col("b_id")),
     Some {

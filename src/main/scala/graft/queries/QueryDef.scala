@@ -90,7 +90,7 @@ object SharedPipelines {
 
   private[graft] def buildSemanticEdges(s: SparkSession, dir: String): DataFrame = {
     val p = tunedSemanticDepth(s, dir)
-    DedupOps.embeddingNearDupsTables(Tables.embeddings(s, dir), "vec_id",
+    DedupOps.embeddingNearDups(Tables.embeddings(s, dir), "vec_id",
       col("embedding"), col("label"), semPairThreshold,
       SimilarityOps.lshTables(semTables, p, 64))
   }
@@ -622,7 +622,7 @@ object OracleSql {
     *    (depth, table) with that depth's literal planes inlined, each arm
     *    gated on `dep` so only the chosen ladder rung computes buckets;
     *  - `spr`/`edges` — the [[graft.operators.DedupOps
-    *    .embeddingNearDupsTables]] self-join (distinct pairs over (table,
+    *    .embeddingNearDups]] self-join (distinct pairs over (table,
     *    cell, bucket) matches), exact-cosine verified at `threshold`
     *    BEFORE clustering;
     *  - `und`/`walk`/`comps` — the min-label closure. */

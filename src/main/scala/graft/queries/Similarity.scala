@@ -49,7 +49,7 @@ object Similarity extends QueryGroup {
     "q31_knn_join",
     (s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      SimilarityOps.knnJoin(emb, emb.filter(col("vec_id") < 5), "label", 3, q31Planes)
+      SimilarityOps.knnJoin(emb, emb.filter(col("vec_id") < 5), "label", 3, Seq(q31Planes))
         .orderBy(col("q_id"), col("rank"))
     },
     Some(s"""WITH bk AS (
@@ -236,7 +236,7 @@ object Similarity extends QueryGroup {
         "FROM p ORDER BY adc_dist, vec_id LIMIT 10")))
 
   /** q31's batch k-NN join with TWO OR-ed sign-LSH tables
-    * ([[SimilarityOps.knnJoinTables]]): table 0 is q31's plane set, so every
+    * ([[SimilarityOps.knnJoin]]): table 0 is q31's plane set, so every
     * q31 candidate survives and table 1 adds the neighbors table 0's buckets
     * split away — per-query recall 1 − (1 − (1 − θ/π)²)² vs (1 − θ/π)².
     * The oracle carries one bucket column per table and ORs the equalities,
@@ -246,7 +246,7 @@ object Similarity extends QueryGroup {
     "q89_multitable_knn",
     (s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      SimilarityOps.knnJoinTables(emb, emb.filter(col("vec_id") < 5), "label", 3, q89Tables)
+      SimilarityOps.knnJoin(emb, emb.filter(col("vec_id") < 5), "label", 3, q89Tables)
         .orderBy(col("q_id"), col("rank"))
     },
     Some {
@@ -456,7 +456,7 @@ object Similarity extends QueryGroup {
       // mining reads the SAME dedup clusters the dedup pass produced.
       val comps = SharedPipelines.semanticComps(s, dir)
       val knn = SimilarityOps.knnJoin(
-        emb, emb.filter(col("vec_id") < 10), "label", Int.MaxValue, q110Planes)
+        emb, emb.filter(col("vec_id") < 10), "label", Int.MaxValue, Seq(q110Planes))
       SimilarityOps.hardNegatives(knn, comps, 3)
         .orderBy(col("q_id"), col("neg_rank"))
     },
@@ -497,8 +497,9 @@ object Similarity extends QueryGroup {
     (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val queries = emb.filter(col("vec_id") < 10)
-      val truth = SimilarityOps.knnJoin(emb, queries, "label", 10)
-      val ann = SimilarityOps.knnJoin(emb, queries, "label", 10, q112Planes)
+      val truth = SimilarityOps.knnJoin(emb, queries, "label", 10,
+        SimilarityOps.lshTables(1, 0, 64))
+      val ann = SimilarityOps.knnJoin(emb, queries, "label", 10, Seq(q112Planes))
       SimilarityOps.recallAtK(truth, ann)
         .select(col("q_id"), col("n_truth"), col("n_hit"),
           graft.engine.Semantics.roundz(col("recall"), 6).as("recall"))
@@ -706,7 +707,7 @@ object Similarity extends QueryGroup {
            |FROM proj GROUP BY 1 ORDER BY 1""".stripMargin))
 
   /** X3 auto-scaled ANN defaults ([[SimilarityOps.tunedLshConfig]] →
-    * [[SimilarityOps.knnJoinTables]]): the round-9 finding closed as API —
+    * [[SimilarityOps.knnJoin]]): the round-9 finding closed as API —
     * q117 only REPORTED the sweep; this runs the tuner, takes the chosen
     * (tables, planes) onto the driver (≤ 1 row of two ints, the k-means-
     * centroid driver-state class), and serves the 10-query ANN batch
@@ -728,7 +729,7 @@ object Similarity extends QueryGroup {
       val queries = emb.filter(col("vec_id") < 10)
       val (t, p) = SimilarityOps.tunedLshConfig(emb, queries, "label",
         k = 10, configs = q117Configs, dim = 64, recallTarget = 0.8)
-      SimilarityOps.knnJoinTables(emb, queries, "label", k = 10,
+      SimilarityOps.knnJoin(emb, queries, "label", k = 10,
           SimilarityOps.lshTables(t, p, 64))
         .withColumn("n_tables", lit(t))
         .withColumn("n_planes", lit(p))

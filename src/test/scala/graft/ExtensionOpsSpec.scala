@@ -344,7 +344,8 @@ class ExtensionOpsSpec extends SparkSpec {
       (2L, Array(0.0f, 1.0f), 1), // orthogonal to vec 0
       (3L, Array(1.0f, 0.0f), 2)  // identical to vec 0 but different cell
     ).toDF("vec_id", "embedding", "label")
-    val pairs = DedupOps.embeddingNearDups(emb, "vec_id", col("embedding"), col("label"), 0.9)
+    val pairs = DedupOps.embeddingNearDups(emb, "vec_id", col("embedding"), col("label"), 0.9,
+      SimilarityOps.lshTables(1, 0, 2))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.toSeq === Seq((0L, 1L))) // orthogonal filtered, cross-cell pruned
   }
@@ -1286,7 +1287,7 @@ class ExtensionOpsSpec extends SparkSpec {
       .toDF("vec_id", "embedding", "label")
     val e = intercept[Throwable] {
       DedupOps.embeddingNearDups(embs, "vec_id", col("embedding"),
-        col("label"), 0.0, SimilarityOps.lshPlanes(2, 8),
+        col("label"), 0.0, Seq(SimilarityOps.lshPlanes(2, 8)),
         bucketMassBudget = 10L).count()
     }
     def chain(t: Throwable): String =

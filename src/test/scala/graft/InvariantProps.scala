@@ -134,7 +134,7 @@ object InvariantProps extends Properties("graft") {
         }.toDF("vec_id", "embedding", "label")
         val tables = S.lshTables(3, 2, 16, seed = rng.nextLong())
         def pairs(ts: Seq[Seq[Seq[Double]]]) =
-          D.embeddingNearDupsTables(emb, "vec_id", col("embedding"), col("label"), 0.1, ts)
+          D.embeddingNearDups(emb, "vec_id", col("embedding"), col("label"), 0.1, ts)
             .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         val all = pairs(tables)
         tables.forall(t => pairs(Seq(t)).subsetOf(all))

@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators.{DedupOps, SimilarityOps}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** OR-ed multi-table LSH: the recall knob. A pair missed by one table's
@@ -26,21 +28,58 @@ class MultiTableLshSpec extends SparkSpec {
     assert(t4.take(2) === t2)
   }
 
-  test("embeddingNearDupsTables: multi-table pairs are a superset of single-table, recall is monotone") {
+  /** Reference rows for one plane set: (<prefix>id, cell, <prefix>v,
+    * <prefix>nrm, bucket), one row per vector, written without
+    * lshCandidateRows so the one-table joins are checked against an
+    * independent definition. */
+  private def bucketed(df: DataFrame, planes: Seq[Seq[Double]], prefix: String): DataFrame =
+    df.select(col("vec_id").as(s"${prefix}id"), col("label").as("cell"),
+        col("embedding").cast("array<double>").as(s"${prefix}v"))
+      .withColumn(s"${prefix}nrm", SimilarityOps.l2norm(col(s"${prefix}v")))
+      .withColumn("bucket", SimilarityOps.signLshBucket(col(s"${prefix}v"), planes))
+
+  /** Reference near-dup pairs: `keys` self-join, a < b, exact cosine. */
+  private def refNearDups(planes: Seq[Seq[Double]], keys: Seq[String],
+      threshold: Double): Set[(Long, Long)] =
+    bucketed(emb, planes, "a_").join(bucketed(emb, planes, "b_"), keys)
+      .filter(col("a_id") < col("b_id"))
+      .filter(SimilarityOps.pairCosine(col("a_v"), col("a_nrm"), col("b_v"), col("b_nrm"))
+        >= threshold)
+      .collect().map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"))).toSet
+
+  /** Reference k-NN: `keys` join, self-pairs out, row_number per query
+    * over (cosine desc, n_id). (q_id, rank) -> cosine. */
+  private def refKnn(queries: DataFrame, k: Int, planes: Seq[Seq[Double]],
+      keys: Seq[String]): Map[(Long, Long), Double] = {
+    val w = Window.partitionBy(col("q_id")).orderBy(desc("cosine"), col("n_id"))
+    bucketed(queries, planes, "q_").join(bucketed(emb, planes, "n_"), keys)
+      .filter(col("n_id") =!= col("q_id"))
+      .withColumn("cosine",
+        SimilarityOps.pairCosine(col("n_v"), col("n_nrm"), col("q_v"), col("q_nrm")))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .collect().map(r =>
+        (r.getAs[Long]("q_id"), r.getAs[Int]("rank").toLong) -> r.getAs[Double]("cosine"))
+      .toMap
+  }
+
+  private def knn(queries: DataFrame, k: Int,
+      tables: Seq[Seq[Seq[Double]]]): Map[(Long, Long), Double] =
+    SimilarityOps.knnJoin(emb, queries, "label", k, tables)
+      .collect().map(r => (r.getLong(0), r.getLong(3)) -> r.getDouble(2)).toMap
+
+  test("embeddingNearDups: one table is the reference join, more tables add recall") {
     def pairs(tables: Seq[Seq[Seq[Double]]]): Set[(Long, Long)] =
-      DedupOps.embeddingNearDupsTables(emb, "vec_id", col("embedding"), col("label"),
+      DedupOps.embeddingNearDups(emb, "vec_id", col("embedding"), col("label"),
         0.1, tables).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val p1 = pairs(t1)
     val p2 = pairs(t2)
     val p4 = pairs(t4)
-    // single-table via the tables path ≡ the original single-plane operator
-    val orig = DedupOps.embeddingNearDups(emb, "vec_id", col("embedding"), col("label"),
-      0.1, t1.head).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(p1 === orig)
+    assert(p1 === refNearDups(t1.head, Seq("cell", "bucket"), 0.1))
     assert(p1.subsetOf(p2) && p2.subsetOf(p4))
-    // exact = every same-cell pair over the threshold (bucket-free)
-    val exact = DedupOps.embeddingNearDups(emb, "vec_id", col("embedding"), col("label"),
-      0.1, Nil).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // exact = every same-cell pair over the threshold: the zero-plane table
+    val exact = pairs(SimilarityOps.lshTables(1, 0, 64))
+    assert(exact === refNearDups(Nil, Seq("cell"), 0.1))
     assert(p4.subsetOf(exact))
     // the whole point: more tables recover strictly more of the exact set
     // on this corpus (2 planes split aggressively; statistically guaranteed
@@ -54,7 +93,7 @@ class MultiTableLshSpec extends SparkSpec {
     // a 10-pair budget must refuse, pricing the mass in the message.
     val tiny = intercept[Exception] {
       DedupOps.embeddingNearDups(emb, "vec_id", col("embedding"), col("label"),
-        0.1, t1.head, bucketMassBudget = 10L).count()
+        0.1, t1, bucketMassBudget = 10L).count()
     }
     def msg(e: Throwable): String =
       (Option(e.getMessage) ++ Option(e.getCause).flatMap(c => Option(c.getMessage)))
@@ -62,14 +101,14 @@ class MultiTableLshSpec extends SparkSpec {
     assert(msg(tiny).contains("bucket pair mass"), s"unpriced refusal: ${msg(tiny)}")
     assert(msg(tiny).contains("bucketMassBudget = 10"))
     val tinyT = intercept[Exception] {
-      DedupOps.embeddingNearDupsTables(emb, "vec_id", col("embedding"), col("label"),
+      DedupOps.embeddingNearDups(emb, "vec_id", col("embedding"), col("label"),
         0.1, t2, bucketMassBudget = 10L).count()
     }
     assert(msg(tinyT).contains("bucket pair mass"))
     // Below budget (default) and disabled (0) produce the identical pair set:
     // the guard moves no rows, it only prices the plan.
     def pairs(budget: Long): Set[(Long, Long)] =
-      DedupOps.embeddingNearDupsTables(emb, "vec_id", col("embedding"), col("label"),
+      DedupOps.embeddingNearDups(emb, "vec_id", col("embedding"), col("label"),
         0.1, t2, bucketMassBudget = budget)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs(DedupOps.DefaultPairMassBudget) === pairs(0L))
@@ -79,8 +118,8 @@ class MultiTableLshSpec extends SparkSpec {
     // threshold -1: every candidate passes cosine >= -1, so the counts are
     // the production generators' candidate volumes.
     val c1 = DedupOps.embeddingNearDups(emb, "vec_id", col("embedding"), col("label"),
-      threshold = -1.0, planes = t1.head).count()
-    val c2df = DedupOps.embeddingNearDupsTables(emb, "vec_id", col("embedding"), col("label"),
+      threshold = -1.0, tables = t1).count()
+    val c2df = DedupOps.embeddingNearDups(emb, "vec_id", col("embedding"), col("label"),
       threshold = -1.0, tables = t2)
     val c2 = c2df.count()
     assert(c2 <= 2 * c1)
@@ -88,26 +127,43 @@ class MultiTableLshSpec extends SparkSpec {
       "candidates must be distinct pairs")
   }
 
-  test("knnJoinTables: neighbors dominate single-table cosine at every rank") {
+  test("knnJoin: one table and zero planes match references, more tables dominate") {
     val queries = emb.filter(col("vec_id") < 4)
-    def topk(tables: Seq[Seq[Seq[Double]]]): Map[(Long, Long), Double] =
-      SimilarityOps.knnJoinTables(emb, queries, "label", 3, tables)
-        .collect().map(r => (r.getLong(0), r.getLong(3)) -> r.getDouble(2)).toMap
-    val k1 = topk(t1)
-    val k2 = topk(t2)
-    // single-table tables path ≡ the planes-path knnJoin
-    val orig = SimilarityOps.knnJoin(emb, queries, "label", 3, t1.head)
-      .collect().map(r => (r.getLong(0), r.getLong(3)) -> r.getDouble(2)).toMap
-    assert(k1 === orig)
+    val k1 = knn(queries, 3, t1)
+    val k2 = knn(queries, 3, t2)
+    assert(k1 === refKnn(queries, 3, t1.head, Seq("cell", "bucket")))
+    // q112's truth: the zero-plane table is the brute-force same-cell top-k
+    assert(knn(queries, 3, SimilarityOps.lshTables(1, 0, 64)) ===
+      refKnn(queries, 3, Nil, Seq("cell")))
     // OR-ing a second table can only add candidates, so the cosine at each
     // (query, rank) position is >= the single-table one
     k1.foreach { case (qr, c1) =>
       assert(k2.getOrElse(qr, Double.MinValue) >= c1, s"rank regressed at $qr")
     }
     // no pair is ranked twice
-    val ranked = SimilarityOps.knnJoinTables(emb, queries, "label", 3, t2)
+    val ranked = SimilarityOps.knnJoin(emb, queries, "label", 3, t2)
       .groupBy("q_id", "n_id").count().filter(col("count") > 1).count()
     assert(ranked === 0L)
+  }
+
+  test("signLshBucket: no planes is bucket 0, 63 planes fit, 64 are refused by count") {
+    val v = col("embedding").cast("array<double>")
+    assert(emb.select(SimilarityOps.signLshBucket(v, Nil)).as[Long].collect().toSet === Set(0L))
+    // 63 planes: every bit is used and no bucket is negative
+    val b63 = emb.select(SimilarityOps.signLshBucket(v, SimilarityOps.lshPlanes(63, 64)))
+      .as[Long].collect()
+    assert(b63.forall(_ >= 0L))
+    assert(b63.exists(b => (b >> 62) == 1L), "bit 62 must be reachable")
+    // 64 planes would alias plane 64 onto bit 0 (1L << 64 == 1L): refused
+    val e = intercept[IllegalArgumentException] {
+      SimilarityOps.signLshBucket(v, SimilarityOps.lshPlanes(64, 64))
+    }
+    assert(e.getMessage.contains("64 planes"), e.getMessage)
+    // the multi-probe ring flips the same bits, so it refuses the same count
+    intercept[IllegalArgumentException] {
+      SimilarityOps.cosineTopKLshMultiProbe(emb, emb.filter(col("vec_id") === 0), 3,
+        numPlanes = 64, dim = 64)
+    }
   }
 
   test("multi-probe: superset of single-probe, subset of exact, no double-ranks") {

@@ -118,9 +118,10 @@ class VectorFunctionsSpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") < 4)
     val planes = SimilarityOps.lshPlanes(2, 64)
 
-    val cellOnly = SimilarityOps.knnJoin(emb, queries, "label", 3)
+    val cellOnly = SimilarityOps.knnJoin(emb, queries, "label", 3,
+        SimilarityOps.lshTables(1, 0, 64))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val bucketed = SimilarityOps.knnJoin(emb, queries, "label", 3, planes)
+    val bucketed = SimilarityOps.knnJoin(emb, queries, "label", 3, Seq(planes))
       .collect()
 
     // Every bucketed neighbor shares the query's cell AND sign-LSH bucket…
